@@ -115,7 +115,9 @@ def generate(out, seed, sf=0.1):
         "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, n_line)],
         "l_shipdate": _ts(s_start + l_days * US_PER_DAY)})
 
-    # events arrive in event_id order over ~30 days, with random gaps
+    # events arrive in event_id order over ~30 days, with random gaps; the
+    # sf0.1 fixture's file is in event_id and ts order too, with uniform
+    # users and event types
     gaps = rng.integers(1, 2 * (30 * US_PER_DAY // n_events), n_events)
     _write(out, "events", {
         "event_id": np.arange(n_events, dtype="int64"),

@@ -5,12 +5,13 @@
 
 Workloads: serve_live, lakehouse_dml, query_mix (see BENCHMARK.json and
 perfbench/NOTES.md). The first run in a checkout builds the program and the
-benchmark as jars with sbt (offline), then runs every workload briefly in
-one JVM to record a class-data-sharing archive. The classpath and archive
-are cached under `.bench_build/`, keyed by a hash of the sources. Each run
-then starts one JVM, which sets up, measures for `--seconds` and writes its
-figures; inputs are generated from `--seed`. Scratch files live under
-`.bench_work/` and are removed at the end.
+benchmark as jars with sbt (offline), then runs a short `query_mix` at
+sf0.01 once to record a class-data-sharing archive of the classes it loads.
+The classpath and archive are cached under `.bench_build/`, keyed by a hash
+of the sources. Each run then starts one JVM that maps the archive (it
+halves the cold set-up; see perfbench/NOTES.md), sets up, measures for
+`--seconds` and writes its figures; inputs are generated from `--seed`.
+Scratch files live under `.bench_work/` and are removed at the end.
 
 The last line of standard output is one JSON object with the keys
 `correct`, `attempted`, `failed` and `metrics`: with `--trace 0` the
@@ -33,6 +34,7 @@ sys.path.insert(0, HERE)  # fixtures.py and oracle.py, imported when needed
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 WORK = os.path.join(ROOT, ".bench_work")
+JSA = os.path.join(BUILD, "classes.jsa")
 WORKLOADS = ["serve_live", "lakehouse_dml", "query_mix"]
 DEADLINE_S = 170
 
@@ -79,7 +81,7 @@ def classpath():
     stamp = source_hash()
     cp_file = os.path.join(BUILD, "classpath.txt")
     stamp_file = os.path.join(BUILD, "stamp.txt")
-    if os.path.isfile(cp_file) and os.path.isfile(stamp_file):
+    if all(map(os.path.isfile, [cp_file, stamp_file, JSA])):
         with open(stamp_file) as f:
             if f.read().strip() == stamp:
                 with open(cp_file) as g:
@@ -113,25 +115,25 @@ def classpath():
 
 
 def record_archive(cp):
-    """Run every workload briefly and keep the JVM's loaded classes as a
-    class-data-sharing archive; without one, runs load classes as usual."""
-    jsa = os.path.join(BUILD, "classes.jsa")
-    if os.path.exists(jsa):
-        os.remove(jsa)
+    """Record the classes a short query_mix run loads (Spark SQL, session
+    start, codegen, the program's queries) as a class-data-sharing archive."""
+    if os.path.exists(JSA):
+        os.remove(JSA)
     work = os.path.join(WORK, "archive")
     shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(os.path.join(work, "fixtures"))
     os.makedirs(os.path.join(work, "tmp"))
     try:
         import fixtures
-        fixtures.generate(os.path.join(work, "fixtures"), 0, sf=0.01)
-        code, _ = jvm(cp, [f"-XX:ArchiveClassesAtExit={jsa}"],
-                      ["--workload", "archive", "--seed", "0", "--seconds", "1", "--trace", "0"],
-                      work, os.path.join(work, "fixtures"), time.monotonic() + 300)
-        if code != 0 and os.path.exists(jsa):
-            os.remove(jsa)
+        inputs = os.path.join(work, "fixtures")
+        os.makedirs(inputs)
+        fixtures.generate(inputs, 0, sf=0.01)
+        code, _ = jvm(cp, [f"-XX:ArchiveClassesAtExit={JSA}"],
+                      ["--workload", "query_mix", "--seed", "0", "--seconds", "1"],
+                      work, inputs, time.monotonic() + 300)
     finally:
         shutil.rmtree(work, ignore_errors=True)
+    if code != 0 or not os.path.isfile(JSA):
+        die(f"recording the class-data-sharing archive failed ({code})")
 
 
 def load_spec():
@@ -145,6 +147,8 @@ def jvm(cp, jvm_opts, main_args, work, inputs, deadline):
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             f"-Djava.io.tmpdir={work}/tmp", "-cp", cp, "perfbench.Main", *main_args,
             "--work", work, "--out", os.path.join(work, "result.json"), "--inputs", inputs])
+    # the program's own ephemeral checkpoints (graft.Tmp.ckpt) would go to
+    # /dev/shm; keep them, like every other file of the run, in the checkout
     env = dict(os.environ, SPARK_GRAFT_CKPT_ROOT=os.path.join(work, "ckpt"))
     log = os.path.join(work, "jvm.log")
     with open(log, "w") as lf:
@@ -161,9 +165,8 @@ def jvm(cp, jvm_opts, main_args, work, inputs, deadline):
 
 
 def run_jvm(cp, args, work, inputs, deadline):
-    jsa = os.path.join(BUILD, "classes.jsa")
-    opts = [f"-XX:SharedArchiveFile={jsa}"] if os.path.isfile(jsa) else []
-    code, lines = jvm(cp, opts,
+    """Run the workload and return its result file's contents."""
+    code, lines = jvm(cp, [f"-XX:SharedArchiveFile={JSA}"],
                       ["--workload", args.workload, "--seed", str(args.seed),
                        "--seconds", str(args.seconds), "--trace", str(args.trace)],
                       work, inputs, deadline)

@@ -6,23 +6,22 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 /** Seeded event generator shared by the two serving workloads.
   *
   * Event `i` is a pure function of `(seed, i)`: `event_id = i`, a Zipf-
-  * skewed `user_id` over `users` ids (id 0 is the hottest), one of the five
-  * fixture event types with equal weight, a 2-decimal value and a
+  * skewed (s = 1) `user_id` over `users` ids (id 0 is the hottest), one of
+  * the five fixture event types with equal weight, a 2-decimal value and a
   * `{"k": n}` payload. Two of the five types (`click`, `purchase`) are
   * served by the chain, so 40% of events reach the subscriber.
   */
-final case class Gen(seed: Long, users: Int, zipfS: Double = 1.1) {
+final case class Gen(seed: Long, users: Int) {
   import Gen._
 
   private def mix(i: Long, salt: Long): Long = splitmix(seed * 0x9E3779B97F4A7C15L + i * 4 + salt)
 
   private def unit(h: Long): Double = (h >>> 11).toDouble / (1L << 53).toDouble
 
-  /** Zipf(s) rank over [0, users) by inverting the continuous power law. */
+  /** Zipf rank over [0, users), by inverting the continuous 1/x law on
+    * [1, users + 1]. */
   def user(i: Long): Long = {
-    val u = unit(mix(i, 0))
-    val a = 1.0 - zipfS
-    val x = math.pow((math.pow(users + 1.0, a) - 1.0) * u + 1.0, 1.0 / a)
+    val x = math.pow(users + 1.0, unit(mix(i, 0)))
     math.min(users - 1L, math.max(0L, x.toLong - 1L))
   }
 

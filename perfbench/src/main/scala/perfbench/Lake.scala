@@ -14,7 +14,10 @@ import scala.collection.mutable
   * of the delete commit (`changeFeedRow`, a window that crosses no
   * rewrite). Every `OptimizeEvery` rounds one `optimize` compacts the
   * table, so the file count levels off. The client keeps a model of the
-  * table and checks each read's row count and checksums against it. */
+  * table and checks each read's row count and checksums against it.
+  *
+  * The sizes below (seed rows, rows per call, `OptimizeEvery`) are
+  * assumptions, not derived from a measured workload (perfbench/NOTES.md). */
 final class LakehouseDml extends Workload {
   val SeedRows = 20000
   val AppendRows = 1000
@@ -136,7 +139,7 @@ final class LakehouseDml extends Workload {
     var broken = false
     while (!broken && (!recording || ctx.more(rounds.size, t0, min = 3))) {
       round += 1
-      if (round > math.min(WarmRounds, ctx.minOps) && !recording) {
+      if (round > WarmRounds && !recording) {
         recording = true
         ctx.probes.foreach(_.reset())
         t0 = System.nanoTime()

@@ -20,16 +20,15 @@ object Stats {
 
 /** Everything one run shares across its workload code. */
 final class Ctx(val workload: String, val seed: Long, val seconds: Int,
-    val work: String, val cpus: Int, val tracer: Tracer, val inputs: String,
-    val minOps: Int) {
+    val work: String, val cpus: Int, val tracer: Tracer, val inputs: String) {
   var spark: SparkSession = _
   var probes: Option[Probes] = None
   def path(name: String): String = s"$work/$name"
   def span[T](name: String)(body: => T): T = tracer.span(name)(body)
-  /** Loop condition of a closed-loop run: at least `min` operations (at
-    * most `minOps`) and at least `seconds` since `startNs`. */
+  /** Loop condition of a closed-loop run: at least `min` operations and
+    * at least `seconds` since `startNs`. */
   def more(done: Int, startNs: Long, min: Int): Boolean =
-    done < math.min(min, minOps) || System.nanoTime() - startNs < seconds * 1000000000L
+    done < min || System.nanoTime() - startNs < seconds * 1000000000L
 }
 
 /** What a workload reports: end-to-end figures, per-layer figures, and
@@ -45,23 +44,10 @@ trait Workload {
   def failed: Long
 }
 
-/** Runs a short pass of every workload in one JVM. The runner uses it
-  * once per build to record a class-data-sharing archive, which later
-  * runs map instead of loading and verifying the same classes again. */
-final class Archive extends Workload {
-  private val parts = Seq(new ServeLive, new LakehouseDml, new QueryMix)
-  def prep(ctx: Ctx, rep: Int): Unit = parts.foreach(_.prep(ctx, rep))
-  def run(ctx: Ctx): Unit = parts.foreach(_.run(ctx))
-  def endToEnd: Map[String, Double] = parts.head.endToEnd
-  def layers: Map[String, Double] = Map.empty
-  def attempted: Long = parts.map(_.attempted).sum
-  def failed: Long = parts.map(_.failed).sum
-}
-
 /** Benchmark entry point: one workload, one seed, one JSON result file.
   *
   * `perfbench.Main --workload <w> --seed <n> --seconds <s> --trace <0|1>
-  *  --work <dir> --out <file> [--inputs <dir>] [--cpus <n>]`
+  *  --work <dir> --out <file> [--inputs <dir>]`
   */
 object Main {
   /** Session confs of `graft.Bench`, on local[cpus] with as many shuffle
@@ -107,25 +93,22 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
-    val cpus = a.get("cpus").map(_.toInt)
-      .getOrElse(math.min(4, Runtime.getRuntime.availableProcessors()))
-    val archive = a("workload") == "archive"
+    val cpus = math.min(4, Runtime.getRuntime.availableProcessors())
     val ctx = new Ctx(a("workload"), a("seed").toLong, a("seconds").toInt, a("work"), cpus,
-      new Tracer(a.getOrElse("trace", "0") == "1"), a.getOrElse("inputs", ""),
-      minOps = if (archive) 1 else Int.MaxValue)
-    val reps = if (archive) 1 else 3
+      new Tracer(a.getOrElse("trace", "0") == "1"), a.getOrElse("inputs", ""))
     val wl: Workload = ctx.workload match {
       case "serve_live" => new ServeLive
       case "lakehouse_dml" => new LakehouseDml
       case "query_mix" => new QueryMix
-      case "archive" => new Archive
       case other => sys.error(s"unknown workload $other")
     }
 
-    // Set-up, repeated: session start, warm-up and the workload's own
-    // preparation. Each repetition after the first stops the session and
-    // starts a fresh one in the same JVM.
-    val setupS = (1 to reps).map { rep =>
+    // Set-up, three times: session start, warm-up and the workload's own
+    // preparation. Repetition 1 is the cold set-up from main(); each later
+    // one stops the session and starts a fresh one in the same, warm JVM.
+    // `setup_s` is their median, so a warm set-up; the cold one is the
+    // per-layer `setup.cold_s`.
+    val setupS = (1 to 3).map { rep =>
       if (ctx.spark != null) {
         ctx.spark.stop()
         SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
@@ -161,7 +144,7 @@ object Main {
     val common = Map("setup_s" -> Stats.median(setupS), "retained_heap_mb" -> retainedMb)
     val layers = scala.collection.mutable.Map[String, Double]() ++= wl.layers ++= Map(
       "box.sentinel_ms_start" -> sentinelStart, "box.sentinel_ms_end" -> sentinelEnd,
-      "jvm.peak_rss_mb" -> peakRssMb)
+      "jvm.peak_rss_mb" -> peakRssMb, "setup.cold_s" -> setupS.head)
     ctx.probes.foreach { p =>
       layers ++= Map(
         "spark.jobs" -> p.jobs.toDouble, "spark.stages" -> p.stages.toDouble,

@@ -43,7 +43,7 @@ final class QueryMix extends Workload {
 
     ctx.probes.foreach(_.reset())
     val t0 = System.nanoTime()
-    while (ctx.more(passMs.size, t0, min = 2)) {
+    while (ctx.more(passMs.size, t0, min = 3)) {
       var pass = 0.0
       Bench.baseline12.foreach { k =>
         spark.sparkContext.setJobDescription(k)

@@ -16,7 +16,17 @@ import java.nio.file.Paths
   * traffic are not measured; after the measured window the generator
   * stops and the chain has `DrainS` seconds to deliver the rest. Delivery
   * latency runs from a segment becoming visible in the log to the
-  * subscriber's first receipt of each served event in it. */
+  * subscriber's first receipt of each served event in it.
+  *
+  * The chain's checkpoint, RocksDB state included, lies in the run's work
+  * directory on the checkout's disk, not on the RAM-backed scratch that
+  * `graft.Tmp.ckpt` picks, because the benchmark writes only inside its
+  * checkout, so every batch's checkpoint writes go to that disk.
+  *
+  * Basis of the sizes (perfbench/NOTES.md): `Backlog`, `Users` and the
+  * type mix are the sf0.1 events fixture's; `Rate` and `PerTrigger` (the
+  * backlog in 5 batches) are the sizing probe's; `TickMs`, `WarmS` and
+  * the Zipf skew are assumptions. */
 final class ServeLive extends Workload {
   val Backlog = 100000
   val SegmentRows = 4096
@@ -24,8 +34,8 @@ final class ServeLive extends Workload {
   val TickMs = 50
   val WarmS = 5
   val DrainS = 30
-  val Users = 50000
-  val PerTrigger = 50000L
+  val Users = 1500
+  val PerTrigger = 20000L
 
   private var logDir: String = _
   private val stageS = scala.collection.mutable.ArrayBuffer.empty[Double]
