@@ -1,4 +1,4 @@
-"""Seeded generator for the fixture tables the query_mix workload reads.
+"""Seeded generator for the fixture tables the batch_mix workload reads.
 
 Writes the ten parquet tables of the repository's fixture layout
 (`<dir>/<table>.parquet`, one row group each) with the same column names,

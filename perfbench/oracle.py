@@ -1,4 +1,4 @@
-"""DuckDB oracle compare for the query_mix workload.
+"""DuckDB oracle compare for the batch_mix workload.
 
 For each key in `<out>/oracle_sql.json`, run its SQL in DuckDB over views
 named after the fixture tables, load the Spark result written under

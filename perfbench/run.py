@@ -3,9 +3,9 @@
 
     python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>
 
-Workloads: serve_live, lakehouse_dml, query_mix (see BENCHMARK.json and
+Workloads: serve_live, batch_mix (see BENCHMARK.json and
 perfbench/NOTES.md). The first run in a checkout builds the program and the
-benchmark as jars with sbt (offline), then runs a short `query_mix` at
+benchmark as jars with sbt (offline), then runs a short `batch_mix` at
 sf0.01 once to record a class-data-sharing archive of the classes it loads.
 The classpath and archive are cached under `.bench_build/`, keyed by a hash
 of the sources. Each run then starts one JVM that maps the archive (it
@@ -35,7 +35,7 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 WORK = os.path.join(ROOT, ".bench_work")
 JSA = os.path.join(BUILD, "classes.jsa")
-WORKLOADS = ["serve_live", "lakehouse_dml", "query_mix"]
+WORKLOADS = ["serve_live", "batch_mix"]
 DEADLINE_S = 170
 
 # JDK 17 module opens Spark needs outside spark-submit (as in build.sbt)
@@ -115,8 +115,8 @@ def classpath():
 
 
 def record_archive(cp):
-    """Record the classes a short query_mix run loads (Spark SQL, session
-    start, codegen, the program's queries) as a class-data-sharing archive."""
+    """Record the classes a short batch_mix run loads (Spark SQL, session
+    start, codegen, the program's queries and Acid calls) as a class-data-sharing archive."""
     if os.path.exists(JSA):
         os.remove(JSA)
     work = os.path.join(WORK, "archive")
@@ -128,7 +128,7 @@ def record_archive(cp):
         os.makedirs(inputs)
         fixtures.generate(inputs, 0, sf=0.01)
         code, _ = jvm(cp, [f"-XX:ArchiveClassesAtExit={JSA}"],
-                      ["--workload", "query_mix", "--seed", "0", "--seconds", "1"],
+                      ["--workload", "batch_mix", "--seed", "0", "--seconds", "1"],
                       work, inputs, time.monotonic() + 300)
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -143,7 +143,7 @@ def load_spec():
 
 def jvm(cp, jvm_opts, main_args, work, inputs, deadline):
     """Run perfbench.Main in `work`; returns (exit code or "timeout", log lines)."""
-    cmd = (["java", "-Xmx3g", "-XX:+UseG1GC", *jvm_opts, *ADD_OPENS,
+    cmd = (["java", "-Xms3g", "-Xmx3g", "-XX:+UseG1GC", *jvm_opts, *ADD_OPENS,
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             f"-Djava.io.tmpdir={work}/tmp", "-cp", cp, "perfbench.Main", *main_args,
             "--work", work, "--out", os.path.join(work, "result.json"), "--inputs", inputs])
@@ -162,6 +162,13 @@ def jvm(cp, jvm_opts, main_args, work, inputs, deadline):
             code = "timeout"
     with open(log) as f:
         return code, f.readlines()
+
+
+def cpu_jiffies():
+    """(steal, total) jiffies of all CPUs since boot, from /proc/stat."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return fields[7], sum(fields)
 
 
 def run_jvm(cp, args, work, inputs, deadline):
@@ -197,16 +204,22 @@ def main():
     os.makedirs(os.path.join(work, "tmp"))
     try:
         inputs = ""
-        if args.workload == "query_mix":
+        if args.workload == "batch_mix":
             import fixtures
             inputs = os.path.join(work, "fixtures")
             os.makedirs(inputs)
             t = time.monotonic()
             fixtures.generate(inputs, args.seed)
             print(f"[perfbench] fixtures {time.monotonic() - t:.2f} s", file=sys.stderr)
+        steal0, total0 = cpu_jiffies()
         res = run_jvm(cp, args, work, inputs, deadline)
+        steal1, total1 = cpu_jiffies()
+        # share of the run's CPU time the hypervisor gave to other guests:
+        # runs with a high share were slowed by the host, not the program
+        steal_pct = 100.0 * (steal1 - steal0) / max(1, total1 - total0)
+        res["per_layer"]["box.steal_pct"] = steal_pct
         attempted, failed = res["attempted"], res["failed"]
-        if args.workload == "query_mix":
+        if args.workload == "batch_mix":
             import oracle
             t = time.monotonic()
             verdict = oracle.check(inputs, os.path.join(work, "oracle"))
@@ -235,6 +248,7 @@ def main():
         die(f"end-to-end metrics not measured: {missing}")
     info = {"workload": args.workload, "seed": args.seed, "trace": args.trace,
             "fail_frac": failed / max(1, attempted), "setup_reps_s": res["setup_reps_s"],
+            "steal_pct": steal_pct,
             "end_to_end": res["end_to_end"], "box": res["box"]}
     print("perfbench info: " + json.dumps(info, sort_keys=True))
     print(json.dumps({"correct": failed == 0, "attempted": attempted,

@@ -6,39 +6,34 @@ import org.apache.spark.sql.functions.{col, count, lit, sum}
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
-/** lakehouse_dml: a closed loop with one client on a seeded `ops.Acid`
-  * table of (key, grp, v) rows. One round is a fixed sequence: append new
-  * keys (`appendTxnCAS`), upsert existing and new keys (`mergeCow`),
-  * delete other existing keys (`deleteTxn`), read and aggregate the head,
-  * read the post-append version (`readVersion`), and read the change feed
-  * of the delete commit (`changeFeedRow`, a window that crosses no
-  * rewrite). Every `OptimizeEvery` rounds one `optimize` compacts the
-  * table, so the file count levels off. The client keeps a model of the
+/** The `ops.Acid` half of batch_mix: one client on a seeded table of
+  * (key, grp, v) rows. One round is a fixed sequence: append new keys
+  * (`appendTxnCAS`), upsert existing and new keys (`mergeCow`), delete
+  * other existing keys (`deleteTxn`), read and aggregate the head, read the
+  * post-append version (`readVersion`), and read the change feed of the
+  * delete commit (`changeFeedRow`, a window that crosses no rewrite), and
+  * compact the table (`optimize`), so the file count levels off and every
+  * round starts from the same layout. The client keeps a model of the
   * table and checks each read's row count and checksums against it.
   *
-  * The sizes below (seed rows, rows per call, `OptimizeEvery`) are
-  * assumptions, not derived from a measured workload (perfbench/NOTES.md). */
-final class LakehouseDml extends Workload {
+  * The sizes below (seed rows, rows per call) are assumptions, not derived
+  * from a measured workload (perfbench/NOTES.md). */
+final class Lakehouse {
   val SeedRows = 20000
   val AppendRows = 1000
   val UpdateRows = 400
   val InsertRows = 100
   val DeleteRows = 300
-  val OptimizeEvery = 2
-  /** Rounds run before timing starts: the first rounds in a JVM run the
-    * Acid code paths cold and are up to twice as slow as later ones. */
-  val WarmRounds = 2
 
   private var table: String = _
   private var model = mutable.LongMap.empty[Long]
   private var nextKey = 0L
   private var txn = 0L
   private val ops = mutable.Map.empty[String, mutable.ArrayBuffer[Double]]
-  private val rounds = mutable.ArrayBuffer.empty[Double]
-  private var att, fail = 0L
-  private var recording = false
-  private var e2e = Map.empty[String, Double]
-  private var lay = Map.empty[String, Double]
+  private val roundMs = mutable.ArrayBuffer.empty[Double]
+  var att, fail = 0L
+  /** Whether calls are timed; off while the code paths warm up. */
+  var recording = false
 
   private def frame(spark: SparkSession, rows: Seq[(Long, Int, Long)]): DataFrame = {
     import spark.implicits._
@@ -81,7 +76,8 @@ final class LakehouseDml extends Workload {
     ctx.span("acid.seed") { Acid.appendTxnCAS(ctx.spark, table, frame(ctx.spark, rows), txn) }
   }
 
-  private def runRound(ctx: Ctx, round: Int): Unit = {
+  /** One round; returns its time in ms. */
+  def round(ctx: Ctx, round: Int): Double = {
     val spark = ctx.spark
     val rnd = new scala.util.Random(ctx.seed * 7919 + round)
     val live = model.keys.toArray.sorted
@@ -124,33 +120,27 @@ final class LakehouseDml extends Workload {
           .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
       }
       check(feed == Map("delete" -> ((del.size.toLong, del.sum))))
-    }
-    if (recording) rounds += (System.nanoTime() - r0) / 1e6
-    if (round % OptimizeEvery == 0) {
+
       txn += 1
       timed(ctx, "optimize") { Acid.optimize(spark, table, txn, targetFiles = ctx.cpus) }
       check(digest(Acid.read(spark, table)) == expect(model))
     }
+    val ms = (System.nanoTime() - r0) / 1e6
+    if (recording) roundMs += ms
+    ms
   }
 
-  def run(ctx: Ctx): Unit = {
-    var t0 = System.nanoTime()
-    var round = 0
-    var broken = false
-    while (!broken && (!recording || ctx.more(rounds.size, t0, min = 3))) {
-      round += 1
-      if (round > WarmRounds && !recording) {
-        recording = true
-        ctx.probes.foreach(_.reset())
-        t0 = System.nanoTime()
-      }
-      try runRound(ctx, round)
-      catch { case e: Exception =>
-        // the model no longer matches the table; end the run here
-        System.err.println(s"[perfbench] lakehouse round $round threw: $e")
-        fail += 1; broken = true
-      }
-    }
+  /** Every timed call, in ms. */
+  def calls: Seq[Double] = ops.values.flatten.toSeq
+
+  /** A round's time taken call by call: the sum of each round call's
+    * median, which a slow spell in one call of one round does not move. */
+  def roundP50Ms: Double =
+    Seq("append", "merge", "delete", "read", "time_travel", "change_feed", "optimize")
+      .map(op => Stats.median(ops.getOrElse(op, Nil).toSeq)).sum
+
+  /** Per-call medians and the table's size at the end. */
+  def layers: Map[String, Double] = {
     val v = Acid.currentVersion(table).getOrElse(0L)
     val dataFiles = Files.readAllLines(Paths.get(table, s"manifest-$v.txt")).toArray
       .count(l => !l.toString.startsWith("#") && l.toString.trim.nonEmpty)
@@ -158,19 +148,12 @@ final class LakehouseDml extends Workload {
       val w = Files.walk(Paths.get(table))
       try w.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum() finally w.close()
     }
-    val allCalls = ops.values.flatten.toSeq
-    e2e = Map("latency_p50_ms" -> Stats.median(rounds.toSeq),
-      "latency_p90_ms" -> Stats.pct(allCalls, 0.9))
-    lay = ops.map { case (op, ts) => s"acid.${op}_p50_ms" -> Stats.median(ts.toSeq) }.toMap ++ Map(
-      "acid.rounds" -> rounds.size.toDouble,
+    ops.map { case (op, ts) => s"acid.${op}_p50_ms" -> Stats.median(ts.toSeq) }.toMap ++ Map(
+      "acid.rounds" -> roundMs.size.toDouble,
+      "acid.round_p50_ms" -> Stats.median(roundMs.toSeq),
       "acid.versions_end" -> v.toDouble,
       "acid.data_files_end" -> dataFiles.toDouble,
       "acid.table_bytes_end" -> bytes.toDouble,
       "acid.bytes_per_live_row" -> bytes.toDouble / model.size)
   }
-
-  def endToEnd: Map[String, Double] = e2e
-  def layers: Map[String, Double] = lay
-  def attempted: Long = att
-  def failed: Long = fail
 }

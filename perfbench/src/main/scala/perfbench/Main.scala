@@ -93,13 +93,15 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
-    val cpus = math.min(4, Runtime.getRuntime.availableProcessors())
+    // Two task threads leave the other cores to the stream's driver
+    // thread, the generator, the subscriber, the JIT and the GC, so a
+    // run does not time the scheduler (perfbench/NOTES.md).
+    val cpus = math.min(2, Runtime.getRuntime.availableProcessors())
     val ctx = new Ctx(a("workload"), a("seed").toLong, a("seconds").toInt, a("work"), cpus,
       new Tracer(a.getOrElse("trace", "0") == "1"), a.getOrElse("inputs", ""))
     val wl: Workload = ctx.workload match {
       case "serve_live" => new ServeLive
-      case "lakehouse_dml" => new LakehouseDml
-      case "query_mix" => new QueryMix
+      case "batch_mix" => new BatchMix
       case other => sys.error(s"unknown workload $other")
     }
 
@@ -137,8 +139,12 @@ object Main {
     ctx.probes.foreach(_.finish())
     val sentinelEnd = sentinel(spark)
 
-    val retainedMb = (1 to 3).map { _ =>
+    // Spark's ContextCleaner drops broadcasts and other run state only
+    // after a GC has found them unreachable, on its own thread: give it
+    // time between collections and keep the lowest reading.
+    val retainedMb = (1 to 5).map { _ =>
       System.gc()
+      Thread.sleep(300)
       java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
     }.min
     val common = Map("setup_s" -> Stats.median(setupS), "retained_heap_mb" -> retainedMb)

@@ -32,7 +32,7 @@ final class ServeLive extends Workload {
   val SegmentRows = 4096
   val Rate = 20000
   val TickMs = 50
-  val WarmS = 5
+  val WarmS = 8
   val DrainS = 30
   val Users = 1500
   val PerTrigger = 20000L
