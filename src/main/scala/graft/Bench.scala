@@ -21,6 +21,14 @@ object Bench {
     "llm_text_stats", "llm_sim_knn", "agg_rollup", "llm_dedup_exact",
   )
 
+  /** A JSON string literal for a key name (keys need no escaping). */
+  private def jstr0(s: String): String = "\"" + s + "\""
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -117,11 +125,6 @@ object Bench {
     // decomposition.
     if (sys.env.get("SPARK_GRAFT_BENCH_MODE").contains("split")) {
       val sfSmall = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
-      def jstr0(s: String): String = "\"" + s + "\""
-      def median(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
       val rows = baseline12.map { name =>
         def runs(dir: String): Seq[Double] = (1 to 6).map { _ =>
           val t0 = System.nanoTime()
@@ -166,11 +169,6 @@ object Bench {
       val sfSmall = sys.env.getOrElse("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
       val sfMid = sys.env.getOrElse("SPARK_GRAFT_SF_MID", "/root/testdata/sf0.01")
       val sfBig = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-      def jstr0(s: String): String = "\"" + s + "\""
-      def median(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
       // run count per (key, SF): 6 for the standard decade; the sf10
       // third-decade probe sets 3 — big-SF runs are tens of seconds each,
       // so the median-of-tail needs fewer repeats to clear the noise floor

@@ -47,19 +47,29 @@ object Tmp {
     root
   }
 
+  /** Checkpoint dirs created by [[ckpt]] this JVM, swept by one shutdown
+    * hook (registered with the first dir). */
+  private lazy val ckptDirs: java.util.Queue[java.nio.file.Path] = {
+    val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    sys.addShutdownHook {
+      dirs.forEach { dir =>
+        try {
+          val walk = java.nio.file.Files.walk(dir)
+          try walk.sorted(java.util.Comparator.reverseOrder())
+            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+          finally walk.close()
+        } catch { case _: Exception => () }
+      }
+    }
+    dirs
+  }
+
   /** A fresh ephemeral streaming-checkpoint dir under [[ckptRoot]],
     * best-effort deleted at JVM exit (checkpoints are KB-scale: two WAL
     * entries plus per-store changelogs per micro-batch). */
   def ckpt(prefix: String): String = {
     val dir = java.nio.file.Files.createTempDirectory(ckptRoot, s"graft_${prefix}_ckpt")
-    sys.addShutdownHook {
-      try {
-        val walk = java.nio.file.Files.walk(dir)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        finally walk.close()
-      } catch { case _: Exception => () }
-    }
+    ckptDirs.add(dir)
     dir.toString
   }
 }

@@ -71,44 +71,18 @@ object Acid {
     else None
   }
 
-  /** Parsed manifest lines cached per (absolute path, size, mtime-ns) —
-    * a manifest is written ONCE (CREATE_NEW in [[commitManifest]]) and
-    * never mutated afterwards, so its lines are immutable metadata exactly
-    * like the footer schemas in [[fileSchemaCache]] (r21, opt guide §1.2:
-    * every probe, DML precheck, and streaming getBatch re-read the same
-    * manifest from disk — at 100 TB the manifest/snapshot metadata lives
-    * in the writer's log cache, read once per version). A reset/vacuumed
-    * path re-created later keys differently (size + nanosecond mtime),
-    * and the cache holds no row data — only manifest text. */
-  private val manifestLineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  private def manifestPath(table: String, v: Long): Path =
+    Paths.get(table, s"manifest-$v.txt")
 
-  /** Stat-addressed cached read of a small immutable text file: trimmed,
-    * empty lines dropped. Nanosecond mtime in the key means an in-place
-    * rewrite (branch manifests on rebase/publish) can never serve stale
-    * lines. Bounded: the cache clears wholesale past 8192 entries (ADVICE
-    * r20 — unbounded growth across many tmp-table fixtures). */
-  private[graft] def linesCached(p0: Path): Seq[String] = {
-    val p = p0.toAbsolutePath.normalize
-    val key = s"$p|${Files.size(p)}|${Files.getLastModifiedTime(p).toInstant}"
-    if (manifestLineCache.size > 8192) manifestLineCache.clear()
-    manifestLineCache.computeIfAbsent(key, _ => {
-      val lines = Files.readAllLines(p)
-      val it = lines.iterator()
-      val b = Seq.newBuilder[String]
-      while (it.hasNext) { val l = it.next().trim; if (l.nonEmpty) b += l }
-      b.result()
-    })
-  }
+  /** Version `v`'s manifest, parsed once per JVM ([[Manifest.read]]). */
+  private[graft] def manifestAt(table: String, v: Long): Manifest =
+    Manifest.read(manifestPath(table, v))
 
-  private def manifestLines(table: String, v: Long): Seq[String] =
-    linesCached(Paths.get(table, s"manifest-$v.txt"))
-
-  /** Current head's manifest lines — read-only view for sibling modules
-    * (the bucketed DSv2 scan derives its partition map from these). */
-  private[graft] def headLines(table: String): Seq[String] =
-    manifestLines(table, currentVersion(table).getOrElse(
-      sys.error(s"Acid.headLines: no committed version at $table")))
+  /** The current head's manifest — read-only view for sibling modules
+    * (exporters, the bucketed DSv2 scan, the MV rewriter). */
+  private[graft] def headManifest(table: String): Manifest =
+    manifestAt(table, currentVersion(table).getOrElse(
+      sys.error(s"Acid.headManifest: no committed version at $table")))
 
   /** Read the committed snapshot: pointer → manifest → exactly those
     * files. `basePath` keeps hive-style partition columns (`d=...`)
@@ -128,14 +102,12 @@ object Acid {
   def readEvolved(spark: SparkSession, table: String): DataFrame = {
     val v = currentVersion(table).getOrElse(
       sys.error(s"Acid.readEvolved: no committed version at $table"))
-    val lines = manifestLines(table, v)
-    require(lines.contains("# base:."), s"readEvolved on snapshot-mode table $table")
-    val files = lines.filterNot(_.startsWith("#"))
+    val m = manifestAt(table, v)
+    require(m.rootRelative, s"readEvolved on snapshot-mode table $table")
     // merge-on-read applies to evolved reads too (ADVICE r11: skipping the
     // subtraction here silently resurrected deleted rows)
-    subtractDeletes(spark, table, lines,
-      applyColumnDefaults(lines, applyColumnMapping(lines,
-        readMergedSchema(spark, files.map(f => s"$table/$f")))))
+    subtractDeletes(spark, table, m, resolveEvolution(m.evolution,
+      readMergedSchema(spark, m.files.map(f => s"$table/$f"))))
   }
 
   /** Per-file parquet footer schemas, cached per (absolute path, size,
@@ -294,17 +266,13 @@ object Acid {
     * NOT NULL CHECK constraint on the column, so checked writers can
     * never store a real NULL that the fill would masquerade — NULL in the
     * merged frame always MEANS "row predates the column". */
-  private def applyColumnDefaults(lines: Seq[String], df: DataFrame): DataFrame = {
-    val defs = lines.filter(_.startsWith("# coldefault:")).map { l =>
-      val body = l.stripPrefix("# coldefault:")
-      val (c, e) = body.span(_ != '|')
-      (c.trim, e.drop(1))
+  private def applyColumnDefaults(evo: Seq[Manifest.Entry], df: DataFrame): DataFrame =
+    evo.foldLeft(df) {
+      case (d, Manifest.ColDefault(c, e)) =>
+        if (!d.columns.contains(c)) d.withColumn(c, expr(e))
+        else d.withColumn(c, coalesce(col(c), expr(e)))
+      case (d, _) => d
     }
-    defs.foldLeft(df) { case (d, (c, e)) =>
-      if (!d.columns.contains(c)) d.withColumn(c, expr(e))
-      else d.withColumn(c, coalesce(col(c), expr(e)))
-    }
-  }
 
   /** ALTER TABLE ... ADD COLUMN ... DEFAULT — metadata-only (one
     * `# coldefault:` line): existing rows read the default via
@@ -318,9 +286,9 @@ object Acid {
     spark.range(1).select(expr(defaultSql)).collect() // must compile + evaluate
     commitNextVersion(table) { (cur, prev) =>
       require(cur.isDefined, s"Acid.addColumnDefault: no committed version at $table")
-      require(prev.contains("# base:."),
+      require(prev.rootRelative,
         s"addColumnDefault on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) // replay no-ops FIRST
+      if (prev.hasTxn(txnId)) Some(cur.get) // replay no-ops FIRST
       else {
         // the exactness contract (NULL always MEANS "row predates the
         // column") only holds for a NEW column — a default on an existing
@@ -333,15 +301,12 @@ object Acid {
         None
       }
     } { (_, prev) =>
-      require(!prev.exists(_.startsWith(s"# coldefault:$colName|")),
-        s"addColumnDefault: $colName already has a default on $table")
-      (("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:")) ++
-        Seq(s"# coldefault:$colName|$defaultSql",
-          s"# constraint:${colName}_default_notnull|$colName IS NOT NULL")) ++
-        prev.filterNot(_.startsWith("#"))
+      require(!prev.evolution.exists {
+        case Manifest.ColDefault(`colName`, _) => true
+        case _ => false
+      }, s"addColumnDefault: $colName already has a default on $table")
+      metadataCommit(prev, txnId, Seq(Manifest.ColDefault(colName, defaultSql),
+        defaultNotNull(colName)))
     }
   }
 
@@ -351,23 +316,22 @@ object Acid {
     * copy and fails loudly on any delta (Delta's streaming contract — a
     * schema change under a running stream is a restart, never a silent
     * re-shape). Order-preserving, so chained renames compare faithfully. */
-  private[graft] def evolutionLines(table: String, v: Long): Seq[String] =
-    manifestLines(table, v).filter(l => l.startsWith("# colmap:") ||
-      l.startsWith("# coldrop:") || l.startsWith("# coldefault:"))
+  private[graft] def evolutionAt(table: String, v: Long): Seq[Manifest.Entry] =
+    manifestAt(table, v).evolution
 
   /** True iff the CURRENT manifest carries any evolution metadata — the
     * switch that routes a streaming source's creation schema (and its
     * batch reads) through the logical-frame resolution. */
   private[graft] def hasEvolution(table: String): Boolean =
-    currentVersion(table).exists(v => evolutionLines(table, v).nonEmpty)
+    currentVersion(table).exists(v => evolutionAt(table, v).nonEmpty)
 
-  /** Apply the given evolution lines (colmap then defaults) to a
+  /** Apply the given evolution entries (colmap then defaults) to a
     * merged-schema frame — the shared resolution step of [[readEvolved]],
     * exposed for the acid streaming source's restart path (old-generation
     * files delivered after an evolution commit must surface renamed /
     * defaulted columns exactly as batch reads do). */
-  private[graft] def resolveEvolution(lines: Seq[String], df: DataFrame): DataFrame =
-    applyColumnDefaults(lines, applyColumnMapping(lines, df))
+  private[graft] def resolveEvolution(evo: Seq[Manifest.Entry], df: DataFrame): DataFrame =
+    applyColumnDefaults(evo, applyColumnMapping(evo, df))
 
   /** Resolve the manifest's COLUMN MAPPING over a merged-schema read —
     * the Delta column-mapping / Iceberg field-id contract scoped to the
@@ -379,12 +343,9 @@ object Acid {
     * them; a table where every old-named file has since been rewritten
     * degrades to a plain rename. Zero data bytes move for either
     * operation. */
-  private def applyColumnMapping(lines: Seq[String], df: DataFrame): DataFrame = {
-    val steps = lines.filter(_.startsWith("# colmap:")).map { l =>
-      val Array(o, n) = l.stripPrefix("# colmap:").split('|'); (o.trim, n.trim)
-    }
-    val drops = lines.filter(_.startsWith("# coldrop:"))
-      .map(_.stripPrefix("# coldrop:").trim)
+  private def applyColumnMapping(evo: Seq[Manifest.Entry], df: DataFrame): DataFrame = {
+    val steps = evo.collect { case Manifest.ColMap(o, n) => (o, n) }
+    val drops = evo.collect { case Manifest.ColDrop(c) => c }
     if (steps.isEmpty && drops.isEmpty) return df
     val renamed = steps.foldLeft(df) { case (d, (o, n)) =>
       if (!d.columns.contains(o)) d // every old-named file since rewritten
@@ -405,8 +366,7 @@ object Acid {
     val cur = currentVersion(table).getOrElse(
       sys.error(s"Acid.versionAsOf: no committed version at $table"))
     val cands = (horizon(table) to cur).filter { v =>
-      Files.getLastModifiedTime(
-        Paths.get(table, s"manifest-$v.txt")).toMillis <= millis
+      Files.getLastModifiedTime(manifestPath(table, v)).toMillis <= millis
     }
     require(cands.nonEmpty,
       s"versionAsOf: no readable version of $table committed at or before " +
@@ -418,8 +378,7 @@ object Acid {
     * switch SQL reads use to route through [[readEvolved]] (the mapping-
     * aware path) instead of the plain scan. */
   def hasColumnMapping(table: String): Boolean =
-    currentVersion(table).exists(v => manifestLines(table, v).exists(l =>
-      l.startsWith("# colmap:") || l.startsWith("# coldrop:")))
+    currentVersion(table).exists(v => manifestAt(table, v).hasColumnMapping)
 
   /** RENAME a column metadata-only — Delta `ALTER TABLE ... RENAME
     * COLUMN` under column mapping: one `# colmap:` manifest line, zero
@@ -438,28 +397,23 @@ object Acid {
       "renameColumn: '|' is the colmap separator")
     commitNextVersion(table) { (cur, prev) =>
       require(cur.isDefined, s"Acid.renameColumn: no committed version at $table")
-      require(prev.contains("# base:."),
+      require(prev.rootRelative,
         s"renameColumn on snapshot-mode table $table")
-      require(!prev.contains(s"# delkey:$from"),
+      require(!prev.delKey.contains(from),
         s"renameColumn: $from is the standing delete-vector key — " +
           s"compactDeletes before renaming it")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+      if (prev.hasTxn(txnId)) Some(cur.get) else None
     } { (_, prev) =>
       // column defaults (and their auto NOT NULL constraint) follow the
       // rename — a stale name would materialize a phantom all-default
       // column and leave the real one unfilled
-      def renamed(l: String): String =
-        if (l.startsWith(s"# coldefault:$from|"))
-          "# coldefault:" + to + l.stripPrefix(s"# coldefault:$from")
-        else if (l == s"# constraint:${from}_default_notnull|$from IS NOT NULL")
-          s"# constraint:${to}_default_notnull|$to IS NOT NULL"
-        else l
-      ("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:")).map(renamed) ++
-        Seq(s"# colmap:$from|$to") ++
-        prev.filterNot(_.startsWith("#"))
+      val renamed: Manifest.Entry => Manifest.Entry = {
+        case Manifest.ColDefault(`from`, e) => Manifest.ColDefault(to, e)
+        case c if c == defaultNotNull(from) => defaultNotNull(to)
+        case e => e
+      }
+      Manifest.head(prev, Seq(txnId)) ++ Manifest.carried(prev).map(renamed) ++
+        Seq(Manifest.ColMap(from, to)) ++ prev.files.map(Manifest.DataFile)
     }
   }
 
@@ -473,23 +427,19 @@ object Acid {
       require(!name.contains("|"), "dropColumn: '|' is the colmap separator")
       commitNextVersion(table) { (cur, prev) =>
         require(cur.isDefined, s"Acid.dropColumn: no committed version at $table")
-        require(prev.contains("# base:."),
+        require(prev.rootRelative,
           s"dropColumn on snapshot-mode table $table")
-        require(!prev.contains(s"# delkey:$name"),
+        require(!prev.delKey.contains(name),
           s"dropColumn: $name is the standing delete-vector key")
-        if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+        if (prev.hasTxn(txnId)) Some(cur.get) else None
       } { (_, prev) =>
-        ("# base:." +:
-          (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-          prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-            !l.startsWith("# base:") && !l.startsWith("# op:") &&
-            // a dropped column takes its default and the default's auto
-            // NOT NULL constraint with it — otherwise the drop resurrects
-            // the column fully populated with the default
-            !l.startsWith(s"# coldefault:$name|") &&
-            l != s"# constraint:${name}_default_notnull|$name IS NOT NULL") ++
-          Seq(s"# coldrop:$name") ++
-          prev.filterNot(_.startsWith("#"))
+        // a dropped column takes its default and the default's auto NOT
+        // NULL constraint with it — otherwise the drop resurrects the
+        // column fully populated with the default
+        metadataCommit(prev, txnId, Seq(Manifest.ColDrop(name)), {
+          case Manifest.ColDefault(`name`, _) => true
+          case c => c == defaultNotNull(name)
+        })
       }
     }
 
@@ -510,17 +460,16 @@ object Acid {
       "else concat(acc, array(x)) end), '/'))"
 
   private def subtractDeletes(spark: SparkSession, table: String,
-      lines: Seq[String], base0: DataFrame): DataFrame = {
+      m: Manifest, base0: DataFrame): DataFrame = {
     // POSITIONAL vectors first (Iceberg v2 positional deletes / Delta
     // deletion vectors): (file, row-position) pairs anti-join against the
     // scan's own provenance (`_metadata.row_index` + a broadcast O(files)
     // uri→relpath map). Must run BEFORE the equality anti-join — provenance
     // columns only resolve on the raw file scan.
-    val pdelFiles = lines.filter(_.startsWith("# pdel:"))
-      .map(_.stripPrefix("# pdel:").trim)
+    val pdelFiles = m.pdels
     val base = if (pdelFiles.isEmpty) base0 else {
       val cols = base0.columns.toSeq
-      val files = lines.filterNot(_.startsWith("#"))
+      val files = m.files
       // join on NORMALIZED ABSOLUTE paths: vector rows store paths relative
       // to the root of the table that WROTE the vector, which after a
       // shallow clone is not this table's root — each vector file's own
@@ -548,14 +497,12 @@ object Acid {
         .join(pd, Seq("__abs", "__pp"), "left_anti")
         .select(cols.map(col): _*)
     }
-    val delFiles = lines.filter(_.startsWith("# delete:"))
-      .map(_.stripPrefix("# delete:").trim)
-    lines.find(_.startsWith("# delkey:")).map(_.stripPrefix("# delkey:").trim) match {
-      case Some(k) if delFiles.nonEmpty =>
+    m.standingDeletes match {
+      case Some((k, delFiles)) =>
         val dels = readParquetCached(spark, delFiles.map(f => s"$table/$f"))
           .select(col(k)).distinct()
         base.join(dels, Seq(k), "left_anti")
-      case _ => base
+      case None => base
     }
   }
 
@@ -567,8 +514,8 @@ object Acid {
     * metadata instead of an O(table) rewrite. Standing vectors (both
     * kinds) already subtracted, so survivors-of-record are what you see. */
   def readPositions(spark: SparkSession, table: String): DataFrame = {
-    val lines = headLines(table)
-    val files = lines.filterNot(_.startsWith("#"))
+    val m = headManifest(table)
+    val files = m.files
     val base = readParquetCached(spark, files.map(f => s"$table/$f"))
     val cols = base.columns.toSeq
     val uriMap = spark.createDataFrame(files.map { f =>
@@ -583,8 +530,7 @@ object Acid {
     // subtract standing vectors by hand (the helper would re-tag); vector
     // rows resolve against the root that WROTE them (clone-safe, same
     // rule as subtractDeletes)
-    val pdelFiles = lines.filter(_.startsWith("# pdel:"))
-      .map(_.stripPrefix("# pdel:").trim)
+    val pdelFiles = m.pdels
     val p1 = if (pdelFiles.isEmpty) tagged else {
       val pd = pdelFiles.map { pf =>
         val root = Paths.get(table, pf).toAbsolutePath.normalize
@@ -595,15 +541,12 @@ object Acid {
       }.reduce(_ unionByName _).distinct()
       tagged.join(pd, Seq("__abs", "_pos"), "left_anti")
     }
-    val delFiles = lines.filter(_.startsWith("# delete:"))
-      .map(_.stripPrefix("# delete:").trim)
-    val p2 = lines.find(_.startsWith("# delkey:"))
-      .map(_.stripPrefix("# delkey:").trim) match {
-      case Some(k) if delFiles.nonEmpty =>
+    val p2 = m.standingDeletes match {
+      case Some((k, delFiles)) =>
         val dels = readParquetCached(spark, delFiles.map(f => s"$table/$f"))
           .select(col(k)).distinct()
         p1.join(dels, Seq(k), "left_anti")
-      case _ => p1
+      case None => p1
     }
     p2.drop("__abs")
   }
@@ -648,7 +591,7 @@ object Acid {
       // a position naming a file outside the manifest would silently hide
       // NOTHING — for a delete primitive that is the dangerous failure
       // mode (the caller believes rows are gone), so refuse loudly
-      val known = headLines(table).filterNot(_.startsWith("#")).toSet
+      val known = headManifest(table).files.toSet
       val badRows = readParquetCached(spark, written.map(f => s"$table/$f"))
         .select(col("f")).distinct()
         .collect().map(_.getString(0)).filterNot(known) // O(distinct files)
@@ -685,17 +628,12 @@ object Acid {
     commitNextVersion(table) { (cur, prev) =>
       require(cur.isDefined,
         s"Acid.deletePositionsTxn: no committed version at $table")
-      require(prev.contains("# base:."),
+      require(prev.rootRelative,
         s"deletePositionsTxn on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+      if (prev.hasTxn(txnId)) Some(cur.get) else None
     } { (v, prev) =>
-      (("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:")) ++
-        delFiles.map(f => s"# pdel:$f") ++
-        (if (cdc) cdcFiles.map(f => s"# cdc:$v|$f") else Seq.empty)) ++
-        prev.filterNot(_.startsWith("#"))
+      metadataCommit(prev, txnId, delFiles.map(Manifest.PDel) ++
+        (if (cdc) cdcFiles.map(Manifest.Cdc(v, _)) else Seq.empty))
     }
   }
 
@@ -717,9 +655,7 @@ object Acid {
     require(v >= 0 && v <= cur, s"version $v not committed (current is $cur)")
     require(v >= horizon(table),
       s"version $v vacuumed (retention horizon is ${horizon(table)})")
-    val lines = manifestLines(table, v)
-    val rootRel = lines.contains("# base:.")
-    val files = lines.filterNot(_.startsWith("#"))
+    val m = manifestAt(table, v)
     // Time travel is LOGICAL-frame (r19, lifting the documented-raw
     // caveat): version v resolves through v's OWN colmap/coldefault lines
     // — an evolved snapshot surfaces post-rename names and default-filled
@@ -728,12 +664,19 @@ object Acid {
     // raw schema (the table as it then was — Delta's rule). The pre-r19
     // plain scan let an arbitrary footer win inference on
     // mixed-generation versions.
+    readSnapshot(spark, table, v, m)
+  }
+
+  /** Version `v`'s logical snapshot from its manifest `m` — shared by
+    * version and tag reads. */
+  private def readSnapshot(spark: SparkSession, table: String, v: Long,
+      m: Manifest): DataFrame = {
     val base =
-      if (rootRel) readLogical(spark, table, lines, files)
+      if (m.rootRelative) readLogical(spark, table, m, m.files)
       else spark.read
         .option("basePath", s"$table/v=$v")
-        .parquet(files.map(f => s"$table/v=$v/$f"): _*)
-    subtractDeletes(spark, table, lines, base)
+        .parquet(m.files.map(f => s"$table/v=$v/$f"): _*)
+    subtractDeletes(spark, table, m, base)
   }
 
   /** Commit `df` as the next version of `table`: write data, write the
@@ -774,7 +717,7 @@ object Acid {
     * prefix is what keeps the stat key identical to the manifest's
     * data-file line. */
   private def bloomLines(spark: SparkSession, paths: Seq[String],
-      relTo: Path, name: String, expr0: Column): Seq[String] = {
+      relTo: Path, name: String, expr0: Column): Seq[Manifest.Bloom] = {
     // O(files) control plane. Degenerate inputs must behave like the old
     // fixed-width path (ADVICE r16): an all-empty file set groups to zero
     // rows, so max(ndv) is NULL — fall back to 1 key (floor width) instead
@@ -823,8 +766,8 @@ object Acid {
       val arr = new Array[Long](words)
       rs.foreach(r => arr(r.getLong(1).toInt) = r.getLong(2))
       val rel = relTo.relativize(Paths.get(java.net.URI.create(file))).toString
-      s"# bloom:$rel|$name|h2|${arr.mkString(",")}"
-    }.toSeq.sorted
+      Manifest.Bloom(rel, name, versioned = true, arr)
+    }.toSeq.sortBy(Manifest.render)
   }
 
   /** Probe positions for a `bits`-wide filter — duplicated EXACTLY from
@@ -886,14 +829,14 @@ object Acid {
     * (serializing against each other); CAS writers call it bare — the
     * claim is what serializes the two populations against each other. */
   private def commitNextVersion(table: String)(
-      precheck: (Option[Long], Seq[String]) => Option[Long])(
-      build: (Long, Seq[String]) => Seq[String]): Long = {
+      precheck: (Option[Long], Manifest) => Option[Long])(
+      build: (Long, Manifest) => Seq[Manifest.Entry]): Long = {
     var spins = 0
     var out = -1L
     var done = false
     while (!done) {
       val cur = currentVersion(table)
-      val prev = cur.map(manifestLines(table, _)).getOrElse(Seq.empty)
+      val prev = cur.map(manifestAt(table, _)).getOrElse(Manifest.empty)
       precheck(cur, prev) match {
         case Some(short) => out = short; done = true
         case None =>
@@ -950,9 +893,8 @@ object Acid {
       rowCounts: Boolean = false,
       txnId: Option[Long] = None): Long = withWriterLock(table) {
     commitNextVersion(table)((cur, prev) =>
-      txnId.filter(t => prev.contains(s"# txn:$t")).map(_ => cur.get)) { (v, prev) =>
-    val ledger = txnId.toSeq.flatMap(t =>
-      prev.filter(_.startsWith("# txn:")) :+ s"# txn:$t")
+      txnId.filter(prev.hasTxn).map(_ => cur.get)) { (v, prev) =>
+    val ledger = txnId.toSeq.flatMap(t => (prev.txns :+ t).map(Manifest.Txn))
     val dataDir = Paths.get(table, s"v=$v")
     val writer = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
@@ -975,8 +917,8 @@ object Acid {
         .groupBy(input_file_name().as("f"))
         .agg(min(expr).as("lo"), max(expr).as("hi"))
         .collect() // O(files) rows — manifest-construction control plane
-        .map(r => s"# minmax:${relOf(r)}|$name|${r.getLong(1)}|${r.getLong(2)}")
-        .sorted
+        .map(r => Manifest.MinMax(relOf(r), name, r.getLong(1), r.getLong(2)))
+        .sortBy(Manifest.render)
     }
     // per-file 4096-bit bloom over a long-valued expr: one pass computing
     // all 64 words as bit_or aggregates (fully distributed — no per-file
@@ -998,24 +940,25 @@ object Acid {
     // footers (free)" note above, now literal: zero Spark jobs, exact
     // counts. Empty part files carry no line, matching the old
     // groupBy(file) behavior (an empty file groups to no row).
-    val rowLines = if (!rowCounts) Seq.empty else files.toSeq
-      .map(f => f -> footerRowCount(spark, abs.resolve(f).toString))
-      .filter(_._2 > 0)
-      .map { case (f, n) => s"# rows:$f|$n" }.sorted
-    ledger ++ statLines ++ bloomStatLines ++ rowLines ++ files.toSeq
+    val rowLines = if (!rowCounts) Seq.empty else rowEntries(spark,
+      files.toSeq, f => abs.resolve(f).toString)
+    ledger ++ statLines ++ bloomStatLines ++ rowLines ++ files.toSeq.map(Manifest.DataFile)
     }
   }
+
+  /** `# rows:` entries for the non-empty `files`, counted from their
+    * footers — no scan job (r20); empty files carry no entry. */
+  private def rowEntries(spark: SparkSession, files: Seq[String],
+      path: String => String): Seq[Manifest.Rows] =
+    files.map(f => Manifest.Rows(f, footerRowCount(spark, path(f))))
+      .filter(_.n > 0).sortBy(Manifest.render)
 
   /** Transaction ids already committed to an append table — the replay
     * ledger. Carried as `# txn:<id>` header lines in each manifest, so the
     * ledger rides the same immutable-manifest + atomic-pointer machinery
     * as the data (no second source of truth to keep consistent). */
-  def committedTxns(table: String): Set[Long] = currentVersion(table) match {
-    case None => Set.empty
-    case Some(v) => manifestLines(table, v)
-      .filter(_.startsWith("# txn:"))
-      .map(_.stripPrefix("# txn:").trim.toLong).toSet
-  }
+  def committedTxns(table: String): Set[Long] =
+    currentVersion(table).fold(Set.empty[Long])(manifestAt(table, _).txns.toSet)
 
   /** Idempotent append transaction — the exactly-once streaming-sink
     * primitive. Appends `df`'s rows as a new version whose manifest is
@@ -1035,13 +978,13 @@ object Acid {
       txnId: Long): Long = withWriterLock(table) {
     lazy val newFiles = writeTxnData(spark, table, df, txnId) // written at most once
     commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.contains("# base:."),
+      require(cur.isEmpty || prev.rootRelative,
         s"appendTxn on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None // replay → no-op
+      if (prev.hasTxn(txnId)) Some(cur.get) else None // replay → no-op
     } { (_, prev) =>
       // standing delete vectors ride along: an append does not resurrect
       // previously deleted keys
-      appendManifest(prev, txnId, newFiles)
+      appendManifest(prev, Seq(txnId), newFiles)
     }
   }
 
@@ -1063,40 +1006,41 @@ object Acid {
     * freezes its change frame). A violation throws BEFORE commit, leaving
     * only an uncommitted txn= dir that vacuum GCs. */
   private def writeTxnDataChecked(spark: SparkSession, table: String,
-      df: DataFrame, txnId: Long, lines: Seq[String],
+      df: DataFrame, txnId: Long, m: Manifest,
       what: String): Seq[String] = {
     val files = writeTxnData(spark, table, df, txnId)
-    if (files.nonEmpty && lines.exists(_.startsWith("# constraint:")))
-      checkConstraintLines(lines,
-        readParquetCached(spark, files.map(f => s"$table/$f")), what)
+    checkWrittenConstraints(spark, table, m, files, what)
     files
   }
 
-  /** The append-commit manifest: predecessor's ledger + this txn, standing
-    * delete vectors carried forward, predecessor's files + the new ones. */
-  private def appendManifest(prev: Seq[String], txnId: Long,
-      newFiles: Seq[String]): Seq[String] =
-    ("# base:." +:
-      (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-      prev.filter(l => l.startsWith("# delkey:") || l.startsWith("# delete:") ||
-        l.startsWith("# pval:") || l.startsWith("# pspec:") ||
-        l.startsWith("# constraint:") ||
-        // column mapping is table metadata — it survives every append
-        // (dropping it would un-rename the table on the next commit)
-        l.startsWith("# colmap:") || l.startsWith("# coldrop:") ||
-        // per-file stats describe PHYSICAL files an append never touches —
-        // dropping them here would blind skipping/erase after any append
-        l.startsWith("# minmax:") || l.startsWith("# bloom:") ||
-        l.startsWith("# rows:") ||
-        // row-lineage assignments are per-PHYSICAL-file and the high-water
-        // mark is table metadata — both survive every append
-        l.startsWith("# firstrow:") || l.startsWith("# rowid_phys:") ||
-        l.startsWith("# rowid_next:") || l.startsWith("# coldefault:") ||
-        l.startsWith("# pdel:") || l.startsWith("# prop:") ||
-        // branch-op log lines ride branch manifests only (appendTxnBranch
-        // routes through here); fastForwardBranch strips them at publish
-        l.startsWith("# dml:")) ++
-      prev.filterNot(_.startsWith("#")) ++ newFiles
+  /** Run `m`'s CHECK constraints over just-written `files`. */
+  private def checkWrittenConstraints(spark: SparkSession, table: String,
+      m: Manifest, files: Seq[String], what: String): Unit =
+    if (files.nonEmpty && m.constraints.nonEmpty)
+      checkConstraints(m.constraints,
+        readParquetCached(spark, files.map(f => s"$table/$f")), what)
+
+  /** The append-commit manifest: predecessor's ledger + this txn, every
+    * carried header (an append touches no existing file, so standing
+    * vectors, stats, tuples, mapping and lineage all still hold), then
+    * predecessor's files + the new ones and their `added` headers. */
+  private def appendManifest(prev: Manifest, txnIds: Seq[Long],
+      newFiles: Seq[String],
+      added: Seq[Manifest.Entry] = Seq.empty): Seq[Manifest.Entry] =
+    Manifest.head(prev, txnIds) ++ Manifest.carried(prev) ++ added ++
+      (prev.files ++ newFiles).map(Manifest.DataFile)
+
+  /** A metadata-only commit's manifest: the ledger, `prev`'s carried
+    * headers minus `drop`, the `added` entries, then `prev`'s files. */
+  private def metadataCommit(prev: Manifest, txnId: Long,
+      added: Seq[Manifest.Entry],
+      drop: Manifest.Entry => Boolean = _ => false): Seq[Manifest.Entry] =
+    Manifest.head(prev, Seq(txnId)) ++ Manifest.carried(prev, drop) ++ added ++
+      prev.files.map(Manifest.DataFile)
+
+  /** The NOT NULL constraint that rides a column default. */
+  private def defaultNotNull(c: String): Manifest.Constraint =
+    Manifest.Constraint(s"${c}_default_notnull", s"$c IS NOT NULL")
 
   /** Optimistic multi-writer append — Delta's commit protocol shape,
     * replacing [[appendTxn]]'s writer lock with version-claim CAS:
@@ -1129,10 +1073,10 @@ object Acid {
     // only on the O(lines) manifest step, never on their data writes
     val newFiles = writeTxnData(spark, table, df, txnId)
     commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.contains("# base:."),
+      require(cur.isEmpty || prev.rootRelative,
         s"appendTxnCAS on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None // raced replay
-    } { (_, prev) => appendManifest(prev, txnId, newFiles) }
+      if (prev.hasTxn(txnId)) Some(cur.get) else None // raced replay
+    } { (_, prev) => appendManifest(prev, Seq(txnId), newFiles) }
   }
 
   // ---- targeted key erasure (GDPR right-to-be-forgotten) ----
@@ -1163,19 +1107,25 @@ object Acid {
     * concurrency window shipped untested). */
   private[graft] var eraseKeysLineageRaceHook: () => Unit = () => ()
 
-  /** Manifest stat lines that describe files a rewrite is REPLACING —
-    * they must not carry forward (they describe dead files). The shared
-    * predicate of every touched-file rewrite (r19 review: the closure was
-    * copy-pasted at seven sites; a new per-file stat prefix must land
-    * exactly here). `lineage = true` additionally retires the files'
-    * row-id assignment lines (the rewrite re-lands ids materialized). */
-  private def deadStatLines(files: Seq[String], lineage: Boolean = false)(
-      l: String): Boolean =
-    files.exists(f =>
-      l.startsWith(s"# pval:$f|") || l.startsWith(s"# minmax:$f|") ||
-        l.startsWith(s"# bloom:$f|") || l.startsWith(s"# rows:$f|") ||
-        (lineage && (l.startsWith(s"# firstrow:$f|") ||
-          l.trim == s"# rowid_phys:$f")))
+  /** The manifest of a touched-file rewrite (COW UPDATE/DELETE/MERGE,
+    * erase, partition-scoped optimize): the ledger, the reconciled equality
+    * vector when the rewrite re-emits one (`vectors`), `prev`'s carried
+    * headers minus the `replaced` files' stats ([[Manifest.deadStats]];
+    * with `lineage` their row-id assignments too) and whatever `retire`
+    * names, the `added` headers, then the surviving and the new files. */
+  private def rewriteManifest(prev: Manifest, txnId: Long,
+      replaced: Seq[String], newFiles: Seq[String], lineage: Boolean = false,
+      vectors: Option[Seq[Manifest.Entry]] = None,
+      added: Seq[Manifest.Entry] = Seq.empty,
+      retire: Manifest.Entry => Boolean = _ => false,
+      op: Option[String] = None): Seq[Manifest.Entry] = {
+    val dead = Manifest.deadStats(replaced, lineage)
+    val gone = replaced.toSet
+    Manifest.head(prev, Seq(txnId), op) ++ vectors.getOrElse(Seq.empty) ++
+      Manifest.carried(prev, e => dead(e) || retire(e) ||
+        vectors.isDefined && Manifest.vectorEntries(e)) ++
+      added ++ (prev.files.filterNot(gone) ++ newFiles).map(Manifest.DataFile)
+  }
 
   def eraseKeys(spark: SparkSession, table: String, keys: Seq[Long],
       keyCol: String, bloomName: String, txnId: Long): (Long, Int, Int) = withWriterLock(table) {
@@ -1196,21 +1146,19 @@ object Acid {
       require(attempts <= 50, s"eraseKeys: concurrent-commit retry limit on $table")
       val cur = currentVersion(table).getOrElse(
         sys.error(s"Acid.eraseKeys: no committed version at $table"))
-      val lines = manifestLines(table, cur)
-      if (lines.contains(s"# txn:$txnId")) {
-        result = (cur, 0, lines.count(!_.startsWith("#"))) // replay → no-op
+      val snap = manifestAt(table, cur)
+      if (snap.hasTxn(txnId)) {
+        result = (cur, 0, snap.files.size) // replay → no-op
       } else {
-        require(lines.contains("# base:."), s"eraseKeys on snapshot-mode table $table")
-        require(!lines.exists(l => l.startsWith("# firstrow:") ||
-          l.startsWith("# rowid_phys:") || l.startsWith("# rowid_next:")),
+        require(snap.rootRelative, s"eraseKeys on snapshot-mode table $table")
+        require(!snap.hasLineage,
           s"eraseKeys on row-lineage table $table — the rewrite would " +
             "strand id assignments; erase support for lineage tables is " +
             "a migration, not a silent rewrite")
         val candidates = keys
           .flatMap(k => skipFilesBloom(table, cur, bloomName, k)._1)
           .distinct.sorted
-        val all = lines.filterNot(_.startsWith("#"))
-        val survivors = all.filterNot(candidates.contains)
+        val all = snap.files
         val newFiles = if (candidates.isEmpty) Seq.empty else {
           // standing vectors fold into the rewrite (a positional entry
           // names a (file, pos) that won't exist after the move — carrying
@@ -1229,25 +1177,18 @@ object Acid {
           // files while identical rows in pruned files survive —
           // nondeterministic loss (r19 review). coalesce keeps them, the
           // same three-valued rule deleteWhere applies.
-          val scrubbed = subtractDeletes(spark, table, lines,
-            readLogical(spark, table, lines, candidates))
+          val scrubbed = subtractDeletes(spark, table, snap,
+            readLogical(spark, table, snap, candidates))
             .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
-          writeTxnDataChecked(spark, table, scrubbed, txnId, lines,
+          writeTxnDataChecked(spark, table, scrubbed, txnId, snap,
             "eraseKeys")
         }
-        val deadStat = deadStatLines(candidates) _
         eraseKeysRaceHook()
         val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.contains(s"# txn:$txnId")) Some(c.get)
+          if (prev.hasTxn(txnId)) Some(c.get)
           else if (c.get != cur) Some(StaleSnapshot)
           else None
-        } { (_, prev) =>
-          ("# base:." +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") && !deadStat(l)) ++
-            survivors ++ newFiles
-        }
+        } { (_, prev) => rewriteManifest(prev, txnId, candidates, newFiles) }
         if (v != StaleSnapshot) result = (v, candidates.size, all.size)
       }
     }
@@ -1284,42 +1225,35 @@ object Acid {
       require(attempts <= 50, s"eraseKeysLineage: concurrent-commit retry limit on $table")
       val cur = currentVersion(table).getOrElse(
         sys.error(s"Acid.eraseKeysLineage: no committed version at $table"))
-      val lines = manifestLines(table, cur)
-      if (lines.contains(s"# txn:$txnId")) {
-        result = (cur, 0, lines.count(!_.startsWith("#"))) // replay → no-op
+      val snap = manifestAt(table, cur)
+      if (snap.hasTxn(txnId)) {
+        result = (cur, 0, snap.files.size) // replay → no-op
       } else {
-        require(lines.contains("# base:."),
+        require(snap.rootRelative,
           s"eraseKeysLineage on snapshot-mode table $table")
-        require(lines.exists(l => l.startsWith("# firstrow:") ||
-          l.startsWith("# rowid_phys:")),
+        require(snap.hasRowIds,
           s"eraseKeysLineage on $table: not a row-lineage table — use eraseKeys")
         val candidates = keys
           .flatMap(k => skipFilesBloom(table, cur, bloomName, k)._1)
           .distinct.sorted
-        val all = lines.filterNot(_.startsWith("#"))
-        val survivors = all.filterNot(candidates.contains)
+        val all = snap.files
         val newFiles = if (candidates.isEmpty) Seq.empty else {
           // NULL-key rows survive (three-valued isin — see eraseKeys)
-          val scrubbed = subtractDeletes(spark, table, lines,
-            lineageFrameFor(spark, table, lines, candidates, "eraseKeysLineage"))
+          val scrubbed = subtractDeletes(spark, table, snap,
+            lineageFrameFor(spark, table, snap, candidates, "eraseKeysLineage"))
             .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
             .withColumnRenamed("row_id", "__row_id")
-          writeTxnDataChecked(spark, table, scrubbed, txnId, lines,
+          writeTxnDataChecked(spark, table, scrubbed, txnId, snap,
             "eraseKeysLineage")
         }
-        val deadMeta = deadStatLines(candidates, lineage = true) _
         eraseKeysLineageRaceHook()
         val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.contains(s"# txn:$txnId")) Some(c.get)
+          if (prev.hasTxn(txnId)) Some(c.get)
           else if (c.get != cur) Some(StaleSnapshot)
           else None
         } { (_, prev) =>
-          ("# base:." +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") && !deadMeta(l)) ++
-            newFiles.map(f => s"# rowid_phys:$f") ++
-            survivors ++ newFiles
+          rewriteManifest(prev, txnId, candidates, newFiles, lineage = true,
+            added = newFiles.map(Manifest.RowIdPhys))
         }
         if (v != StaleSnapshot) result = (v, candidates.size, all.size)
       }
@@ -1365,13 +1299,16 @@ object Acid {
     * landed under `delDir`. Returns the manifest ingredients; committing
     * them (version claim vs branch manifest) stays with the caller. */
   private final case class CowMerge(touched: Seq[String],
-      survivors: Seq[String], newFiles: Seq[String],
-      vectorLines: Seq[String], deadStat: String => Boolean, total: Int)
+      newFiles: Seq[String], vectors: Seq[Manifest.Entry], total: Int) {
+    /** The merge's next manifest over `prev` (the attempt's own state). */
+    def manifest(prev: Manifest, txnId: Long): Seq[Manifest.Entry] =
+      rewriteManifest(prev, txnId, touched, newFiles, vectors = Some(vectors))
+  }
   private def cowMergeAttempt(spark: SparkSession, table: String,
-      lines: Seq[String], changes: DataFrame, keyCol: String,
+      snap: Manifest, changes: DataFrame, keyCol: String,
       opCol: Option[String], dataDir: Path, delDir: Path,
       what: String): CowMerge = {
-    val all = lines.filterNot(_.startsWith("#"))
+    val all = snap.files
     val root = Paths.get(table).toAbsolutePath
     val allKeys = changes.select(col(keyCol)).distinct()
     val upserts = opCol match {
@@ -1383,18 +1320,17 @@ object Acid {
     // probes post-rename key names and default-filled values), O(files)
     // rows back to the driver
     val touched = if (all.isEmpty) Seq.empty[String]
-    else touchedFilesPlanOver(readLogical(spark, table, lines, all),
+    else touchedFilesPlanOver(readLogical(spark, table, snap, all),
       allKeys, keyCol)
       .collect() // O(files) rows — manifest-construction control plane
       .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
       .sorted.toSeq
-    val survivors = all.filterNot(touched.contains)
     // rewrite = (touched files − standing vectors − change keys) ∪ upserts
     val rewritten = {
       val basePart =
         if (touched.isEmpty) upserts.limit(0)
-        else subtractDeletes(spark, table, lines,
-          readLogical(spark, table, lines, touched))
+        else subtractDeletes(spark, table, snap,
+          readLogical(spark, table, snap, touched))
           .join(allKeys, Seq(keyCol), "left_anti")
       basePart.unionByName(upserts)
     }
@@ -1403,15 +1339,12 @@ object Acid {
     // changes frame could pass the check yet write violating rows)
     rewritten.write.mode("overwrite").parquet(dataDir.toString)
     val newFiles = listParquet(table, dataDir)
-    if (newFiles.nonEmpty && lines.exists(_.startsWith("# constraint:")))
-      checkConstraintLines(lines,
-        readParquetCached(spark, newFiles.map(f => s"$table/$f")), what)
+    checkWrittenConstraints(spark, table, snap, newFiles, what)
     // vector reconciliation: upserted keys leave the standing vector
     val upsertedKeyRows = upserts.select(col(keyCol)).distinct()
-    val vectorLines = reconcileVector(spark, table, lines, upsertedKeyRows,
+    val vectors = reconcileVector(spark, table, snap, upsertedKeyRows,
       keyCol, delDir, what)
-    val deadStat = deadStatLines(touched) _
-    CowMerge(touched, survivors, newFiles, vectorLines, deadStat, all.size)
+    CowMerge(touched, newFiles, vectors, all.size)
   }
 
   /** Evaluate the manifest's standing CHECK constraints over a frame a
@@ -1424,12 +1357,9 @@ object Acid {
     * a violating batch refuses loudly with the table unmoved. Carried
     * rows re-checking is free of false positives: [[addConstraint]]
     * validates existing data when the constraint lands. */
-  private def checkConstraintLines(lines: Seq[String], df: DataFrame,
-      what: String): Unit = {
-    val all = lines.filter(_.startsWith("# constraint:")).map { l =>
-      val body = l.stripPrefix("# constraint:")
-      val (n, p) = body.span(_ != '|'); (n.trim, p.drop(1))
-    }
+  private def checkConstraints(constraints: Seq[Manifest.Constraint],
+      df: DataFrame, what: String): Unit = {
+    val all = constraints.map(c => (c.name.trim, c.pred))
     if (all.nonEmpty) {
       val aggs = all.map { case (n, p) =>
         count(when(!expr(p) || expr(p).isNull, 1)).as(n) }
@@ -1448,9 +1378,9 @@ object Acid {
     * key must resurrect it. Returns the next manifest's vector lines; an
     * empty reconciled vector drops the delete lines entirely. */
   private def reconcileVector(spark: SparkSession, table: String,
-      lines: Seq[String], upsertedKeyRows: DataFrame, keyCol: String,
-      delDir: Path, what: String): Seq[String] =
-    standingDeletes2(lines).map { case (k, delFiles) =>
+      m: Manifest, upsertedKeyRows: DataFrame, keyCol: String,
+      delDir: Path, what: String): Seq[Manifest.Entry] =
+    m.standingDeletes.map { case (k, delFiles) =>
       require(k == keyCol, s"$what: table uses delete key $k, got $keyCol")
       val remaining = readParquetCached(spark, delFiles.map(f => s"$table/$f"))
         .select(col(k)).distinct()
@@ -1471,7 +1401,7 @@ object Acid {
       } else fs
     } match {
       case Some(fs) if fs.nonEmpty =>
-        Seq(s"# delkey:$keyCol") ++ fs.map(f => s"# delete:$f")
+        Manifest.DelKey(keyCol) +: fs.map(Manifest.Delete)
       case _ => Seq.empty // no vector, or reconciled to empty
     }
 
@@ -1495,35 +1425,26 @@ object Acid {
       // an uninitialized table is a legal MERGE target (the streaming CDC
       // consumer's first micro-batch): empty file set, everything inserts
       val cur = currentVersion(table)
-      val lines = cur.map(manifestLines(table, _)).getOrElse(Seq("# base:."))
-      if (lines.contains(s"# txn:$txnId")) {
-        result = (cur.get, 0, lines.count(!_.startsWith("#"))) // replay → no-op
+      val snap = cur.map(manifestAt(table, _))
+        .getOrElse(Manifest(Seq(Manifest.Base)))
+      if (snap.hasTxn(txnId)) {
+        result = (cur.get, 0, snap.files.size) // replay → no-op
       } else {
-        require(lines.contains("# base:."), s"mergeCow on snapshot-mode table $table")
+        require(snap.rootRelative, s"mergeCow on snapshot-mode table $table")
         // MERGE on a lineage table needs fresh-id allocation for inserts
         // AND materialization for carried rows — neither happens here;
         // refuse instead of stranding stale assignment lines (r18)
-        require(!lines.exists(l => l.startsWith("# firstrow:") ||
-          l.startsWith("# rowid_phys:") || l.startsWith("# rowid_next:")),
+        require(!snap.hasLineage,
           s"mergeCow on row-lineage table $table — use mergeCowLineage " +
             "(it keeps matched ids and allocates insert ids from the mark)")
-        val m = cowMergeAttempt(spark, table, lines, changesP, keyCol, opCol,
+        val m = cowMergeAttempt(spark, table, snap, changesP, keyCol, opCol,
           Paths.get(table).resolve(s"txn=$txnId"),
           Paths.get(table).resolve(s"del=$txnId"), "mergeCow")
         val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.contains(s"# txn:$txnId")) Some(c.get)
+          if (prev.hasTxn(txnId)) Some(c.get)
           else if (c != cur) Some(StaleSnapshot)
           else None
-        } { (_, prev) =>
-          ("# base:." +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            m.vectorLines ++
-            prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") &&
-              !l.startsWith("# delkey:") && !l.startsWith("# delete:") &&
-              !m.deadStat(l)) ++
-            m.survivors ++ m.newFiles
-        }
+        } { (_, prev) => m.manifest(prev, txnId) }
         if (v != StaleSnapshot) result = (v, m.touched.size, m.total)
       }
     }
@@ -1562,11 +1483,11 @@ object Acid {
     * simply current-generation (Delta's DML-on-column-mapped-tables
     * behavior). */
   private def readLogical(spark: SparkSession, table: String,
-      lines: Seq[String], files: Seq[String]): DataFrame =
-    if (!mixedGenerations(lines))
+      m: Manifest, files: Seq[String]): DataFrame =
+    if (m.evolution.isEmpty)
       readParquetCached(spark, files.map(f => s"$table/$f"))
-    else applyColumnDefaults(lines, applyColumnMapping(lines,
-      readMergedSchema(spark, files.map(f => s"$table/$f"))))
+    else resolveEvolution(m.evolution,
+      readMergedSchema(spark, files.map(f => s"$table/$f")))
 
   // ---- predicate-based row-level UPDATE / DELETE (copy-on-write) ----
 
@@ -1594,52 +1515,43 @@ object Acid {
       attempts += 1
       require(attempts <= 50, s"$what: concurrent-commit retry limit on $table")
       val cur = currentVersion(table)
-      val lines = cur.map(manifestLines(table, _)).getOrElse(
+      val snap = cur.map(manifestAt(table, _)).getOrElse(
         sys.error(s"Acid.$what: no committed version at $table"))
-      if (lines.contains(s"# txn:$txnId")) {
-        result = (cur.get, 0, lines.count(!_.startsWith("#"))) // replay → no-op
+      if (snap.hasTxn(txnId)) {
+        result = (cur.get, 0, snap.files.size) // replay → no-op
       } else {
-        require(lines.contains("# base:."), s"$what on snapshot-mode table $table")
+        require(snap.rootRelative, s"$what on snapshot-mode table $table")
         // a plain COW rewrite drops the touched files' row-id assignments
         // (r18): lineage tables update through updateWhereLineage, which
         // materializes ids through the rewrite
-        require(!lines.exists(l => l.startsWith("# firstrow:") ||
-          l.startsWith("# rowid_phys:") || l.startsWith("# rowid_next:")),
+        require(!snap.hasLineage,
           s"$what on row-lineage table $table — use updateWhereLineage " +
             "(it materializes ids through the rewrite)")
-        val all = lines.filterNot(_.startsWith("#"))
+        val all = snap.files
         val root = Paths.get(table).toAbsolutePath
         // probe + rewrite run over the LOGICAL frame (r18): on an evolved
         // table the predicate sees post-rename names and default-filled
         // values — Delta's DML semantics on column-mapped tables — and
         // the rewrite lands the logical schema
         val touched = if (all.isEmpty) Seq.empty[String]
-        else readLogical(spark, table, lines, all)
+        else readLogical(spark, table, snap, all)
           .filter(pred)
           .select(input_file_name().as("f")).distinct()
           .collect() // O(files) rows — manifest-construction control plane
           .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
           .sorted.toSeq
-        val survivors = all.filterNot(touched.contains)
         val newFiles =
           if (touched.isEmpty) Seq.empty[String]
           else {
-            val out = transform(subtractDeletes(spark, table, lines,
-              readLogical(spark, table, lines, touched)))
-            writeTxnDataChecked(spark, table, out, txnId, lines, what)
+            val out = transform(subtractDeletes(spark, table, snap,
+              readLogical(spark, table, snap, touched)))
+            writeTxnDataChecked(spark, table, out, txnId, snap, what)
           }
-        val deadStat = deadStatLines(touched) _
         val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.contains(s"# txn:$txnId")) Some(c.get)
+          if (prev.hasTxn(txnId)) Some(c.get)
           else if (c != cur) Some(StaleSnapshot)
           else None
-        } { (_, prev) =>
-          ("# base:." +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") && !deadStat(l)) ++
-            survivors ++ newFiles
-        }
+        } { (_, prev) => rewriteManifest(prev, txnId, touched, newFiles) }
         if (v != StaleSnapshot) result = (v, touched.size, all.size)
       }
     }
@@ -1682,18 +1594,17 @@ object Acid {
     require(bySet.size == sets.size, "updateWhereCAS: duplicate SET column")
     val curV = currentVersion(table).getOrElse(
       sys.error(s"Acid.updateWhereCAS: no committed version at $table"))
-    val snap = manifestLines(table, curV)
-    if (snap.contains(s"# txn:$txnId"))
-      return (curV, 0, snap.count(!_.startsWith("#"))) // replay → no-op
-    require(snap.contains("# base:."),
+    val snap = manifestAt(table, curV)
+    if (snap.hasTxn(txnId))
+      return (curV, 0, snap.files.size) // replay → no-op
+    require(snap.rootRelative,
       s"updateWhereCAS on snapshot-mode table $table")
-    require(!snap.exists(l => l.startsWith("# delete:") || l.startsWith("# pdel:")),
+    require(snap.deletes.isEmpty && snap.pdels.isEmpty,
       s"updateWhereCAS: $table carries standing delete vectors — use the " +
         "locked updateWhere (vector semantics do not commute with appends)")
-    require(!snap.exists(l => l.startsWith("# firstrow:") ||
-      l.startsWith("# rowid_phys:") || l.startsWith("# rowid_next:")),
+    require(!snap.hasLineage,
       s"updateWhereCAS on row-lineage table $table — use updateWhereLineage")
-    val all = snap.filterNot(_.startsWith("#"))
+    val all = snap.files
     val root = Paths.get(table).toAbsolutePath
     // probe + rewrite run over the LOGICAL frame (r19, lifting the r18
     // refusal): on an evolved table the predicate and SET expressions see
@@ -1707,7 +1618,6 @@ object Acid {
       .collect() // O(files) rows — manifest-construction control plane
       .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
       .sorted.toSeq
-    val touchedSet = touched.toSet
     val newFiles =
       if (touched.isEmpty) Seq.empty[String]
       else {
@@ -1724,20 +1634,19 @@ object Acid {
           "updateWhereCAS")
       }
     beforeCommit()
-    val deadStat = deadStatLines(touched) _
     val v = commitNextVersion(table) { (c, prev) =>
-      if (prev.contains(s"# txn:$txnId")) Some(c.get)
+      if (prev.hasTxn(txnId)) Some(c.get)
       else {
         // conflict check against however far the table advanced past the
         // snapshot — runs BEFORE the claim, so an abort never wedges a
         // claim file; re-evaluated from scratch on every raced retry
-        val prevFiles = prev.filterNot(_.startsWith("#")).toSet
+        val prevFiles = prev.files.toSet
         val lostRead = touched.filterNot(prevFiles)
         if (lostRead.nonEmpty) throw new WriteConflictException(
           s"updateWhereCAS($txnId) on $table: a concurrent writer rewrote " +
             s"file(s) this update read (${lostRead.take(3).mkString(", ")}) — " +
             "retry on the new snapshot")
-        if (prev.exists(l => l.startsWith("# delete:") || l.startsWith("# pdel:")))
+        if (prev.deletes.nonEmpty || prev.pdels.nonEmpty)
           throw new WriteConflictException(
             s"updateWhereCAS($txnId) on $table: a concurrent merge-on-read " +
               "delete landed a standing vector — its hides apply to rows " +
@@ -1749,12 +1658,7 @@ object Acid {
         // colmap/coldrop/coldefault lines vs the snapshot) changes what
         // the logical rewrite should have produced — snapshot-matching
         // evolution metadata commutes and carries forward
-        val evoOf = (ls: Seq[String]) => ls.filter(l =>
-          l.startsWith("# colmap:") || l.startsWith("# coldrop:") ||
-            l.startsWith("# coldefault:"))
-        if (evoOf(prev) != evoOf(snap) || prev.exists(l =>
-          l.startsWith("# firstrow:") || l.startsWith("# rowid_phys:") ||
-            l.startsWith("# rowid_next:")))
+        if (prev.evolution != snap.evolution || prev.hasLineage)
           throw new WriteConflictException(
             s"updateWhereCAS($txnId) on $table: a concurrent commit " +
               "installed schema-evolution or row-lineage metadata — the " +
@@ -1775,11 +1679,7 @@ object Acid {
       }
     } { (_, prev) =>
       // rebase: the advanced state minus this update's touched files
-      ("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:") && !deadStat(l)) ++
-        prev.filterNot(_.startsWith("#")).filterNot(touchedSet) ++ newFiles
+      rewriteManifest(prev, txnId, touched, newFiles)
     }
     (v, touched.size, all.size)
   }
@@ -1822,11 +1722,7 @@ object Acid {
   /** Constraints recorded in version `v`'s manifest: name → SQL predicate
     * every row of every future append must satisfy. */
   def constraints(table: String, v: Long): Seq[(String, String)] =
-    manifestLines(table, v).filter(_.startsWith("# constraint:")).map { l =>
-      val body = l.stripPrefix("# constraint:")
-      val (n, p) = body.span(_ != '|')
-      n -> p.drop(1)
-    }
+    manifestAt(table, v).constraints.map(c => c.name -> c.pred)
 
   /** Idempotent append that ENFORCES the table's CHECK constraints —
     * Delta's `ALTER TABLE ADD CONSTRAINT` contract: constraints ride the
@@ -1858,14 +1754,13 @@ object Acid {
     }
     lazy val newFiles = writeTxnData(spark, table, df, txnId)
     commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.contains("# base:."),
+      require(cur.isEmpty || prev.rootRelative,
         s"appendTxnChecked on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+      if (prev.hasTxn(txnId)) Some(cur.get) else None
     } { (_, prev) =>
-      val declared = prev.filter(_.startsWith("# constraint:"))
-      val added = newConstraints.map { case (n, p) => s"# constraint:$n|$p" }
-        .filterNot(declared.contains)
-      appendManifest(prev, txnId, newFiles) ++ added
+      val added = newConstraints.map { case (n, p) => Manifest.Constraint(n, p) }
+        .filterNot(prev.constraints.contains)
+      appendManifest(prev, Seq(txnId), newFiles) ++ added
     }
   }
 
@@ -1896,57 +1791,41 @@ object Acid {
     * Idempotent per txnId like [[appendTxn]]; delete vectors and the txn
     * ledger carry forward unchanged. */
   def appendTxnEvolved(spark: SparkSession, table: String, df: DataFrame,
-      txnId: Long, partitionCols: Seq[String]): Long = withWriterLock(table) {
+      txnId: Long, partitionCols: Seq[String]): Long = {
     require(partitionCols.nonEmpty, "appendTxnEvolved: empty spec — use appendTxn")
-    lazy val written: (Seq[String], Seq[String]) = { // at most once
-      val root = Paths.get(table)
-      val dataDir = root.resolve(s"txn=$txnId")
-      val shadows = partitionCols.map(c => s"__part_$c")
-      val shadowed = partitionCols.zip(shadows).foldLeft(df) {
-        case (d, (c, s)) => d.withColumn(s, col(c))
-      }
-      shadowed.write.mode("overwrite")
-        .partitionBy(shadows: _*).parquet(dataDir.toString)
-      val walk = Files.walk(dataDir)
-      val files =
-        try walk.filter(p => p.toString.endsWith(".parquet"))
-          .map[String](p => root.relativize(p).toString)
-          .sorted().toArray.map(_.toString).toSeq
-        finally walk.close()
-      // partition tuple per file, parsed from the shadow dirs it landed in
-      val pvals = files.map { f =>
-        val vals = f.split('/').toSeq.collect {
-          case seg if seg.startsWith("__part_") && seg.contains('=') =>
-            val Array(c, v) = seg.split("=", 2)
-            s"${c.stripPrefix("__part_")}=$v"
-        }
-        s"# pval:$f|${vals.mkString(",")}"
-      }
-      (files, pvals :+ s"# pspec:$txnId|${partitionCols.mkString(",")}")
-    }
-    commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.contains("# base:."),
-        s"appendTxnEvolved on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
-    } { (_, prev) =>
-      ("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        // same carry-forward prefix set as [[appendManifest]] (ADVICE r14:
-        // dropping constraint/minmax/bloom/rows here silently un-enforced
-        // standing CHECK constraints and blinded skipping/erase after any
-        // evolved append)
-        prev.filter(l => l.startsWith("# delkey:") || l.startsWith("# delete:") ||
-          l.startsWith("# pval:") || l.startsWith("# pspec:") ||
-          l.startsWith("# constraint:") ||
-          l.startsWith("# minmax:") || l.startsWith("# bloom:") ||
-          l.startsWith("# rows:") || l.startsWith("# coldefault:") ||
-          l.startsWith("# firstrow:") || l.startsWith("# rowid_phys:") ||
-          l.startsWith("# rowid_next:") || l.startsWith("# pdel:") ||
-          l.startsWith("# prop:")) ++
-        written._2 ++
-        prev.filterNot(_.startsWith("#")) ++ written._1
-    }
+    appendShadowPartitioned(table, txnId, partitionCols, "appendTxnEvolved",
+      partitionCols.foldLeft(df)((d, c) => d.withColumn(s"__part_$c", col(c))))
   }
+
+  /** The shared write + commit of [[appendTxnEvolved]] and
+    * [[appendTxnHidden]]: land `shadowed` under `txn=<id>/` partitioned by
+    * its `__part_<name>` shadow columns, record each file's tuple (parsed
+    * from the shadow dirs it landed in) plus the commit's spec, and commit
+    * as an ordinary append — every standing header carries forward. */
+  private def appendShadowPartitioned(table: String, txnId: Long,
+      names: Seq[String], what: String, shadowed: DataFrame): Long =
+    withWriterLock(table) {
+      lazy val written: (Seq[String], Seq[Manifest.Entry]) = { // at most once
+        val dataDir = Paths.get(table).resolve(s"txn=$txnId")
+        shadowed.write.mode("overwrite")
+          .partitionBy(names.map(n => s"__part_$n"): _*).parquet(dataDir.toString)
+        val files = listParquet(table, dataDir)
+        val pvals = files.map { f =>
+          val vals = f.split('/').toSeq.collect {
+            case seg if seg.startsWith("__part_") && seg.contains('=') =>
+              val Array(c, v) = seg.split("=", 2)
+              s"${c.stripPrefix("__part_")}=$v"
+          }
+          Manifest.PVal(f, vals.mkString(","))
+        }
+        (files, pvals :+ Manifest.PSpec(txnId, names))
+      }
+      commitNextVersion(table) { (cur, prev) =>
+        require(cur.isEmpty || prev.rootRelative,
+          s"$what on snapshot-mode table $table")
+        if (prev.hasTxn(txnId)) Some(cur.get) else None
+      } { (_, prev) => appendManifest(prev, Seq(txnId), written._1, written._2) }
+    }
 
   // ---- hidden partitioning (Iceberg partition transforms) ----
 
@@ -1966,64 +1845,26 @@ object Acid {
     * evolve (add a transform later; old files are conservatively kept by
     * every pruner). Idempotent per txnId. */
   def appendTxnHidden(spark: SparkSession, table: String, df: DataFrame,
-      txnId: Long, transforms: Seq[(String, Column)]): Long = withWriterLock(table) {
+      txnId: Long, transforms: Seq[(String, Column)]): Long = {
     require(transforms.nonEmpty, "appendTxnHidden: no transforms — use appendTxn")
-    lazy val written: (Seq[String], Seq[String]) = { // at most once
-      val root = Paths.get(table)
-      val dataDir = root.resolve(s"txn=$txnId")
-      val shadows = transforms.map { case (n, _) => s"__part_$n" }
-      val shadowed = transforms.foldLeft(df) {
-        case (d, (n, e)) => d.withColumn(s"__part_$n", e)
-      }
-      // one task per partition tuple keeps the file count O(tuples), not
-      // O(tuples × tasks) — the small-files guard a real writer applies.
-      // Keyed by the FULL tuple (r20; the head transform alone serialized
-      // each day's bucket files through one task) with an explicit count:
-      // AQE would coalesce this small shuffle to a single writer task,
-      // while 8× parallelism spawned ~250 empty write tasks per commit
-      // for single-transform layouts (the 8-16-bucket SPJ fixtures,
-      // measured +3 s over 5 commits). 2× parallelism spreads a
-      // day × bucket tuple set across every core and keeps empty-task
-      // overhead negligible; each tuple still hashes to exactly one
-      // task, so the file count stays O(tuples).
-      shadowed.repartition(
-          spark.sparkContext.defaultParallelism * 2, shadows.map(col): _*)
-        .write.mode("overwrite")
-        .partitionBy(shadows: _*).parquet(dataDir.toString)
-      val walk = Files.walk(dataDir)
-      val files =
-        try walk.filter(p => p.toString.endsWith(".parquet"))
-          .map[String](p => root.relativize(p).toString)
-          .sorted().toArray.map(_.toString).toSeq
-        finally walk.close()
-      val pvals = files.map { f =>
-        val vals = f.split('/').toSeq.collect {
-          case seg if seg.startsWith("__part_") && seg.contains('=') =>
-            val Array(c, v) = seg.split("=", 2)
-            s"${c.stripPrefix("__part_")}=$v"
-        }
-        s"# pval:$f|${vals.mkString(",")}"
-      }
-      (files, pvals :+ s"# pspec:$txnId|${transforms.map(_._1).mkString(",")}")
+    val shadows = transforms.map { case (n, _) => s"__part_$n" }
+    val shadowed = transforms.foldLeft(df) {
+      case (d, (n, e)) => d.withColumn(s"__part_$n", e)
     }
-    commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.contains("# base:."),
-        s"appendTxnHidden on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
-    } { (_, prev) =>
-      ("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("# delkey:") || l.startsWith("# delete:") ||
-          l.startsWith("# pval:") || l.startsWith("# pspec:") ||
-          l.startsWith("# constraint:") ||
-          l.startsWith("# minmax:") || l.startsWith("# bloom:") ||
-          l.startsWith("# rows:") || l.startsWith("# coldefault:") ||
-          l.startsWith("# firstrow:") || l.startsWith("# rowid_phys:") ||
-          l.startsWith("# rowid_next:") || l.startsWith("# pdel:") ||
-          l.startsWith("# prop:")) ++
-        written._2 ++
-        prev.filterNot(_.startsWith("#")) ++ written._1
-    }
+    // one task per partition tuple keeps the file count O(tuples), not
+    // O(tuples × tasks) — the small-files guard a real writer applies.
+    // Keyed by the FULL tuple (r20; the head transform alone serialized
+    // each day's bucket files through one task) with an explicit count:
+    // AQE would coalesce this small shuffle to a single writer task,
+    // while 8× parallelism spawned ~250 empty write tasks per commit
+    // for single-transform layouts (the 8-16-bucket SPJ fixtures,
+    // measured +3 s over 5 commits). 2× parallelism spreads a
+    // day × bucket tuple set across every core and keeps empty-task
+    // overhead negligible; each tuple still hashes to exactly one
+    // task, so the file count stays O(tuples).
+    appendShadowPartitioned(table, txnId, transforms.map(_._1),
+      "appendTxnHidden", shadowed.repartition(
+        spark.sparkContext.defaultParallelism * 2, shadows.map(col): _*))
   }
 
   /** The standard transforms, as (derivedName, expr) builders. `dayOf`
@@ -2063,31 +1904,32 @@ object Acid {
       eqs: Map[String, Long] = Map.empty): (DataFrame, Int, Int) = {
     val cur = currentVersion(table).getOrElse(
       sys.error(s"Acid.readPrunedHidden: no committed version at $table"))
-    val lines = manifestLines(table, cur)
-    require(lines.contains("# base:."),
-      s"readPrunedHidden on snapshot-mode table $table")
-    val pvals: Map[String, Map[String, String]] = lines
-      .filter(_.startsWith("# pval:"))
-      .map { l =>
-        val body = l.stripPrefix("# pval:")
-        val (f, tup) = body.span(_ != '|')
-        f -> tup.drop(1).split(',').filter(_.nonEmpty)
-          .map { kv => val Array(c, v) = kv.split("=", 2); c -> v }.toMap
-      }.toMap
-    val files = lines.filterNot(_.startsWith("#"))
-    val kept = files.filter { f =>
-      val tuple = pvals.getOrElse(f, Map.empty)
+    readPruned(spark, table, cur, "readPrunedHidden") { tuple =>
       ranges.forall { case (n, lo, hi) =>
         tuple.get(n).forall { v => val x = v.toLong; x >= lo && x <= hi } } &&
         eqs.forall { case (n, v) => tuple.get(n).forall(_.toLong == v) }
     }
+  }
+
+  /** Partition-tuple pruning over version `v`: keep each file whose
+    * recorded tuple (empty when none) passes `keep`. An all-pruned
+    * predicate is a legitimate empty RESULT, not an error (ADVICE r14:
+    * pruning is an optimization, never a semantics change) — it reads as a
+    * schema-stable empty frame over the table's merged schema. Returns
+    * (frame, kept, total). */
+  private def readPruned(spark: SparkSession, table: String, v: Long,
+      what: String)(keep: Map[String, String] => Boolean): (DataFrame, Int, Int) = {
+    val m = manifestAt(table, v)
+    require(m.rootRelative, s"$what on snapshot-mode table $table")
+    val files = m.files
+    val kept = files.filter(f => keep(m.pvals.get(f).fold(Map.empty[String, String])(_.values)))
     if (kept.isEmpty) {
-      require(files.nonEmpty, s"readPrunedHidden: empty manifest at $table v$cur")
+      require(files.nonEmpty, s"$what: empty manifest at $table v$v")
       val empty = readMergedSchema(spark, files.map(f => s"$table/$f")).limit(0)
-      (subtractDeletes(spark, table, lines, empty), 0, files.size)
+      (subtractDeletes(spark, table, m, empty), 0, files.size)
     } else {
       val base = readParquetCached(spark, kept.map(f => s"$table/$f"))
-      (subtractDeletes(spark, table, lines, base), kept.size, files.size)
+      (subtractDeletes(spark, table, m, base), kept.size, files.size)
     }
   }
 
@@ -2101,32 +1943,8 @@ object Acid {
       preds: Map[String, String]): (DataFrame, Int, Int) = {
     val cur = currentVersion(table).getOrElse(
       sys.error(s"Acid.readPrunedEvolved: no committed version at $table"))
-    val lines = manifestLines(table, cur)
-    require(lines.contains("# base:."),
-      s"readPrunedEvolved on snapshot-mode table $table")
-    val pvals: Map[String, Map[String, String]] = lines
-      .filter(_.startsWith("# pval:"))
-      .map { l =>
-        val body = l.stripPrefix("# pval:")
-        val (f, tup) = body.span(_ != '|')
-        f -> tup.drop(1).split(',').filter(_.nonEmpty)
-          .map { kv => val Array(c, v) = kv.split("=", 2); c -> v }.toMap
-      }.toMap
-    val files = lines.filterNot(_.startsWith("#"))
-    val kept = files.filter { f =>
-      val tuple = pvals.getOrElse(f, Map.empty)
+    readPruned(spark, table, cur, "readPrunedEvolved") { tuple =>
       preds.forall { case (c, v) => tuple.get(c).forall(_ == v) }
-    }
-    // an all-pruned predicate is a legitimate empty RESULT, not an error
-    // (ADVICE r14: pruning is an optimization, never a semantics change) —
-    // return a schema-stable empty frame over the table's merged schema
-    if (kept.isEmpty) {
-      require(files.nonEmpty, s"readPrunedEvolved: empty manifest at $table v$cur")
-      val empty = readMergedSchema(spark, files.map(f => s"$table/$f")).limit(0)
-      (subtractDeletes(spark, table, lines, empty), 0, files.size)
-    } else {
-      val base = readParquetCached(spark, kept.map(f => s"$table/$f"))
-      (subtractDeletes(spark, table, lines, base), kept.size, files.size)
     }
   }
 
@@ -2150,14 +1968,9 @@ object Acid {
     Files.createDirectories(root)
     val dataDir = root.resolve(s"wap=$wapId")
     df.write.mode("overwrite").parquet(dataDir.toString)
-    val walk = Files.walk(dataDir)
-    val files =
-      try walk.filter(p => p.toString.endsWith(".parquet"))
-        .map[String](p => root.relativize(p).toString)
-        .sorted().toArray.map(_.toString).toSeq
-      finally walk.close()
+    val files = listParquet(table, dataDir)
     val tmp = root.resolve(s"manifest-wap-$wapId.txt.tmp")
-    Files.write(tmp, files.mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.write(tmp, Manifest.bytes(files.map(Manifest.DataFile)))
     Files.move(tmp, wapManifest(table, wapId),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     files
@@ -2177,10 +1990,7 @@ object Acid {
   private def wapFiles(table: String, wapId: String): Seq[String] = {
     val p = wapManifest(table, wapId)
     require(Files.exists(p), s"Acid: no staged wap '$wapId' at $table")
-    val it = Files.readAllLines(p).iterator()
-    val b = Seq.newBuilder[String]
-    while (it.hasNext) { val l = it.next().trim; if (l.nonEmpty) b += l }
-    b.result()
+    Manifest.read(p).files
   }
 
   /** The AUDIT view: current committed snapshot ∪ the staged batch —
@@ -2192,10 +2002,10 @@ object Acid {
   def readWap(spark: SparkSession, table: String, wapId: String): DataFrame = {
     val cur = currentVersion(table).getOrElse(
       sys.error(s"Acid.readWap: no committed version at $table"))
-    val lines = manifestLines(table, cur)
-    require(lines.contains("# base:."), s"readWap on snapshot-mode table $table")
-    val all = lines.filterNot(_.startsWith("#")) ++ wapFiles(table, wapId)
-    subtractDeletes(spark, table, lines,
+    val m = manifestAt(table, cur)
+    require(m.rootRelative, s"readWap on snapshot-mode table $table")
+    val all = m.files ++ wapFiles(table, wapId)
+    subtractDeletes(spark, table, m,
       readParquetCached(spark, all.map(f => s"$table/$f")))
   }
 
@@ -2215,10 +2025,10 @@ object Acid {
     }
     val files = wapFiles(table, wapId)
     val v = commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.contains("# base:."),
+      require(cur.isEmpty || prev.rootRelative,
         s"publishWap on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None // replay
-    } { (_, prev) => appendManifest(prev, txnId, files) }
+      if (prev.hasTxn(txnId)) Some(cur.get) else None // replay
+    } { (_, prev) => appendManifest(prev, Seq(txnId), files) }
     Files.deleteIfExists(wapManifest(table, wapId))
     v
   }
@@ -2236,15 +2046,13 @@ object Acid {
     }
   }
 
-  private def commitManifest(table: String, v: Long, lines: Seq[String]): Long = {
+  private def commitManifest(table: String, v: Long,
+      entries: Seq[Manifest.Entry]): Long = {
     // CREATE_NEW: the manifest write is itself a put-if-absent, so two
     // writers who both believe they own v (possible only through stale-claim
     // reclamation racing a slow-but-live claimant) cannot silently clobber
     // each other — the loser throws FileAlreadyExistsException and rebases
-    Files.write(Paths.get(table, s"manifest-$v.txt"),
-      lines.mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
+    Manifest.writeNew(manifestPath(table, v), entries)
     val tmp = Paths.get(table, s"_current.tmp.$v")
     Files.write(tmp, v.toString.getBytes("UTF-8"))
     Files.move(tmp, pointer(table),
@@ -2265,42 +2073,30 @@ object Acid {
   def deleteTxn(spark: SparkSession, table: String, keys: DataFrame,
       keyCol: String, txnId: Long): Long = withWriterLock(table) {
     lazy val delFiles = { // written at most once
-      val root = Paths.get(table)
-      val delDir = root.resolve(s"del=$txnId")
+      val delDir = Paths.get(table).resolve(s"del=$txnId")
       keys.select(col(keyCol)).distinct().coalesce(1)
         .write.mode("overwrite").parquet(delDir.toString)
-      val walk = Files.walk(delDir)
-      try walk.filter(p => p.toString.endsWith(".parquet"))
-        .map[String](p => root.relativize(p).toString)
-        .sorted().toArray.map(_.toString).toSeq
-      finally walk.close()
+      listParquet(table, delDir)
     }
     commitNextVersion(table) { (cur, prev) =>
       val c = cur.getOrElse(sys.error(s"Acid.deleteTxn: no committed version at $table"))
-      require(prev.contains("# base:."), s"deleteTxn on snapshot-mode table $table")
-      val prevKey = prev.find(_.startsWith("# delkey:")).map(_.stripPrefix("# delkey:").trim)
-      require(prevKey.forall(_ == keyCol),
-        s"deleteTxn: table uses delete key ${prevKey.get}, got $keyCol")
-      if (prev.contains(s"# txn:$txnId")) Some(c) else None // replay → no-op
-    } { (_, prev) =>
-      ("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        Seq(s"# delkey:$keyCol") ++
-        (prev.filter(_.startsWith("# delete:")) ++ delFiles.map(f => s"# delete:$f")) ++
-        // partition-evolution metadata, CHECK constraints, and per-file
-        // stats survive merge-on-read deletes (the data files are
-        // untouched, so their tuples/zone-maps/blooms still hold; # rows
-        // stays PHYSICAL truth — logical counts subtract the vectors)
-        prev.filter(l => l.startsWith("# pval:") || l.startsWith("# pspec:") ||
-          l.startsWith("# constraint:") || l.startsWith("# minmax:") ||
-          l.startsWith("# bloom:") || l.startsWith("# rows:") ||
-          l.startsWith("# colmap:") || l.startsWith("# coldrop:") ||
-          l.startsWith("# firstrow:") || l.startsWith("# rowid_phys:") ||
-          l.startsWith("# rowid_next:") || l.startsWith("# coldefault:") ||
-          l.startsWith("# pdel:") || l.startsWith("# prop:")) ++
-        prev.filterNot(_.startsWith("#"))
-    }
+      require(prev.rootRelative, s"deleteTxn on snapshot-mode table $table")
+      require(prev.delKey.forall(_ == keyCol),
+        s"deleteTxn: table uses delete key ${prev.delKey.get}, got $keyCol")
+      if (prev.hasTxn(txnId)) Some(c) else None // replay → no-op
+    } { (_, prev) => deleteManifest(prev, txnId, keyCol, delFiles) }
   }
+
+  /** The merge-on-read delete manifest: the standing equality vector grows
+    * by `delFiles`; every other header carries (the data files are
+    * untouched, so their tuples/zone-maps/blooms still hold; `# rows`
+    * stays PHYSICAL truth — logical counts subtract the vectors). Shared
+    * by main, branch and branch-replay deletes. */
+  private def deleteManifest(prev: Manifest, txnId: Long, keyCol: String,
+      delFiles: Seq[String]): Seq[Manifest.Entry] =
+    Manifest.head(prev, Seq(txnId)) ++ (Manifest.DelKey(keyCol) +:
+      (prev.deletes ++ delFiles).map(Manifest.Delete)) ++
+      Manifest.carried(prev, Manifest.vectorEntries) ++ prev.files.map(Manifest.DataFile)
 
   /** Fold standing delete vectors into the data (deferred copy-on-write):
     * reads the merged current state, rewrites it as `txn=<txnId>/`, and
@@ -2350,8 +2146,8 @@ object Acid {
           .collect() // O(files) rows — manifest-construction control plane
           .map { r =>
             val rel = root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString
-            s"# minmax:$rel|$name|${r.getLong(1)}|${r.getLong(2)}"
-          }.sorted
+            Manifest.MinMax(rel, name, r.getLong(1), r.getLong(2))
+          }.sortBy(Manifest.render)
       } ++
       // file-level blooms for append-mode tables (commit's bloom harvest,
       // root-relative) — the point-lookup index [[eraseKeys]] prunes by
@@ -2389,53 +2185,41 @@ object Acid {
       require(attempts <= 50, s"optimizeWhere: concurrent-commit retry limit on $table")
       val snapV = currentVersion(table).getOrElse(
         sys.error(s"Acid.optimizeWhere: no committed version at $table"))
-      val lines = manifestLines(table, snapV)
-      if (lines.contains(s"# txn:$txnId")) return snapV // replay → no-op
-      require(lines.contains("# base:."),
+      val snap = manifestAt(table, snapV)
+      if (snap.hasTxn(txnId)) return snapV // replay → no-op
+      require(snap.rootRelative,
         s"optimizeWhere on snapshot-mode table $table")
       // same guard as [[rewriteCommit]] (ADVICE r17): a partition-scoped
       // rewrite drops the selected files' `# firstrow:` assignments, so a
       // later assignRowIds would silently re-issue ids — row lineage must
       // compact through optimizeLineage, which materializes the ids
-      require(!lines.exists(l => l.startsWith("# firstrow:") ||
-        l.startsWith("# rowid_phys:") || l.startsWith("# rowid_next:")),
+      require(!snap.hasLineage,
         s"optimizeWhere on row-lineage table $table — use optimizeLineage " +
           "(it materializes ids through the rewrite)")
-      val sel = lines.collect {
-        case l if l.startsWith("# pval:") =>
-          val body = l.stripPrefix("# pval:")
-          val (f, tuple) = body.span(_ != '|')
-          (f, tuple.drop(1).split(',').toSeq)
-      }.collect { case (f, comps) if comps.contains(s"$name=$value") => f }
+      val sel = snap.entries.collect {
+        case p: Manifest.PVal if p.parts.contains(s"$name=$value") => p.file
+      }
       require(sel.nonEmpty,
         s"optimizeWhere: no file's partition tuple names $name=$value")
-      val selSet = sel.toSet
       // footer-union read under schema evolution, like [[readRewriteSnapshot]]
       // — a plain scan would let an arbitrary footer drop a generation's
       // stored column from the rewrite (ADVICE r17)
-      val selScan = if (mixedGenerations(lines))
+      val selScan = if (snap.evolution.nonEmpty)
         readMergedSchema(spark, sel.map(f => s"$table/$f"))
       else readParquetCached(spark, sel.map(f => s"$table/$f"))
-      val merged = subtractDeletes(spark, table, lines, selScan)
+      val merged = subtractDeletes(spark, table, snap, selScan)
         .coalesce(targetFiles).cache()
       merged.count() // materialize BEFORE the lock
       try out = withWriterLock(table) {
         commitNextVersion(table) { (cur, prev) =>
-          if (prev.contains(s"# txn:$txnId")) Some(cur.get)
+          if (prev.hasTxn(txnId)) Some(cur.get)
           else if (cur.get != snapV) Some(StaleSnapshot)
           else None
         } { (_, prev) =>
           val newFiles = writeTxnData(spark, table, merged, txnId)
-          val deadMeta = (l: String) => sel.exists(f =>
-            l.startsWith(s"# pval:$f|") || l.startsWith(s"# minmax:$f|") ||
-              l.startsWith(s"# bloom:$f|") || l.startsWith(s"# rows:$f|") ||
-              l.startsWith(s"# firstrow:$f|"))
-          ("# base:." +: s"# op:rewrite:optimizeWhere" +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") && !deadMeta(l)) ++
-            newFiles.map(f => s"# pval:$f|$name=$value") ++
-            prev.filterNot(_.startsWith("#")).filterNot(selSet) ++ newFiles
+          rewriteManifest(prev, txnId, sel, newFiles,
+            added = newFiles.map(Manifest.PVal(_, s"$name=$value")),
+            op = Some("rewrite:optimizeWhere"))
         }
       } finally merged.unpersist(blocking = false)
     }
@@ -2459,44 +2243,37 @@ object Acid {
       rowCounts: Boolean = false): Long = withWriterLock(table) {
     commitNextVersion(table) { (cur, prev) =>
       require(cur.isDefined, s"Acid.analyzeTable: no committed version at $table")
-      require(prev.contains("# base:."),
+      require(prev.rootRelative,
         s"analyzeTable on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+      if (prev.hasTxn(txnId)) Some(cur.get) else None
     } { (_, prev) =>
-      val files = prev.filterNot(_.startsWith("#"))
+      val files = prev.files
       val root = Paths.get(table).toAbsolutePath
       def rel(uri: String) =
         root.relativize(Paths.get(java.net.URI.create(uri))).toString
       val statLines = stats.toSeq.flatMap { case (name, e) =>
-        val missing = files.filterNot(f =>
-          prev.exists(_.startsWith(s"# minmax:$f|$name|")))
+        val have = prev.minmax.filter(_.name == name).map(_.file).toSet
+        val missing = files.filterNot(have)
         if (missing.isEmpty) Seq.empty
         else readParquetCached(spark, missing.map(f => s"$table/$f"))
           .groupBy(input_file_name().as("f"))
           .agg(min(e).as("lo"), max(e).as("hi"))
           .filter(col("lo").isNotNull) // all-null/empty files carry no line
           .collect() // O(files) rows — manifest control plane
-          .map(r => s"# minmax:${rel(r.getString(0))}|$name|${r.getLong(1)}|${r.getLong(2)}")
-          .sorted.toSeq
+          .map(r => Manifest.MinMax(rel(r.getString(0)), name, r.getLong(1), r.getLong(2)))
+          .sortBy(Manifest.render).toSeq
       }
       val bloomStatLines = bloom.toSeq.flatMap { case (name, e) =>
-        val missing = files.filterNot(f =>
-          prev.exists(_.startsWith(s"# bloom:$f|$name|")))
+        val have = prev.blooms.filter(_.name == name).map(_.file).toSet
+        val missing = files.filterNot(have)
         if (missing.isEmpty) Seq.empty
         else bloomLines(spark, missing.map(f => s"$table/$f"), root, name, e)
       }
       val rowLines = if (!rowCounts) Seq.empty else {
-        val missing = files.filterNot(f => prev.exists(_.startsWith(s"# rows:$f|")))
-        // counts from the immutable files' footers — no scan job (r20)
-        missing.map(f => f -> footerRowCount(spark, s"$table/$f"))
-          .filter(_._2 > 0)
-          .map { case (f, n) => s"# rows:$f|$n" }.sorted
+        val have = prev.rows.map(_.file).toSet
+        rowEntries(spark, files.filterNot(have), f => s"$table/$f")
       }
-      ("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:")) ++
-        statLines ++ bloomStatLines ++ rowLines ++ files
+      metadataCommit(prev, txnId, statLines ++ bloomStatLines ++ rowLines)
     }
   }
 
@@ -2516,29 +2293,21 @@ object Acid {
     }
     commitNextVersion(table) { (cur, prev) =>
       require(cur.isDefined, s"Acid.setProperties: no committed version at $table")
-      require(prev.contains("# base:."),
+      require(prev.rootRelative,
         s"setProperties on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+      if (prev.hasTxn(txnId)) Some(cur.get) else None
     } { (_, prev) =>
       val keys = props.map(_._1).toSet
-      def propKey(l: String) = l.stripPrefix("# prop:").takeWhile(_ != '|')
-      (("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:") &&
-          !(l.startsWith("# prop:") && keys.contains(propKey(l)))) ++
-        props.map { case (k, v) => s"# prop:$k|$v" }) ++
-        prev.filterNot(_.startsWith("#"))
+      metadataCommit(prev, txnId, props.map { case (k, v) => Manifest.Prop(k, v) }, {
+        case Manifest.Prop(k, _) => keys(k)
+        case _ => false
+      })
     }
   }
 
   /** Current table properties (insertion-independent: sorted by key). */
   def properties(table: String): Seq[(String, String)] =
-    headLines(table).collect { case l if l.startsWith("# prop:") =>
-      val body = l.stripPrefix("# prop:")
-      val (k, v) = body.span(_ != '|')
-      (k, v.drop(1))
-    }.sortBy(_._1)
+    headManifest(table).props.map(p => (p.key, p.value)).sortBy(_._1)
 
   /** DESCRIBE — the evolved schema (post column-mapping, defaults
     * visible) plus table properties, as (section, name, value) rows:
@@ -2568,41 +2337,22 @@ object Acid {
     withWriterLock(table) {
     commitNextVersion(table) { (cur, prev) =>
       require(cur.isDefined, s"Acid.assignRowIds: no committed version at $table")
-      require(prev.contains("# base:."),
+      require(prev.rootRelative,
         s"assignRowIds on snapshot-mode table $table")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+      if (prev.hasTxn(txnId)) Some(cur.get) else None
     } { (_, prev) =>
-      val files = prev.filterNot(_.startsWith("#"))
-      val assigned = prev.collect {
-        case l if l.startsWith("# firstrow:") =>
-          l.stripPrefix("# firstrow:").takeWhile(_ != '|')
-      }.toSet
-      val phys = prev.collect { case l if l.startsWith("# rowid_phys:") =>
-        l.stripPrefix("# rowid_phys:").trim }.toSet
-      val missing = files.filterNot(f => assigned(f) || phys(f)).sorted
-      val recorded: Map[String, Long] = prev.collect {
-        case l if l.startsWith("# rows:") =>
-          val body = l.stripPrefix("# rows:")
-          val (f, n) = body.span(_ != '|')
-          f -> n.drop(1).toLong
-      }.toMap
-      val toCount = missing.filterNot(recorded.contains)
+      val missing = prev.files
+        .filterNot(f => prev.firstRows.contains(f) || prev.rowIdPhys(f)).sorted
+      val recorded: Map[String, Long] = prev.rows.map(r => r.file -> r.n).toMap
       // counts from the immutable files' footers — no scan job (r20)
-      val counted: Map[String, Long] =
-        toCount.map(f => f -> footerRowCount(spark, s"$table/$f")).toMap
-      var next = prev.find(_.startsWith("# rowid_next:"))
-        .map(_.stripPrefix("# rowid_next:").trim.toLong).getOrElse(0L)
-      val newLines = missing.map { f =>
-        val line = s"# firstrow:$f|$next"
-        next += counted.getOrElse(f, recorded.getOrElse(f, 0L))
-        line
+      var next = prev.rowIdNext.getOrElse(0L)
+      val assigned = missing.map { f =>
+        val e = Manifest.FirstRow(f, next)
+        next += recorded.getOrElse(f, footerRowCount(spark, s"$table/$f"))
+        e
       }
-      (("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:") &&
-          !l.startsWith("# rowid_next:")) ++
-        newLines :+ s"# rowid_next:$next") ++ files
+      metadataCommit(prev, txnId, assigned :+ Manifest.RowIdNext(next),
+        _.isInstanceOf[Manifest.RowIdNext])
     }
   }
 
@@ -2613,9 +2363,9 @@ object Acid {
     * it back directly. Standing delete vectors subtract as everywhere
     * else — a hidden row keeps its id for when MERGE resurrects the key. */
   def readLineage(spark: SparkSession, table: String): DataFrame = {
-    val lines = headLines(table)
-    subtractDeletes(spark, table, lines, lineageFrameFor(spark, table, lines,
-      lines.filterNot(_.startsWith("#")), "readLineage"))
+    val m = headManifest(table)
+    subtractDeletes(spark, table, m, lineageFrameFor(spark, table, m,
+      m.files, "readLineage"))
   }
 
   /** The row_id-attached frame for a SUBSET of a manifest's data files —
@@ -2623,15 +2373,9 @@ object Acid {
     * [[updateWhereLineage]] (the predicate-touched files only). No
     * delete-vector subtraction here; callers decide. */
   private def lineageFrameFor(spark: SparkSession, table: String,
-      lines: Seq[String], files: Seq[String], what: String): DataFrame = {
-    val first: Map[String, Long] = lines.collect {
-      case l if l.startsWith("# firstrow:") =>
-        val b = l.stripPrefix("# firstrow:")
-        val (f, v) = b.span(_ != '|')
-        f -> v.drop(1).toLong
-    }.toMap
-    val phys = lines.collect { case l if l.startsWith("# rowid_phys:") =>
-      l.stripPrefix("# rowid_phys:").trim }.toSet
+      m: Manifest, files: Seq[String], what: String): DataFrame = {
+    val first = m.firstRows
+    val phys = m.rowIdPhys
     files.find(f => !first.contains(f) && !phys(f)).foreach(f => sys.error(
       s"Acid.$what: $f has no row-id assignment — run assignRowIds first"))
     val lazyFiles = files.filterNot(phys)
@@ -2643,12 +2387,11 @@ object Acid {
     // projection), then applies colmap + defaults so both parts land the
     // post-evolution schema and union cleanly. Single-generation tables
     // take the exact pre-r19 path (plain scans, no-op mapping).
-    val mixed = mixedGenerations(lines)
+    val mixed = m.evolution.nonEmpty
     def rd(fs: Seq[String]) =
       if (mixed) readMergedSchema(spark, fs.map(f => s"$table/$f"))
       else readParquetCached(spark, fs.map(f => s"$table/$f"))
-    def logical(df: DataFrame): DataFrame =
-      applyColumnDefaults(lines, applyColumnMapping(lines, df))
+    def logical(df: DataFrame): DataFrame = resolveEvolution(m.evolution, df)
     val parts = Seq(
       if (lazyFiles.isEmpty) None else Some {
         val base = rd(lazyFiles)
@@ -2709,34 +2452,32 @@ object Acid {
       require(attempts <= 50,
         s"updateWhereLineage: concurrent-commit retry limit on $table")
       val cur = currentVersion(table)
-      val lines = cur.map(manifestLines(table, _)).getOrElse(
+      val snap = cur.map(manifestAt(table, _)).getOrElse(
         sys.error(s"Acid.updateWhereLineage: no committed version at $table"))
-      if (lines.contains(s"# txn:$txnId")) {
-        result = (cur.get, 0, lines.count(!_.startsWith("#"))) // replay → no-op
+      if (snap.hasTxn(txnId)) {
+        result = (cur.get, 0, snap.files.size) // replay → no-op
       } else {
-        require(lines.contains("# base:."),
+        require(snap.rootRelative,
           s"updateWhereLineage on snapshot-mode table $table")
-        require(lines.exists(l => l.startsWith("# firstrow:") ||
-          l.startsWith("# rowid_phys:")),
+        require(snap.hasRowIds,
           s"updateWhereLineage on $table: not a row-lineage table — " +
             "use updateWhere (or assignRowIds first)")
-        val all = lines.filterNot(_.startsWith("#"))
+        val all = snap.files
         val root = Paths.get(table).toAbsolutePath
         // probe over the LOGICAL frame (r19 — lineage × evolution): the
         // predicate sees post-rename names and default-filled values
         val touched = if (all.isEmpty) Seq.empty[String]
-        else readLogical(spark, table, lines, all)
+        else readLogical(spark, table, snap, all)
           .filter(pred)
           .select(input_file_name().as("f")).distinct()
           .collect() // O(files) rows — manifest-construction control plane
           .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
           .sorted.toSeq
-        val touchedSet = touched.toSet
         val newFiles =
           if (touched.isEmpty) Seq.empty[String]
           else {
-            val base = subtractDeletes(spark, table, lines,
-              lineageFrameFor(spark, table, lines, touched, "updateWhereLineage"))
+            val base = subtractDeletes(spark, table, snap,
+              lineageFrameFor(spark, table, snap, touched, "updateWhereLineage"))
             sets.foreach { case (c, _) =>
               require(base.columns.contains(c), s"updateWhereLineage: no column $c") }
             val dataCols = base.columns.toSeq.filterNot(_ == "row_id")
@@ -2746,21 +2487,16 @@ object Acid {
                 case None    => col(c)
               }
             } :+ col("row_id").as("__row_id"): _*)
-            writeTxnDataChecked(spark, table, updated, txnId, lines,
+            writeTxnDataChecked(spark, table, updated, txnId, snap,
               "updateWhereLineage")
           }
-        val deadMeta = deadStatLines(touched, lineage = true) _
         val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.contains(s"# txn:$txnId")) Some(c.get)
+          if (prev.hasTxn(txnId)) Some(c.get)
           else if (c != cur) Some(StaleSnapshot)
           else None
         } { (_, prev) =>
-          ("# base:." +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") && !deadMeta(l)) ++
-            newFiles.map(f => s"# rowid_phys:$f") ++
-            prev.filterNot(_.startsWith("#")).filterNot(touchedSet) ++ newFiles
+          rewriteManifest(prev, txnId, touched, newFiles, lineage = true,
+            added = newFiles.map(Manifest.RowIdPhys))
         }
         if (v != StaleSnapshot) result = (v, touched.size, all.size)
       }
@@ -2800,21 +2536,19 @@ object Acid {
       attempts += 1
       require(attempts <= 50, s"mergeCowLineage: concurrent-commit retry limit on $table")
       val cur = currentVersion(table)
-      val lines = cur.map(manifestLines(table, _)).getOrElse(
+      val snap = cur.map(manifestAt(table, _)).getOrElse(
         sys.error(s"Acid.mergeCowLineage: no committed version at $table"))
-      if (lines.contains(s"# txn:$txnId")) {
-        result = (cur.get, 0, lines.count(!_.startsWith("#"))) // replay → no-op
+      if (snap.hasTxn(txnId)) {
+        result = (cur.get, 0, snap.files.size) // replay → no-op
       } else {
-        require(lines.contains("# base:."),
+        require(snap.rootRelative,
           s"mergeCowLineage on snapshot-mode table $table")
-        require(lines.exists(l => l.startsWith("# firstrow:") ||
-          l.startsWith("# rowid_phys:")),
+        require(snap.hasRowIds,
           s"mergeCowLineage on $table: not a row-lineage table — use mergeCow")
-        val next = lines.find(_.startsWith("# rowid_next:"))
-          .map(_.stripPrefix("# rowid_next:").trim.toLong).getOrElse(
-            sys.error(s"mergeCowLineage: $table has no rowid_next mark — " +
-              "run assignRowIds first"))
-        val all = lines.filterNot(_.startsWith("#"))
+        val next = snap.rowIdNext.getOrElse(
+          sys.error(s"mergeCowLineage: $table has no rowid_next mark — " +
+            "run assignRowIds first"))
+        val all = snap.files
         val root = Paths.get(table).toAbsolutePath
         // FREEZE the change frame before anything reads it (the same rule
         // mergeCowBranch applies, and here it is correctness-critical: the
@@ -2833,18 +2567,17 @@ object Acid {
         }
         // key probe over the LOGICAL frame (r19 — lineage × evolution)
         val touched = if (all.isEmpty) Seq.empty[String]
-        else touchedFilesPlanOver(readLogical(spark, table, lines, all),
+        else touchedFilesPlanOver(readLogical(spark, table, snap, all),
           allKeys, keyCol)
           .collect() // O(files) rows — manifest-construction control plane
           .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
           .sorted.toSeq
-        val touchedSet = touched.toSet
         // the VISIBLE id-attached target slice (vectors subtracted — a
         // hidden row neither matches nor donates its id)
         val target =
           if (touched.isEmpty) null
-          else subtractDeletes(spark, table, lines,
-            lineageFrameFor(spark, table, lines, touched, "mergeCowLineage"))
+          else subtractDeletes(spark, table, snap,
+            lineageFrameFor(spark, table, snap, touched, "mergeCowLineage"))
             .cache()
         val dataCols: Seq[String] =
           if (target != null) target.columns.toSeq.filterNot(_ == "row_id")
@@ -2880,30 +2613,24 @@ object Acid {
         val newFiles =
           if (target == null && nInserts == 0) Seq.empty[String]
           else {
-            checkConstraintLines(lines, rewritten, "mergeCowLineage")
+            checkConstraints(snap.constraints, rewritten, "mergeCowLineage")
             writeTxnData(spark, table, rewritten, txnId)
           }
         // vector reconciliation, mergeCow's rule: upserted keys leave the
         // standing vector (the insert above is the resurrection)
-        val vectorLines = reconcileVector(spark, table, lines,
+        val vectors = reconcileVector(spark, table, snap,
           upserts.select(col(keyCol)).distinct(), keyCol,
           Paths.get(table).resolve(s"del=$txnId"), "mergeCowLineage")
-        val deadMeta = deadStatLines(touched, lineage = true) _
         val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.contains(s"# txn:$txnId")) Some(c.get)
+          if (prev.hasTxn(txnId)) Some(c.get)
           else if (c != cur) Some(StaleSnapshot)
           else None
         } { (_, prev) =>
-          ("# base:." +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            vectorLines ++
-            prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") &&
-              !l.startsWith("# delkey:") && !l.startsWith("# delete:") &&
-              !l.startsWith("# rowid_next:") && !deadMeta(l)) ++
-            Seq(s"# rowid_next:${next + nInserts}") ++
-            newFiles.map(f => s"# rowid_phys:$f") ++
-            prev.filterNot(_.startsWith("#")).filterNot(touchedSet) ++ newFiles
+          rewriteManifest(prev, txnId, touched, newFiles, lineage = true,
+            vectors = Some(vectors),
+            added = Manifest.RowIdNext(next + nInserts) +:
+              newFiles.map(Manifest.RowIdPhys),
+            retire = _.isInstanceOf[Manifest.RowIdNext])
         }
         if (target != null) {
           target.unpersist(blocking = false)
@@ -2948,42 +2675,30 @@ object Acid {
       merged.count() // materialize BEFORE the lock
       try out = withWriterLock(table) {
         commitNextVersion(table) { (cur, prev) =>
-          require(prev.contains("# base:."),
+          require(prev.rootRelative,
             s"optimizeLineage on snapshot-mode table $table")
-          if (prev.contains(s"# txn:$txnId")) Some(cur.get)
+          if (prev.hasTxn(txnId)) Some(cur.get)
           else if (cur.get != snapV) Some(StaleSnapshot)
           else None
         } { (_, prev) =>
           val newFiles = writeTxnData(spark, table, merged, txnId)
-          ("# base:." +: s"# op:rewrite:optimizeLineage" +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-            // coldefault carries too (r19): the rewrite STORES the fill,
-            // but the default stays table metadata for future appends —
-            // a later file missing the column must still read the default
-            prev.filter(l => l.startsWith("# constraint:") ||
-              l.startsWith("# colmap:") || l.startsWith("# coldrop:") ||
-              l.startsWith("# coldefault:") ||
-              l.startsWith("# rowid_next:") || l.startsWith("# prop:")) ++
-            newFiles.map(f => s"# rowid_phys:$f") ++ newFiles
+          // coldefault carries too (r19): the rewrite STORES the fill, but
+          // the default stays table metadata for future appends — a later
+          // file missing the column must still read the default
+          Manifest.head(prev, Seq(txnId), Some("rewrite:optimizeLineage")) ++
+            Manifest.carried(prev, Manifest.rewriteRetires) ++
+            newFiles.map(Manifest.RowIdPhys) ++ newFiles.map(Manifest.DataFile)
         }
       } finally merged.unpersist(blocking = false)
     }
     out
   }
 
-  /** True iff the manifest mixes file GENERATIONS whose parquet footers
-    * can disagree — a rename/drop/default landed while older files stayed
-    * on disk. A rewrite reading such a set with a plain parquet scan lets
-    * an ARBITRARY footer win schema inference: the later generation's
-    * stored column silently vanishes from the rewrite, and a carried
-    * `# coldefault:` line then masquerades the lost values as the default
-    * on the next [[readEvolved]] — silent corruption (ADVICE r17). */
-  private def mixedGenerations(lines: Seq[String]): Boolean =
-    lines.exists(l => l.startsWith("# colmap:") ||
-      l.startsWith("# coldrop:") || l.startsWith("# coldefault:"))
-
   /** Rewrite-path snapshot read: plain parquet normally; footer-UNION
-    * (`mergeSchema`) when [[mixedGenerations]] — the union frame keeps
+    * (`mergeSchema`) when the manifest mixes file GENERATIONS (carries
+    * evolution entries — a plain scan would let an ARBITRARY footer win
+    * schema inference and a carried default then masquerade the lost
+    * values, ADVICE r17) — the union frame keeps
     * every generation's physical columns (pre-evolution rows surface NULL
     * in later columns, exactly as they do on disk), so the carried
     * colmap/coldefault lines keep resolving over the rewritten files and
@@ -2992,14 +2707,10 @@ object Acid {
     * [[readVersion]] to preserve its failure mode). */
   private def readRewriteSnapshot(spark: SparkSession, table: String,
       v: Long): DataFrame = {
-    val lines = manifestLines(table, v)
-    if (!lines.contains("# base:.") || !mixedGenerations(lines))
-      readVersion(spark, table, v)
-    else {
-      val files = lines.filterNot(_.startsWith("#"))
-      subtractDeletes(spark, table, lines,
-        readMergedSchema(spark, files.map(f => s"$table/$f")))
-    }
+    val m = manifestAt(table, v)
+    if (!m.rootRelative || m.evolution.isEmpty) readVersion(spark, table, v)
+    else subtractDeletes(spark, table, m,
+      readMergedSchema(spark, m.files.map(f => s"$table/$f")))
   }
 
   /** Shared snapshot-rewrite commit loop ([[compactDeletes]] /
@@ -3013,7 +2724,7 @@ object Acid {
     * writer's rows. */
   private def rewriteCommit(spark: SparkSession, table: String, txnId: Long,
       what: String)(layout: DataFrame => DataFrame)(
-      headers: Seq[String] => Seq[String]): Long = {
+      headers: Seq[String] => Seq[Manifest.Entry]): Long = {
     val StaleSnapshot = -2L
     var attempts = 0
     var out = StaleSnapshot
@@ -3025,7 +2736,7 @@ object Acid {
       // Replay pre-check BEFORE any write: a replayed rewrite must not
       // overwrite the txn=<txnId>/ files its committed manifest already
       // references (the in-lock validation below stays the authority).
-      if (manifestLines(table, snapV).contains(s"# txn:$txnId")) return snapV
+      if (manifestAt(table, snapV).hasTxn(txnId)) return snapV
       // ONE pass: the txn=<txnId>/ write IS the materialization (the old
       // cache()+count() pre-pass was a full second action over the same
       // plan — r21, opt guide §1.2). Still OUTSIDE the lock, so concurrent
@@ -3038,34 +2749,30 @@ object Acid {
         layout(readRewriteSnapshot(spark, table, snapV)), txnId)
       out = withWriterLock(table) {
         commitNextVersion(table) { (cur, prev) =>
-          require(prev.contains("# base:."),
+          require(prev.rootRelative,
             s"$what on snapshot-mode table $table")
           // a plain rewrite would drop the row-id assignments AND the
           // never-reuse high-water mark — silent id recycling downstream
-          require(!prev.exists(l => l.startsWith("# firstrow:") ||
-            l.startsWith("# rowid_phys:") || l.startsWith("# rowid_next:")),
+          require(!prev.hasLineage,
             s"$what on row-lineage table $table — use optimizeLineage " +
               "(it materializes ids through the rewrite)")
-          if (prev.contains(s"# txn:$txnId")) Some(cur.get) // replay → no-op
+          if (prev.hasTxn(txnId)) Some(cur.get) // replay → no-op
           else if (cur.get != snapV) Some(StaleSnapshot)
           else None
         } { (_, prev) =>
-          // "# op:rewrite" = Delta's dataChange=false: the commit replaced
+          // `# op:rewrite` = Delta's dataChange=false: the commit replaced
           // files without logical change, so streaming readers may cross it
           // contributing nothing (background OPTIMIZE must not break tailing
-          // consumers). Commit-local by construction: appendManifest carries
-          // only txn/delete headers forward.
-          ("# base:." +: s"# op:rewrite:$what" +:
-            (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
+          // consumers). Commit-local by construction: `# op:` is never
+          // carried into the next commit.
+          Manifest.head(prev, Seq(txnId), Some(s"rewrite:$what")) ++
             // CHECK constraints are table invariants — they outlive a
             // rewrite (pvals/delete vectors do NOT: they describe the
             // replaced files). Column mapping survives too: the rewrite
             // reads the RAW physical frame, so the new files keep the old
             // physical names and the mapping must keep resolving them.
-            prev.filter(l => l.startsWith("# constraint:") ||
-              l.startsWith("# colmap:") || l.startsWith("# coldrop:") ||
-              l.startsWith("# coldefault:") || l.startsWith("# prop:")) ++
-            headers(newFiles) ++ newFiles
+            Manifest.carried(prev, Manifest.rewriteRetires) ++
+            headers(newFiles) ++ newFiles.map(Manifest.DataFile)
         }
       }
     }
@@ -3092,19 +2799,17 @@ object Acid {
     require(toV >= 0 && toV <= cur, s"restore: version $toV not committed (current $cur)")
     require(toV >= horizon(table),
       s"restore: version $toV vacuumed (retention horizon is ${horizon(table)})")
-    val target = manifestLines(table, toV)
-    require(target.contains("# base:."), s"restore on snapshot-mode table $table")
+    val target = manifestAt(table, toV)
+    require(target.rootRelative, s"restore on snapshot-mode table $table")
     commitNextVersion(table) { (c, prev) =>
-      if (prev.contains(s"# txn:$txnId")) Some(c.get) else None // replay
+      if (prev.hasTxn(txnId)) Some(c.get) else None // replay
     } { (_, prev) =>
       // the op:restore stamp lets change-feed readers tell a rollback from
       // a DML/fold commit — a restore that drops delete-vector lines
       // resurrects keys in SURVIVING files, which no file diff can see
       // (ADVICE r17); feeds refuse to cross such a step
-      ("# base:." +: s"# op:restore:$toV" +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        target.filter(l => !l.startsWith("# txn:") && !l.startsWith("# base:") &&
-          !l.startsWith("# op:"))
+      Manifest.head(prev, Seq(txnId), Some(s"restore:$toV")) ++
+        Manifest.carried(target, withFiles = true)
     }
   }
 
@@ -3130,37 +2835,28 @@ object Acid {
     val v = version.getOrElse(currentVersion(src).getOrElse(
       sys.error(s"Acid.shallowClone: no committed version at $src")))
     require(v >= horizon(src), s"shallowClone: version $v vacuumed at $src")
-    val lines = manifestLines(src, v)
-    require(lines.contains("# base:."), s"shallowClone on snapshot-mode table $src")
+    val m = manifestAt(src, v)
+    require(m.rootRelative, s"shallowClone on snapshot-mode table $src")
     require(currentVersion(dst).isEmpty, s"shallowClone: $dst already exists")
     Files.createDirectories(Paths.get(dst))
     val rel = Paths.get(dst).toAbsolutePath.normalize
       .relativize(Paths.get(src).toAbsolutePath.normalize).toString
     def reroot(f: String) = s"$rel/$f"
-    // per-file stat/tuple lines key on the data-file path — rewrite the
-    // embedded path so lookups still match the rerooted file lines
-    def rerootStat(l: String, prefix: String): String = {
-      val body = l.stripPrefix(prefix)
-      val (f, tail) = body.span(_ != '|')
-      s"$prefix${reroot(f)}$tail"
+    // file-keyed entries name the data-file path — rewrite the embedded
+    // path so lookups still match the rerooted data files
+    val out = Manifest.carried(m, withFiles = true).map {
+      case Manifest.DataFile(f)     => Manifest.DataFile(reroot(f))
+      case Manifest.Delete(f)       => Manifest.Delete(reroot(f))
+      case Manifest.PDel(f)         => Manifest.PDel(reroot(f))
+      case e: Manifest.FirstRow     => e.copy(file = reroot(e.file))
+      case e: Manifest.RowIdPhys    => e.copy(file = reroot(e.file))
+      case e: Manifest.PVal         => e.copy(file = reroot(e.file))
+      case e: Manifest.MinMax       => e.copy(file = reroot(e.file))
+      case e: Manifest.Bloom        => e.copy(file = reroot(e.file))
+      case e: Manifest.Rows         => e.copy(file = reroot(e.file))
+      case e                        => e // delkey/constraint/pspec/...
     }
-    val out = lines.flatMap {
-      case l if l.startsWith("# txn:") || l.startsWith("# op:") => None
-      case l if l.startsWith("# delete:") =>
-        Some("# delete:" + reroot(l.stripPrefix("# delete:").trim))
-      case l if l.startsWith("# pdel:") =>
-        Some("# pdel:" + reroot(l.stripPrefix("# pdel:").trim))
-      case l if l.startsWith("# firstrow:") => Some(rerootStat(l, "# firstrow:"))
-      case l if l.startsWith("# rowid_phys:") =>
-        Some("# rowid_phys:" + reroot(l.stripPrefix("# rowid_phys:").trim))
-      case l if l.startsWith("# pval:")   => Some(rerootStat(l, "# pval:"))
-      case l if l.startsWith("# minmax:") => Some(rerootStat(l, "# minmax:"))
-      case l if l.startsWith("# bloom:")  => Some(rerootStat(l, "# bloom:"))
-      case l if l.startsWith("# rows:")   => Some(rerootStat(l, "# rows:"))
-      case l if l.startsWith("#")         => Some(l) // base/delkey/constraint/pspec
-      case f                              => Some(reroot(f))
-    }
-    commitNextVersion(dst)((_, _) => None)((_, _) => out)
+    commitNextVersion(dst)((_, _) => None)((_, _) => Manifest.Base +: out)
   }
 
   // ---- Z-ORDER clustering (multi-dimension data skipping) ----
@@ -3211,9 +2907,9 @@ object Acid {
         .flatMap { r =>
           val f = root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString
           zCols.zipWithIndex.map { case ((n, _), i) =>
-            s"# minmax:$f|$n|${r.getLong(2 * i + 1)}|${r.getLong(2 * i + 2)}"
+            Manifest.MinMax(f, n, r.getLong(2 * i + 1), r.getLong(2 * i + 2))
           }
-        }.sorted.toSeq
+        }.sortBy(Manifest.render).toSeq
     }
   }
 
@@ -3277,10 +2973,10 @@ object Acid {
     require(preds.nonEmpty, "readSkippingAll: need at least one predicate")
     val v = currentVersion(table).getOrElse(
       sys.error(s"Acid.readSkippingAll: no committed version at $table"))
-    val lines = manifestLines(table, v)
-    require(lines.contains("# base:."),
+    val m = manifestAt(table, v)
+    require(m.rootRelative,
       s"readSkippingAll on snapshot-mode table $table")
-    val all = lines.filterNot(_.startsWith("#"))
+    val all = m.files
     require(all.nonEmpty, s"Acid.readSkippingAll: empty manifest at $table v$v")
     val kept = preds.foldLeft(all) { case (fs, (name, lo, hi)) =>
       val (k, _) = skipFiles(table, v, name, lo, hi)
@@ -3292,7 +2988,7 @@ object Acid {
       // silently drop evolved columns from the empty result
       if (kept.isEmpty) readMergedSchema(spark, all.map(f => s"$table/$f")).limit(0)
       else readParquetCached(spark, kept.map(f => s"$table/$f"))
-    (subtractDeletes(spark, table, lines, base), kept.size, all.size)
+    (subtractDeletes(spark, table, m, base), kept.size, all.size)
   }
 
   /** Zone-map file lists for [[readSkipping]]: (kept, all) data files of
@@ -3301,14 +2997,10 @@ object Acid {
     * are kept — skipping is an optimization, never a correctness gate. */
   def skipFiles(table: String, v: Long, statsName: String, lo: Long,
       hi: Long): (Seq[String], Seq[String]) = {
-    val lines = manifestLines(table, v)
-    val ranges = lines.filter(_.startsWith("# minmax:")).flatMap { l =>
-      l.stripPrefix("# minmax:").split('|') match {
-        case Array(f, n, mn, mx) if n == statsName => Some(f -> (mn.toLong, mx.toLong))
-        case _ => None
-      }
-    }.toMap
-    val all = lines.filterNot(_.startsWith("#"))
+    val m = manifestAt(table, v)
+    val ranges = m.minmax.filter(_.name == statsName)
+      .map(s => s.file -> (s.lo, s.hi)).toMap
+    val all = m.files
     val kept = all.filter(f => ranges.get(f).forall { case (mn, mx) => mn <= hi && mx >= lo })
     (kept, all)
   }
@@ -3331,8 +3023,8 @@ object Acid {
       sys.error(s"Acid.readSkipping: no committed version at $table"))
     val (kept, all) = skipFiles(table, v, statsName, lo, hi)
     require(all.nonEmpty, s"Acid.readSkipping: empty manifest at $table v$v")
-    val lines = manifestLines(table, v)
-    val rootRel = lines.contains("# base:.")
+    val m = manifestAt(table, v)
+    val rootRel = m.rootRelative
     val base = if (rootRel) table else s"$table/v=$v"
     // append-mode files live under txn=<id>/ dirs: a basePath at the table
     // root would hive-parse `txn` into a phantom partition column, so the
@@ -3343,31 +3035,21 @@ object Acid {
     val df =
       if (kept.isEmpty) rd(Seq(s"$base/${all.head}")).limit(0) // schema-stable empty
       else rd(kept.map(f => s"$base/$f"))
-    subtractDeletes(spark, table, lines, df)
+    subtractDeletes(spark, table, m, df)
   }
 
   /** Per-file row counts of version `v`, from the manifest's `# rows:`
-    * lines (written by [[commit]] with `rowCounts = true`). File paths are
+    * m (written by [[commit]] with `rowCounts = true`). File paths are
     * `v=<n>/`-relative, so hive partition values are parseable from them. */
   def rowStats(table: String, v: Long): Seq[(String, Long)] =
-    manifestLines(table, v).filter(_.startsWith("# rows:")).flatMap { l =>
-      l.stripPrefix("# rows:").split('|') match {
-        case Array(f, n) => Some(f -> n.toLong)
-        case _ => None
-      }
-    }
+    manifestAt(table, v).rows.map(r => r.file -> r.n)
 
   /** Per-file zone maps of version `v` for `statsName`, from the
     * manifest's `# minmax:` lines — (file, min, max). The metadata that
     * answers MIN/MAX-shaped queries with zero data I/O (fold over
     * O(files) driver-side lines), the aggregation twin of [[rowStats]]. */
   def minmaxStats(table: String, v: Long, statsName: String): Seq[(String, Long, Long)] =
-    manifestLines(table, v).filter(_.startsWith("# minmax:")).flatMap { l =>
-      l.stripPrefix("# minmax:").split('|') match {
-        case Array(f, n, mn, mx) if n == statsName => Some((f, mn.toLong, mx.toLong))
-        case _ => None
-      }
-    }
+    manifestAt(table, v).minmax.filter(_.name == statsName).map(s => (s.file, s.lo, s.hi))
 
   /** Bloom file lists for [[readBloomSkipping]]: (kept, all) data files of
     * version `v`, keeping a file unless its recorded bloom for `statsName`
@@ -3376,23 +3058,16 @@ object Acid {
     * gate (same contract as [[skipFiles]]). */
   def skipFilesBloom(table: String, v: Long, statsName: String,
       key: Long): (Seq[String], Seq[String]) = {
-    val lines = manifestLines(table, v)
+    val m = manifestAt(table, v)
     // (words, versioned): the `h2` token marks blooms written with the
     // widened 2^31-1 pre-mod (ADVICE r19 — versioning the hash in the
     // stat line lets new blooms probe ONLY the new position pair; the
     // legacy dual probe applies solely to unversioned lines, instead of
     // permanently ~doubling every bloom's false-positive rate)
-    val blooms = lines.filter(_.startsWith("# bloom:")).flatMap { l =>
-      l.stripPrefix("# bloom:").split('|') match {
-        case Array(f, n, "h2", ws) if n == statsName =>
-          Some(f -> (ws.split(',').map(_.toLong), true))
-        case Array(f, n, ws) if n == statsName =>
-          Some(f -> (ws.split(',').map(_.toLong), false))
-        case _ => None
-      }
-    }.toMap
+    val blooms = m.blooms.filter(_.name == statsName)
+      .map(b => b.file -> (b.words, b.versioned)).toMap
     def hasBit(w: Array[Long], p: Int): Boolean = (w(p / 64) >>> (p % 64) & 1L) == 1L
-    val all = lines.filterNot(_.startsWith("#"))
+    val all = m.files
     val kept = all.filter(f =>
       blooms.get(f).forall { case (w, versioned) =>
         // width is per-line (adaptive blooms; mixed generations coexist)
@@ -3438,28 +3113,6 @@ object Acid {
       .parquet(kept.map(f => s"$table/v=$v/$f"): _*)
   }
 
-  /** Manifest accessor for the streaming source and change feed: (data
-    * files, `# delete:` lines) of version `v` — O(lines) control plane. */
-  private[graft] def manifestFiles(table: String, v: Long): (Seq[String], Seq[String]) = {
-    val lines = manifestLines(table, v)
-    (lines.filterNot(_.startsWith("#")), lines.filter(_.startsWith("# delete:")))
-  }
-
-  /** True iff version `v` is a tagged rewrite commit ([[optimize]] /
-    * [[compactDeletes]]) — files replaced, no logical change; Delta's
-    * `dataChange=false`. Streaming readers cross these contributing
-    * nothing. Manifests written before the tag existed read as false and
-    * fall back to the structural (file-diff) detection at their call
-    * sites. */
-  private[graft] def isRewriteCommit(table: String, v: Long): Boolean =
-    manifestLines(table, v).exists(_.startsWith("# op:rewrite"))
-
-  /** Standing equality-delete vector of version `v`: (key column, delete
-    * file paths), if any. Control plane for readers that assemble their
-    * own scans (the streaming source) yet must honor merge-on-read. */
-  private[graft] def standingDeletes(table: String, v: Long): Option[(String, Seq[String])] =
-    standingDeletes2(manifestLines(table, v))
-
   /** Change data feed — row-level changes committed in versions
     * `(fromV, toV]` of an append-mode table (Delta CDF's `table_changes` /
     * Iceberg's changelog scan): the incremental-consumption seam that
@@ -3492,25 +3145,22 @@ object Acid {
   def changeFeed(spark: SparkSession, table: String, fromV: Long,
       toV: Long): DataFrame = {
     require(fromV < toV, s"changeFeed: need fromV < toV, got $fromV >= $toV")
-    val linesFrom = manifestLines(table, fromV)
-    val linesTo = manifestLines(table, toV)
-    require(linesFrom.contains("# base:.") && linesTo.contains("# base:."),
+    val linesFrom = manifestAt(table, fromV)
+    val linesTo = manifestAt(table, toV)
+    require(linesFrom.rootRelative && linesTo.rootRelative,
       s"changeFeed on snapshot-mode table $table")
-    val filesFrom = linesFrom.filterNot(_.startsWith("#")).toSet
-    val filesTo = linesTo.filterNot(_.startsWith("#"))
+    val filesFrom = linesFrom.files.toSet
+    val filesTo = linesTo.files
     require(filesFrom.subsetOf(filesTo.toSet),
       s"changeFeed($fromV, $toV) crosses a rewrite commit (files were " +
         "replaced without logical change) — consume the feed before " +
         "maintenance or materialize change files at write time")
-    require(linesFrom.filter(_.startsWith("# pdel:")) ==
-      linesTo.filter(_.startsWith("# pdel:")),
+    require(linesFrom.pdels == linesTo.pdels,
       s"changeFeed($fromV, $toV) crosses a POSITIONAL delete commit — " +
         "row-level feeds need CDC materialization for this commit class " +
         "(Delta deletion vectors have the same caveat)")
-    def delFiles(lines: Seq[String]): Seq[String] =
-      lines.filter(_.startsWith("# delete:")).map(_.stripPrefix("# delete:").trim)
-    def keyOf(lines: Seq[String]): Option[String] =
-      lines.find(_.startsWith("# delkey:")).map(_.stripPrefix("# delkey:").trim)
+    def delFiles(m: Manifest): Seq[String] = m.deletes
+    def keyOf(m: Manifest): Option[String] = m.delKey
     val added = filesTo.filterNot(filesFrom)
     // vector monotonicity: append-mode deletes only ADD vector files; a
     // vector line VANISHING with the data files intact is a RESTORE
@@ -3618,18 +3268,11 @@ object Acid {
     require(fromV >= horizon(table),
       s"changeFeedRow: version $fromV of $table vacuumed (horizon is " +
         s"${horizon(table)}) — the window's manifests no longer exist")
-    def vecKeys(lines: Seq[String]): Option[DataFrame] = {
-      val fs = lines.filter(_.startsWith("# delete:"))
-        .map(_.stripPrefix("# delete:").trim)
-      lines.find(_.startsWith("# delkey:"))
-        .map(_.stripPrefix("# delkey:").trim) match {
-        case Some(k) if fs.nonEmpty =>
-          require(k == keyCol,
-            s"changeFeedRow: table uses delete key $k, got $keyCol")
-          Some(readParquetCached(spark, fs.map(f => s"$table/$f"))
-            .select(col(k)).distinct())
-        case _ => None
-      }
+    def vecKeys(m: Manifest): Option[DataFrame] = m.standingDeletes.map {
+      case (k, fs) =>
+        require(k == keyCol,
+          s"changeFeedRow: table uses delete key $k, got $keyCol")
+        readParquetCached(spark, fs.map(f => s"$table/$f")).select(col(k)).distinct()
     }
     val snapshot = readVersion(spark, table, toV).limit(0)
     val dataCols = snapshot.columns.toSeq
@@ -3642,28 +3285,26 @@ object Acid {
     def keyed(d: DataFrame) =
       d.select(col(keyCol).as("__k"), struct(dataCols.map(col): _*).as("__r"))
     val steps: Seq[DataFrame] = ((fromV + 1) to toV).flatMap { v =>
-      val prev = manifestLines(table, v - 1)
-      val cur = manifestLines(table, v)
-      require(prev.contains("# base:.") && cur.contains("# base:."),
+      val prev = manifestAt(table, v - 1)
+      val cur = manifestAt(table, v)
+      require(prev.rootRelative && cur.rootRelative,
         s"changeFeedRow on snapshot-mode table $table")
       // only pdel ADDITIONS are delete commits needing CDC; a fold (a
       // rewrite REMOVING vector lines) changed nothing logically and the
       // ordinary file diff below cancels it out. Vector lines vanishing
       // WITHOUT any file rewrite (RESTORE across a vector commit) is a
       // resurrection the diff cannot see — refuse loudly.
-      val pdelPrev = prev.filter(_.startsWith("# pdel:")).toSet
-      val pdelCur = cur.filter(_.startsWith("# pdel:")).toSet
-      val removedAny = prev.filterNot(_.startsWith("#"))
-        .exists(f => !cur.contains(f))
+      val pdelPrev = prev.pdels.toSet
+      val pdelCur = cur.pdels.toSet
+      val removedAny = prev.files.exists(f => !cur.files.contains(f))
       val vecDropped = pdelPrev.diff(pdelCur).nonEmpty ||
-        prev.filter(_.startsWith("# delete:")).toSet
-          .diff(cur.filter(_.startsWith("# delete:")).toSet).nonEmpty
+        prev.deletes.toSet.diff(cur.deletes.toSet).nonEmpty
       // the removedAny escape is for DML/fold commits, whose file diff
       // carries the logical change. A RESTORE can satisfy removedAny by
       // reverting an append in the same stroke it reverts the vector
       // commit (ADVICE r17) — the keys un-hidden in SURVIVING files then
       // resurrect with no emitted event; refuse restores outright here.
-      val isRestoreStep = cur.exists(_.startsWith("# op:restore:"))
+      val isRestoreStep = cur.isRestore
       require(!vecDropped || (removedAny && !isRestoreStep),
         s"changeFeedRow: version $v of $table dropped delete-vector lines " +
           "without a reconstructible file rewrite (RESTORE across a vector " +
@@ -3674,9 +3315,7 @@ object Acid {
         // a positional-delete commit: consumable ONLY through materialized
         // CDC preimages (deletePositionsTxn(cdc = true) — Delta deletion
         // vectors have the same contract)
-        val cdcFiles = cur.collect {
-          case l if l.startsWith(s"# cdc:$v|") => l.stripPrefix(s"# cdc:$v|").trim
-        }
+        val cdcFiles = cur.cdcAt(v)
         require(cdcFiles.nonEmpty,
           s"changeFeedRow: version $v of $table is a POSITIONAL delete " +
             "commit without materialized CDC — delete with cdc = true, or " +
@@ -3686,15 +3325,14 @@ object Acid {
           .withColumn("commit_version", lit(v))
           .select(outCols: _*))
       } else {
-      val pf = prev.filterNot(_.startsWith("#"))
-      val cf = cur.filterNot(_.startsWith("#"))
+      val pf = prev.files
+      val cf = cur.files
       val added = cf.filterNot(pf.toSet)
       val removed = pf.filterNot(cf.toSet)
       // vector delta: keys newly hidden at v (MoR delete). Their rows can
       // sit in ANY surviving file, so they are found by one prunable
       // semi-join against the prior snapshot, not by the file diff.
-      val vecLinesEq = prev.filter(_.startsWith("# delete:")) ==
-        cur.filter(_.startsWith("# delete:"))
+      val vecLinesEq = prev.deletes == cur.deletes
       val nhKeys =
         if (vecLinesEq) None // unchanged vector: no O(table) MoR scan
         else (vecKeys(cur), vecKeys(prev)) match {
@@ -3797,15 +3435,7 @@ object Acid {
   def readTag(spark: SparkSession, table: String, name: String): DataFrame = {
     val v = tags(table).getOrElse(name,
       sys.error(s"Acid.readTag: no tag '$name' at $table"))
-    val lines = manifestLines(table, v)
-    val rootRel = lines.contains("# base:.")
-    val files = lines.filterNot(_.startsWith("#"))
-    val base = // logical-frame like readVersion (r19)
-      if (rootRel) readLogical(spark, table, lines, files)
-      else spark.read
-        .option("basePath", s"$table/v=$v")
-        .parquet(files.map(f => s"$table/v=$v/$f"): _*)
-    subtractDeletes(spark, table, lines, base)
+    readSnapshot(spark, table, v, manifestAt(table, v)) // logical-frame (r19)
   }
 
   // ---- branch refs (Iceberg branches / Nessie-style write-isolate-publish) ----
@@ -3869,18 +3499,25 @@ object Acid {
       sys.error(s"Acid.createBranch: no committed version at $table"))
     require(v >= 0 && v <= cur, s"createBranch: version $v not committed (current $cur)")
     require(v >= horizon(table), s"createBranch: version $v already vacuumed")
-    require(manifestLines(table, v).contains("# base:."),
+    require(manifestAt(table, v).rootRelative,
       s"createBranch on snapshot-mode table $table")
     writeBranchRef(table, name, v, -1L, createNew = true)
   }
 
   /** The branch head's manifest lines (the fork base's when the branch
     * has no commits of its own). */
-  private def branchLines(table: String, name: String): Seq[String] = {
+  private def branchLines(table: String, name: String): Manifest = {
     val (base, head) = branches(table).getOrElse(name,
       sys.error(s"Acid: no branch '$name' at $table"))
-    if (head < 0) manifestLines(table, base)
-    else linesCached(brManifest(table, name, head))
+    if (head < 0) manifestAt(table, base)
+    else Manifest.read(brManifest(table, name, head))
+  }
+
+  /** Commit branch ordinal `k`'s manifest and move the ref's head to it. */
+  private def commitBranch(table: String, name: String, base: Long, k: Long,
+      entries: Seq[Manifest.Entry]): Unit = {
+    Manifest.writeNew(brManifest(table, name, k), entries)
+    writeBranchRef(table, name, base, k, createNew = false)
   }
 
   /** Append to a BRANCH: same idempotent-txn contract as [[appendTxn]],
@@ -3890,7 +3527,7 @@ object Acid {
     val (base, head) = branches(table).getOrElse(name,
       sys.error(s"Acid.appendTxnBranch: no branch '$name' at $table"))
     val prev = branchLines(table, name)
-    if (prev.contains(s"# txn:$txnId")) return head // replay → no-op
+    if (prev.hasTxn(txnId)) return head // replay → no-op
     // Global-ledger guard (ADVICE r16, Delta's txnAppId contract): a txn id
     // already committed to MAIN but absent from this branch's own ledger is
     // a cross-incarnation replay — after a merge/cherry-pick publish, main
@@ -3908,13 +3545,8 @@ object Acid {
     df.write.mode("overwrite").parquet(dataDir.toString)
     val files = listParquet(table, dataDir)
     val k = head + 1
-    Files.write(brManifest(table, name, k),
-      (appendManifest(prev, txnId, files) :+
-        s"# dml:$k|append|$txnId|-|-|${files.mkString(",")}")
-        .mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    writeBranchRef(table, name, base, k, createNew = false)
+    commitBranch(table, name, base, k, appendManifest(prev, Seq(txnId), files) :+
+      Manifest.Dml(k, "append", txnId, "-", None, files))
     k
   }
 
@@ -3925,9 +3557,8 @@ object Acid {
     * defaults ([[readEvolved]]'s semantics) — a plain scan would let an
     * arbitrary footer drop a generation's columns (ADVICE r18 sweep). */
   def readBranch(spark: SparkSession, table: String, name: String): DataFrame = {
-    val lines = branchLines(table, name)
-    subtractDeletes(spark, table, lines,
-      readLogical(spark, table, lines, lines.filterNot(_.startsWith("#"))))
+    val m = branchLines(table, name)
+    subtractDeletes(spark, table, m, readLogical(spark, table, m, m.files))
   }
 
   /** Row-level MERGE INTO a BRANCH, copy-on-write — the dev-pipeline story
@@ -3945,12 +3576,12 @@ object Acid {
     val (base, head) = branches(table).getOrElse(name,
       sys.error(s"Acid.mergeCowBranch: no branch '$name' at $table"))
     val prev = branchLines(table, name)
-    if (prev.contains(s"# txn:$txnId"))
-      return (head, 0, prev.count(!_.startsWith("#"))) // replay → no-op
+    if (prev.hasTxn(txnId))
+      return (head, 0, prev.files.size) // replay → no-op
     require(!committedTxns(table).contains(txnId),
       s"Acid.mergeCowBranch: txn $txnId is already committed on main at " +
         s"$table but not on branch '$name' — use a fresh txn id")
-    require(prev.contains("# base:."),
+    require(prev.rootRelative,
       s"mergeCowBranch on snapshot-mode table $table")
     // Persist the LOGICAL change frame under the branch namespace before
     // touching anything — the op log's merge entry points at this copy, so
@@ -3966,20 +3597,8 @@ object Acid {
       Paths.get(table).resolve(s"branch=$name").resolve(s"del=$txnId"),
       "mergeCowBranch")
     val k1 = head + 1
-    val manifest = (("# base:." +:
-      (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-      m.vectorLines ++
-      prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-        !l.startsWith("# base:") && !l.startsWith("# op:") &&
-        !l.startsWith("# delkey:") && !l.startsWith("# delete:") &&
-        !m.deadStat(l)) ++
-      m.survivors ++ m.newFiles) :+
-      s"# dml:$k1|merge|$txnId|$keyCol|${opCol.getOrElse("-")}|${chgFiles.mkString(",")}"
-    Files.write(brManifest(table, name, k1),
-      manifest.mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    writeBranchRef(table, name, base, k1, createNew = false)
+    commitBranch(table, name, base, k1, m.manifest(prev, txnId) :+
+      Manifest.Dml(k1, "merge", txnId, keyCol, opCol, chgFiles))
     (k1, m.touched.size, m.total)
   }
 
@@ -3992,33 +3611,19 @@ object Acid {
     val (base, head) = branches(table).getOrElse(name,
       sys.error(s"Acid.deleteTxnBranch: no branch '$name' at $table"))
     val prev = branchLines(table, name)
-    if (prev.contains(s"# txn:$txnId")) return head // replay → no-op
+    if (prev.hasTxn(txnId)) return head // replay → no-op
     require(!committedTxns(table).contains(txnId),
       s"Acid.deleteTxnBranch: txn $txnId is already committed on main at " +
         s"$table but not on branch '$name' — use a fresh txn id")
-    val prevKey = prev.find(_.startsWith("# delkey:"))
-      .map(_.stripPrefix("# delkey:").trim)
-    require(prevKey.forall(_ == keyCol),
-      s"deleteTxnBranch: branch uses delete key ${prevKey.getOrElse("")}, got $keyCol")
+    require(prev.delKey.forall(_ == keyCol),
+      s"deleteTxnBranch: branch uses delete key ${prev.delKey.getOrElse("")}, got $keyCol")
     val delDir = Paths.get(table).resolve(s"branch=$name").resolve(s"del=$txnId")
     keys.select(col(keyCol)).distinct()
       .coalesce(1).write.mode("overwrite").parquet(delDir.toString)
     val delFiles = listParquet(table, delDir)
     val k1 = head + 1
-    val manifest = (("# base:." +:
-      (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-      Seq(s"# delkey:$keyCol") ++
-      (prev.filter(_.startsWith("# delete:")) ++ delFiles.map(f => s"# delete:$f")) ++
-      prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-        !l.startsWith("# base:") && !l.startsWith("# op:") &&
-        !l.startsWith("# delkey:") && !l.startsWith("# delete:")) ++
-      prev.filterNot(_.startsWith("#"))) :+
-      s"# dml:$k1|delete|$txnId|$keyCol|-|${delFiles.mkString(",")}"
-    Files.write(brManifest(table, name, k1),
-      manifest.mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    writeBranchRef(table, name, base, k1, createNew = false)
+    commitBranch(table, name, base, k1, deleteManifest(prev, txnId, keyCol, delFiles) :+
+      Manifest.Dml(k1, "delete", txnId, keyCol, None, delFiles))
     k1
   }
 
@@ -4027,8 +3632,10 @@ object Acid {
   // BEGIN/COMMIT compile to these) ----
 
   private final case class CowWhere(touched: Seq[String],
-      survivors: Seq[String], newFiles: Seq[String],
-      deadStat: String => Boolean, total: Int)
+      newFiles: Seq[String], total: Int) {
+    def manifest(prev: Manifest, txnId: Long): Seq[Manifest.Entry] =
+      rewriteManifest(prev, txnId, touched, newFiles)
+  }
 
   /** One predicate-COW attempt over explicit manifest lines —
     * [[cowWhere]]'s per-attempt body lifted to the branch/rebase seam:
@@ -4041,25 +3648,24 @@ object Acid {
     * already have hidden rows removed; the lines keep hiding them in
     * survivors, exactly [[cowWhere]]'s contract. */
   private def cowWhereAttempt(spark: SparkSession, table: String,
-      lines: Seq[String], kind: String, setCols: Seq[String],
+      snap: Manifest, kind: String, setCols: Seq[String],
       setExprs: Seq[String], predSql: String, dataDir: Path,
       what: String): CowWhere = {
     val pred = expr(predSql)
-    val all = lines.filterNot(_.startsWith("#"))
+    val all = snap.files
     val root = Paths.get(table).toAbsolutePath
     val touched = if (all.isEmpty) Seq.empty[String]
-    else readLogical(spark, table, lines, all)
+    else readLogical(spark, table, snap, all)
       .filter(pred)
       .select(input_file_name().as("f")).distinct()
       .collect() // O(files) rows — manifest-construction control plane
       .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
       .sorted.toSeq
-    val survivors = all.filterNot(touched.contains)
     val newFiles =
       if (touched.isEmpty) Seq.empty[String]
       else {
-        val base = subtractDeletes(spark, table, lines,
-          readLogical(spark, table, lines, touched))
+        val base = subtractDeletes(spark, table, snap,
+          readLogical(spark, table, snap, touched))
         val out = kind match {
           case "updwhere" =>
             setCols.foreach(c => require(base.columns.contains(c),
@@ -4076,12 +3682,10 @@ object Acid {
         }
         out.write.mode("overwrite").parquet(dataDir.toString)
         val nf = listParquet(table, dataDir)
-        if (nf.nonEmpty && lines.exists(_.startsWith("# constraint:")))
-          checkConstraintLines(lines,
-            readParquetCached(spark, nf.map(f => s"$table/$f")), what)
+        checkWrittenConstraints(spark, table, snap, nf, what)
         nf
       }
-    CowWhere(touched, survivors, newFiles, deadStatLines(touched) _, all.size)
+    CowWhere(touched, newFiles, all.size)
   }
 
   /** Predicate COW UPDATE on a BRANCH — [[updateWhere]]'s semantics
@@ -4118,15 +3722,14 @@ object Acid {
     val (base, head) = branches(table).getOrElse(name,
       sys.error(s"Acid.$what: no branch '$name' at $table"))
     val prev = branchLines(table, name)
-    if (prev.contains(s"# txn:$txnId"))
-      return (head, 0, prev.count(!_.startsWith("#"))) // replay → no-op
+    if (prev.hasTxn(txnId))
+      return (head, 0, prev.files.size) // replay → no-op
     require(!committedTxns(table).contains(txnId),
       s"Acid.$what: txn $txnId is already committed on main at $table " +
         s"but not on branch '$name' — use a fresh txn id")
-    require(prev.contains("# base:."),
+    require(prev.rootRelative,
       s"$what on snapshot-mode table $table")
-    require(!prev.exists(l => l.startsWith("# firstrow:") ||
-      l.startsWith("# rowid_phys:") || l.startsWith("# rowid_next:")),
+    require(!prev.hasLineage,
       s"$what on row-lineage table $table — lineage DML goes through the " +
         "lineage writers (they materialize ids through the rewrite)")
     // freeze the LOGICAL statement for rebase replay (the mergeCowBranch
@@ -4142,27 +3745,9 @@ object Acid {
       sets.map(_._2), predSql,
       Paths.get(table).resolve(s"branch=$name").resolve(s"txn=$txnId"), what)
     val k1 = head + 1
-    val manifest = (("# base:." +:
-      (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-      prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-        !l.startsWith("# base:") && !l.startsWith("# op:") && !w.deadStat(l)) ++
-      w.survivors ++ w.newFiles) :+
-      s"# dml:$k1|$kind|$txnId|-|-|${specFiles.mkString(",")}"
-    Files.write(brManifest(table, name, k1),
-      manifest.mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    writeBranchRef(table, name, base, k1, createNew = false)
+    commitBranch(table, name, base, k1, w.manifest(prev, txnId) :+
+      Manifest.Dml(k1, kind, txnId, "-", None, specFiles))
     (k1, w.touched.size, w.total)
-  }
-
-  /** [[standingDeletes]] over explicit lines (branch manifests live
-    * outside the version chain). */
-  private def standingDeletes2(lines: Seq[String]): Option[(String, Seq[String])] = {
-    val delFiles = lines.filter(_.startsWith("# delete:"))
-      .map(_.stripPrefix("# delete:").trim)
-    lines.find(_.startsWith("# delkey:")).map(_.stripPrefix("# delkey:").trim)
-      .filter(_ => delFiles.nonEmpty).map(k => (k, delFiles))
   }
 
   /** Publish a branch whose fork base is STILL main's head: main adopts
@@ -4179,16 +3764,14 @@ object Acid {
       // unhandled FileAlreadyExistsException on a lost race instead of
       // re-evaluating against the advanced head.
       val v = commitNextVersion(table) { (cur, prev) =>
-        if (prev.contains(s"# txn:$txnId")) {
+        if (prev.hasTxn(txnId)) {
           // txnId already on main: either OUR publish crashed between the
           // commit and the ref retire, or an unrelated main commit happens
           // to carry the same id. Retire the ref only on the completed-
           // publish signature — every branch txn visible on main (ADVICE
           // r16: an accidental collision must not destroy a live branch).
           branches(table).get(name).foreach { _ =>
-            val brTxns = branchLines(table, name)
-              .filter(_.startsWith("# txn:")).toSet
-            require(brTxns.subsetOf(prev.toSet),
+            require(branchLines(table, name).txns.forall(prev.hasTxn),
               s"fastForwardBranch: txn $txnId is already committed on main " +
                 s"at $table but branch '$name' holds unpublished commits — " +
                 s"txn-id collision, refusing to retire the branch ref")
@@ -4206,13 +3789,11 @@ object Acid {
           else None
         }
       } { (_, _) =>
-        val lines = branchLines(table, name)
+        val br = branchLines(table, name)
         // the # dml: op log is branch-scope replay metadata — main never
         // replays, so publish strips it (keeps main manifests canonical)
-        "# base:." +:
-          ((lines.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId") ++
-            lines.filterNot(l => l.startsWith("# txn:") || l == "# base:." ||
-              l.startsWith("# dml:")))
+        Manifest.head(br, Seq(txnId)) ++
+          Manifest.carried(br, _.isInstanceOf[Manifest.Dml], withFiles = true)
       }
       if (branches(table).contains(name)) dropBranchRefOnly(table, name)
       v
@@ -4232,11 +3813,9 @@ object Acid {
       // the build re-derives against whatever head the claim serialized on,
       // so a racing appendTxnCAS makes the merge rebase, not throw.
       val v = commitNextVersion(table) { (cur, prev) =>
-        if (prev.contains(s"# txn:$txnId")) {
+        if (prev.hasTxn(txnId)) {
           branches(table).get(name).foreach { _ =>
-            val brTxns = branchLines(table, name)
-              .filter(_.startsWith("# txn:")).toSet
-            require(brTxns.subsetOf(prev.toSet),
+            require(branchLines(table, name).txns.forall(prev.hasTxn),
               s"mergeBranch: txn $txnId is already committed on main at " +
                 s"$table but branch '$name' holds unpublished commits — " +
                 s"txn-id collision, refusing to retire the branch ref")
@@ -4250,50 +3829,24 @@ object Acid {
         }
       } { (_, curLines) =>
         val (base, _) = branches(table)(name)
-        val baseLines = manifestLines(table, base)
-        val brLines = branchLines(table, name)
-        def dels(ls: Seq[String]) =
-          ls.filter(l => l.startsWith("# delkey:") || l.startsWith("# delete:")).toSet
-        require(dels(brLines) == dels(baseLines),
-          s"mergeBranch: branch '$name' recorded deletes since the fork — " +
-            s"append-only branches merge; delete reconciliation needs mergeCow")
-        val removedBase = {
-          val brFiles = brLines.filterNot(_.startsWith("#")).toSet
-          baseLines.filterNot(_.startsWith("#")).filterNot(brFiles)
-        }
-        require(removedBase.isEmpty,
-          s"mergeBranch: branch '$name' REWROTE fork-base files (branch DML) — " +
-            "a three-way merge would resurrect the pre-DML rows; publish by " +
-            "fastForwardBranch with main unmoved, or re-fork and re-run")
-        val newFiles = {
-          val baseFiles = baseLines.filterNot(_.startsWith("#")).toSet
-          brLines.filterNot(_.startsWith("#")).filterNot(baseFiles)
-        }
-        val newTxns = {
-          val baseTxns = baseLines.filter(_.startsWith("# txn:")).toSet
-          brLines.filter(_.startsWith("# txn:")).filterNot(baseTxns)
-        }
-        require(curLines.contains("# base:."),
+        val (newTxns, newFiles) =
+          branchDelta(manifestAt(table, base), branchLines(table, name), name, "merge")
+        require(curLines.rootRelative,
           s"mergeBranch on snapshot-mode table $table")
         // exactly-once across refs: a txn id that landed on BOTH main (since
         // the fork) and the branch is the same logical commit applied twice —
         // merging would double its rows silently. Refuse loudly; the operator
         // resolves by dropping one side (Delta's txnAppId is global for the
         // same reason).
-        val collided = newTxns.toSet.intersect(
-          curLines.filter(_.startsWith("# txn:")).toSet)
+        val collided = newTxns.filter(curLines.hasTxn)
         require(collided.isEmpty,
           s"mergeBranch: txn ids committed on both main and branch '$name' " +
-            s"since the fork: ${collided.mkString(", ")} — the same logical " +
-            s"commit cannot land twice")
-        ("# base:." +:
-          ((curLines.filter(_.startsWith("# txn:")) ++ newTxns :+ s"# txn:$txnId") ++
-            // # op: is a per-commit marker of MAIN'S HEAD commit, not of
-            // this merge — carrying it would make feed readers misread
-            // the publish as a rewrite/restore step
-            curLines.filter(l => !l.startsWith("# txn:") && l != "# base:." &&
-              !l.startsWith("# op:") && l.startsWith("#")))) ++
-          curLines.filterNot(_.startsWith("#")) ++ newFiles
+            s"since the fork: ${collided.mkString(", ")} — " +
+            s"the same logical commit cannot land twice")
+        // # op: is a per-commit marker of MAIN'S HEAD commit, not of this
+        // merge — never carried, so feed readers cannot misread the
+        // publish as a rewrite/restore step
+        appendManifest(curLines, newTxns :+ txnId, newFiles)
       }
       if (branches(table).contains(name)) dropBranchRefOnly(table, name)
       v
@@ -4316,73 +3869,46 @@ object Acid {
       val (base, head) = branches(table).getOrElse(name,
         sys.error(s"Acid.rebaseBranch: no branch '$name' at $table"))
       val brLines = branchLines(table, name)
-      if (brLines.contains(s"# txn:$txnId")) return head // replay → no-op
-      val baseLines = manifestLines(table, base)
-      def dels(ls: Seq[String]) =
-        ls.filter(l => l.startsWith("# delkey:") || l.startsWith("# delete:")).toSet
-      require(dels(brLines) == dels(baseLines),
-        s"rebaseBranch: branch '$name' recorded deletes since the fork — " +
-          s"append-only branches rebase; delete reconciliation needs mergeCow")
-      val removedBase = {
-        val brFiles = brLines.filterNot(_.startsWith("#")).toSet
-        baseLines.filterNot(_.startsWith("#")).filterNot(brFiles)
-      }
-      require(removedBase.isEmpty,
-        s"rebaseBranch: branch '$name' REWROTE fork-base files (branch DML) — " +
-          "a three-way rebase would resurrect the pre-DML rows; publish by " +
-          "fastForwardBranch with main unmoved, or re-fork and re-run")
-      val newFiles = {
-        val baseFiles = baseLines.filterNot(_.startsWith("#")).toSet
-        brLines.filterNot(_.startsWith("#")).filterNot(baseFiles)
-      }
-      val newTxns = {
-        val baseTxns = baseLines.filter(_.startsWith("# txn:")).toSet
-        brLines.filter(_.startsWith("# txn:")).filterNot(baseTxns)
-      }
+      if (brLines.hasTxn(txnId)) return head // replay → no-op
+      val (newTxns, newFiles) =
+        branchDelta(manifestAt(table, base), brLines, name, "rebase")
       val cur = currentVersion(table).get
-      val curLines = manifestLines(table, cur)
-      require(curLines.contains("# base:."),
+      val curLines = manifestAt(table, cur)
+      require(curLines.rootRelative,
         s"rebaseBranch on snapshot-mode table $table")
-      val collided = newTxns.toSet.intersect(
-        curLines.filter(_.startsWith("# txn:")).toSet)
+      val collided = newTxns.filter(curLines.hasTxn)
       require(collided.isEmpty,
         s"rebaseBranch: txn ids committed on both main and branch '$name' " +
           s"since the fork: ${collided.mkString(", ")}")
       val k = head + 1
-      Files.write(brManifest(table, name, k),
-        (("# base:." +:
-          ((curLines.filter(_.startsWith("# txn:")) ++ newTxns :+ s"# txn:$txnId") ++
-            // # op: marks MAIN'S HEAD commit, not this rebase — drop it
-            curLines.filter(l => !l.startsWith("# txn:") && l != "# base:." &&
-              !l.startsWith("# op:") && l.startsWith("#")))) ++
-          curLines.filterNot(_.startsWith("#")) ++ newFiles ++
-          // keep the branch's op log across the (append-only) rebase so a
-          // later rebaseBranchDml still sees a complete replayable history
-          // (the rebase's own ledger txn gets a no-op marker entry)
-          brLines.filter(_.startsWith("# dml:")) :+
-          s"# dml:$k|rebase|$txnId|-|-|")
-          .mkString("", "\n", "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-      writeBranchRef(table, name, cur, k, createNew = false)
+      // # op: marks MAIN'S HEAD commit, not this rebase — never carried.
+      // The branch's op log is kept across the (append-only) rebase so a
+      // later rebaseBranchDml still sees a complete replayable history
+      // (the rebase's own ledger txn gets a no-op marker entry)
+      commitBranch(table, name, cur, k,
+        appendManifest(curLines, newTxns :+ txnId, newFiles) ++
+          brLines.dml :+
+          Manifest.Dml(k, "rebase", txnId, "-", None, Seq.empty))
       k
     }
 
-  /** One parsed branch-op-log entry (`# dml:<k>|<kind>|<txn>|<key>|<op>|<files>`):
-    * the replayable record every branch writer stamps so a rebase can
-    * re-run the branch's LOGICAL history on a new base. */
-  private final case class BranchOp(k: Long, kind: String, txn: Long,
-      keyCol: String, opCol: Option[String], files: Seq[String])
-  private def branchOpLog(lines: Seq[String]): Seq[BranchOp] =
-    lines.filter(_.startsWith("# dml:")).map { l =>
-      l.stripPrefix("# dml:").split("\\|", 6) match {
-        case Array(k, kind, txn, key, op, fs) =>
-          BranchOp(k.toLong, kind, txn.toLong, key,
-            if (op == "-") None else Some(op),
-            if (fs.isEmpty) Seq.empty else fs.split(',').toSeq)
-        case other => sys.error(s"Acid: malformed branch op-log line: $l")
-      }
-    }.sortBy(_.k)
+  /** What an APPEND-ONLY branch added since its fork `base`: (its own txn
+    * ids, its own data files). Refuses a branch that recorded deletes or
+    * rewrote fork-base files (branch DML) — merging or rebasing those by
+    * file arithmetic would resurrect the pre-DML rows. */
+  private def branchDelta(base: Manifest, br: Manifest, name: String,
+      what: String): (Seq[Long], Seq[String]) = {
+    require(br.deleteEntries == base.deleteEntries,
+      s"${what}Branch: branch '$name' recorded deletes since the fork — " +
+        s"append-only branches ${what}; delete reconciliation needs mergeCow")
+    val brFiles = br.files.toSet
+    require(base.files.forall(brFiles),
+      s"${what}Branch: branch '$name' REWROTE fork-base files (branch DML) — " +
+        s"a three-way $what would resurrect the pre-DML rows; publish by " +
+        "fastForwardBranch with main unmoved, or re-fork and re-run")
+    val baseFiles = base.files.toSet
+    (br.txns.filterNot(base.hasTxn), br.files.filterNot(baseFiles))
+  }
 
   /** REBASE a branch that carries DML onto main's current head — the lift
     * of [[rebaseBranch]]'s "branch REWROTE fork-base files" refusal. A
@@ -4427,72 +3953,43 @@ object Acid {
       require(!committedTxns(table).contains(txnId),
         s"Acid.rebaseBranchDml: txn $txnId is already committed on main " +
           s"at $table — use a fresh txn id")
-      val curLines0 = manifestLines(table, cur)
-      require(curLines0.contains("# base:."),
+      val curLines0 = manifestAt(table, cur)
+      require(curLines0.rootRelative,
         s"rebaseBranchDml on snapshot-mode table $table")
-      val manifest = (("# base:." +:
-        (curLines0.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        curLines0.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:") &&
-          !l.startsWith("# dml:")) ++
-        curLines0.filterNot(_.startsWith("#"))) :+
-        s"# dml:0|rebase|$txnId|-|-|"
-      Files.write(brManifest(table, name, 0L),
-        manifest.mkString("", "\n", "\n").getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
-      writeBranchRef(table, name, cur, 0L, createNew = false)
+      commitBranch(table, name, cur, 0L,
+        metadataCommit(curLines0, txnId, Seq.empty, _.isInstanceOf[Manifest.Dml]) :+
+          Manifest.Dml(0L, "rebase", txnId, "-", None, Seq.empty))
       return 0L
     }
     val brLines = branchLines(table, name)
-    if (brLines.contains(s"# txn:$txnId")) return head // replay → no-op
-    val baseLines = manifestLines(table, base)
-    val ops = branchOpLog(brLines)
-    val ownTxns = {
-      val baseTxns = baseLines.filter(_.startsWith("# txn:"))
-        .map(_.stripPrefix("# txn:").trim.toLong).toSet
-      brLines.filter(_.startsWith("# txn:"))
-        .map(_.stripPrefix("# txn:").trim.toLong).filterNot(baseTxns)
-    }
+    if (brLines.hasTxn(txnId)) return head // replay → no-op
+    val baseLines = manifestAt(table, base)
+    val ops = brLines.dml
+    val ownTxns = brLines.txns.filterNot(baseLines.hasTxn)
     require(ops.map(_.txn).toSet == ownTxns.toSet,
       s"rebaseBranchDml: branch '$name' holds commits with no op-log " +
         s"record (logged ${ops.map(_.txn).mkString(",")} vs own " +
         s"${ownTxns.mkString(",")}) — pre-op-log branch; re-fork and re-run")
-    val curLines = manifestLines(table, cur)
-    require(curLines.contains("# base:."),
+    val curLines = manifestAt(table, cur)
+    require(curLines.rootRelative,
       s"rebaseBranchDml on snapshot-mode table $table")
-    val collided = ops.map(o => s"# txn:${o.txn}")
-      .toSet.intersect(curLines.filter(_.startsWith("# txn:")).toSet)
+    val collided = ops.map(_.txn).filter(curLines.hasTxn)
     require(collided.isEmpty,
       s"rebaseBranchDml: txn ids committed on both main and branch " +
         s"'$name' since the fork: ${collided.mkString(", ")}")
     // replay the logical history, oldest first, against main's head
-    var state = curLines
+    var state: Manifest = curLines
     ops.foreach { op =>
-      state = op.kind match {
+      state = Manifest(op.kind match {
         case "rebase" => // ledger-only marker of a past rebase commit:
           // carry the txn (its replay no-op contract survives), no data op
-          ("# base:." +:
-            (state.filter(_.startsWith("# txn:")) :+ s"# txn:${op.txn}")) ++
-            state.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:")) ++
-            state.filterNot(_.startsWith("#"))
-        case "append" => appendManifest(state, op.txn, op.files)
+          metadataCommit(state, op.txn, Seq.empty)
+        case "append" => appendManifest(state, Seq(op.txn), op.files)
         case "delete" =>
-          val prevKey = state.find(_.startsWith("# delkey:"))
-            .map(_.stripPrefix("# delkey:").trim)
-          require(prevKey.forall(_ == op.keyCol),
+          require(state.delKey.forall(_ == op.keyCol),
             s"rebaseBranchDml: main now uses delete key " +
-              s"${prevKey.getOrElse("")}, branch recorded ${op.keyCol}")
-          ("# base:." +:
-            (state.filter(_.startsWith("# txn:")) :+ s"# txn:${op.txn}")) ++
-            Seq(s"# delkey:${op.keyCol}") ++
-            (state.filter(_.startsWith("# delete:")) ++
-              op.files.map(f => s"# delete:$f")) ++
-            state.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") &&
-              !l.startsWith("# delkey:") && !l.startsWith("# delete:")) ++
-            state.filterNot(_.startsWith("#"))
+              s"${state.delKey.getOrElse("")}, branch recorded ${op.keyCol}")
+          deleteManifest(state, op.txn, op.keyCol, op.files)
         case "merge" =>
           val changes = readParquetCached(spark, op.files.map(f => s"$table/$f"))
           // fresh dirs per (op, base, THIS rebase's txn): a later rebase
@@ -4510,14 +4007,7 @@ object Acid {
             Paths.get(table).resolve(s"branch=$name")
               .resolve(s"del=${op.txn}-r$cur-t$txnId"),
             "rebaseBranchDml")
-          ("# base:." +:
-            (state.filter(_.startsWith("# txn:")) :+ s"# txn:${op.txn}")) ++
-            m.vectorLines ++
-            state.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") &&
-              !l.startsWith("# delkey:") && !l.startsWith("# delete:") &&
-              !m.deadStat(l)) ++
-            m.survivors ++ m.newFiles
+          m.manifest(state, op.txn)
         case "updwhere" | "delwhere" =>
           // replay the frozen LOGICAL statement against the current state
           // — the predicate re-probes the future base from scratch, so
@@ -4532,33 +4022,17 @@ object Acid {
             Paths.get(table).resolve(s"branch=$name")
               .resolve(s"txn=${op.txn}-r$cur-t$txnId"),
             "rebaseBranchDml")
-          ("# base:." +:
-            (state.filter(_.startsWith("# txn:")) :+ s"# txn:${op.txn}")) ++
-            state.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-              !l.startsWith("# base:") && !l.startsWith("# op:") &&
-              !w.deadStat(l)) ++
-            w.survivors ++ w.newFiles
+          w.manifest(state, op.txn)
         case other => sys.error(s"rebaseBranchDml: unknown op kind '$other'")
-      }
+      })
     }
     val k = head + 1
-    val rebased = ("# base:." +:
-      (state.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-      state.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-        !l.startsWith("# base:") && !l.startsWith("# op:") &&
-        !l.startsWith("# dml:")) ++
-      state.filterNot(_.startsWith("#")) ++
-      // re-stamp the op log verbatim (the LOGICAL inputs never move), so
-      // a second rebase onto a further-advanced main replays identically;
-      // this rebase's own ledger txn gets a no-op marker entry
-      (ops.map(o => s"# dml:${o.k}|${o.kind}|${o.txn}|${o.keyCol}|" +
-        s"${o.opCol.getOrElse("-")}|${o.files.mkString(",")}") :+
-        s"# dml:$k|rebase|$txnId|-|-|")
-    Files.write(brManifest(table, name, k),
-      rebased.mkString("", "\n", "\n").getBytes("UTF-8"),
-      java.nio.file.StandardOpenOption.CREATE_NEW,
-      java.nio.file.StandardOpenOption.WRITE)
-    writeBranchRef(table, name, cur, k, createNew = false)
+    // re-stamp the op log verbatim (the LOGICAL inputs never move), so a
+    // second rebase onto a further-advanced main replays identically; this
+    // rebase's own ledger txn gets a no-op marker entry
+    commitBranch(table, name, cur, k,
+      metadataCommit(state, txnId, Seq.empty, _.isInstanceOf[Manifest.Dml]) ++
+        ops :+ Manifest.Dml(k, "rebase", txnId, "-", None, Seq.empty))
     k
   }
 
@@ -4575,54 +4049,42 @@ object Acid {
       txnId: Long): Long = withWriterLock(table) {
     val (base, head) = branches(table).getOrElse(name,
       sys.error(s"Acid.cherryPick: no branch '$name' at $table"))
-    def linesAt(k: Long): Seq[String] =
-      if (k < 0) manifestLines(table, base)
-      else linesCached(brManifest(table, name, k))
-    val k = (0L to head).find(k => linesAt(k).contains(s"# txn:$branchTxn") &&
-        !linesAt(k - 1).contains(s"# txn:$branchTxn"))
+    def linesAt(k: Long): Manifest =
+      if (k < 0) manifestAt(table, base)
+      else Manifest.read(brManifest(table, name, k))
+    val k = (0L to head).find(k => linesAt(k).hasTxn(branchTxn) &&
+        !linesAt(k - 1).hasTxn(branchTxn))
       .getOrElse(sys.error(
         s"Acid.cherryPick: no commit with txn $branchTxn on branch '$name'"))
     val (before, after) = (linesAt(k - 1), linesAt(k))
-    def dels(ls: Seq[String]) =
-      ls.filter(l => l.startsWith("# delkey:") || l.startsWith("# delete:")).toSet
-    require(dels(after) == dels(before),
+    require(after.deleteEntries == before.deleteEntries,
       s"cherryPick: branch commit $branchTxn changed delete vectors — " +
         s"only append-only commits cherry-pick")
-    require(before.filterNot(_.startsWith("#"))
-        .forall(after.filterNot(_.startsWith("#")).toSet),
+    require(before.files.forall(after.files.toSet),
       s"cherryPick: branch commit $branchTxn REWROTE files (branch DML) — " +
         "picking only its added files would resurrect the pre-DML rows; " +
         "publish the whole branch by fastForwardBranch instead")
-    val picked = {
-      val prev = before.filterNot(_.startsWith("#")).toSet
-      after.filterNot(_.startsWith("#")).filterNot(prev)
-    }
+    val picked = after.files.filterNot(before.files.toSet)
     // Claim-protocol commit like every other publish path (ADVICE r16): a
     // racing appendTxnCAS rebases this pick instead of surfacing as an
     // unhandled FileAlreadyExistsException.
     commitNextVersion(table) { (cur, prev) =>
-      if (prev.contains(s"# txn:$txnId")) {
+      if (prev.hasTxn(txnId)) {
         // completed-pick signature: the picked branch commit itself is on
         // main. An unrelated commit merely sharing our publish id must not
         // silently skip the pick (ADVICE r16).
-        require(prev.contains(s"# txn:$branchTxn"),
+        require(prev.hasTxn(branchTxn),
           s"cherryPick: txn $txnId is already committed on main at $table " +
             s"but picked commit $branchTxn is not — txn-id collision, " +
             s"refusing to skip the pick")
         Some(cur.get)
       } else None
     } { (_, curLines) =>
-      require(curLines.contains("# base:."),
+      require(curLines.rootRelative,
         s"cherryPick on snapshot-mode table $table")
-      require(!curLines.contains(s"# txn:$branchTxn"),
+      require(!curLines.hasTxn(branchTxn),
         s"cherryPick: txn $branchTxn already committed on main")
-      ("# base:." +:
-        ((curLines.filter(_.startsWith("# txn:")) :+ s"# txn:$branchTxn"
-          :+ s"# txn:$txnId") ++
-          // # op: marks main's PREVIOUS commit, not this pick — drop it
-          curLines.filter(l => !l.startsWith("# txn:") && l != "# base:." &&
-            !l.startsWith("# op:") && l.startsWith("#")))) ++
-        curLines.filterNot(_.startsWith("#")) ++ picked
+      appendManifest(curLines, Seq(branchTxn, txnId), picked)
     }
   }
 
@@ -4647,13 +4109,10 @@ object Acid {
       // liveness rule vacuum applies, scoped to this branch's data dir
       val cur = currentVersion(table)
       val tagged = tags(table).values.toSet
-      def refs(ls: Seq[String]): Seq[String] =
-        ls.filter(_.startsWith("# delete:")).map(_.stripPrefix("# delete:").trim) ++
-          ls.filter(_.startsWith("# pdel:")).map(_.stripPrefix("# pdel:").trim) ++
-          ls.filterNot(_.startsWith("#"))
+      def refs(m: Manifest): Seq[String] = m.deletes ++ m.pdels ++ m.files
       val live: Set[String] = (cur.toSeq.flatMap { c =>
         ((horizon(table) to c) ++ tagged.filter(_ < horizon(table)))
-          .flatMap(v => refs(manifestLines(table, v)))
+          .flatMap(v => refs(manifestAt(table, v)))
       } ++ branches(table).keys.flatMap(n => refs(branchLines(table, n))) ++
         stagedWapIds(table).flatMap(id => wapFiles(table, id))).toSet
       val root = Paths.get(table)
@@ -4751,10 +4210,10 @@ object Acid {
     val cur = currentVersion(table).getOrElse(
       sys.error(s"Acid.history: no committed version at $table"))
     val rows = (horizon(table) to cur).map { v =>
-      val lines = manifestLines(table, v)
+      val m = manifestAt(table, v)
       Row(v,
-        lines.count(!_.startsWith("#")).toLong,
-        lines.count(_.startsWith("# txn:")).toLong,
+        m.files.size.toLong,
+        m.txns.size.toLong,
         readVersion(spark, table, v).count())
     }
     spark.createDataFrame(
@@ -4813,33 +4272,17 @@ object Acid {
   def filesTable(spark: SparkSession, table: String): DataFrame = {
     val v = currentVersion(table).getOrElse(
       sys.error(s"Acid.filesTable: no committed version at $table"))
-    val lines = manifestLines(table, v)
-    val files = lines.filterNot(_.startsWith("#"))
-    val rowsMap = lines.filter(_.startsWith("# rows:")).flatMap { l =>
-      l.stripPrefix("# rows:").split('|') match {
-        case Array(f, n) => Some(f -> n.toLong)
-        case _ => None
-      }
-    }.toMap
-    val statsMap = lines.filter(_.startsWith("# minmax:")).flatMap { l =>
-      l.stripPrefix("# minmax:").split('|') match {
-        case Array(f, n, lo, hi) => Some(f -> s"$n:$lo..$hi")
-        case _ => None
-      }
-    }.groupBy(_._1).map { case (f, ss) => f -> ss.map(_._2).sorted.mkString(";") }
-    val pvalMap = lines.filter(_.startsWith("# pval:")).flatMap { l =>
-      // format: # pval:<file>|<name>=<value>[,<name>=<value>...]
-      val body = l.stripPrefix("# pval:")
-      val (f, rest) = body.span(_ != '|')
-      if (rest.isEmpty) None else Some(f -> rest.drop(1))
-    }.toMap
+    val m = manifestAt(table, v)
+    val rowsMap = m.rows.map(r => r.file -> r.n).toMap
+    val statsMap = m.minmax.map(s => s.file -> s"${s.name}:${s.lo}..${s.hi}")
+      .groupBy(_._1).map { case (f, ss) => f -> ss.map(_._2).sorted.mkString(";") }
     def hivePartition(f: String): String =
       f.split('/').dropRight(1).filter(_.contains("=")).mkString(",")
     // snapshot-mode tables root their files under v=<n>/
-    val prefix = if (lines.contains("# base:.")) "" else s"v=$v/"
-    val rows = files.sorted.map { f =>
+    val prefix = if (m.rootRelative) "" else s"v=$v/"
+    val rows = m.files.sorted.map { f =>
       Row(f,
-        pvalMap.getOrElse(f, hivePartition(f)),
+        m.pvals.get(f).fold(hivePartition(f))(_.tuple),
         rowsMap.get(f).map(Long.box).orNull,
         statsMap.getOrElse(f, ""),
         Files.size(Paths.get(table, prefix + f)))
@@ -4877,19 +4320,14 @@ object Acid {
       s"$name ($predicate): $bad existing rows violate it")
     commitNextVersion(table) { (cur, prev) =>
       require(cur.isDefined, s"Acid.addConstraint: no committed version at $table")
-      require(prev.contains("# base:."),
+      require(prev.rootRelative,
         s"addConstraint on snapshot-mode table $table")
-      val dup = prev.find(l => l.startsWith(s"# constraint:$name|"))
-      require(dup.isEmpty || dup.contains(s"# constraint:$name|$predicate"),
+      val dup = prev.constraints.find(_.name == name)
+      require(dup.forall(_.pred == predicate),
         s"addConstraint: constraint $name already exists with a different predicate")
-      if (prev.contains(s"# txn:$txnId")) Some(cur.get) else None
+      if (prev.hasTxn(txnId)) Some(cur.get) else None
     } { (_, prev) =>
-      ("# base:." +:
-        (prev.filter(_.startsWith("# txn:")) :+ s"# txn:$txnId")) ++
-        prev.filter(l => l.startsWith("#") && !l.startsWith("# txn:") &&
-          !l.startsWith("# base:") && !l.startsWith("# op:")) ++
-        Seq(s"# constraint:$name|$predicate") ++
-        prev.filterNot(_.startsWith("#"))
+      metadataCommit(prev, txnId, Seq(Manifest.Constraint(name, predicate)))
     }
   }
 
@@ -4905,19 +4343,14 @@ object Acid {
   def partitions(spark: SparkSession, table: String): DataFrame = {
     val cur = currentVersion(table).getOrElse(
       sys.error(s"Acid.partitions: no committed version at $table"))
-    val lines = manifestLines(table, cur)
-    require(lines.contains("# base:."),
+    val m = manifestAt(table, cur)
+    require(m.rootRelative,
       s"Acid.partitions on snapshot-mode table $table")
-    val tupleOf: Map[String, String] =
-      lines.filter(_.startsWith("# pval:")).map { l =>
-        val parts = l.stripPrefix("# pval:").split("\\|", 2)
-        parts(0) -> (if (parts.length > 1) parts(1) else "")
-      }.toMap
-    val files = lines.filterNot(_.startsWith("#"))
+    val files = m.files
     // counts from the immutable files' footers — no scan job (r20)
     val perFile: Map[String, Long] =
       files.map(f => f -> footerRowCount(spark, s"$table/$f")).toMap
-    val rows = files.groupBy(f => tupleOf.getOrElse(f, ""))
+    val rows = files.groupBy(f => m.pvals.get(f).fold("")(_.tuple))
       .map { case (t, fs) =>
         Row(t, fs.size.toLong, fs.map(f => perFile.getOrElse(f, 0L)).sum)
       }.toSeq
@@ -4971,29 +4404,21 @@ object Acid {
       val live: Set[String] = (((newHorizon to cur) ++
         (tagged ++ branchBases).filter(_ < newHorizon))
         .flatMap { v =>
-          val lines = manifestLines(table, v)
-          val rootRel = lines.contains("# base:.")
-          lines.filter(_.startsWith("# delete:")).map(_.stripPrefix("# delete:").trim) ++
-            // positional vectors are live by reference exactly like
-            // equality vectors — GC'ing one silently resurrects rows
-            lines.filter(_.startsWith("# pdel:")).map(_.stripPrefix("# pdel:").trim) ++
-            // materialized CDC preimage files stay readable as long as
-            // their manifest does (the feed reads them per version)
-            lines.filter(_.startsWith("# cdc:"))
-              .map(_.stripPrefix("# cdc:").dropWhile(_ != '|').drop(1).trim) ++
-            lines.filterNot(_.startsWith("#"))
-              .map(f => if (rootRel) f else s"v=$v/$f")
+          val m = manifestAt(table, v)
+          // positional vectors are live by reference exactly like equality
+          // vectors — GC'ing one silently resurrects rows; materialized CDC
+          // preimage files stay readable as long as their manifest does
+          // (the feed reads them per version)
+          m.deletes ++ m.pdels ++ m.cdcFiles ++
+            m.files.map(f => if (m.rootRelative) f else s"v=$v/$f")
         } ++ stagedWapIds(table).flatMap(id => wapFiles(table, id)) ++
         branchMap.keys.flatMap { n =>
-          val ls = branchLines(table, n)
-          ls.filter(_.startsWith("# delete:")).map(_.stripPrefix("# delete:").trim) ++
-            ls.filter(_.startsWith("# pdel:")).map(_.stripPrefix("# pdel:").trim) ++
-            // op-log inputs are live as long as the branch is: the frozen
-            // change frames under chg=<txn>/ are referenced ONLY by
-            // '# dml:' lines, and GC'ing one would destroy the branch's
-            // rebaseBranchDml replay capability (r18)
-            branchOpLog(ls).flatMap(_.files) ++
-            ls.filterNot(_.startsWith("#"))
+          val m = branchLines(table, n)
+          // op-log inputs are live as long as the branch is: the frozen
+          // change frames under chg=<txn>/ are referenced ONLY by the op
+          // log, and GC'ing one would destroy the branch's
+          // rebaseBranchDml replay capability (r18)
+          m.deletes ++ m.pdels ++ m.dml.flatMap(_.files) ++ m.files
         }).toSet
       val tmp = Paths.get(table, "_horizon.tmp")
       Files.write(tmp, newHorizon.toString.getBytes("UTF-8"))

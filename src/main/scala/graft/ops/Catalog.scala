@@ -58,14 +58,16 @@ object Catalog {
     else Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong)
   }
 
-  private def manifestLines(dir: String, v: Long): Seq[String] =
-    // stat-addressed cached read (r21) — catalog manifests are immutable
-    // after the pointer flip, same as table manifests
-    Acid.linesCached(Paths.get(dir, s"catalog-$v.txt"))
+  /** Catalog version `v`: a txn ledger plus one `name=version` pin per
+    * line — the table manifest's format with the pins as its entry lines,
+    * so it is written, parsed and cached (immutable after the pointer
+    * flip) through [[Manifest]]. */
+  private def manifestAt(dir: String, v: Long): Manifest =
+    Manifest.read(Paths.get(dir, s"catalog-$v.txt"))
 
   /** The pin set of catalog version `v`: table name → pinned table version. */
   def snapshotAt(dir: String, v: Long): Map[String, Long] =
-    manifestLines(dir, v).filterNot(_.startsWith("#")).map { l =>
+    manifestAt(dir, v).files.map { l =>
       val Array(n, tv) = l.split('=')
       n -> tv.toLong
     }.toMap
@@ -77,8 +79,7 @@ object Catalog {
   /** Catalog txn ids already committed (replay detection). */
   def committedTxns(dir: String): Set[Long] = currentVersion(dir) match {
     case None => Set.empty
-    case Some(v) => manifestLines(dir, v)
-      .filter(_.startsWith("# txn:")).map(_.stripPrefix("# txn:").toLong).toSet
+    case Some(v) => manifestAt(dir, v).txns.toSet
   }
 
   /** Read `table` at the version a snapshot pins — the multi-table
@@ -113,18 +114,15 @@ object Catalog {
       n -> Acid.currentVersion(tablePath(dir, n)).getOrElse(
         sys.error(s"catalog: member $n has no committed version"))
     }
-    val prevTxns = currentVersion(dir).map(manifestLines(dir, _)).getOrElse(Seq.empty)
-      .filter(_.startsWith("# txn:"))
+    val prevTxns = currentVersion(dir).map(manifestAt(dir, _).txns).getOrElse(Seq.empty)
     val v = currentVersion(dir).map(_ + 1).getOrElse(0L)
-    val lines = (prevTxns :+ s"# txn:$txnId") ++ pins.map { case (n, tv) => s"$n=$tv" }
     // CREATE_NEW put-if-absent: two writers racing the same catalog
     // version cannot silently clobber each other (same hygiene as the
     // table-level commitManifest)
     try {
-      Files.write(Paths.get(dir, s"catalog-$v.txt"),
-        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW,
-        java.nio.file.StandardOpenOption.WRITE)
+      Manifest.writeNew(Paths.get(dir, s"catalog-$v.txt"),
+        (prevTxns :+ txnId).map(Manifest.Txn) ++
+          pins.map { case (n, tv) => Manifest.DataFile(s"$n=$tv") })
     } catch {
       case e: java.nio.file.FileAlreadyExistsException =>
         // catalog-<v>.txt exists but the pointer never reached v: a prior
@@ -138,7 +136,7 @@ object Catalog {
         // Acid.commitNextVersion's orphan check.
         if (currentVersion(dir).exists(_ >= v))
           return commitTxn(spark, dir, txnId, writes) // lost a race: rebase
-        if (!manifestLines(dir, v).contains(s"# txn:$txnId")) {
+        if (!manifestAt(dir, v).hasTxn(txnId)) {
           // grace spin (ADVICE r15, mirrors Acid.commitNextVersion's 2s
           // wait): a LIVE concurrent writer that just wrote catalog-<v>.txt
           // but hasn't flipped yet is not a crashed orphan — wait briefly

@@ -279,28 +279,17 @@ object DeltaExport {
     Files.createDirectories(logDir(dir))
     val av = Acid.currentVersion(table).getOrElse(
       sys.error(s"DeltaExport.exportAcid: no committed version at $table"))
-    val (files, _) = Acid.manifestFiles(table, av)
+    val m = Acid.manifestAt(table, av)
+    val files = m.files
     require(files.nonEmpty, s"DeltaExport.exportAcid: empty manifest at $table")
-    require(!Acid.headLines(table).exists(_.startsWith("# pdel:")),
-      s"DeltaExport.exportAcid: $table carries POSITIONAL delete vectors — " +
-        "compactDeletes (or optimize) to fold them before exporting; the " +
-        "zero-copy adds below would otherwise resurrect hidden positions")
-    // same divergence class as IcebergExport (r19 review): zero-copy refs
-    // are PHYSICAL files, the log's schemaString is the logical schema —
-    // evolved/lineage tables must OPTIMIZE (materializing the logical
-    // frame) before export or an external Delta reader surfaces NULLs /
-    // a stray __row_id column
-    require(!Acid.headLines(table).exists(l => l.startsWith("# colmap:") ||
-      l.startsWith("# coldrop:") || l.startsWith("# coldefault:") ||
-      l.startsWith("# firstrow:") || l.startsWith("# rowid_phys:") ||
-      l.startsWith("# rowid_next:")),
-      s"DeltaExport.exportAcid: $table carries schema-evolution or " +
-        "row-lineage metadata — zero-copy adds would diverge from the " +
-        "declared schemaString; OPTIMIZE before exporting")
+    // zero-copy adds are PHYSICAL files while the log's schemaString is
+    // the logical schema (IcebergExport shares the guard)
+    m.exportBlocker.foreach(why =>
+      throw new IllegalArgumentException(s"DeltaExport.exportAcid: $table $why"))
     val tableRoot = Paths.get(table).toAbsolutePath
     val v = currentVersion(dir).map(_ + 1).getOrElse(0L)
     val dataSub = f"v$v%020d"
-    val (zeroCopy, rewritten) = Acid.standingDeletes(table, av) match {
+    val (zeroCopy, rewritten) = m.standingDeletes match {
       case None => (files, Seq.empty[String])
       case Some((k, delFiles)) =>
         val keys = Acid.readParquetCached(spark, delFiles.map(f => s"$table/$f"))

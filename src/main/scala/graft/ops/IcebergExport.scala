@@ -190,32 +190,21 @@ object IcebergExport {
     Files.createDirectories(metaDir(dir))
     val av = Acid.currentVersion(table).getOrElse(
       sys.error(s"IcebergExport.exportAcid: no committed version at $table"))
-    val (files, _) = Acid.manifestFiles(table, av)
+    val m = Acid.manifestAt(table, av)
+    val files = m.files
     require(files.nonEmpty, s"IcebergExport.exportAcid: empty manifest at $table")
-    require(!Acid.headLines(table).exists(_.startsWith("# pdel:")),
-      s"IcebergExport.exportAcid: $table carries POSITIONAL delete vectors " +
-        "— compactDeletes (or optimize) to fold them before exporting; " +
-        "faking v2 positional delete files would corrupt external readers")
     // zero-copy refs export PHYSICAL files while metadata declares the
     // LOGICAL schema — on a column-mapped/defaulted table an external
     // reader (no field-ids in the parquet) would surface NULLs where the
     // engine stitches renames/fills, and a lineage table's physical
-    // __row_id column is absent from the declared schema. Refuse loudly;
-    // optimize/optimizeLineage first materializes the logical frame and
-    // makes the table exportable (r19 review).
-    require(!Acid.headLines(table).exists(l => l.startsWith("# colmap:") ||
-      l.startsWith("# coldrop:") || l.startsWith("# coldefault:") ||
-      l.startsWith("# firstrow:") || l.startsWith("# rowid_phys:") ||
-      l.startsWith("# rowid_next:")),
-      s"IcebergExport.exportAcid: $table carries schema-evolution or " +
-        "row-lineage metadata — zero-copy physical refs would diverge " +
-        "from the declared logical schema; OPTIMIZE (materializing the " +
-        "logical frame) before exporting")
+    // __row_id column is absent from the declared schema (r19 review)
+    m.exportBlocker.foreach(why =>
+      throw new IllegalArgumentException(s"IcebergExport.exportAcid: $table $why"))
     val tableRoot = Paths.get(table).toAbsolutePath
     val v = currentMetaVersion(dir).map(_ + 1).getOrElse(0L)
     val dataSub = f"data-v$v%05d"
     // merge-on-read reconciliation — DeltaExport.exportAcid's algorithm
-    val (zeroCopy, rewritten) = Acid.standingDeletes(table, av) match {
+    val (zeroCopy, rewritten) = m.standingDeletes match {
       case None => (files, Seq.empty[String])
       case Some((k, delFiles)) =>
         val keys = Acid.readParquetCached(spark, delFiles.map(f => s"$table/$f"))

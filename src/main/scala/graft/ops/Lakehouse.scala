@@ -732,7 +732,7 @@ object Lakehouse {
         val table = graft.Tmp.dir("posdel", sfDir)
         Acid.reset(table)
         cloneDir(pristine, table)
-        val filesBefore = Acid.headLines(table).filterNot(_.startsWith("#"))
+        val filesBefore = Acid.headManifest(table).files
         // dedup as a vector: keep the first occurrence per key, hide the rest
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("o_orderkey")).orderBy(col("_file"), col("_pos"))
@@ -747,15 +747,14 @@ object Lakehouse {
             .filter(col("o_orderkey") % 21 === 0)
             .select(col("_file").as("f"), col("_pos").as("pos")),
           txnId = 3L)                                           // v3
-        val after = Acid.headLines(table)
-        require(after.filterNot(_.startsWith("#")) == filesBefore,
+        require(Acid.headManifest(table).files == filesBefore,
           "sink_positional_delete: a vector commit touched a data file")
         require(Acid.read(spark, table).count() ==
           Acid.readPositions(spark, table).count(),
           "sink_positional_delete: read paths disagree under vectors")
         // compaction folds both vectors away
         Acid.optimize(spark, table, txnId = 4L, targetFiles = 2)
-        require(!Acid.headLines(table).exists(_.startsWith("# pdel:")),
+        require(Acid.headManifest(table).pdels.isEmpty,
           "sink_positional_delete: compaction must fold the vectors")
         Acid.read(spark, table)
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -1035,14 +1034,10 @@ object Lakehouse {
           "user_id", txnId = 3L)
         val d = Acid.dayOfValue(utcMicros("2024-01-10T00:00:00Z"))
         def split(): (Set[String], Set[String]) = {
-          val lines = Acid.headLines(table)
-          val files = lines.filterNot(_.startsWith("#")).toSet
-          val day = lines.collect {
-            case l if l.startsWith("# pval:") &&
-              l.stripPrefix("# pval:").dropWhile(_ != '|').drop(1)
-                .split(',').contains(s"day_ts=$d") =>
-              l.stripPrefix("# pval:").takeWhile(_ != '|')
-          }.toSet
+          val m = Acid.headManifest(table)
+          val files = m.files.toSet
+          val day = m.pvals.values.filter(_.parts.contains(s"day_ts=$d"))
+            .map(_.file).toSet
           (day, files -- day)
         }
         val (dayBefore, othersBefore) = split()

@@ -356,8 +356,7 @@ object MvRewrite extends Rule[LogicalPlan]
     * standing vector exists — what a plan-side anti-join must subtract ON
     * for the scan to BE the table's own read. */
   private def delKeyOf(tableDir: String): Option[String] =
-    try graft.ops.Acid.headLines(tableDir)
-      .find(_.startsWith("# delkey:")).map(_.stripPrefix("# delkey:").trim)
+    try graft.ops.Acid.headManifest(tableDir).delKey
     catch { case scala.util.control.NonFatal(_) => None }
 
   private def scanFiles(rel: LogicalRelation): Option[Set[String]] =

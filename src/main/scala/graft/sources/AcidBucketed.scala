@@ -72,19 +72,14 @@ object AcidBucketed {
 
   /** files + bucket value per file, from the head manifest's pvals. */
   private[sources] def bucketMap(table: String, bucketCol: String): Seq[(String, Long)] = {
-    val lines = graft.ops.Acid.headLines(table)
-    require(!lines.exists(l => l.startsWith("# delete:") || l.startsWith("# pdel:")),
+    val m = graft.ops.Acid.headManifest(table)
+    require(m.deletes.isEmpty && m.pdels.isEmpty,
       s"acid-bucketed: $table carries standing delete vectors — read via Acid.read")
-    require(!lines.exists(l => l.startsWith("# colmap:") || l.startsWith("# coldrop:")),
+    require(!m.hasColumnMapping,
       s"acid-bucketed: $table has column-mapping generations — read via Acid.readEvolved")
-    val pval = lines.filter(_.startsWith("# pval:")).map { l =>
-      val body = l.stripPrefix("# pval:")
-      val (f, tuple) = body.span(_ != '|')
-      f -> tuple.drop(1)
-    }.toMap
-    lines.filterNot(_.startsWith("#")).map { f =>
-      val tuple = pval.getOrElse(f,
-        sys.error(s"acid-bucketed: $f has no partition tuple — table not fully bucketed"))
+    m.files.map { f =>
+      val tuple = m.pvals.getOrElse(f,
+        sys.error(s"acid-bucketed: $f has no partition tuple — table not fully bucketed")).tuple
       val v = tuple.split(',').collectFirst {
         case kv if kv.startsWith(s"$bucketCol=") => kv.stripPrefix(s"$bucketCol=").toLong
       }.getOrElse(sys.error(
@@ -107,7 +102,7 @@ object AcidBucketed {
   }
 
   private def fileSchemaUncached(table: String): MessageType = {
-    val files = graft.ops.Acid.headLines(table).filterNot(_.startsWith("#"))
+    val files = graft.ops.Acid.headManifest(table).files
     require(files.nonEmpty, s"acid-bucketed: $table has no data files")
     def footer(f: String): MessageType = {
       val in = HadoopInputFile.fromPath(new HPath(s"$table/$f"), hconf)

@@ -2,7 +2,7 @@ package graft.stream
 
 import graft.{Q, Tables}
 import graft.Det._
-import graft.ops.Acid
+import graft.ops.{Acid, Manifest}
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
@@ -52,10 +52,6 @@ import org.apache.spark.sql.types.StructType
   */
 object AcidStream {
 
-  /** Data-file and delete-file lines of version v's manifest. */
-  private def filesAt(table: String, v: Long): (Seq[String], Seq[String]) =
-    Acid.manifestFiles(table, v)
-
   /** Files contributed by ONE version, append commits only, in STABLE
     * manifest order — the admission unit [[AcidOffset]]'s file ordinal
     * indexes into (manifests are immutable, so a mid-version restart
@@ -69,14 +65,12 @@ object AcidStream {
     * dataChange=false and change commits. */
   private[graft] def addedAt(table: String, v: Long,
       skipChangeCommits: Boolean): Seq[String] = {
-    val (df1, del1) = filesAt(table, v)
-    val (df0, del0) =
-      if (v == 0) (Seq.empty[String], Seq.empty[String])
-      else filesAt(table, v - 1)
-    val prev = df0.toSet
-    val isAppend = prev.subsetOf(df1.toSet) && del1 == del0
-    if (Acid.isRewriteCommit(table, v)) Seq.empty // dataChange=false
-    else if (isAppend) df1.filterNot(prev)
+    val m1 = Acid.manifestAt(table, v)
+    val m0 = if (v == 0) Manifest.empty else Acid.manifestAt(table, v - 1)
+    val prev = m0.files.toSet
+    val isAppend = prev.subsetOf(m1.files.toSet) && m1.deletes == m0.deletes
+    if (m1.isRewrite) Seq.empty // dataChange=false
+    else if (isAppend) m1.files.filterNot(prev)
     else if (skipChangeCommits) Seq.empty
     else throw new IllegalStateException(
       s"acid-stream: version $v of $table is not append-only (delete " +
@@ -95,11 +89,10 @@ object AcidStream {
     * nothing); every version costs at least 1 so a backlog of data-less
     * commits still drains. */
   private def cdfCost(table: String, v: Long): Int =
-    if (Acid.isRewriteCommit(table, v)) 1
+    if (Acid.manifestAt(table, v).isRewrite) 1
     else {
-      val (df1, _) = filesAt(table, v)
-      val prev = if (v == 0) Set.empty[String] else filesAt(table, v - 1)._1.toSet
-      math.max(1, df1.count(!prev(_)))
+      val prev = if (v == 0) Set.empty[String] else Acid.manifestAt(table, v - 1).files.toSet
+      math.max(1, Acid.manifestAt(table, v).files.count(!prev(_)))
     }
 
   /** Composite admission offset: versions `< v` fully delivered, plus the
@@ -164,9 +157,9 @@ object AcidStream {
       * its range — through them, so old files surface renamed/defaulted
       * columns exactly as batch reads do. */
     private val evoPinnedAt: Long = Acid.currentVersion(table).getOrElse(-1L)
-    private val evo0: Seq[String] =
+    private val evo0: Seq[Manifest.Entry] =
       if (evoPinnedAt < 0) Seq.empty
-      else Acid.evolutionLines(table, evoPinnedAt)
+      else Acid.evolutionAt(table, evoPinnedAt)
 
     override def prepareForTriggerAvailableNow(): Unit =
       availableNowCap = Acid.currentVersion(table)
@@ -289,7 +282,7 @@ object AcidStream {
       // only PAST the pin point — restart recovery re-derives committed
       // batches whose end versions predate the pin, and those resolve
       // through the pinned (current) metadata like every other read.
-      if (ev > evoPinnedAt && Acid.evolutionLines(table, ev) != evo0)
+      if (ev > evoPinnedAt && Acid.evolutionAt(table, ev) != evo0)
         throw new IllegalStateException(
           s"acid-stream: schema evolution landed on $table at or before " +
             s"version $ev while this query was running — a streaming " +
@@ -326,7 +319,7 @@ object AcidStream {
         else Acid.resolveEvolution(evo0,
             Acid.readMergedSchema(spark, files.map(f => s"$table/$f")))
           .select(schema0.fieldNames.map(col).toSeq: _*)
-      Acid.standingDeletes(table, e) match {
+      Acid.manifestAt(table, e).standingDeletes match {
         case Some((k, delFiles)) =>
           // merge-on-read applies to the feed too (ADVICE r13): a row
           // appended under an already-standing delete vector is invisible
@@ -355,15 +348,14 @@ object AcidStream {
       * commit history — the MV-refresh / replica-apply feed. */
     private def getBatchCdf(s: Long, e: Long): DataFrame = {
       val parts = (s + 1 to e).flatMap { v =>
-        if (Acid.isRewriteCommit(table, v)) None // dataChange=false: no changes
+        if (Acid.manifestAt(table, v).isRewrite) None // dataChange=false: no changes
         else if (cdfKey.isDefined) {
           // row-granular mode (.option("key", col)): UPDATE IMAGES via the
           // manifest-diff feed — a MERGE/UPDATE/DELETE commit streams its
           // pre/post-image pairs instead of refusing, and maintenance
           // rewrites contribute nothing by construction
           if (v == 0) {
-            val (files0, _) = Acid.manifestFiles(table, 0L)
-            if (files0.isEmpty) None
+            if (Acid.manifestAt(table, 0L).files.isEmpty) None
             else Some(Acid.readVersion(spark, table, 0L)
               .withColumn("change_type", lit("insert"))
               .withColumn("_commit_version", lit(0L)))
@@ -374,8 +366,7 @@ object AcidStream {
         else try {
           val piece =
             if (v == 0) {
-              val (files, _) = Acid.manifestFiles(table, 0L)
-              if (files.isEmpty) None
+              if (Acid.manifestAt(table, 0L).files.isEmpty) None
               else Some(Acid.readVersion(spark, table, 0L)
                 .withColumn("change_type", lit("insert")))
             } else Some(Acid.changeFeed(spark, table, v - 1, v))
@@ -432,12 +423,10 @@ object AcidStream {
     override def stop(): Unit = ()
   }
 
-  /** Branch lines at ordinal `k` of branch `name` (k == -1 → empty). */
-  private def brLinesAt(table: String, name: String, k: Long): Seq[String] =
-    if (k < 0) Seq.empty
-    else Acid.linesCached( // stat-addressed cache (r21): a rewritten branch
-      // manifest re-keys on size/mtime-ns, so rebase/publish stays visible
-      java.nio.file.Paths.get(table, s"manifest-br-$name-$k.txt"))
+  /** Branch manifest at ordinal `k` of branch `name` (k == -1 → empty). */
+  private def brLinesAt(table: String, name: String, k: Long): Manifest =
+    if (k < 0) Manifest.empty
+    else Manifest.read(java.nio.file.Paths.get(table, s"manifest-br-$name-$k.txt"))
 
   /** V1 streaming source over a BRANCH — tail an experiment line the way
     * main consumers tail the table (the Nessie dev-pipeline pattern: a
@@ -468,9 +457,8 @@ object AcidStream {
       head + 1 // count of ordinals
     }
 
-    private def evoLinesAt(k: Long): Seq[String] =
-      brLinesAt(table, name, k).filter(l => l.startsWith("# colmap:") ||
-        l.startsWith("# coldrop:") || l.startsWith("# coldefault:"))
+    private def evoLinesAt(k: Long): Seq[Manifest.Entry] =
+      brLinesAt(table, name, k).evolution
 
     /** Evolution metadata + head ordinal pinned at source creation — the
       * branch twin of [[AcidSource]]'s r20 fence: a branch forked from an
@@ -480,7 +468,7 @@ object AcidStream {
       * rows); and a REBASE pulling NEW evolution lines under a live tail
       * fails loudly — the restarted query re-pins. */
     private val evoPinnedAt: Long = headOrdinals - 1
-    private val evo0: Seq[String] =
+    private val evo0: Seq[Manifest.Entry] =
       if (evoPinnedAt < 0) Seq.empty else evoLinesAt(evoPinnedAt)
 
     override def prepareForTriggerAvailableNow(): Unit =
@@ -512,8 +500,8 @@ object AcidStream {
             s"$table at or before ordinal ${e - 1} while this query was " +
             "running — restart the query to adopt the evolved schema")
       val files = (s until e).flatMap { k =>
-        val prev = brLinesAt(table, name, k - 1).filterNot(_.startsWith("#")).toSet
-        brLinesAt(table, name, k).filterNot(_.startsWith("#")).filterNot(prev)
+        val prev = brLinesAt(table, name, k - 1).files.toSet
+        brLinesAt(table, name, k).files.filterNot(prev)
       }
       if (files.isEmpty)
         return org.apache.spark.sql.classic.GraftDatasetBridge.ofInternalRows(
@@ -531,17 +519,13 @@ object AcidStream {
           .select(schema0.fieldNames.map(col).toSeq: _*)
       // the branch head's standing vectors (fork-base inheritance) apply
       // to the feed exactly as readBranch applies them to batch reads
-      val headLines = brLinesAt(table, name, headOrdinals - 1)
-      val delFiles = headLines.filter(_.startsWith("# delete:"))
-        .map(_.stripPrefix("# delete:").trim)
-      val visible = headLines.find(_.startsWith("# delkey:"))
-        .map(_.stripPrefix("# delkey:").trim) match {
-        case Some(k) if delFiles.nonEmpty =>
+      val visible = brLinesAt(table, name, headOrdinals - 1).standingDeletes match {
+        case Some((k, delFiles)) =>
           val dels = Acid.readParquetCached(spark, delFiles.map(f => s"$table/$f"))
             .select(col(k)).distinct()
           batch.join(dels, Seq(k), "left_anti")
             .select(schema0.fieldNames.map(col).toSeq: _*)
-        case _ => batch
+        case None => batch
       }
       org.apache.spark.sql.classic.GraftDatasetBridge.ofInternalRows(
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],

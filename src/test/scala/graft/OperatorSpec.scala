@@ -2629,6 +2629,19 @@ class OperatorSpec extends SparkFixture {
       spark.range(60, 70).select(col("id").as("k")), txnId = 5L)
     val dropped = Acid.readEvolved(spark, table)
     assert(dropped.columns.toSeq == Seq("k") && dropped.count() == 70L)
+    // evolved and hidden-partition appends carry the mapping forward like
+    // a plain append: the renames and the drop stay in force after each
+    Acid.appendTxnEvolved(spark, table,
+      spark.range(70, 74).select(col("id").as("k")), txnId = 6L, Seq("k"))
+    val afterEvolved = Acid.readEvolved(spark, table)
+    assert(afterEvolved.columns.toSeq == Seq("k") && afterEvolved.count() == 74L,
+      s"evolved append undid the mapping: ${afterEvolved.columns.toSeq}")
+    Acid.appendTxnHidden(spark, table,
+      spark.range(74, 80).select(col("id").as("k")), txnId = 7L,
+      Seq(Acid.bucketOf("k", 4)))
+    val afterHidden = Acid.readEvolved(spark, table)
+    assert(afterHidden.columns.toSeq == Seq("k") && afterHidden.count() == 80L,
+      s"hidden-partition append undid the mapping: ${afterHidden.columns.toSeq}")
     // delete-vector interplay: renaming the standing delkey refuses
     val t2 = java.nio.file.Files.createTempDirectory("graft_acid_colmap2").toString + "/t"
     Acid.appendTxn(spark, t2, spark.range(0, 20).select(col("id").as("k"),
@@ -2971,8 +2984,8 @@ class OperatorSpec extends SparkFixture {
     assert(e2.getMessage.contains("POSITIONAL"), e2.getMessage)
     // compaction folds both vector kinds; the feed works again downstream
     Acid.optimize(spark, t, txnId = 4L, targetFiles = 1)
-    assert(!Acid.headLines(t).exists(l =>
-      l.startsWith("# pdel:") || l.startsWith("# delete:")))
+    val folded = Acid.headManifest(t)
+    assert(folded.pdels.isEmpty && folded.deletes.isEmpty)
     Acid.appendTxn(spark, t, Seq((9L, "z")).toDF("k", "s"), 5L)
     val feed = Acid.changeFeedRow(spark, t, 4L, 5L, "k")
       .select("k", "change_type").as[(Long, String)].collect().toSet
