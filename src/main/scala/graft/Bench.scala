@@ -87,15 +87,15 @@ object Bench {
       // one stateful agg + one flatMapGroupsWithState pass: together they
       // touch the HashAggregate streaming operator, the keyed-state
       // operator, and the RocksDB provider (both state formats)
-      val q = ms.toDF().groupBy((org.apache.spark.sql.functions.col("value") % 8).as("k"))
-        .count()
+      val q = stream.StreamOps.start(spark,
+        ms.toDF().groupBy((org.apache.spark.sql.functions.col("value") % 8).as("k")).count()
         .writeStream.format("memory").queryName("graft_warmup_stream")
         .option("checkpointLocation", Tmp.ckpt("warmup1"))
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        .outputMode("complete").trigger(Trigger.AvailableNow()))
       q.awaitTermination()
       val ms2 = MemoryStream[Long]
       ms2.addData(0L until 64L)
-      val q2 = ms2.toDS().groupByKey(_ % 8)
+      val q2 = stream.StreamOps.start(spark, ms2.toDS().groupByKey(_ % 8)
         .flatMapGroupsWithState(
           org.apache.spark.sql.streaming.OutputMode.Append(),
           org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout())(
@@ -105,7 +105,7 @@ object Bench {
           })
         .writeStream.format("memory").queryName("graft_warmup_stream2")
         .option("checkpointLocation", Tmp.ckpt("warmup2"))
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .outputMode("append").trigger(Trigger.AvailableNow()))
       q2.awaitTermination()
       spark.sql("DROP TABLE IF EXISTS graft_warmup_stream")
       spark.sql("DROP TABLE IF EXISTS graft_warmup_stream2")

@@ -20,14 +20,15 @@ object Tmp {
     s"/tmp/graft_${prefix}_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_") + s"_$token"
 
   /** Root for EPHEMERAL streaming-checkpoint scratch (offset/commit WALs,
-    * state changelogs). Every write under a checkpoint location is
-    * fsync'ed by Spark's checkpoint file manager and the RocksDB changelog
-    * writer; on this box's single shared disk those fsyncs queue behind
-    * the bench's own data writes and were measured at 1.3-4 s EACH
-    * (rocksdbCommitFileSyncLatencyMs, r21 event logs) — dominating every
-    * stateful streaming key. Checkpoints created through [[ckpt]] are
-    * per-run scratch (each run creates a fresh one; lifetime = the run),
-    * so they belong on the RAM-backed tmpfs, not on the data disk.
+    * state changelogs). The 1.3-4 s per store per batch once measured here
+    * as `rocksdbCommitFileSyncLatencyMs` was not fsync (a JFR recording of
+    * the service chain shows no `jdk.FileForce` event): Spark's default
+    * checkpoint manager, without the native libhadoop, started a `chmod`
+    * or `readlink` child process for each checkpoint file, which
+    * [[graft.stream.LocalCheckpointFileManager]] no longer does.
+    * Checkpoints created through [[ckpt]] are per-run scratch (each run
+    * creates a fresh one; lifetime = the run), so they sit on the
+    * RAM-backed tmpfs, not on the data disk.
     * Production deployments configure a durable checkpoint URI (object
     * store / HDFS) explicitly — this root only governs harness-local
     * ephemeral checkpoints, and `SPARK_GRAFT_CKPT_ROOT` /

@@ -564,7 +564,7 @@ object AcidStream {
             ev.filter(pmod(col("event_id"), lit(5)) === i), txnId = i.toLong)
         }
         def drain(): Unit = {
-          val q = spark.readStream
+          val q = StreamOps.start(spark, spark.readStream
             .format("graft.stream.AcidStreamProvider")
             .option("table", table).load()
             .writeStream
@@ -572,7 +572,7 @@ object AcidStream {
               Acid.appendTxn(spark, out, b, txnId = id); ()
             }
             .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()))
           q.awaitTermination()
         }
         land(0, 3); drain() // generation 1: versions 0..2
@@ -619,7 +619,7 @@ object AcidStream {
             col("value"))
         def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(5)) === i)
         def drain(out: String): Unit = {
-          val q = spark.readStream
+          val q = StreamOps.start(spark, spark.readStream
             .format("graft.stream.AcidStreamProvider")
             .option("table", table).load()
             .writeStream
@@ -627,7 +627,7 @@ object AcidStream {
               Acid.appendTxn(spark, out, b, txnId = id); ()
             }
             .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()))
           q.awaitTermination()
         }
         Acid.appendTxn(spark, table, slice(0), txnId = 0L) // v0
@@ -692,7 +692,7 @@ object AcidStream {
           .select(col("o_orderkey"), col("o_orderstatus"),
             money(col("o_totalprice")).as("price"))
         def drain(): Unit = {
-          val q = spark.readStream
+          val q = StreamOps.start(spark, spark.readStream
             .format("graft.stream.AcidStreamProvider")
             .option("table", table).option("mode", "cdf").load()
             .writeStream
@@ -700,7 +700,7 @@ object AcidStream {
               Acid.appendTxn(spark, out, b, txnId = id); ()
             }
             .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()))
           q.awaitTermination()
         }
         Acid.appendTxn(spark, table,
@@ -764,7 +764,7 @@ object AcidStream {
           .select(col("o_orderkey"), col("o_orderstatus"),
             money(col("o_totalprice")).as("price"))
         def drain(): Unit = {
-          val q = spark.readStream
+          val q = StreamOps.start(spark, spark.readStream
             .format("graft.stream.AcidStreamProvider")
             .option("table", table).option("mode", "cdf")
             .option("key", "o_orderkey").load()
@@ -773,7 +773,7 @@ object AcidStream {
               Acid.appendTxn(spark, out, b, txnId = id); ()
             }
             .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()))
           q.awaitTermination()
         }
         Acid.appendTxn(spark, table,
@@ -870,7 +870,7 @@ object AcidStream {
             col("value"))
         def slice(i: Int) = ev.filter(pmod(col("event_id"), lit(5)) === i)
         def drain(): Unit = {
-          val q = spark.readStream
+          val q = StreamOps.start(spark, spark.readStream
             .format("graft.stream.AcidStreamProvider")
             .option("table", table).option("branch", "dev").load()
             .writeStream
@@ -878,7 +878,7 @@ object AcidStream {
               Acid.appendTxn(spark, out, b, txnId = id); ()
             }
             .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()))
           q.awaitTermination()
         }
         Acid.appendTxn(spark, table, slice(0), txnId = 0L)        // main: A (v0)
@@ -929,7 +929,7 @@ object AcidStream {
             ev.filter(pmod(col("event_id"), lit(5)) === i), txnId = i.toLong)
         }
         def drain(): Unit = {
-          val q = spark.readStream
+          val q = StreamOps.start(spark, spark.readStream
             .format("graft.stream.AcidStreamProvider")
             .option("table", table).load()
             .writeStream
@@ -937,7 +937,7 @@ object AcidStream {
               Acid.appendTxn(spark, out, b, txnId = id); ()
             }
             .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()))
           q.awaitTermination()
         }
         land(0, 3); drain()                        // gen 1: v0..v2

@@ -54,12 +54,12 @@ object Backfill {
   def landLive(spark: SparkSession, live: DataFrame, hwm: Long,
       outDir: String, ckpt: String): DataFrame = {
     val tail = live.filter(col("event_id") > hwm)
-    val q = tail.writeStream
+    val q = StreamOps.start(spark, tail.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
       }
       .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
     spark.read.schema(tail.schema).parquet(outDir)
   }

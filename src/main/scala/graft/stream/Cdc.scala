@@ -73,10 +73,10 @@ object Cdc {
   /** Run the changelog stream to completion and return the final state. */
   def materialize(spark: SparkSession, changelog: DataFrame,
       stateDir: String, ckpt: String): DataFrame = {
-    val q = changelog.writeStream
+    val q = StreamOps.start(spark, changelog.writeStream
       .foreachBatch(applyBatch(spark, stateDir) _)
       .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
     currentState(spark, stateDir)
   }

@@ -104,7 +104,7 @@ object CdcApply {
   /** One AvailableNow drain of the changelog into the table. */
   def drain(spark: SparkSession, changelog: String, table: String,
       ckpt: String): Unit = {
-    val q = spark.readStream.schema(changeSchema)
+    val q = StreamOps.start(spark, spark.readStream.schema(changeSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(changelog)
       .writeStream
@@ -112,7 +112,7 @@ object CdcApply {
         applyBatch(spark, table, b, id); ()
       }
       .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
   }
 
@@ -173,7 +173,7 @@ object CdcApply {
         val rules = Seq(
           "no_error_events" -> (col("event_type") =!= "error"),
           "value_bound" -> (col("value") < 400.0d))
-        val q = GraftLog.readStream(spark, log,
+        val q = StreamOps.start(spark, GraftLog.readStream(spark, log,
             maxRecordsPerTrigger = Some(math.max(1L, n / 4)))
           .writeStream
           .foreachBatch { (b: DataFrame, id: Long) =>
@@ -185,7 +185,7 @@ object CdcApply {
             ()
           }
           .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()))
         q.awaitTermination()
         val pins = graft.ops.Catalog.snapshot(cat)
         require(pins.keySet == Set("clean", "quarantine"),

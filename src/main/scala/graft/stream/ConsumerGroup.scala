@@ -283,9 +283,9 @@ object ConsumerGroup {
       assignedPartitions = Some(assigned),
       startingOffsetVector = if (start.isEmpty) None else Some(start))
     val tbl = s"graft_cg_member_${memberSinkId.incrementAndGet()}"
-    val q = src.writeStream.format("memory").queryName(tbl)
+    val q = StreamOps.start(spark, src.writeStream.format("memory").queryName(tbl)
       .option("checkpointLocation", graft.Tmp.ckpt("cg_member"))
-      .trigger(Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
     // the engine's committed progress IS the group commit: the last
     // micro-batch's source endOffset vector (never ahead of what the sink

@@ -69,7 +69,7 @@ object IncrementalMv {
   /** Run one AvailableNow drain of `table`'s change feed into the MV. */
   def refresh(spark: SparkSession, table: String, mvTable: String,
       ckpt: String, key: String, valueCents: String): Unit = {
-    val q = spark.readStream
+    val q = StreamOps.start(spark, spark.readStream
       .format("graft.stream.AcidStreamProvider")
       .option("table", table).option("mode", "cdf").load()
       .writeStream
@@ -77,7 +77,7 @@ object IncrementalMv {
         applyCdfBatch(spark, mvTable, b, id, key, valueCents); ()
       }
       .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
   }
 

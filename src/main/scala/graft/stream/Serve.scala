@@ -79,7 +79,7 @@ object Serve {
     // Tmp.ckpt) instead of Spark's java.io.tmpdir temporary checkpoint
     w.option("checkpointLocation",
       checkpointDir.getOrElse(graft.Tmp.ckpt("serve")))
-    StreamOps.withStateParallelism(lines.sparkSession) { w.start() }
+    StreamOps.start(lines.sparkSession, w, stateParallelism = true)
   }
 
   /** Slow-consumer policy for [[pushLines]]: disconnect a subscriber whose

@@ -4,7 +4,8 @@ import graft.{Det, Q, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 import java.net.{InetAddress, ServerSocket}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicInteger
@@ -144,7 +145,7 @@ object StreamOps {
     * cardinality keep their pin). Scoped around query START — Spark
     * freezes the value into the checkpoint at creation, so the scope only
     * needs to cover `.start()`. */
-  private[stream] def withStateParallelism[T](spark: SparkSession)(body: => T): T = {
+  private def withStateParallelism[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
     val target = spark.conf.getOption("spark.graft.stream.statePartitions")
@@ -157,6 +158,27 @@ object StreamOps {
     }
   }
 
+  /** The one way the engine starts a StreamingQuery. Its checkpoint files
+    * (offsets, commits, state schema and metadata, the RocksDB changelog)
+    * go through [[LocalCheckpointFileManager]] unless the session names a
+    * manager itself (an explicit setting wins). Spark builds the query's
+    * checkpoint logs and its cloned session inside `.start()`, so, as with
+    * the state partition count, the conf only needs to be set around that
+    * call (two threads starting queries on one session at once may leave
+    * one of them on Spark's default manager: slower, not less correct).
+    * `stateParallelism` also scopes [[withStateParallelism]] around it. */
+  private[graft] def start(spark: SparkSession, w: DataStreamWriter[_],
+      stateParallelism: Boolean = false): StreamingQuery = {
+    val key = LocalCheckpointFileManager.ConfKey
+    def go(): StreamingQuery =
+      if (spark.conf.getOption(key).isDefined) w.start()
+      else {
+        spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+        try w.start() finally spark.conf.unset(key)
+      }
+    if (stateParallelism) withStateParallelism(spark)(go()) else go()
+  }
+
   /** Run a streaming DF to completion (AvailableNow) into a memory sink,
     * return the sink contents as a batch DataFrame. Runs on the RocksDB
     * state store (see [[ensureRocksDb]]) at state parallelism
@@ -165,11 +187,11 @@ object StreamOps {
       mode: OutputMode): DataFrame = {
     ensureRocksDb(spark)
     val tbl = s"graft_sink_${sinkId.incrementAndGet()}"
-    val q = withStateParallelism(spark) {
+    val q = start(spark,
       sdf.writeStream.format("memory").queryName(tbl).outputMode(mode)
         .option("checkpointLocation", graft.Tmp.ckpt("sink"))
-        .trigger(Trigger.AvailableNow()).start()
-    }
+        .trigger(Trigger.AvailableNow()),
+      stateParallelism = true)
     q.awaitTermination()
     spark.table(tbl)
   }
@@ -567,10 +589,11 @@ object StreamOps {
         }
         // multi-batch drain (admission control) to a committed checkpoint
         val perTrigger = math.max(4096L, GraftLog.logTotal(log) / 3 + 1)
-        val q = GraftLog.readStream(spark, log, maxRecordsPerTrigger = Some(perTrigger))
+        val q = start(spark,
+          GraftLog.readStream(spark, log, maxRecordsPerTrigger = Some(perTrigger))
           .writeStream.format("noop")
           .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()))
         q.awaitTermination()
         // the producer keeps producing after the consumer's last run
         (0 until 4).foreach { k =>
@@ -616,10 +639,10 @@ object StreamOps {
         feeder.setDaemon(true)
         feeder.start()
         val tbl = s"graft_sink_${sinkId.incrementAndGet()}"
-        val q = Sources.socketEvents(spark, "127.0.0.1", server.getLocalPort)
+        val q = start(spark, Sources.socketEvents(spark, "127.0.0.1", server.getLocalPort)
           .writeStream.format("memory").queryName(tbl)
           .option("checkpointLocation", graft.Tmp.ckpt("socket"))
-          .outputMode(OutputMode.Append()).start()
+          .outputMode(OutputMode.Append()))
         val deadline = System.nanoTime() + 30L * 1000000000L
         while (spark.table(tbl).count() < payload.size && System.nanoTime() < deadline) {
           q.processAllAvailable()
@@ -919,7 +942,7 @@ object StreamOps {
       (spark, sfDir) => {
         val out = graft.Tmp.dir("sink_graftlog", sfDir)
         graft.ops.Acid.reset(out) // fresh log per run (staging policy)
-        val q = Sources.replayEvents(spark, sfDir, "events.parquet")
+        val q = start(spark, Sources.replayEvents(spark, sfDir, "events.parquet")
           .filter(col("event_type") === "purchase")
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -927,7 +950,7 @@ object StreamOps {
           }
           .option("checkpointLocation",
             graft.Tmp.ckpt("sinklog"))
-          .trigger(Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()))
         q.awaitTermination()
         GraftLog.read(spark, out)
           .groupBy(to_date(col("ts")).as("d"))
@@ -1032,10 +1055,10 @@ object StreamOps {
     Q("source_rate",
       (spark, sfDir) => {
         val tbl = s"graft_sink_${sinkId.incrementAndGet()}"
-        val q = Sources.rateMicroBatch(spark, 256)
+        val q = start(spark, Sources.rateMicroBatch(spark, 256)
           .writeStream.format("memory").queryName(tbl)
           .option("checkpointLocation", graft.Tmp.ckpt("rate"))
-          .outputMode(OutputMode.Append()).trigger(Trigger.Once()).start()
+          .outputMode(OutputMode.Append()).trigger(Trigger.Once()))
         q.awaitTermination()
         spark.table(tbl)
           .groupBy((col("value") % 8).as("bucket"))
@@ -1058,12 +1081,12 @@ object StreamOps {
         val purchases = Sources.replayEvents(spark, sfDir, "events.parquet")
           .filter(col("event_type") === "purchase")
           .select(col("event_id"), col("user_id"), col("value"))
-        val q = purchases.writeStream
+        val q = start(spark, purchases.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
           }
           .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()))
         q.awaitTermination()
         spark.read.parquet(outDir)
           .groupBy((col("user_id") % 10).as("user_mod"))
@@ -1106,7 +1129,7 @@ object StreamOps {
         val table = graft.Tmp.dir("stream_acid_tbl", sfDir)
         graft.ops.Acid.reset(table)
         val ckpt = graft.Tmp.ckpt("acid")
-        val q = Sources.replayEvents(spark, stage)
+        val q = start(spark, Sources.replayEvents(spark, stage)
           .filter(col("event_type").isin("purchase", "click"))
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
           .writeStream
@@ -1114,7 +1137,7 @@ object StreamOps {
             graft.ops.Acid.appendTxn(spark, table, batch, batchId); ()
           }
           .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()))
         q.awaitTermination()
         graft.ops.Acid.read(spark, table)
           .groupBy(to_date(col("ts")).as("d"), col("event_type"))
@@ -1156,7 +1179,7 @@ object StreamOps {
         graft.ops.Acid.reset(tDetail)
         graft.ops.Acid.reset(tRollup)
         val ckpt = graft.Tmp.ckpt("msink")
-        val q = Sources.replayEvents(spark, stage)
+        val q = start(spark, Sources.replayEvents(spark, stage)
           .filter(col("event_type") === "purchase")
           .select(col("event_id"), col("user_id"), col("value"))
           .writeStream
@@ -1172,7 +1195,7 @@ object StreamOps {
             } finally { b.unpersist(blocking = false); () }
           }
           .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()))
         q.awaitTermination()
         val fromDetail = graft.ops.Acid.read(spark, tDetail)
           .groupBy((col("user_id") % 10).as("user_mod"))
@@ -1601,16 +1624,14 @@ object StreamOps {
         val agg = Sources.replayEvents(spark, stage.toString)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), sumVal6(col("value")).as("sum_val"))
-        val q = withStateParallelism(spark) {
-          agg.writeStream.outputMode(OutputMode.Update())
-            .foreachBatch { (df: DataFrame, id: Long) =>
-              df.withColumn("batch_id", lit(id))
-                .write.mode("append").parquet(outDir)
-              ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        }
+        val q = start(spark, agg.writeStream.outputMode(OutputMode.Update())
+          .foreachBatch { (df: DataFrame, id: Long) =>
+            df.withColumn("batch_id", lit(id))
+              .write.mode("append").parquet(outDir)
+            ()
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()), stateParallelism = true)
         q.awaitTermination()
         val w = Window.partitionBy(col("event_type"))
           .orderBy(col("batch_id").desc)
@@ -1650,14 +1671,14 @@ object StreamOps {
           (3, col("user_id") % 7 === 2 && col("value") > 50))
         val started = subs.map { case (id, pred) =>
           val tbl = s"graft_fanout_${id}_${sinkId.incrementAndGet()}"
-          val q = Sources.replayEvents(spark, sfDir, "events.parquet")
+          val q = start(spark, Sources.replayEvents(spark, sfDir, "events.parquet")
             .filter(pred)
             .select(lit(id).as("sub_id"), col("event_id"), col("user_id"),
               col("event_type"), col("value"))
             .writeStream.format("memory").queryName(tbl)
             .option("checkpointLocation", graft.Tmp.ckpt("fanout"))
             .outputMode(OutputMode.Append())
-            .trigger(Trigger.AvailableNow()).start()
+            .trigger(Trigger.AvailableNow()))
           (q, tbl)
         }
         started.foreach(_._1.awaitTermination())
@@ -1708,7 +1729,7 @@ object StreamOps {
         Acid.createBranch(table, "canary", 0L)
         val mainRows = Acid.read(spark, table).count()
         val ckpt = graft.Tmp.ckpt("brpub")
-        val q = Sources.replayEvents(spark, stage)
+        val q = start(spark, Sources.replayEvents(spark, stage)
           .filter(col("event_type") === "purchase")
           .select(col("event_id"), col("ts"), col("event_type"), col("value"))
           .writeStream
@@ -1716,7 +1737,7 @@ object StreamOps {
             graft.ops.Acid.appendTxnBranch(spark, table, "canary", batch, batchId); ()
           }
           .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
+          .trigger(Trigger.AvailableNow()))
         q.awaitTermination()
         // main never saw a canary row while the stream ran
         require(Acid.read(spark, table).count() == mainRows,

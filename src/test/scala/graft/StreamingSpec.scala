@@ -1338,9 +1338,33 @@ class StreamingSpec extends SparkFixture {
     // window/slide overlap (4 here) and stream-stream joins buffer both
     // sides; anything past this is a runaway buffer, not a window shape
     val rowBound = 8L * Tables.events(spark, sf001).count() + 64L
+    // every key checkpoints under the Tmp.ckpt root; a query's checkpoint
+    // names its id in `metadata`
+    val ckptRoot = java.nio.file.Paths.get(Tmp.ckpt("fleet_probe")).getParent
+    def ckptDirs(): Set[java.nio.file.Path] = {
+      val l = java.nio.file.Files.list(ckptRoot)
+      try l.iterator.asScala.filter(_.getFileName.toString.startsWith("graft_")).toSet
+      finally l.close()
+    }
+    val queryId = "\"id\"\\s*:\\s*\"([^\"]+)\"".r
+    /** query id -> `<v>.changelog` files under its checkpoint's state dir */
+    def changelogs(dirs: Set[java.nio.file.Path]): Map[String, Long] =
+      dirs.toSeq.flatMap { d =>
+        val meta = d.resolve("metadata")
+        val state = d.resolve("state")
+        if (!java.nio.file.Files.isRegularFile(meta)) None
+        else queryId.findFirstMatchIn(java.nio.file.Files.readString(meta)).map { m =>
+          m.group(1) -> (if (!java.nio.file.Files.isDirectory(state)) 0L else {
+            val w = java.nio.file.Files.walk(state)
+            try w.filter(_.getFileName.toString.matches("\\d+\\.changelog")).count()
+            finally w.close()
+          })
+        }
+      }.toMap
     spark.streams.addListener(listener)
     try keys.foreach { key =>
       progresses.clear()
+      val dirsBefore = ckptDirs()
       SparkEntry.queries(key)(spark, sf001).collect() // drive the key end to end
       // small grace: listener events are asynchronous
       val deadline = System.nanoTime() + 5L * 1000000000L
@@ -1358,6 +1382,16 @@ class StreamingSpec extends SparkFixture {
         // join/dedup buffer or un-evicted window shows up here)
         val total = ops.map(_.numRowsTotal).sum
         assert(total <= rowBound, s"$key: state rows $total exceed bound $rowBound")
+      }
+      // changelog, not snapshot, structurally: every stateful query's
+      // checkpoint holds `<v>.changelog` files. The commit-latency prong
+      // below reads 0 ms once a changelog commit takes under 1 ms, so on
+      // its own it no longer shows the writer ran.
+      val logs = changelogs(ckptDirs() -- dirsBefore)
+      stateful.map(_.id.toString).distinct.foreach { id =>
+        assert(logs.getOrElse(id, 0L) > 0L,
+          s"$key: query $id left no <v>.changelog file in its state checkpoint " +
+            s"(checkpoints found for ${logs.keySet.mkString(", ")})")
       }
       // changelog, not snapshot: with changelog checkpointing a commit
       // uploads a delta; full-snapshot zip/sst copies (rocksdbFilesCopied)
@@ -1391,9 +1425,32 @@ class StreamingSpec extends SparkFixture {
     } finally spark.streams.removeListener(listener)
   }
 
-  test("e2e service chain: asynchronous kill mid-drain, restart resumes — no loss, no dup, state continuity") {
-    import graft.stream.{E2e, GraftLog, Serve}
+  private val sparkDefaultManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+
+  /** `.crc` side files in a checkpoint's offset and commit logs, which
+    * Spark writes only through the checkpoint manager: its default manager
+    * writes one per log file, LocalCheckpointFileManager none. */
+  private def crcFiles(ckpt: String): Long = Seq("offsets", "commits").map { log =>
+    val l = java.nio.file.Files.list(java.nio.file.Paths.get(ckpt, log))
+    try l.filter(_.getFileName.toString.endsWith(".crc")).count() finally l.close()
+  }.sum
+
+  /** The e2e service chain killed mid-drain and restarted on its checkpoint,
+    * each leg on the checkpoint manager it names (None: the session leaves
+    * the conf unset and StreamOps.start installs LocalCheckpointFileManager;
+    * Some(class): an explicit setting, which wins). Asserts exactly-once
+    * delivery with state continuity across the kill and returns the
+    * checkpoint's `.crc` count after each leg. */
+  private def killAndResume(first: Option[String], second: Option[String]): (Long, Long) = {
+    import graft.stream.{E2e, GraftLog, LocalCheckpointFileManager, Serve}
     import java.nio.file.{Files => NF}
+    def withManager[T](manager: Option[String])(body: => T): T = manager match {
+      case None => body
+      case Some(cls) =>
+        spark.conf.set(LocalCheckpointFileManager.ConfKey, cls)
+        try body finally spark.conf.unset(LocalCheckpointFileManager.ConfKey)
+    }
     val log = NF.createTempDirectory("e2e_kill_log").toString
     val ckpt = NF.createTempDirectory("e2e_kill_ckpt").toString
     val ev = Tables.events(spark, sf001)
@@ -1404,8 +1461,10 @@ class StreamingSpec extends SparkFixture {
     // mid-drain with high probability (the assertions hold wherever it
     // lands — that invariance is the point)
     val perTrigger = math.max(64L, total / 16)
-    val q = E2e.startChain(spark, log, ckpt, perTrigger,
-      "127.0.0.1", client.port, Trigger.ProcessingTime("100 milliseconds"))
+    val q = withManager(first) {
+      E2e.startChain(spark, log, ckpt, perTrigger,
+        "127.0.0.1", client.port, Trigger.ProcessingTime("100 milliseconds"))
+    }
     val commits = java.nio.file.Paths.get(ckpt, "commits")
     val deadline = System.nanoTime() + 60L * 1000000000L
     def committed(): Int =
@@ -1419,10 +1478,13 @@ class StreamingSpec extends SparkFixture {
     while (committed() < 2 && System.nanoTime() < deadline) Thread.sleep(20)
     assert(committed() >= 2, "chain never committed 2 batches before the kill deadline")
     q.stop(); q.awaitTermination() // the KILL — uncommitted work in flight
+    val crcFirst = crcFiles(ckpt)
     // restart on the same checkpoint: replay the uncommitted range, then
     // drain the rest to completion
-    E2e.startChain(spark, log, ckpt, perTrigger,
-      "127.0.0.1", client.port).awaitTermination()
+    withManager(second) {
+      E2e.startChain(spark, log, ckpt, perTrigger,
+        "127.0.0.1", client.port)
+    }.awaitTermination()
     client.quiesce(); client.close()
     val got = E2e.parseReceived(spark, client.lines)
     // no dup: at-least-once re-pushes are absorbed only because replayed
@@ -1440,6 +1502,24 @@ class StreamingSpec extends SparkFixture {
       s"lost records across the kill: ${got.count()} vs ${expect.count()}")
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty,
       "served (user_id, event_id, seq) set diverged from the batch twin")
+    (crcFirst, crcFiles(ckpt))
+  }
+
+  test("e2e service chain: asynchronous kill mid-drain, restart resumes — no loss, no dup, state continuity") {
+    val (crcFirst, crcSecond) = killAndResume(None, None)
+    // both legs wrote through LocalCheckpointFileManager
+    assert(crcFirst == 0 && crcSecond == 0, s"$crcFirst / $crcSecond .crc files")
+  }
+
+  test("checkpoint compatibility: a chain checkpointed by Spark's default manager resumes under LocalCheckpointFileManager") {
+    val (crcFirst, _) = killAndResume(Some(sparkDefaultManager), None)
+    assert(crcFirst > 0, "the first leg did not run on Spark's default manager")
+  }
+
+  test("checkpoint compatibility: a chain checkpointed by LocalCheckpointFileManager resumes under Spark's default manager") {
+    val (crcFirst, crcSecond) = killAndResume(None, Some(sparkDefaultManager))
+    assert(crcFirst == 0 && crcSecond > 0,
+      s"legs did not run on the intended managers: $crcFirst / $crcSecond .crc files")
   }
 
   test("acid-stream source: version offsets resume exactly-once; change commits fail loudly or skip; vacuumed resume fails") {
