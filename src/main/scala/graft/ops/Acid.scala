@@ -284,22 +284,19 @@ object Acid {
   def addColumnDefault(spark: SparkSession, table: String, colName: String,
       defaultSql: String, txnId: Long): Long = withWriterLock(table) {
     spark.range(1).select(expr(defaultSql)).collect() // must compile + evaluate
-    commitNextVersion(table) { (cur, prev) =>
+    commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined, s"Acid.addColumnDefault: no committed version at $table")
       require(prev.rootRelative,
         s"addColumnDefault on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) // replay no-ops FIRST
-      else {
-        // the exactness contract (NULL always MEANS "row predates the
-        // column") only holds for a NEW column — a default on an existing
-        // column would masquerade genuinely stored NULLs as the default.
-        // Checked after the replay guard so per-txnId idempotency holds
-        // once the column exists BECAUSE of this very txn.
-        require(!readEvolved(spark, table).columns.contains(colName),
-          s"addColumnDefault: $colName already exists on $table — defaults " +
-            "attach to NEW columns only (backfill stored NULLs explicitly)")
-        None
-      }
+      // the exactness contract (NULL always MEANS "row predates the
+      // column") only holds for a NEW column — a default on an existing
+      // column would masquerade genuinely stored NULLs as the default.
+      // Checked after the replay guard so per-txnId idempotency holds
+      // once the column exists BECAUSE of this very txn.
+      require(!readEvolved(spark, table).columns.contains(colName),
+        s"addColumnDefault: $colName already exists on $table — defaults " +
+          "attach to NEW columns only (backfill stored NULLs explicitly)")
+      None
     } { (_, prev) =>
       require(!prev.evolution.exists {
         case Manifest.ColDefault(`colName`, _) => true
@@ -395,14 +392,14 @@ object Acid {
       s"renameColumn: bad rename $from -> $to")
     require(!from.contains("|") && !to.contains("|"),
       "renameColumn: '|' is the colmap separator")
-    commitNextVersion(table) { (cur, prev) =>
+    commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined, s"Acid.renameColumn: no committed version at $table")
       require(prev.rootRelative,
         s"renameColumn on snapshot-mode table $table")
       require(!prev.delKey.contains(from),
         s"renameColumn: $from is the standing delete-vector key — " +
           s"compactDeletes before renaming it")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None
+      None
     } { (_, prev) =>
       // column defaults (and their auto NOT NULL constraint) follow the
       // rename — a stale name would materialize a phantom all-default
@@ -425,13 +422,13 @@ object Acid {
   def dropColumn(table: String, name: String, txnId: Long): Long =
     withWriterLock(table) {
       require(!name.contains("|"), "dropColumn: '|' is the colmap separator")
-      commitNextVersion(table) { (cur, prev) =>
+      commitNextVersion(table, Some(txnId)) { (cur, prev) =>
         require(cur.isDefined, s"Acid.dropColumn: no committed version at $table")
         require(prev.rootRelative,
           s"dropColumn on snapshot-mode table $table")
         require(!prev.delKey.contains(name),
           s"dropColumn: $name is the standing delete-vector key")
-        if (prev.hasTxn(txnId)) Some(cur.get) else None
+        None
       } { (_, prev) =>
         // a dropped column takes its default and the default's auto NOT
         // NULL constraint with it — otherwise the drop resurrects the
@@ -625,12 +622,12 @@ object Acid {
         .coalesce(1).write.mode("overwrite").parquet(cdcDir.toString)
       listParquet(table, cdcDir)
     }
-    commitNextVersion(table) { (cur, prev) =>
+    commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined,
         s"Acid.deletePositionsTxn: no committed version at $table")
       require(prev.rootRelative,
         s"deletePositionsTxn on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None
+      None
     } { (v, prev) =>
       metadataCommit(prev, txnId, delFiles.map(Manifest.PDel) ++
         (if (cdc) cdcFiles.map(Manifest.Cdc(v, _)) else Seq.empty))
@@ -765,8 +762,7 @@ object Acid {
     wordRows.groupBy(r => r.getString(0)).map { case (file, rs) =>
       val arr = new Array[Long](words)
       rs.foreach(r => arr(r.getLong(1).toInt) = r.getLong(2))
-      val rel = relTo.relativize(Paths.get(java.net.URI.create(file))).toString
-      Manifest.Bloom(rel, name, versioned = true, arr)
+      Manifest.Bloom(relFile(relTo, file), name, versioned = true, arr)
     }.toSeq.sortBy(Manifest.render)
   }
 
@@ -819,16 +815,19 @@ object Acid {
     } catch { case _: java.io.IOException => false } // lost the reclaim race
   }
 
-  /** The shared optimistic-commit loop: read the current table state, let
-    * `precheck(cur, prev)` short-circuit (Some(result) = return without
-    * claiming — replay no-ops and stale-snapshot aborts), claim the next
+  /** The shared optimistic-commit loop: read the current table state; if
+    * `txnId` is already in its ledger the write is a replay — run
+    * `replayed(prev)` and return the current version without claiming.
+    * Otherwise let `precheck(cur, prev)` short-circuit (Some(result) =
+    * return without claiming — stale-snapshot aborts), claim the next
     * version, and commit `build(v, prev)`'s manifest. A lost claim means a
     * concurrent writer owns v: spin until its pointer flip is visible (or
     * its crash surfaces as a loud timeout), then rebase against the
     * advanced state. Lock-path writers call this while holding `_lock`
     * (serializing against each other); CAS writers call it bare — the
     * claim is what serializes the two populations against each other. */
-  private def commitNextVersion(table: String)(
+  private def commitNextVersion(table: String, txnId: Option[Long] = None,
+      replayed: Manifest => Unit = _ => ())(
       precheck: (Option[Long], Manifest) => Option[Long])(
       build: (Long, Manifest) => Seq[Manifest.Entry]): Long = {
     var spins = 0
@@ -837,7 +836,8 @@ object Acid {
     while (!done) {
       val cur = currentVersion(table)
       val prev = cur.map(manifestAt(table, _)).getOrElse(Manifest.empty)
-      precheck(cur, prev) match {
+      (if (txnId.exists(prev.hasTxn)) { replayed(prev); cur }
+       else precheck(cur, prev)) match {
         case Some(short) => out = short; done = true
         case None =>
           val v = cur.map(_ + 1).getOrElse(0L)
@@ -892,8 +892,7 @@ object Acid {
       bloom: Option[(String, Column)] = None,
       rowCounts: Boolean = false,
       txnId: Option[Long] = None): Long = withWriterLock(table) {
-    commitNextVersion(table)((cur, prev) =>
-      txnId.filter(prev.hasTxn).map(_ => cur.get)) { (v, prev) =>
+    commitNextVersion(table, txnId)((_, _) => None) { (v, prev) =>
     val ledger = txnId.toSeq.flatMap(t => (prev.txns :+ t).map(Manifest.Txn))
     val dataDir = Paths.get(table, s"v=$v")
     val writer = df.write.mode("overwrite")
@@ -908,16 +907,13 @@ object Acid {
       finally walk.close()
     require(files.nonEmpty, s"Acid.commit: empty version $v at $table")
     val abs = dataDir.toAbsolutePath
-    // input_file_name yields a file: URI — relativize through Path so
-    // the stat key matches the manifest's data-file lines exactly
-    def relOf(r: org.apache.spark.sql.Row): String =
-      abs.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString
     val statLines = stats.toSeq.flatMap { case (name, expr) =>
       spark.read.parquet(dataDir.toString)
         .groupBy(input_file_name().as("f"))
         .agg(min(expr).as("lo"), max(expr).as("hi"))
         .collect() // O(files) rows — manifest-construction control plane
-        .map(r => Manifest.MinMax(relOf(r), name, r.getLong(1), r.getLong(2)))
+        .map(r => Manifest.MinMax(relFile(abs, r.getString(0)), name,
+          r.getLong(1), r.getLong(2)))
         .sortBy(Manifest.render)
     }
     // per-file 4096-bit bloom over a long-valued expr: one pass computing
@@ -960,6 +956,145 @@ object Acid {
   def committedTxns(table: String): Set[Long] =
     currentVersion(table).fold(Set.empty[Long])(manifestAt(table, _).txns.toSet)
 
+  /** Where a write commits: main's version chain, or a branch's own line
+    * of commits (`manifest-br-<name>-<k>.txt`, data under
+    * `branch=<name>/`). */
+  private sealed trait Ref
+  private case object Main extends Ref
+  private final case class Branch(name: String) extends Ref
+
+  /** What a write does when another commit lands on main between its
+    * snapshot and its claim (a lock-free [[appendTxnCAS]] or
+    * [[updateWhereCAS]] writer can, whatever lock the write holds). */
+  private sealed trait Race
+  private object Race {
+    /** Build the manifest over the advanced state: the attempt's files
+      * stay valid whatever landed (appends and metadata commute). */
+    case object Rebase extends Race
+    /** Recompute the attempt on the advanced state: a rewrite computed on
+      * a stale snapshot would drop the racer's files or miss its rows. */
+    case object Restart extends Race
+    /** Rebase once `conflict(snapshot, replaced, advanced)` returns; it
+      * throws [[WriteConflictException]] when the racer does not commute
+      * with the attempt. Runs before the claim, so an abort never wedges
+      * a claim file. */
+    final case class Check(conflict: (Manifest, Seq[String], Manifest) => Unit)
+      extends Race
+  }
+
+  /** One computed attempt of a write, its files already landed: the files
+    * it replaces, its manifest over the state its commit lands on, the
+    * branch op-log record it leaves (the ordinal is set at commit), and
+    * what to release once the commit is decided. */
+  private final case class Attempt(replaced: Seq[String],
+      manifest: Manifest => Seq[Manifest.Entry],
+      log: Option[Manifest.Dml] = None, release: () => Unit = () => ())
+
+  /** Test seam: fires after a main write has computed its attempt and
+    * before its commit claims a version — the window a lock-free
+    * appendTxnCAS can land in. No-op in production; ConcurrencySpec
+    * injects a concurrent append here to pin the race policies
+    * deterministically. */
+  @volatile private[graft] var raceHook: () => Unit = () => ()
+
+  /** The one commit path of every row-level write: snapshot → replay
+    * check → `attempt` → commit, returning (version, replaced files, total
+    * files of the snapshot). A txn id already in the ref's ledger makes
+    * the write a no-op before anything is written (a replayed micro-batch
+    * never overwrites the files its committed manifest references); any
+    * other write needs a root-relative (`# base:.`) table.
+    *
+    * On `Main` the commit goes through [[commitNextVersion]] and `race`
+    * decides what a commit landing after the snapshot does; a `Restart`
+    * re-reads the table and recomputes the attempt (the rewrite of
+    * `txn=<id>/` overwrites its own earlier attempt, so retries stay
+    * idempotent), at most 50 times. `fresh` lets the attempt run on an
+    * uninitialized table (an empty root-relative manifest). With
+    * `lockCommit` the commit alone runs under the writer lock — the
+    * rewrite family materializes its (large) input outside it; every other
+    * locked writer holds the lock around the whole call.
+    *
+    * On a `Branch` the caller holds the writer lock, so nothing races: the
+    * attempt runs on the branch head and commits as ordinal head + 1 with
+    * its `# dml:` op-log record. A txn id committed to MAIN but absent
+    * from the branch's own ledger is refused (ADVICE r16, Delta's
+    * txnAppId contract): after a merge/cherry-pick publish, main
+    * references files under `branch=<name>/txn=<id>/`, and a re-created
+    * branch replaying that id would overwrite them. */
+  private def writeLoop(table: String, ref: Ref, txnId: Long, what: String,
+      race: Race = Race.Rebase, fresh: Boolean = false,
+      lockCommit: Boolean = false)(
+      attempt: (Manifest, String => Path) => Attempt): (Long, Int, Int) = {
+    val root = Paths.get(table)
+    ref match {
+      case Branch(name) =>
+        val (base, head) = branches(table).getOrElse(name,
+          sys.error(s"Acid.$what: no branch '$name' at $table"))
+        val snap = branchLines(table, name)
+        if (snap.hasTxn(txnId)) return (head, 0, snap.files.size)
+        require(snap.rootRelative, s"$what on snapshot-mode table $table")
+        require(!committedTxns(table).contains(txnId),
+          s"Acid.$what: txn $txnId is already committed on main at " +
+            s"$table but not on branch '$name' — a published txn's data files " +
+            s"must never be overwritten by a branch replay; use a fresh txn id")
+        val a = attempt(snap,
+          d => root.resolve(s"branch=$name").resolve(s"$d=$txnId"))
+        val log = a.log.getOrElse(sys.error(s"Acid.$what: no branch op-log record"))
+        val k = head + 1
+        commitBranch(table, name, base, k, a.manifest(snap) :+ log.copy(k = k))
+        (k, a.replaced.size, snap.files.size)
+      case Main =>
+        val StaleSnapshot = -2L
+        var attempts = 0
+        var out: (Long, Int, Int) = null
+        while (out == null) {
+          attempts += 1
+          require(attempts <= 50, s"$what: concurrent-commit retry limit on $table")
+          val cur = currentVersion(table)
+          val snap = cur.map(manifestAt(table, _))
+            .orElse(Option.when(fresh)(Manifest(Seq(Manifest.Base))))
+            .getOrElse(sys.error(s"Acid.$what: no committed version at $table"))
+          if (snap.hasTxn(txnId)) out = (cur.get, 0, snap.files.size)
+          else {
+            require(snap.rootRelative, s"$what on snapshot-mode table $table")
+            val a = attempt(snap, d => root.resolve(s"$d=$txnId"))
+            raceHook()
+            def commitAttempt() = commitNextVersion(table, Some(txnId)) { (c, prev) =>
+              race match {
+                case Race.Restart => if (c != cur) Some(StaleSnapshot) else None
+                case Race.Check(conflict) => conflict(snap, a.replaced, prev); None
+                case Race.Rebase => None
+              }
+            } { (_, prev) => a.manifest(prev) }
+            val v =
+              try { if (lockCommit) withWriterLock(table)(commitAttempt()) else commitAttempt() }
+              finally a.release()
+            if (v != StaleSnapshot) out = (v, a.replaced.size, snap.files.size)
+          }
+        }
+        out
+    }
+  }
+
+  /** `uri` (a `file:` URI, as `input_file_name()` yields) relative to the
+    * absolute `root` — the form manifest entries name files in. */
+  private def relFile(root: Path, uri: String): String =
+    root.relativize(Paths.get(java.net.URI.create(uri))).toString
+
+  /** The files of `m` that `probe` names — one scan of the LOGICAL frame
+    * (r18: predicates and key joins see post-rename names and
+    * default-filled values on an evolved table), O(files) rows back to the
+    * driver: Delta's findTouchedFiles. Sorted, table-relative. */
+  private def touchedFiles(spark: SparkSession, table: String, m: Manifest)(
+      probe: DataFrame => DataFrame): Seq[String] =
+    if (m.files.isEmpty) Seq.empty
+    else {
+      val root = Paths.get(table).toAbsolutePath
+      probe(readLogical(spark, table, m, m.files))
+        .collect() // O(files) rows — manifest-construction control plane
+        .map(r => relFile(root, r.getString(0))).sorted.toSeq
+    }
+
   /** Idempotent append transaction — the exactly-once streaming-sink
     * primitive. Appends `df`'s rows as a new version whose manifest is
     * (previous files) + (this txn's files), tagged `# txn:<txnId>`. A
@@ -970,55 +1105,54 @@ object Acid {
     * manifest references it, so a half-written replay never corrupts a
     * committed version (same ordering argument as [[commit]]).
     *
-    * Single-writer per table, like [[commit]] — multi-writer needs
-    * optimistic pointer CAS (Delta's protocol), out of scope. An empty
-    * batch still commits a (data-less) version so its txn id enters the
-    * ledger: replay of an empty batch must also be a no-op. */
+    * Holds the writer lock, so it serializes with every other locked
+    * writer; like every commit path it then claims its version, so a
+    * lock-free [[appendTxnCAS]] landing first is rebased onto (appends
+    * commute). An empty batch still commits a (data-less) version so its
+    * txn id enters the ledger: replay of an empty batch must also be a
+    * no-op. */
   def appendTxn(spark: SparkSession, table: String, df: DataFrame,
       txnId: Long): Long = withWriterLock(table) {
-    lazy val newFiles = writeTxnData(spark, table, df, txnId) // written at most once
-    commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.rootRelative,
-        s"appendTxn on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None // replay → no-op
-    } { (_, prev) =>
-      // standing delete vectors ride along: an append does not resurrect
-      // previously deleted keys
-      appendManifest(prev, Seq(txnId), newFiles)
-    }
+    writeLoop(table, Main, txnId, "appendTxn", fresh = true) {
+      (snap, dir) => appendAttempt(spark, table, df, txnId, snap, dir, "appendTxn")
+    }._1
   }
 
-  /** Land `df` under `txn=<id>/` (overwrite — a replayed write overwrites
-    * its own output) and return the table-relative file list. */
-  private def writeTxnData(spark: SparkSession, table: String, df: DataFrame,
-      txnId: Long): Seq[String] = {
-    val dataDir = Paths.get(table).resolve(s"txn=$txnId")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    listParquet(table, dataDir)
+  /** One append: land `df` under `dir("txn")`, check the WRITTEN rows
+    * against `constraints`, and add the files to whatever state the commit
+    * lands on. The shared body of [[appendTxn]], [[appendTxnCAS]],
+    * [[appendTxnChecked]] and [[appendTxnBranch]]. */
+  private def appendAttempt(spark: SparkSession, table: String, df: DataFrame,
+      txnId: Long, snap: Manifest, dir: String => Path, what: String,
+      constraints: Seq[Manifest.Constraint] = Nil): Attempt = {
+    val files = writeTxnDataChecked(spark, table, df, dir("txn"), constraints, what)
+    Attempt(Nil, appendManifest(_, Seq(txnId), files),
+      Some(Manifest.Dml(0L, "append", txnId, "-", None, files)))
   }
 
-  /** Write a DML rewrite frame, then run the standing CHECK constraints
-    * over the files that were ACTUALLY WRITTEN (ADVICE r18: a pre-write
-    * constraint aggregate is a separate Spark action from the write — a
-    * nondeterministic change plan or SET expression could pass the check
-    * and then write different, violating rows; validating the written
-    * bytes closes the two-action gap, the same reason mergeCowLineage
-    * freezes its change frame). A violation throws BEFORE commit, leaving
-    * only an uncommitted txn= dir that vacuum GCs. */
+  /** Land `df` under `dir` (overwrite — a replayed write overwrites its
+    * own output) and return the table-relative file list. */
+  private def writeTxnData(table: String, df: DataFrame, dir: Path): Seq[String] = {
+    df.write.mode("overwrite").parquet(dir.toString)
+    listParquet(table, dir)
+  }
+
+  /** Write a frame, then run the CHECK `constraints` over the files that
+    * were ACTUALLY WRITTEN (ADVICE r18: a pre-write constraint aggregate is
+    * a separate Spark action from the write — a nondeterministic plan or
+    * SET expression could pass the check and then write different,
+    * violating rows; validating the written bytes closes the two-action
+    * gap). A violation throws BEFORE commit, leaving only an uncommitted
+    * dir that vacuum GCs. */
   private def writeTxnDataChecked(spark: SparkSession, table: String,
-      df: DataFrame, txnId: Long, m: Manifest,
+      df: DataFrame, dir: Path, constraints: Seq[Manifest.Constraint],
       what: String): Seq[String] = {
-    val files = writeTxnData(spark, table, df, txnId)
-    checkWrittenConstraints(spark, table, m, files, what)
+    val files = writeTxnData(table, df, dir)
+    if (files.nonEmpty && constraints.nonEmpty)
+      checkConstraints(constraints,
+        readParquetCached(spark, files.map(f => s"$table/$f")), what)
     files
   }
-
-  /** Run `m`'s CHECK constraints over just-written `files`. */
-  private def checkWrittenConstraints(spark: SparkSession, table: String,
-      m: Manifest, files: Seq[String], what: String): Unit =
-    if (files.nonEmpty && m.constraints.nonEmpty)
-      checkConstraints(m.constraints,
-        readParquetCached(spark, files.map(f => s"$table/$f")), what)
 
   /** The append-commit manifest: predecessor's ledger + this txn, every
     * carried header (an append touches no existing file, so standing
@@ -1067,19 +1201,34 @@ object Acid {
   def appendTxnCAS(spark: SparkSession, table: String, df: DataFrame,
       txnId: Long): Long = {
     Files.createDirectories(Paths.get(table))
-    if (committedTxns(table).contains(txnId))
-      return currentVersion(table).get // replay → no-op, skip the write
-    // data lands FIRST, outside any critical section — writers contend
-    // only on the O(lines) manifest step, never on their data writes
-    val newFiles = writeTxnData(spark, table, df, txnId)
-    commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.rootRelative,
-        s"appendTxnCAS on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None // raced replay
-    } { (_, prev) => appendManifest(prev, Seq(txnId), newFiles) }
+    writeLoop(table, Main, txnId, "appendTxnCAS", fresh = true) {
+      (snap, dir) => appendAttempt(spark, table, df, txnId, snap, dir, "appendTxnCAS")
+    }._1
   }
 
   // ---- targeted key erasure (GDPR right-to-be-forgotten) ----
+
+  /** The manifest of a touched-file rewrite (COW UPDATE/DELETE/MERGE,
+    * erase, partition-scoped optimize): the ledger, the reconciled equality
+    * vector when the rewrite re-emits one (`vectors`), `prev`'s carried
+    * headers minus the `replaced` files' stats ([[Manifest.deadStats]];
+    * with `lineage` their row-id assignments too) and whatever `retire`
+    * names, the `added` headers (with `lineage`, then the new files'
+    * `# rowid_phys:` marks), then the surviving and the new files. */
+  private def rewriteManifest(prev: Manifest, txnId: Long,
+      replaced: Seq[String], newFiles: Seq[String], lineage: Boolean = false,
+      vectors: Option[Seq[Manifest.Entry]] = None,
+      added: Seq[Manifest.Entry] = Seq.empty,
+      retire: Manifest.Entry => Boolean = _ => false,
+      op: Option[String] = None): Seq[Manifest.Entry] = {
+    val dead = Manifest.deadStats(replaced, lineage)
+    val gone = replaced.toSet
+    Manifest.head(prev, Seq(txnId), op) ++ vectors.getOrElse(Seq.empty) ++
+      Manifest.carried(prev, e => dead(e) || retire(e) ||
+        vectors.isDefined && Manifest.vectorEntries(e)) ++
+      added ++ (if (lineage) newFiles.map(Manifest.RowIdPhys) else Nil) ++
+      (prev.files.filterNot(gone) ++ newFiles).map(Manifest.DataFile)
+  }
 
   /** Physically erase every row whose `keyCol` is in `keys`, rewriting
     * ONLY the files that can contain them — the right-to-be-forgotten
@@ -1094,105 +1243,18 @@ object Acid {
     * recorded bloom are conservatively rewritten. Standing delete
     * vectors, constraints, and the txn ledger carry forward; partition
     * tuples and stat lines for REPLACED files are dropped (they describe
-    * dead files), survivors keep theirs. Idempotent per txnId. `keys` is
-    * an erasure REQUEST — driver-side by nature, O(subjects), the legal
-    * queue is never table-sized. Returns (version, rewritten, total). */
-  /** Test seam: fires after eraseKeys snapshots the manifest but before it
-    * claims the commit — the window a lock-free appendTxnCAS can land in.
-    * No-op in production; ConcurrencySpec injects a concurrent append here
-    * to pin the stale-snapshot rebase deterministically. */
-  private[graft] var eraseKeysRaceHook: () => Unit = () => ()
-
-  /** Same seam for [[eraseKeysLineage]] (r19 review: the sibling's
-    * concurrency window shipped untested). */
-  private[graft] var eraseKeysLineageRaceHook: () => Unit = () => ()
-
-  /** The manifest of a touched-file rewrite (COW UPDATE/DELETE/MERGE,
-    * erase, partition-scoped optimize): the ledger, the reconciled equality
-    * vector when the rewrite re-emits one (`vectors`), `prev`'s carried
-    * headers minus the `replaced` files' stats ([[Manifest.deadStats]];
-    * with `lineage` their row-id assignments too) and whatever `retire`
-    * names, the `added` headers, then the surviving and the new files. */
-  private def rewriteManifest(prev: Manifest, txnId: Long,
-      replaced: Seq[String], newFiles: Seq[String], lineage: Boolean = false,
-      vectors: Option[Seq[Manifest.Entry]] = None,
-      added: Seq[Manifest.Entry] = Seq.empty,
-      retire: Manifest.Entry => Boolean = _ => false,
-      op: Option[String] = None): Seq[Manifest.Entry] = {
-    val dead = Manifest.deadStats(replaced, lineage)
-    val gone = replaced.toSet
-    Manifest.head(prev, Seq(txnId), op) ++ vectors.getOrElse(Seq.empty) ++
-      Manifest.carried(prev, e => dead(e) || retire(e) ||
-        vectors.isDefined && Manifest.vectorEntries(e)) ++
-      added ++ (prev.files.filterNot(gone) ++ newFiles).map(Manifest.DataFile)
-  }
-
+    * dead files), survivors keep theirs. A lock-free append landing
+    * after the candidate snapshot restarts the erase on the advanced
+    * state (ADVICE r14) — committing the stale survivor list would drop
+    * the racer's files. Idempotent per txnId. `keys` is an erasure
+    * REQUEST — driver-side by nature, O(subjects), the legal queue is
+    * never table-sized. Returns (version, rewritten, total). */
   def eraseKeys(spark: SparkSession, table: String, keys: Seq[Long],
       keyCol: String, bloomName: String, txnId: Long): (Long, Int, Int) = withWriterLock(table) {
-    // Stale-snapshot retry (ADVICE r14, mirrors [[rewriteCommit]]): the
-    // candidate/survivor sets below are derived from a SNAPSHOT of the
-    // manifest taken before the claim. appendTxnCAS takes no writer lock,
-    // so a concurrent append can land between this read and our claim —
-    // committing the stale survivor list would silently drop that writer's
-    // just-committed data files. The precheck detects the advance
-    // (cur != snapV), returns a sentinel, and the whole erase recomputes
-    // against the fresh state (the re-write of txn=<id>/ overwrites its
-    // own prior attempt, so retries stay idempotent).
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var result: (Long, Int, Int) = null
-    while (result == null) {
-      attempts += 1
-      require(attempts <= 50, s"eraseKeys: concurrent-commit retry limit on $table")
-      val cur = currentVersion(table).getOrElse(
-        sys.error(s"Acid.eraseKeys: no committed version at $table"))
-      val snap = manifestAt(table, cur)
-      if (snap.hasTxn(txnId)) {
-        result = (cur, 0, snap.files.size) // replay → no-op
-      } else {
-        require(snap.rootRelative, s"eraseKeys on snapshot-mode table $table")
-        require(!snap.hasLineage,
-          s"eraseKeys on row-lineage table $table — the rewrite would " +
-            "strand id assignments; erase support for lineage tables is " +
-            "a migration, not a silent rewrite")
-        val candidates = keys
-          .flatMap(k => skipFilesBloom(table, cur, bloomName, k)._1)
-          .distinct.sorted
-        val all = snap.files
-        val newFiles = if (candidates.isEmpty) Seq.empty else {
-          // standing vectors fold into the rewrite (a positional entry
-          // names a (file, pos) that won't exist after the move — carrying
-          // the hidden row raw would resurrect it under the new position).
-          // The candidate read goes through the LOGICAL frame (r19, lifting
-          // the r18 refusal): on an evolved table `keyCol` is the
-          // post-rename name, candidate files from any generation resolve
-          // via footer-union + colmap + defaults — same recipe as
-          // mergeCow/updateWhere DML — and the scrubbed rewrite lands the
-          // logical schema while the carried colmap/coldefault lines keep
-          // resolving the untouched survivors. Bloom pruning stays sound
-          // across generations: blooms are stat-name-keyed and files
-          // without one are conservatively rewritten.
-          // NULL-key rows are never erasure subjects: `!isin` evaluates
-          // NULL for them and a bare filter would DROP them from rewritten
-          // files while identical rows in pruned files survive —
-          // nondeterministic loss (r19 review). coalesce keeps them, the
-          // same three-valued rule deleteWhere applies.
-          val scrubbed = subtractDeletes(spark, table, snap,
-            readLogical(spark, table, snap, candidates))
-            .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
-          writeTxnDataChecked(spark, table, scrubbed, txnId, snap,
-            "eraseKeys")
-        }
-        eraseKeysRaceHook()
-        val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.hasTxn(txnId)) Some(c.get)
-          else if (c.get != cur) Some(StaleSnapshot)
-          else None
-        } { (_, prev) => rewriteManifest(prev, txnId, candidates, newFiles) }
-        if (v != StaleSnapshot) result = (v, candidates.size, all.size)
-      }
+    writeLoop(table, Main, txnId, "eraseKeys", Race.Restart) { (snap, dir) =>
+      eraseAttempt(spark, table, snap, keys, keyCol, bloomName, txnId,
+        lineage = false, dir, "eraseKeys")
     }
-    result
   }
 
   /** GDPR erase on a ROW-LINEAGE table (r19 — the last refusal in the
@@ -1206,7 +1268,7 @@ object Acid {
     * byte-untouched; evolved tables compose for free (the lineage frame
     * is logical). Locked, not CAS — an id-carrying rewrite serializes
     * with assignRowIds like every lineage writer. The stale-snapshot
-    * retry keeps the SURVIVOR LIST sound against a lock-free
+    * restart keeps the SURVIVOR LIST sound against a lock-free
     * appendTxnCAS racer (the commit can never drop the racer's file);
     * completing the erase then requires the racer's file to get its id
     * assignment first — the retry fails LOUDLY with lineageFrameFor's
@@ -1217,114 +1279,69 @@ object Acid {
   def eraseKeysLineage(spark: SparkSession, table: String, keys: Seq[Long],
       keyCol: String, bloomName: String,
       txnId: Long): (Long, Int, Int) = withWriterLock(table) {
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var result: (Long, Int, Int) = null
-    while (result == null) {
-      attempts += 1
-      require(attempts <= 50, s"eraseKeysLineage: concurrent-commit retry limit on $table")
-      val cur = currentVersion(table).getOrElse(
-        sys.error(s"Acid.eraseKeysLineage: no committed version at $table"))
-      val snap = manifestAt(table, cur)
-      if (snap.hasTxn(txnId)) {
-        result = (cur, 0, snap.files.size) // replay → no-op
-      } else {
-        require(snap.rootRelative,
-          s"eraseKeysLineage on snapshot-mode table $table")
-        require(snap.hasRowIds,
-          s"eraseKeysLineage on $table: not a row-lineage table — use eraseKeys")
-        val candidates = keys
-          .flatMap(k => skipFilesBloom(table, cur, bloomName, k)._1)
-          .distinct.sorted
-        val all = snap.files
-        val newFiles = if (candidates.isEmpty) Seq.empty else {
-          // NULL-key rows survive (three-valued isin — see eraseKeys)
-          val scrubbed = subtractDeletes(spark, table, snap,
-            lineageFrameFor(spark, table, snap, candidates, "eraseKeysLineage"))
-            .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
-            .withColumnRenamed("row_id", "__row_id")
-          writeTxnDataChecked(spark, table, scrubbed, txnId, snap,
-            "eraseKeysLineage")
-        }
-        eraseKeysLineageRaceHook()
-        val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.hasTxn(txnId)) Some(c.get)
-          else if (c.get != cur) Some(StaleSnapshot)
-          else None
-        } { (_, prev) =>
-          rewriteManifest(prev, txnId, candidates, newFiles, lineage = true,
-            added = newFiles.map(Manifest.RowIdPhys))
-        }
-        if (v != StaleSnapshot) result = (v, candidates.size, all.size)
-      }
+    writeLoop(table, Main, txnId, "eraseKeysLineage", Race.Restart) { (snap, dir) =>
+      eraseAttempt(spark, table, snap, keys, keyCol, bloomName, txnId,
+        lineage = true, dir, "eraseKeysLineage")
     }
-    result
+  }
+
+  /** One erase attempt over the state `snap` — the shared body of
+    * [[eraseKeys]] and (`lineage`) [[eraseKeysLineage]]. */
+  private def eraseAttempt(spark: SparkSession, table: String, snap: Manifest,
+      keys: Seq[Long], keyCol: String, bloomName: String, txnId: Long,
+      lineage: Boolean, dir: String => Path, what: String): Attempt = {
+    if (lineage) require(snap.hasRowIds,
+      s"$what on $table: not a row-lineage table — use eraseKeys")
+    else require(!snap.hasLineage,
+      s"$what on row-lineage table $table — the rewrite would " +
+        "strand id assignments; use eraseKeysLineage")
+    val candidates = keys.flatMap(k => bloomKept(snap, bloomName, k)).distinct.sorted
+    val newFiles = if (candidates.isEmpty) Seq.empty else {
+      // standing vectors fold into the rewrite (a positional entry names a
+      // (file, pos) that won't exist after the move — carrying the hidden
+      // row raw would resurrect it under the new position). The candidate
+      // read goes through the LOGICAL frame (r19): on an evolved table
+      // `keyCol` is the post-rename name, candidate files from any
+      // generation resolve via footer-union + colmap + defaults, the
+      // scrubbed rewrite lands the logical schema while the carried
+      // colmap/coldefault lines keep resolving the untouched survivors.
+      // Bloom pruning stays sound across generations: blooms are
+      // stat-name-keyed and files without one are conservatively
+      // rewritten. NULL-key rows are never erasure subjects: `!isin`
+      // evaluates NULL for them and a bare filter would DROP them from
+      // rewritten files while identical rows in pruned files survive
+      // (r19 review); coalesce keeps them, deleteWhere's three-valued rule.
+      val frame =
+        if (lineage) lineageFrameFor(spark, table, snap, candidates, what)
+        else readLogical(spark, table, snap, candidates)
+      val scrubbed = subtractDeletes(spark, table, snap, frame)
+        .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
+      writeTxnDataChecked(spark, table,
+        if (lineage) scrubbed.withColumnRenamed("row_id", "__row_id") else scrubbed,
+        dir("txn"), snap.constraints, what)
+    }
+    Attempt(candidates, rewriteManifest(_, txnId, candidates, newFiles, lineage))
   }
 
   // ---- row-level MERGE (copy-on-write) ----
 
-  /** MERGE INTO, copy-on-write — the Delta/Iceberg row-level MERGE
-    * algorithm on the manifest seam: `changes` rows REPLACE table rows
-    * with the same `keyCol` (matched → update), land as inserts otherwise
-    * (not-matched → insert), and — when `opCol` is given — rows whose op
-    * is `"delete"` remove the key. Mechanics, in the order Delta runs
-    * them:
-    *
-    *  1. **Touched-file probe**: one distributed semi-join of the table
-    *     scan against the (broadcast-small) change keys, grouped by
-    *     `input_file_name()` — exactly Delta MERGE's findTouchedFiles
-    *     job. Output is O(files), a control-plane collect; at 100 TB the
-    *     scan side is pre-pruned by manifest blooms/zone maps before any
-    *     footer opens.
-    *  2. **Rewrite only the touched files**: survivors stay
-    *     byte-untouched (spec-pinned); the rewrite anti-joins ALL change
-    *     keys out and unions the upsert rows in. Cost is O(files
-    *     containing a matched key), never O(table).
-    *  3. **Delete-vector reconciliation**: standing merge-on-read vectors
-    *     are folded into the rewrite (a vector-deleted row never
-    *     resurrects by accident), and upserted keys are REMOVED from the
-    *     vector (an explicit MERGE insert of a previously-deleted key
-    *     must resurrect it — the one place append semantics and MERGE
-    *     semantics differ). An empty reconciled vector drops the delete
-    *     lines entirely.
-    *
-    * Concurrent lock-free appends rebase through the same stale-snapshot
-    * retry as [[eraseKeys]]; idempotent per txnId via the ledger. Returns
-    * (version, touched files, total files). */
-  /** One COW-merge attempt over an explicit manifest state — the shared
-    * algorithm of [[mergeCow]] (per optimistic retry) and
-    * [[mergeCowBranch]]: Delta's findTouchedFiles probe, the
-    * (touched − vectors − change keys) ∪ upserts rewrite landed under
-    * `dataDir`, and the upserted-keys-leave-the-vector reconciliation
-    * landed under `delDir`. Returns the manifest ingredients; committing
-    * them (version claim vs branch manifest) stays with the caller. */
-  private final case class CowMerge(touched: Seq[String],
-      newFiles: Seq[String], vectors: Seq[Manifest.Entry], total: Int) {
-    /** The merge's next manifest over `prev` (the attempt's own state). */
-    def manifest(prev: Manifest, txnId: Long): Seq[Manifest.Entry] =
-      rewriteManifest(prev, txnId, touched, newFiles, vectors = Some(vectors))
-  }
+  /** One COW-merge attempt over the state `snap` — the shared algorithm of
+    * [[mergeCow]], [[mergeCowBranch]] and the branch replay: Delta's
+    * findTouchedFiles probe, the (touched − vectors − change keys) ∪
+    * upserts rewrite landed under `dir("txn")` and constraint-checked as
+    * written, and the upserted-keys-leave-the-vector reconciliation landed
+    * under `dir("del")`. */
   private def cowMergeAttempt(spark: SparkSession, table: String,
       snap: Manifest, changes: DataFrame, keyCol: String,
-      opCol: Option[String], dataDir: Path, delDir: Path,
-      what: String): CowMerge = {
-    val all = snap.files
-    val root = Paths.get(table).toAbsolutePath
+      opCol: Option[String], txnId: Long, dir: String => Path,
+      what: String): Attempt = {
     val allKeys = changes.select(col(keyCol)).distinct()
     val upserts = opCol match {
       case Some(o) => changes.filter(col(o) =!= "delete").drop(o)
       case None    => changes
     }
-    // Delta's findTouchedFiles: which files contain a changed key —
-    // one semi-join scan over the LOGICAL frame (r18: an evolved table
-    // probes post-rename key names and default-filled values), O(files)
-    // rows back to the driver
-    val touched = if (all.isEmpty) Seq.empty[String]
-    else touchedFilesPlanOver(readLogical(spark, table, snap, all),
-      allKeys, keyCol)
-      .collect() // O(files) rows — manifest-construction control plane
-      .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
-      .sorted.toSeq
+    val touched = touchedFiles(spark, table, snap)(
+      touchedFilesPlanOver(_, allKeys, keyCol))
     // rewrite = (touched files − standing vectors − change keys) ∪ upserts
     val rewritten = {
       val basePart =
@@ -1334,26 +1351,21 @@ object Acid {
           .join(allKeys, Seq(keyCol), "left_anti")
       basePart.unionByName(upserts)
     }
-    // write FIRST, then constraint-check the written files (ADVICE r18:
-    // checking the plan pre-write is a separate action — a nondeterministic
-    // changes frame could pass the check yet write violating rows)
-    rewritten.write.mode("overwrite").parquet(dataDir.toString)
-    val newFiles = listParquet(table, dataDir)
-    checkWrittenConstraints(spark, table, snap, newFiles, what)
+    val newFiles = writeTxnDataChecked(spark, table, rewritten, dir("txn"),
+      snap.constraints, what)
     // vector reconciliation: upserted keys leave the standing vector
-    val upsertedKeyRows = upserts.select(col(keyCol)).distinct()
-    val vectors = reconcileVector(spark, table, snap, upsertedKeyRows,
-      keyCol, delDir, what)
-    CowMerge(touched, newFiles, vectors, all.size)
+    val vectors = reconcileVector(spark, table, snap,
+      upserts.select(col(keyCol)).distinct(), keyCol, dir("del"), what)
+    Attempt(touched,
+      rewriteManifest(_, txnId, touched, newFiles, vectors = Some(vectors)))
   }
 
   /** Evaluate the manifest's standing CHECK constraints over a frame a
-    * row-level rewrite (UPDATE/DELETE/MERGE) is about to WRITE — Delta
-    * enforces invariants on every write path, not only appends (r18
-    * review: an unchecked DML could store a real NULL into a defaulted
-    * column, which the read-side coalesce would then silently masquerade
-    * as the default — the exactness contract the auto NOT NULL constraint
-    * exists to protect). One O(batch) aggregate over the rewrite frame;
+    * write has just landed — Delta enforces invariants on every write
+    * path, not only appends (r18 review: an unchecked DML could store a
+    * real NULL into a defaulted column, which the read-side coalesce would
+    * then silently masquerade as the default — the exactness contract the
+    * auto NOT NULL constraint exists to protect). One O(batch) aggregate;
     * a violating batch refuses loudly with the table unmoved. Carried
     * rows re-checking is free of false positives: [[addConstraint]]
     * validates existing data when the constraint lands. */
@@ -1405,12 +1417,39 @@ object Acid {
       case _ => Seq.empty // no vector, or reconciled to empty
     }
 
+  /** MERGE INTO, copy-on-write — the Delta/Iceberg row-level MERGE
+    * algorithm on the manifest seam: `changes` rows REPLACE table rows
+    * with the same `keyCol` (matched → update), land as inserts otherwise
+    * (not-matched → insert), and — when `opCol` is given — rows whose op
+    * is `"delete"` remove the key. Mechanics, in the order Delta runs
+    * them:
+    *
+    *  1. **Touched-file probe**: one distributed semi-join of the table
+    *     scan against the (broadcast-small) change keys, grouped by
+    *     `input_file_name()` — exactly Delta MERGE's findTouchedFiles
+    *     job. Output is O(files), a control-plane collect; at 100 TB the
+    *     scan side is pre-pruned by manifest blooms/zone maps before any
+    *     footer opens.
+    *  2. **Rewrite only the touched files**: survivors stay
+    *     byte-untouched (spec-pinned); the rewrite anti-joins ALL change
+    *     keys out and unions the upsert rows in. Cost is O(files
+    *     containing a matched key), never O(table).
+    *  3. **Delete-vector reconciliation**: standing merge-on-read vectors
+    *     are folded into the rewrite (a vector-deleted row never
+    *     resurrects by accident), and upserted keys are REMOVED from the
+    *     vector (an explicit MERGE insert of a previously-deleted key
+    *     must resurrect it — the one place append semantics and MERGE
+    *     semantics differ). An empty reconciled vector drops the delete
+    *     lines entirely.
+    *
+    * A lock-free append landing after the snapshot restarts the merge on
+    * the advanced state; an uninitialized table is a legal target (the
+    * streaming CDC consumer's first micro-batch: everything inserts).
+    * Idempotent per txnId via the ledger. Returns (version, touched
+    * files, total files). */
   def mergeCow(spark: SparkSession, table: String, changes: DataFrame,
       keyCol: String, txnId: Long,
       opCol: Option[String] = None): (Long, Int, Int) = withWriterLock(table) {
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var result: (Long, Int, Int) = null
     // the change frame feeds FOUR actions per attempt (key probe, rewrite,
     // vector reconciliation ×2 uses) — persist so a window-ranked or
     // otherwise expensive change plan computes once per merge, not per
@@ -1418,37 +1457,16 @@ object Acid {
     // plan across the probe/rewrite pair, same reason mergeCowLineage
     // freezes its frame
     val changesP = changes.persist()
-    try {
-    while (result == null) {
-      attempts += 1
-      require(attempts <= 50, s"mergeCow: concurrent-commit retry limit on $table")
-      // an uninitialized table is a legal MERGE target (the streaming CDC
-      // consumer's first micro-batch): empty file set, everything inserts
-      val cur = currentVersion(table)
-      val snap = cur.map(manifestAt(table, _))
-        .getOrElse(Manifest(Seq(Manifest.Base)))
-      if (snap.hasTxn(txnId)) {
-        result = (cur.get, 0, snap.files.size) // replay → no-op
-      } else {
-        require(snap.rootRelative, s"mergeCow on snapshot-mode table $table")
+    try writeLoop(table, Main, txnId, "mergeCow", Race.Restart, fresh = true) {
+      (snap, dir) =>
         // MERGE on a lineage table needs fresh-id allocation for inserts
         // AND materialization for carried rows — neither happens here;
         // refuse instead of stranding stale assignment lines (r18)
         require(!snap.hasLineage,
           s"mergeCow on row-lineage table $table — use mergeCowLineage " +
             "(it keeps matched ids and allocates insert ids from the mark)")
-        val m = cowMergeAttempt(spark, table, snap, changesP, keyCol, opCol,
-          Paths.get(table).resolve(s"txn=$txnId"),
-          Paths.get(table).resolve(s"del=$txnId"), "mergeCow")
-        val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.hasTxn(txnId)) Some(c.get)
-          else if (c != cur) Some(StaleSnapshot)
-          else None
-        } { (_, prev) => m.manifest(prev, txnId) }
-        if (v != StaleSnapshot) result = (v, m.touched.size, m.total)
-      }
-    }
-    result
+        cowMergeAttempt(spark, table, snap, changesP, keyCol, opCol, txnId,
+          dir, "mergeCow")
     } finally { changesP.unpersist(blocking = false); () }
   }
 
@@ -1491,71 +1509,71 @@ object Acid {
 
   // ---- predicate-based row-level UPDATE / DELETE (copy-on-write) ----
 
-  /** Shared predicate-COW commit loop ([[updateWhere]]/[[deleteWhere]]) —
-    * Delta's UPDATE/DELETE algorithm: ONE scan finds the files containing
-    * a predicate-matching row (O(files) collect, control plane), only
-    * those are rewritten through `transform` (standing delete vectors
-    * subtracted first, so a vector-hidden row can neither update nor
-    * resurrect), survivors stay byte-untouched — cost is O(files touched
-    * by the predicate), never O(table); on a table clustered near the
-    * predicate column the zone maps make that a sliver. Stat lines for
-    * replaced files are dropped (they describe dead files); the txn
-    * ledger, constraints, and the standing vector carry forward (the
-    * vector keys are already subtracted from the new files — the lines
-    * stay to keep hiding them in survivors). Stale-snapshot rebase and
-    * per-txnId idempotence exactly as [[mergeCow]]. Returns
-    * (version, touched files, total files). */
-  private def cowWhere(spark: SparkSession, table: String, pred: Column,
-      txnId: Long, what: String)(
-      transform: DataFrame => DataFrame): (Long, Int, Int) = withWriterLock(table) {
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var result: (Long, Int, Int) = null
-    while (result == null) {
-      attempts += 1
-      require(attempts <= 50, s"$what: concurrent-commit retry limit on $table")
-      val cur = currentVersion(table)
-      val snap = cur.map(manifestAt(table, _)).getOrElse(
-        sys.error(s"Acid.$what: no committed version at $table"))
-      if (snap.hasTxn(txnId)) {
-        result = (cur.get, 0, snap.files.size) // replay → no-op
-      } else {
-        require(snap.rootRelative, s"$what on snapshot-mode table $table")
-        // a plain COW rewrite drops the touched files' row-id assignments
-        // (r18): lineage tables update through updateWhereLineage, which
-        // materializes ids through the rewrite
-        require(!snap.hasLineage,
-          s"$what on row-lineage table $table — use updateWhereLineage " +
-            "(it materializes ids through the rewrite)")
-        val all = snap.files
-        val root = Paths.get(table).toAbsolutePath
-        // probe + rewrite run over the LOGICAL frame (r18): on an evolved
-        // table the predicate sees post-rename names and default-filled
-        // values — Delta's DML semantics on column-mapped tables — and
-        // the rewrite lands the logical schema
-        val touched = if (all.isEmpty) Seq.empty[String]
-        else readLogical(spark, table, snap, all)
-          .filter(pred)
-          .select(input_file_name().as("f")).distinct()
-          .collect() // O(files) rows — manifest-construction control plane
-          .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
-          .sorted.toSeq
-        val newFiles =
-          if (touched.isEmpty) Seq.empty[String]
-          else {
-            val out = transform(subtractDeletes(spark, table, snap,
-              readLogical(spark, table, snap, touched)))
-            writeTxnDataChecked(spark, table, out, txnId, snap, what)
-          }
-        val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.hasTxn(txnId)) Some(c.get)
-          else if (c != cur) Some(StaleSnapshot)
-          else None
-        } { (_, prev) => rewriteManifest(prev, txnId, touched, newFiles) }
-        if (v != StaleSnapshot) result = (v, touched.size, all.size)
+  /** One predicate-COW attempt over the state `snap` — the body every
+    * UPDATE/DELETE WHERE runs (locked, lock-free CAS, lineage, branch and
+    * branch replay), Delta's UPDATE/DELETE algorithm: ONE scan of the
+    * LOGICAL frame finds the files containing a predicate-matching row,
+    * only those are rewritten — standing delete vectors subtracted first,
+    * so a vector-hidden row can neither update nor resurrect — through the
+    * SET projection (`sets`) or, for a DELETE (`sets` None), a filter
+    * that keeps the rows `pred` does not match. Survivors stay
+    * byte-untouched, so the cost is O(files touched by the predicate),
+    * never O(table). The rewrite lands under `dir("txn")` and its WRITTEN
+    * rows are constraint-checked. Stat lines for replaced files drop; the
+    * txn ledger, constraints and the standing vector lines carry forward
+    * (they keep hiding rows in survivors). With `lineage` the rewrite runs
+    * over the id-attached frame and lands the ids materialized
+    * (`__row_id`, `# rowid_phys:`). */
+  private def cowWhereAttempt(spark: SparkSession, table: String,
+      snap: Manifest, txnId: Long, pred: Column,
+      sets: Option[Seq[(String, Column)]], lineage: Boolean,
+      dir: String => Path, what: String): Attempt = {
+    val touched = touchedFiles(spark, table, snap)(
+      _.filter(pred).select(input_file_name().as("f")).distinct())
+    val newFiles = if (touched.isEmpty) Seq.empty[String] else {
+      val base = subtractDeletes(spark, table, snap,
+        if (lineage) lineageFrameFor(spark, table, snap, touched, what)
+        else readLogical(spark, table, snap, touched))
+      val out = sets match {
+        case Some(ss) =>
+          // one simultaneous projection: every SET expression sees the
+          // PRE-update row (`SET a = b, b = a` swaps)
+          ss.foreach { case (c, _) =>
+            require(base.columns.contains(c), s"$what: no column $c") }
+          val bySet = ss.toMap
+          base.select(base.columns.toSeq.map { c =>
+            bySet.get(c) match {
+              case Some(e) => when(pred, e).otherwise(col(c)).as(c)
+              case None    => col(c)
+            }
+          }: _*)
+        case None => base.filter(!coalesce(pred, lit(false)))
       }
+      writeTxnDataChecked(spark, table,
+        if (!lineage) out
+        else out.select(out.columns.toSeq.filterNot(_ == "row_id").map(col) :+
+          col("row_id").as("__row_id"): _*),
+        dir("txn"), snap.constraints, what)
     }
-    result
+    Attempt(touched, rewriteManifest(_, txnId, touched, newFiles, lineage))
+  }
+
+  /** The locked predicate COW of [[updateWhere]] / [[deleteWhere]]: a
+    * lock-free append landing after the snapshot restarts the attempt on
+    * the advanced state. Returns (version, touched files, total files). */
+  private def cowWhere(spark: SparkSession, table: String, pred: Column,
+      txnId: Long, sets: Option[Seq[(String, Column)]],
+      what: String): (Long, Int, Int) = withWriterLock(table) {
+    writeLoop(table, Main, txnId, what, Race.Restart) { (snap, dir) =>
+      // a plain COW rewrite drops the touched files' row-id assignments
+      // (r18): lineage tables update through updateWhereLineage, which
+      // materializes ids through the rewrite
+      require(!snap.hasLineage,
+        s"$what on row-lineage table $table — use updateWhereLineage " +
+          "(it materializes ids through the rewrite)")
+      cowWhereAttempt(spark, table, snap, txnId, pred, sets, lineage = false,
+        dir, what)
+    }
   }
 
   /** Raised when a lock-free writer loses a race it cannot rebase across —
@@ -1590,98 +1608,57 @@ object Acid {
       sets: Seq[(String, Column)], pred: Column, txnId: Long,
       beforeCommit: () => Unit = () => ()): (Long, Int, Int) = {
     require(sets.nonEmpty, "updateWhereCAS: no SET assignments")
-    val bySet = sets.toMap
-    require(bySet.size == sets.size, "updateWhereCAS: duplicate SET column")
-    val curV = currentVersion(table).getOrElse(
-      sys.error(s"Acid.updateWhereCAS: no committed version at $table"))
-    val snap = manifestAt(table, curV)
-    if (snap.hasTxn(txnId))
-      return (curV, 0, snap.files.size) // replay → no-op
-    require(snap.rootRelative,
-      s"updateWhereCAS on snapshot-mode table $table")
-    require(snap.deletes.isEmpty && snap.pdels.isEmpty,
-      s"updateWhereCAS: $table carries standing delete vectors — use the " +
-        "locked updateWhere (vector semantics do not commute with appends)")
-    require(!snap.hasLineage,
-      s"updateWhereCAS on row-lineage table $table — use updateWhereLineage")
-    val all = snap.files
-    val root = Paths.get(table).toAbsolutePath
-    // probe + rewrite run over the LOGICAL frame (r19, lifting the r18
-    // refusal): on an evolved table the predicate and SET expressions see
-    // post-rename names and default-filled values, and the rewrite lands
-    // the logical schema — the commit loop's evolution-delta check below
-    // keeps the commute analysis honest against CONCURRENT evolution
-    val touched = if (all.isEmpty) Seq.empty[String]
-    else readLogical(spark, table, snap, all)
-      .filter(pred)
-      .select(input_file_name().as("f")).distinct()
-      .collect() // O(files) rows — manifest-construction control plane
-      .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
-      .sorted.toSeq
-    val newFiles =
-      if (touched.isEmpty) Seq.empty[String]
-      else {
-        val base = readLogical(spark, table, snap, touched)
-        sets.foreach { case (c, _) =>
-          require(base.columns.contains(c), s"updateWhereCAS: no column $c") }
-        val updated = base.select(base.columns.toSeq.map { c =>
-          bySet.get(c) match {
-            case Some(e) => when(pred, e).otherwise(col(c)).as(c)
-            case None    => col(c)
-          }
-        }: _*)
-        writeTxnDataChecked(spark, table, updated, txnId, snap,
-          "updateWhereCAS")
+    require(sets.toMap.size == sets.size, "updateWhereCAS: duplicate SET column")
+    // conflict check against however far the table advanced past the
+    // snapshot — re-evaluated from scratch on every raced retry
+    val conflict = Race.Check { (snap, touched, prev) =>
+      val prevFiles = prev.files.toSet
+      val lostRead = touched.filterNot(prevFiles)
+      if (lostRead.nonEmpty) throw new WriteConflictException(
+        s"updateWhereCAS($txnId) on $table: a concurrent writer rewrote " +
+          s"file(s) this update read (${lostRead.take(3).mkString(", ")}) — " +
+          "retry on the new snapshot")
+      if (prev.deletes.nonEmpty || prev.pdels.nonEmpty)
+        throw new WriteConflictException(
+          s"updateWhereCAS($txnId) on $table: a concurrent merge-on-read " +
+            "delete landed a standing vector — its hides apply to rows " +
+            "this update already rewrote; retry on the new snapshot")
+      // the snapshot-time guards re-checked at commit (r18 review, r19
+      // narrowed to genuinely non-commuting commits): a concurrent
+      // assignRowIds commit would have its assignment lines stranded by
+      // this rewrite, and a concurrent SCHEMA-EVOLUTION commit (new
+      // colmap/coldrop/coldefault lines vs the snapshot) changes what
+      // the logical rewrite should have produced — snapshot-matching
+      // evolution metadata commutes and carries forward
+      if (prev.evolution != snap.evolution || prev.hasLineage)
+        throw new WriteConflictException(
+          s"updateWhereCAS($txnId) on $table: a concurrent commit " +
+            "installed schema-evolution or row-lineage metadata — the " +
+            "rewrite no longer commutes; retry through the appropriate path")
+      val addedSince = prevFiles.diff(snap.files.toSet).toSeq.sorted
+      if (addedSince.nonEmpty) {
+        // logical read: the predicate references post-evolution names,
+        // and a concurrent append of a pre-default frame must still
+        // surface default-filled values to the probe
+        val hit = readLogical(spark, table, prev, addedSince)
+          .filter(pred).limit(1).count() > 0
+        if (hit) throw new WriteConflictException(
+          s"updateWhereCAS($txnId) on $table: a concurrent append added " +
+            "rows matching this update's predicate — serializability " +
+            "requires updating them too; retry on the new snapshot")
       }
-    beforeCommit()
-    val v = commitNextVersion(table) { (c, prev) =>
-      if (prev.hasTxn(txnId)) Some(c.get)
-      else {
-        // conflict check against however far the table advanced past the
-        // snapshot — runs BEFORE the claim, so an abort never wedges a
-        // claim file; re-evaluated from scratch on every raced retry
-        val prevFiles = prev.files.toSet
-        val lostRead = touched.filterNot(prevFiles)
-        if (lostRead.nonEmpty) throw new WriteConflictException(
-          s"updateWhereCAS($txnId) on $table: a concurrent writer rewrote " +
-            s"file(s) this update read (${lostRead.take(3).mkString(", ")}) — " +
-            "retry on the new snapshot")
-        if (prev.deletes.nonEmpty || prev.pdels.nonEmpty)
-          throw new WriteConflictException(
-            s"updateWhereCAS($txnId) on $table: a concurrent merge-on-read " +
-              "delete landed a standing vector — its hides apply to rows " +
-              "this update already rewrote; retry on the new snapshot")
-        // the snapshot-time guards re-checked at commit (r18 review, r19
-        // narrowed to genuinely non-commuting commits): a concurrent
-        // assignRowIds commit would have its assignment lines stranded by
-        // this rewrite, and a concurrent SCHEMA-EVOLUTION commit (new
-        // colmap/coldrop/coldefault lines vs the snapshot) changes what
-        // the logical rewrite should have produced — snapshot-matching
-        // evolution metadata commutes and carries forward
-        if (prev.evolution != snap.evolution || prev.hasLineage)
-          throw new WriteConflictException(
-            s"updateWhereCAS($txnId) on $table: a concurrent commit " +
-              "installed schema-evolution or row-lineage metadata — the " +
-              "rewrite no longer commutes; retry through the appropriate path")
-        val addedSince = prevFiles.diff(all.toSet).toSeq.sorted
-        if (addedSince.nonEmpty) {
-          // logical read: the predicate references post-evolution names,
-          // and a concurrent append of a pre-default frame must still
-          // surface default-filled values to the probe
-          val hit = readLogical(spark, table, prev, addedSince)
-            .filter(pred).limit(1).count() > 0
-          if (hit) throw new WriteConflictException(
-            s"updateWhereCAS($txnId) on $table: a concurrent append added " +
-              "rows matching this update's predicate — serializability " +
-              "requires updating them too; retry on the new snapshot")
-        }
-        None
-      }
-    } { (_, prev) =>
-      // rebase: the advanced state minus this update's touched files
-      rewriteManifest(prev, txnId, touched, newFiles)
     }
-    (v, touched.size, all.size)
+    writeLoop(table, Main, txnId, "updateWhereCAS", conflict) { (snap, dir) =>
+      require(snap.deletes.isEmpty && snap.pdels.isEmpty,
+        s"updateWhereCAS: $table carries standing delete vectors — use the " +
+          "locked updateWhere (vector semantics do not commute with appends)")
+      require(!snap.hasLineage,
+        s"updateWhereCAS on row-lineage table $table — use updateWhereLineage")
+      val a = cowWhereAttempt(spark, table, snap, txnId, pred, Some(sets),
+        lineage = false, dir, "updateWhereCAS")
+      beforeCommit()
+      a
+    }
   }
 
   /** `UPDATE ... SET ... WHERE pred`, copy-on-write. Every SET expression
@@ -1693,18 +1670,8 @@ object Acid {
       sets: Seq[(String, Column)], pred: Column,
       txnId: Long): (Long, Int, Int) = {
     require(sets.nonEmpty, "updateWhere: no SET assignments")
-    val bySet = sets.toMap
-    require(bySet.size == sets.size, "updateWhere: duplicate SET column")
-    cowWhere(spark, table, pred, txnId, "updateWhere") { base =>
-      sets.foreach { case (c, _) =>
-        require(base.columns.contains(c), s"updateWhere: no column $c") }
-      base.select(base.columns.toSeq.map { c =>
-        bySet.get(c) match {
-          case Some(e) => when(pred, e).otherwise(col(c)).as(c)
-          case None    => col(c)
-        }
-      }: _*)
-    }
+    require(sets.toMap.size == sets.size, "updateWhere: duplicate SET column")
+    cowWhere(spark, table, pred, txnId, Some(sets), "updateWhere")
   }
 
   /** `DELETE FROM ... WHERE pred`, copy-on-write: rows matching `pred`
@@ -1714,8 +1681,7 @@ object Acid {
     * three-valued DELETE). */
   def deleteWhere(spark: SparkSession, table: String, pred: Column,
       txnId: Long): (Long, Int, Int) =
-    cowWhere(spark, table, pred, txnId, "deleteWhere")(
-      _.filter(!coalesce(pred, lit(false))))
+    cowWhere(spark, table, pred, txnId, None, "deleteWhere")
 
   // ---- CHECK constraints (Delta table constraints / invariants) ----
 
@@ -1729,39 +1695,26 @@ object Acid {
     * manifest (`# constraint:<name>|<predicate>` lines, carried forward
     * by every commit class), and every append validates its batch against
     * ALL standing constraints plus any declared with this call. The check
-    * is ONE aggregate over the batch (count of violations per constraint,
-    * map-side combined — O(batch), never O(table)); a violating batch
-    * throws [[ConstraintViolationException]] with per-constraint counts
-    * and the table does not advance. Enforce-at-write is what makes
-    * downstream readers trust the predicate without re-checking it —
-    * the garbage stops at the gate, not in every consumer. */
+    * is ONE aggregate over the WRITTEN batch (count of violations per
+    * constraint, map-side combined — O(batch), never O(table)); a
+    * violating batch throws [[ConstraintViolationException]] with
+    * per-constraint counts and the table does not advance. Enforce-at-write
+    * is what makes downstream readers trust the predicate without
+    * re-checking it — the garbage stops at the gate, not in every
+    * consumer. */
   def appendTxnChecked(spark: SparkSession, table: String, df: DataFrame,
       txnId: Long, newConstraints: Seq[(String, String)] = Nil): Long = withWriterLock(table) {
-    val standing = currentVersion(table).map(constraints(table, _)).getOrElse(Seq.empty)
-    val all = (standing ++ newConstraints).distinct
-    require(all.map(_._1).distinct.size == all.size,
-      s"duplicate constraint names at $table")
-    if (all.nonEmpty) {
-      val aggs = all.map { case (n, p) =>
-        count(when(!expr(p) || expr(p).isNull, 1)).as(n)
-      }
-      val row = df.agg(aggs.head, aggs.tail: _*).head
-      val bad = all.zipWithIndex
-        .map { case ((n, p), i) => (n, p, row.getLong(i)) }
-        .filter(_._3 > 0)
-      if (bad.nonEmpty) throw new ConstraintViolationException(
-        bad.map { case (n, p, c) => s"$n ($p): $c rows" }.mkString("; "))
-    }
-    lazy val newFiles = writeTxnData(spark, table, df, txnId)
-    commitNextVersion(table) { (cur, prev) =>
-      require(cur.isEmpty || prev.rootRelative,
-        s"appendTxnChecked on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None
-    } { (_, prev) =>
-      val added = newConstraints.map { case (n, p) => Manifest.Constraint(n, p) }
-        .filterNot(prev.constraints.contains)
-      appendManifest(prev, Seq(txnId), newFiles) ++ added
-    }
+    val declared = newConstraints.map { case (n, p) => Manifest.Constraint(n, p) }
+    writeLoop(table, Main, txnId, "appendTxnChecked", fresh = true) {
+      (snap, dir) =>
+        val all = (snap.constraints ++ declared).distinct
+        require(all.map(_.name).distinct.size == all.size,
+          s"duplicate constraint names at $table")
+        val a = appendAttempt(spark, table, df, txnId, snap, dir,
+          "appendTxnChecked", all)
+        a.copy(manifest = prev =>
+          a.manifest(prev) ++ declared.filterNot(prev.constraints.contains))
+    }._1
   }
 
   // ---- partition evolution (Iceberg partition-spec evolution) ----
@@ -1805,8 +1758,8 @@ object Acid {
   private def appendShadowPartitioned(table: String, txnId: Long,
       names: Seq[String], what: String, shadowed: DataFrame): Long =
     withWriterLock(table) {
-      lazy val written: (Seq[String], Seq[Manifest.Entry]) = { // at most once
-        val dataDir = Paths.get(table).resolve(s"txn=$txnId")
+      writeLoop(table, Main, txnId, what, fresh = true) { (snap, dir) =>
+        val dataDir = dir("txn")
         shadowed.write.mode("overwrite")
           .partitionBy(names.map(n => s"__part_$n"): _*).parquet(dataDir.toString)
         val files = listParquet(table, dataDir)
@@ -1818,13 +1771,9 @@ object Acid {
           }
           Manifest.PVal(f, vals.mkString(","))
         }
-        (files, pvals :+ Manifest.PSpec(txnId, names))
-      }
-      commitNextVersion(table) { (cur, prev) =>
-        require(cur.isEmpty || prev.rootRelative,
-          s"$what on snapshot-mode table $table")
-        if (prev.hasTxn(txnId)) Some(cur.get) else None
-      } { (_, prev) => appendManifest(prev, Seq(txnId), written._1, written._2) }
+        Attempt(Nil, appendManifest(_, Seq(txnId), files,
+          pvals :+ Manifest.PSpec(txnId, names)))
+      }._1
     }
 
   // ---- hidden partitioning (Iceberg partition transforms) ----
@@ -2024,10 +1973,10 @@ object Acid {
       return currentVersion(table).get
     }
     val files = wapFiles(table, wapId)
-    val v = commitNextVersion(table) { (cur, prev) =>
+    val v = commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isEmpty || prev.rootRelative,
         s"publishWap on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None // replay
+      None
     } { (_, prev) => appendManifest(prev, Seq(txnId), files) }
     Files.deleteIfExists(wapManifest(table, wapId))
     v
@@ -2072,19 +2021,25 @@ object Acid {
     * the same ledger as [[appendTxn]]. */
   def deleteTxn(spark: SparkSession, table: String, keys: DataFrame,
       keyCol: String, txnId: Long): Long = withWriterLock(table) {
-    lazy val delFiles = { // written at most once
-      val delDir = Paths.get(table).resolve(s"del=$txnId")
-      keys.select(col(keyCol)).distinct().coalesce(1)
-        .write.mode("overwrite").parquet(delDir.toString)
-      listParquet(table, delDir)
-    }
-    commitNextVersion(table) { (cur, prev) =>
-      val c = cur.getOrElse(sys.error(s"Acid.deleteTxn: no committed version at $table"))
-      require(prev.rootRelative, s"deleteTxn on snapshot-mode table $table")
-      require(prev.delKey.forall(_ == keyCol),
-        s"deleteTxn: table uses delete key ${prev.delKey.get}, got $keyCol")
-      if (prev.hasTxn(txnId)) Some(c) else None // replay → no-op
-    } { (_, prev) => deleteManifest(prev, txnId, keyCol, delFiles) }
+    writeLoop(table, Main, txnId, "deleteTxn") { (snap, dir) =>
+      deleteAttempt(table, keys, keyCol, txnId, snap, dir, "deleteTxn")
+    }._1
+  }
+
+  /** One merge-on-read delete: land the distinct `keys` as a vector file
+    * under `dir("del")` and grow the standing vector of whatever state the
+    * commit lands on. The shared body of [[deleteTxn]] and
+    * [[deleteTxnBranch]]. */
+  private def deleteAttempt(table: String, keys: DataFrame, keyCol: String,
+      txnId: Long, snap: Manifest, dir: String => Path, what: String): Attempt = {
+    require(snap.delKey.forall(_ == keyCol),
+      s"$what: table uses delete key ${snap.delKey.getOrElse("")}, got $keyCol")
+    val delDir = dir("del")
+    keys.select(col(keyCol)).distinct().coalesce(1)
+      .write.mode("overwrite").parquet(delDir.toString)
+    val delFiles = listParquet(table, delDir)
+    Attempt(Nil, deleteManifest(_, txnId, keyCol, delFiles),
+      Some(Manifest.Dml(0L, "delete", txnId, keyCol, None, delFiles)))
   }
 
   /** The merge-on-read delete manifest: the standing equality vector grows
@@ -2118,10 +2073,8 @@ object Acid {
     * `stats` zone maps harvested here make [[readSkipping]] sharp —
     * compaction is what MAKES data skipping effective, they are one
     * operation at 100 TB, not two. Standing delete vectors fold in (the
-    * rewrite reads the merged state), the txn ledger is carried forward
-    * (streaming exactly-once survives, replay no-ops), and a commit
-    * racing the rewrite triggers the stale-snapshot retry rather than
-    * being silently dropped — same loop as [[compactDeletes]]. */
+    * rewrite reads the merged state) and the txn ledger is carried
+    * forward (streaming exactly-once survives, replay no-ops). */
   def optimize(spark: SparkSession, table: String, txnId: Long,
       targetFiles: Int, clusterCol: Option[String] = None,
       stats: Option[(String, Column)] = None,
@@ -2144,10 +2097,9 @@ object Acid {
           .groupBy(input_file_name().as("f"))
           .agg(min(expr).as("lo"), max(expr).as("hi"))
           .collect() // O(files) rows — manifest-construction control plane
-          .map { r =>
-            val rel = root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString
-            Manifest.MinMax(rel, name, r.getLong(1), r.getLong(2))
-          }.sortBy(Manifest.render)
+          .map(r => Manifest.MinMax(relFile(root, r.getString(0)), name,
+            r.getLong(1), r.getLong(2)))
+          .sortBy(Manifest.render)
       } ++
       // file-level blooms for append-mode tables (commit's bloom harvest,
       // root-relative) — the point-lookup index [[eraseKeys]] prunes by
@@ -2171,24 +2123,16 @@ object Acid {
     * exact across the rewrite). Standing delete vectors subtract from the
     * rewritten rows and CARRY FORWARD (they still hide rows in survivor
     * files — contrast [[optimize]], which folds and drops them); stat
-    * lines for replaced files drop, survivors' stats stay live.
-    * Idempotent per txnId; stale-snapshot rebase like every rewrite. */
+    * lines for replaced files drop, survivors' stats stay live. The
+    * selected files materialize outside the writer lock and are written
+    * under it; a commit landing in between restarts the rewrite.
+    * Idempotent per txnId. */
   def optimizeWhere(spark: SparkSession, table: String, txnId: Long,
       targetFiles: Int, part: (String, Long)): Long = {
     require(targetFiles >= 1, "optimizeWhere: targetFiles must be >= 1")
     val (name, value) = part
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var out = StaleSnapshot
-    while (out == StaleSnapshot) {
-      attempts += 1
-      require(attempts <= 50, s"optimizeWhere: concurrent-commit retry limit on $table")
-      val snapV = currentVersion(table).getOrElse(
-        sys.error(s"Acid.optimizeWhere: no committed version at $table"))
-      val snap = manifestAt(table, snapV)
-      if (snap.hasTxn(txnId)) return snapV // replay → no-op
-      require(snap.rootRelative,
-        s"optimizeWhere on snapshot-mode table $table")
+    writeLoop(table, Main, txnId, "optimizeWhere", Race.Restart,
+        lockCommit = true) { (snap, dir) =>
       // same guard as [[rewriteCommit]] (ADVICE r17): a partition-scoped
       // rewrite drops the selected files' `# firstrow:` assignments, so a
       // later assignRowIds would silently re-issue ids — row lineage must
@@ -2210,20 +2154,13 @@ object Acid {
       val merged = subtractDeletes(spark, table, snap, selScan)
         .coalesce(targetFiles).cache()
       merged.count() // materialize BEFORE the lock
-      try out = withWriterLock(table) {
-        commitNextVersion(table) { (cur, prev) =>
-          if (prev.hasTxn(txnId)) Some(cur.get)
-          else if (cur.get != snapV) Some(StaleSnapshot)
-          else None
-        } { (_, prev) =>
-          val newFiles = writeTxnData(spark, table, merged, txnId)
-          rewriteManifest(prev, txnId, sel, newFiles,
-            added = newFiles.map(Manifest.PVal(_, s"$name=$value")),
-            op = Some("rewrite:optimizeWhere"))
-        }
-      } finally merged.unpersist(blocking = false)
-    }
-    out
+      Attempt(sel, { prev =>
+        val newFiles = writeTxnData(table, merged, dir("txn"))
+        rewriteManifest(prev, txnId, sel, newFiles,
+          added = newFiles.map(Manifest.PVal(_, s"$name=$value")),
+          op = Some("rewrite:optimizeWhere"))
+      }, release = () => { merged.unpersist(blocking = false); () })
+    }._1
   }
 
   /** ANALYZE — retrofit manifest STATISTICS onto existing files,
@@ -2241,16 +2178,14 @@ object Acid {
       stats: Option[(String, Column)] = None,
       bloom: Option[(String, Column)] = None,
       rowCounts: Boolean = false): Long = withWriterLock(table) {
-    commitNextVersion(table) { (cur, prev) =>
+    commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined, s"Acid.analyzeTable: no committed version at $table")
       require(prev.rootRelative,
         s"analyzeTable on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None
+      None
     } { (_, prev) =>
       val files = prev.files
       val root = Paths.get(table).toAbsolutePath
-      def rel(uri: String) =
-        root.relativize(Paths.get(java.net.URI.create(uri))).toString
       val statLines = stats.toSeq.flatMap { case (name, e) =>
         val have = prev.minmax.filter(_.name == name).map(_.file).toSet
         val missing = files.filterNot(have)
@@ -2260,7 +2195,8 @@ object Acid {
           .agg(min(e).as("lo"), max(e).as("hi"))
           .filter(col("lo").isNotNull) // all-null/empty files carry no line
           .collect() // O(files) rows — manifest control plane
-          .map(r => Manifest.MinMax(rel(r.getString(0)), name, r.getLong(1), r.getLong(2)))
+          .map(r => Manifest.MinMax(relFile(root, r.getString(0)), name,
+            r.getLong(1), r.getLong(2)))
           .sortBy(Manifest.render).toSeq
       }
       val bloomStatLines = bloom.toSeq.flatMap { case (name, e) =>
@@ -2291,11 +2227,11 @@ object Acid {
         s"setProperties: bad key '$k'")
       require(!v.contains('\n'), s"setProperties: bad value for '$k'")
     }
-    commitNextVersion(table) { (cur, prev) =>
+    commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined, s"Acid.setProperties: no committed version at $table")
       require(prev.rootRelative,
         s"setProperties on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None
+      None
     } { (_, prev) =>
       val keys = props.map(_._1).toSet
       metadataCommit(prev, txnId, props.map { case (k, v) => Manifest.Prop(k, v) }, {
@@ -2335,11 +2271,11 @@ object Acid {
     * feature-store sync) keys its bookkeeping on. Idempotent per txnId. */
   def assignRowIds(spark: SparkSession, table: String, txnId: Long): Long =
     withWriterLock(table) {
-    commitNextVersion(table) { (cur, prev) =>
+    commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined, s"Acid.assignRowIds: no committed version at $table")
       require(prev.rootRelative,
         s"assignRowIds on snapshot-mode table $table")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None
+      None
     } { (_, prev) =>
       val missing = prev.files
         .filterNot(f => prev.firstRows.contains(f) || prev.rowIdPhys(f)).sorted
@@ -2434,8 +2370,7 @@ object Acid {
     * vectors subtract first so a hidden row can neither update nor
     * resurrect). The `# rowid_next:` high-water mark carries — later
     * appends still allocate above every id ever issued. Cost is O(files
-    * the predicate touches), never O(table); stale-snapshot rebase and
-    * per-txnId idempotence as everywhere. */
+    * the predicate touches), never O(table). */
   def updateWhereLineage(spark: SparkSession, table: String,
       sets: Seq[(String, Column)], pred: Column,
       txnId: Long): (Long, Int, Int) = withWriterLock(table) {
@@ -2444,64 +2379,13 @@ object Acid {
     require(bySet.size == sets.size, "updateWhereLineage: duplicate SET column")
     require(!bySet.contains("row_id") && !bySet.contains("__row_id"),
       "updateWhereLineage: row_id is the lineage identity — not assignable")
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var result: (Long, Int, Int) = null
-    while (result == null) {
-      attempts += 1
-      require(attempts <= 50,
-        s"updateWhereLineage: concurrent-commit retry limit on $table")
-      val cur = currentVersion(table)
-      val snap = cur.map(manifestAt(table, _)).getOrElse(
-        sys.error(s"Acid.updateWhereLineage: no committed version at $table"))
-      if (snap.hasTxn(txnId)) {
-        result = (cur.get, 0, snap.files.size) // replay → no-op
-      } else {
-        require(snap.rootRelative,
-          s"updateWhereLineage on snapshot-mode table $table")
-        require(snap.hasRowIds,
-          s"updateWhereLineage on $table: not a row-lineage table — " +
-            "use updateWhere (or assignRowIds first)")
-        val all = snap.files
-        val root = Paths.get(table).toAbsolutePath
-        // probe over the LOGICAL frame (r19 — lineage × evolution): the
-        // predicate sees post-rename names and default-filled values
-        val touched = if (all.isEmpty) Seq.empty[String]
-        else readLogical(spark, table, snap, all)
-          .filter(pred)
-          .select(input_file_name().as("f")).distinct()
-          .collect() // O(files) rows — manifest-construction control plane
-          .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
-          .sorted.toSeq
-        val newFiles =
-          if (touched.isEmpty) Seq.empty[String]
-          else {
-            val base = subtractDeletes(spark, table, snap,
-              lineageFrameFor(spark, table, snap, touched, "updateWhereLineage"))
-            sets.foreach { case (c, _) =>
-              require(base.columns.contains(c), s"updateWhereLineage: no column $c") }
-            val dataCols = base.columns.toSeq.filterNot(_ == "row_id")
-            val updated = base.select(dataCols.map { c =>
-              bySet.get(c) match {
-                case Some(e) => when(pred, e).otherwise(col(c)).as(c)
-                case None    => col(c)
-              }
-            } :+ col("row_id").as("__row_id"): _*)
-            writeTxnDataChecked(spark, table, updated, txnId, snap,
-              "updateWhereLineage")
-          }
-        val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.hasTxn(txnId)) Some(c.get)
-          else if (c != cur) Some(StaleSnapshot)
-          else None
-        } { (_, prev) =>
-          rewriteManifest(prev, txnId, touched, newFiles, lineage = true,
-            added = newFiles.map(Manifest.RowIdPhys))
-        }
-        if (v != StaleSnapshot) result = (v, touched.size, all.size)
-      }
+    writeLoop(table, Main, txnId, "updateWhereLineage", Race.Restart) { (snap, dir) =>
+      require(snap.hasRowIds,
+        s"updateWhereLineage on $table: not a row-lineage table — " +
+          "use updateWhere (or assignRowIds first)")
+      cowWhereAttempt(spark, table, snap, txnId, pred, Some(sets),
+        lineage = true, dir, "updateWhereLineage")
     }
-    result
   }
 
   /** MERGE INTO a ROW-LINEAGE table, copy-on-write, ids PRESERVED AND
@@ -2518,128 +2402,96 @@ object Acid {
     *  - MATCHED + op "delete": the row goes and its id simply retires.
     *
     * Mechanics are [[mergeCow]]'s (findTouchedFiles probe, touched-only
-    * rewrite, survivors byte-untouched) with the rewrite running over the
-    * id-attached frame and landing `__row_id` physically
-    * (`# rowid_phys:` marks). Standing delete vectors subtract before
-    * matching, and upserted keys leave the vector (resurrection = insert
-    * with a fresh id). Cost O(files containing a matched key), never
-    * O(table). Idempotent per txnId; locked like [[updateWhereLineage]]
-    * (the high-water allocation must serialize with other writers).
-    * Returns (version, touched files, total files). */
+    * rewrite, survivors byte-untouched, written rows constraint-checked)
+    * with the rewrite running over the id-attached frame and landing
+    * `__row_id` physically (`# rowid_phys:` marks). Standing delete
+    * vectors subtract before matching, and upserted keys leave the vector
+    * (resurrection = insert with a fresh id). Cost O(files containing a
+    * matched key), never O(table). Idempotent per txnId; locked like
+    * [[updateWhereLineage]] (the high-water allocation must serialize with
+    * other writers). Returns (version, touched files, total files). */
   def mergeCowLineage(spark: SparkSession, table: String, changes: DataFrame,
       keyCol: String, txnId: Long,
       opCol: Option[String] = None): (Long, Int, Int) = withWriterLock(table) {
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var result: (Long, Int, Int) = null
-    while (result == null) {
-      attempts += 1
-      require(attempts <= 50, s"mergeCowLineage: concurrent-commit retry limit on $table")
-      val cur = currentVersion(table)
-      val snap = cur.map(manifestAt(table, _)).getOrElse(
-        sys.error(s"Acid.mergeCowLineage: no committed version at $table"))
-      if (snap.hasTxn(txnId)) {
-        result = (cur.get, 0, snap.files.size) // replay → no-op
-      } else {
-        require(snap.rootRelative,
-          s"mergeCowLineage on snapshot-mode table $table")
-        require(snap.hasRowIds,
-          s"mergeCowLineage on $table: not a row-lineage table — use mergeCow")
-        val next = snap.rowIdNext.getOrElse(
-          sys.error(s"mergeCowLineage: $table has no rowid_next mark — " +
-            "run assignRowIds first"))
-        val all = snap.files
-        val root = Paths.get(table).toAbsolutePath
-        // FREEZE the change frame before anything reads it (the same rule
-        // mergeCowBranch applies, and here it is correctness-critical: the
-        // id allocation below runs SEVERAL actions over the changes — a
-        // nondeterministic plan re-evaluating between inserts.count() and
-        // the data write would make the committed `# rowid_next:` mark
-        // disagree with the ids actually written → silent id reuse)
-        val chgDir = Paths.get(table).resolve(s"chg=$txnId")
-        changes.write.mode("overwrite").parquet(chgDir.toString)
-        val changesF = spark.read.parquet(
-          listParquet(table, chgDir).map(f => s"$table/$f"): _*)
-        val allKeys = changesF.select(col(keyCol)).distinct()
-        val upserts = opCol match {
-          case Some(o) => changesF.filter(col(o) =!= "delete").drop(o)
-          case None    => changesF
-        }
-        // key probe over the LOGICAL frame (r19 — lineage × evolution)
-        val touched = if (all.isEmpty) Seq.empty[String]
-        else touchedFilesPlanOver(readLogical(spark, table, snap, all),
-          allKeys, keyCol)
-          .collect() // O(files) rows — manifest-construction control plane
-          .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
-          .sorted.toSeq
-        // the VISIBLE id-attached target slice (vectors subtracted — a
-        // hidden row neither matches nor donates its id)
-        val target =
-          if (touched.isEmpty) null
-          else subtractDeletes(spark, table, snap,
-            lineageFrameFor(spark, table, snap, touched, "mergeCowLineage"))
-            .cache()
-        val dataCols: Seq[String] =
-          if (target != null) target.columns.toSeq.filterNot(_ == "row_id")
-          else upserts.columns.toSeq
-        // matched = change rows whose key is VISIBLE somewhere in the
-        // table; since touched covers every file containing a change key,
-        // visible-in-table == visible-in-target. The no-touched-file MERGE
-        // (pure inserts / deletes of absent keys) has an EMPTY matched set
-        // — shaped with the row_id column the projection below resolves
-        val targetIds =
-          if (target == null) null
-          else target.select(col(keyCol), col("row_id")).cache()
-        val matchedUpserts =
-          if (target == null) upserts.limit(0).withColumn("row_id", lit(0L))
-          else upserts.join(targetIds, Seq(keyCol), "inner")
-        val inserts0 =
-          if (target == null) upserts
-          else upserts.join(targetIds.select(col(keyCol)), Seq(keyCol), "left_anti")
-        // deterministic fresh-id allocation: inserts ordered by key (the
-        // insert side is the change batch — O(batch) through one window)
-        val w = org.apache.spark.sql.expressions.Window.orderBy(col(keyCol))
-        val inserts = inserts0
-          .withColumn("row_id",
-            lit(next) + org.apache.spark.sql.functions.row_number().over(w) - 1L)
-        val nInserts = inserts.count()
-        val carried =
-          if (target == null) inserts.limit(0)
-          else target.join(allKeys, Seq(keyCol), "left_anti")
-        val rewritten = carried
-          .unionByName(matchedUpserts.select((dataCols.map(col) :+ col("row_id")): _*))
-          .unionByName(inserts.select((dataCols.map(col) :+ col("row_id")): _*))
-          .withColumnRenamed("row_id", "__row_id")
-        val newFiles =
-          if (target == null && nInserts == 0) Seq.empty[String]
-          else {
-            checkConstraints(snap.constraints, rewritten, "mergeCowLineage")
-            writeTxnData(spark, table, rewritten, txnId)
-          }
-        // vector reconciliation, mergeCow's rule: upserted keys leave the
-        // standing vector (the insert above is the resurrection)
-        val vectors = reconcileVector(spark, table, snap,
-          upserts.select(col(keyCol)).distinct(), keyCol,
-          Paths.get(table).resolve(s"del=$txnId"), "mergeCowLineage")
-        val v = commitNextVersion(table) { (c, prev) =>
-          if (prev.hasTxn(txnId)) Some(c.get)
-          else if (c != cur) Some(StaleSnapshot)
-          else None
-        } { (_, prev) =>
-          rewriteManifest(prev, txnId, touched, newFiles, lineage = true,
-            vectors = Some(vectors),
-            added = Manifest.RowIdNext(next + nInserts) +:
-              newFiles.map(Manifest.RowIdPhys),
-            retire = _.isInstanceOf[Manifest.RowIdNext])
-        }
-        if (target != null) {
+    writeLoop(table, Main, txnId, "mergeCowLineage", Race.Restart) { (snap, dir) =>
+      require(snap.hasRowIds,
+        s"mergeCowLineage on $table: not a row-lineage table — use mergeCow")
+      val next = snap.rowIdNext.getOrElse(
+        sys.error(s"mergeCowLineage: $table has no rowid_next mark — " +
+          "run assignRowIds first"))
+      // FREEZE the change frame before anything reads it (the same rule
+      // mergeCowBranch applies, and here it is correctness-critical: the
+      // id allocation below runs SEVERAL actions over the changes — a
+      // nondeterministic plan re-evaluating between inserts.count() and
+      // the data write would make the committed `# rowid_next:` mark
+      // disagree with the ids actually written → silent id reuse)
+      val chgDir = dir("chg")
+      changes.write.mode("overwrite").parquet(chgDir.toString)
+      val changesF = spark.read.parquet(
+        listParquet(table, chgDir).map(f => s"$table/$f"): _*)
+      val allKeys = changesF.select(col(keyCol)).distinct()
+      val upserts = opCol match {
+        case Some(o) => changesF.filter(col(o) =!= "delete").drop(o)
+        case None    => changesF
+      }
+      val touched = touchedFiles(spark, table, snap)(
+        touchedFilesPlanOver(_, allKeys, keyCol))
+      // the VISIBLE id-attached target slice (vectors subtracted — a
+      // hidden row neither matches nor donates its id)
+      val target =
+        if (touched.isEmpty) null
+        else subtractDeletes(spark, table, snap,
+          lineageFrameFor(spark, table, snap, touched, "mergeCowLineage"))
+          .cache()
+      val dataCols: Seq[String] =
+        if (target != null) target.columns.toSeq.filterNot(_ == "row_id")
+        else upserts.columns.toSeq
+      // matched = change rows whose key is VISIBLE somewhere in the
+      // table; since touched covers every file containing a change key,
+      // visible-in-table == visible-in-target. The no-touched-file MERGE
+      // (pure inserts / deletes of absent keys) has an EMPTY matched set
+      // — shaped with the row_id column the projection below resolves
+      val targetIds =
+        if (target == null) null
+        else target.select(col(keyCol), col("row_id")).cache()
+      val matchedUpserts =
+        if (target == null) upserts.limit(0).withColumn("row_id", lit(0L))
+        else upserts.join(targetIds, Seq(keyCol), "inner")
+      val inserts0 =
+        if (target == null) upserts
+        else upserts.join(targetIds.select(col(keyCol)), Seq(keyCol), "left_anti")
+      // deterministic fresh-id allocation: inserts ordered by key (the
+      // insert side is the change batch — O(batch) through one window)
+      val w = org.apache.spark.sql.expressions.Window.orderBy(col(keyCol))
+      val inserts = inserts0
+        .withColumn("row_id",
+          lit(next) + org.apache.spark.sql.functions.row_number().over(w) - 1L)
+      val nInserts = inserts.count()
+      val carried =
+        if (target == null) inserts.limit(0)
+        else target.join(allKeys, Seq(keyCol), "left_anti")
+      val rewritten = carried
+        .unionByName(matchedUpserts.select((dataCols.map(col) :+ col("row_id")): _*))
+        .unionByName(inserts.select((dataCols.map(col) :+ col("row_id")): _*))
+        .withColumnRenamed("row_id", "__row_id")
+      val newFiles =
+        if (target == null && nInserts == 0) Seq.empty[String]
+        else writeTxnDataChecked(spark, table, rewritten, dir("txn"),
+          snap.constraints, "mergeCowLineage")
+      // vector reconciliation, mergeCow's rule: upserted keys leave the
+      // standing vector (the insert above is the resurrection)
+      val vectors = reconcileVector(spark, table, snap,
+        upserts.select(col(keyCol)).distinct(), keyCol, dir("del"),
+        "mergeCowLineage")
+      Attempt(touched,
+        rewriteManifest(_, txnId, touched, newFiles, lineage = true,
+          vectors = Some(vectors), added = Seq(Manifest.RowIdNext(next + nInserts)),
+          retire = _.isInstanceOf[Manifest.RowIdNext]),
+        release = () => if (target != null) {
           target.unpersist(blocking = false)
           targetIds.unpersist(blocking = false)
-        }
-        if (v != StaleSnapshot) result = (v, touched.size, all.size)
-      }
+        })
     }
-    result
   }
 
   /** Compaction that PRESERVES row ids — what Iceberg v3 does on any
@@ -2649,135 +2501,92 @@ object Acid {
     * vectors fold in; the `# rowid_next:` high-water mark carries so later
     * appends keep allocating above every id ever issued. Plain
     * [[read]]/[[optimize]] remain the non-lineage path — a lineage table
-    * is read through [[readLineage]]. */
+    * is read through [[readLineage]]. Materializes outside the writer
+    * lock and writes under it, like [[optimizeWhere]]. */
   def optimizeLineage(spark: SparkSession, table: String, txnId: Long,
       targetFiles: Int, clusterCol: Option[String] = None): Long = {
     require(targetFiles >= 1, "optimizeLineage: targetFiles must be >= 1")
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var out = StaleSnapshot
-    while (out == StaleSnapshot) {
-      attempts += 1
-      require(attempts <= 50, s"optimizeLineage: concurrent-commit retry limit on $table")
-      val snapV = currentVersion(table).getOrElse(
-        sys.error(s"Acid.optimizeLineage: no committed version at $table"))
-      // readLineage resolves the LOGICAL frame (r19): on an evolved table
-      // the compaction materializes post-rename names and default-filled
+    writeLoop(table, Main, txnId, "optimizeLineage", Race.Restart,
+        lockCommit = true) { (snap, dir) =>
+      // the LOGICAL lineage frame (r19): on an evolved table the
+      // compaction materializes post-rename names and default-filled
       // values — after this rewrite every file is current-generation, the
       // carried colmap/coldrop lines resolve to no-ops, and the defaults
       // are STORED (their auto NOT NULL constraints carry, so future
       // checked appends keep the exactness contract)
-      val merged0 = readLineage(spark, table).withColumnRenamed("row_id", "__row_id")
+      val merged0 = subtractDeletes(spark, table, snap,
+        lineageFrameFor(spark, table, snap, snap.files, "optimizeLineage"))
+        .withColumnRenamed("row_id", "__row_id")
       val merged = (clusterCol match {
         case Some(c) => merged0.repartitionByRange(targetFiles, col(c))
         case None    => merged0.coalesce(targetFiles)
       }).cache()
       merged.count() // materialize BEFORE the lock
-      try out = withWriterLock(table) {
-        commitNextVersion(table) { (cur, prev) =>
-          require(prev.rootRelative,
-            s"optimizeLineage on snapshot-mode table $table")
-          if (prev.hasTxn(txnId)) Some(cur.get)
-          else if (cur.get != snapV) Some(StaleSnapshot)
-          else None
-        } { (_, prev) =>
-          val newFiles = writeTxnData(spark, table, merged, txnId)
-          // coldefault carries too (r19): the rewrite STORES the fill, but
-          // the default stays table metadata for future appends — a later
-          // file missing the column must still read the default
-          Manifest.head(prev, Seq(txnId), Some("rewrite:optimizeLineage")) ++
-            Manifest.carried(prev, Manifest.rewriteRetires) ++
-            newFiles.map(Manifest.RowIdPhys) ++ newFiles.map(Manifest.DataFile)
-        }
-      } finally merged.unpersist(blocking = false)
-    }
-    out
+      Attempt(snap.files, { prev =>
+        val newFiles = writeTxnData(table, merged, dir("txn"))
+        // coldefault carries too (r19): the rewrite STORES the fill, but
+        // the default stays table metadata for future appends — a later
+        // file missing the column must still read the default
+        Manifest.head(prev, Seq(txnId), Some("rewrite:optimizeLineage")) ++
+          Manifest.carried(prev, Manifest.rewriteRetires) ++
+          newFiles.map(Manifest.RowIdPhys) ++ newFiles.map(Manifest.DataFile)
+      }, release = () => { merged.unpersist(blocking = false); () })
+    }._1
   }
 
-  /** Rewrite-path snapshot read: plain parquet normally; footer-UNION
-    * (`mergeSchema`) when the manifest mixes file GENERATIONS (carries
-    * evolution entries — a plain scan would let an ARBITRARY footer win
-    * schema inference and a carried default then masquerade the lost
-    * values, ADVICE r17) — the union frame keeps
+  /** Rewrite-path snapshot read of a root-relative manifest: plain parquet
+    * normally; footer-UNION (`mergeSchema`) when the manifest mixes file
+    * GENERATIONS (carries evolution entries — a plain scan would let an
+    * ARBITRARY footer win schema inference and a carried default then
+    * masquerade the lost values, ADVICE r17) — the union frame keeps
     * every generation's physical columns (pre-evolution rows surface NULL
     * in later columns, exactly as they do on disk), so the carried
     * colmap/coldefault lines keep resolving over the rewritten files and
-    * no stored value is lost. Root-relative manifests only (every rewrite
-    * caller requires `# base:.` at commit; non-append tables fall back to
-    * [[readVersion]] to preserve its failure mode). */
+    * no stored value is lost. */
   private def readRewriteSnapshot(spark: SparkSession, table: String,
-      v: Long): DataFrame = {
-    val m = manifestAt(table, v)
-    if (!m.rootRelative || m.evolution.isEmpty) readVersion(spark, table, v)
-    else subtractDeletes(spark, table, m,
-      readMergedSchema(spark, m.files.map(f => s"$table/$f")))
+      m: Manifest): DataFrame = {
+    val paths = m.files.map(f => s"$table/$f")
+    subtractDeletes(spark, table, m,
+      if (m.evolution.isEmpty) readParquetCached(spark, paths)
+      else readMergedSchema(spark, paths))
   }
 
-  /** Shared snapshot-rewrite commit loop ([[compactDeletes]] /
-    * [[optimize]]): materialize the merged current state OUTSIDE the lock
-    * (the rewrite must not read files its own manifest is about to stop
-    * referencing), apply `layout`, land as `txn=<txnId>/`, and commit a
-    * manifest of ledger + `headers(newFiles)` + the new files only — no
-    * delete lines (the rewrite folded them in). A commit landing between
-    * materialization and the lock restarts the loop against the advanced
-    * state; committing the stale snapshot would silently drop that
-    * writer's rows. */
+  /** Shared snapshot-rewrite of [[compactDeletes]] / [[optimize]] /
+    * [[optimizeZorder]]: rewrite the merged current state through
+    * `layout` as `txn=<txnId>/` OUTSIDE the writer lock, then commit under
+    * it a manifest of ledger + `headers(newFiles)` + the new files only —
+    * no delete lines (the rewrite folded them in). A commit landing
+    * between the snapshot and the lock restarts the rewrite against the
+    * advanced state; committing the stale snapshot would silently drop
+    * that writer's rows. */
   private def rewriteCommit(spark: SparkSession, table: String, txnId: Long,
       what: String)(layout: DataFrame => DataFrame)(
-      headers: Seq[String] => Seq[Manifest.Entry]): Long = {
-    val StaleSnapshot = -2L
-    var attempts = 0
-    var out = StaleSnapshot
-    while (out == StaleSnapshot) {
-      attempts += 1
-      require(attempts <= 50, s"$what: concurrent-commit retry limit on $table")
-      val snapV = currentVersion(table).getOrElse(
-        sys.error(s"Acid.$what: no committed version at $table"))
-      // Replay pre-check BEFORE any write: a replayed rewrite must not
-      // overwrite the txn=<txnId>/ files its committed manifest already
-      // references (the in-lock validation below stays the authority).
-      if (manifestAt(table, snapV).hasTxn(txnId)) return snapV
-      // ONE pass: the txn=<txnId>/ write IS the materialization (the old
-      // cache()+count() pre-pass was a full second action over the same
-      // plan — r21, opt guide §1.2). Still OUTSIDE the lock, so concurrent
-      // appends keep landing during a long rewrite: writing the txn dir
-      // conflicts with nothing (the snapshot's files are only
-      // UNREFERENCED by a commit, never deleted — vacuum removes them
-      // later), and a stale-snapshot retry overwrites its own txn dir
-      // with the re-merged state before re-validating.
-      val newFiles = writeTxnData(spark, table,
-        layout(readRewriteSnapshot(spark, table, snapV)), txnId)
-      out = withWriterLock(table) {
-        commitNextVersion(table) { (cur, prev) =>
-          require(prev.rootRelative,
-            s"$what on snapshot-mode table $table")
-          // a plain rewrite would drop the row-id assignments AND the
-          // never-reuse high-water mark — silent id recycling downstream
-          require(!prev.hasLineage,
-            s"$what on row-lineage table $table — use optimizeLineage " +
-              "(it materializes ids through the rewrite)")
-          if (prev.hasTxn(txnId)) Some(cur.get) // replay → no-op
-          else if (cur.get != snapV) Some(StaleSnapshot)
-          else None
-        } { (_, prev) =>
-          // `# op:rewrite` = Delta's dataChange=false: the commit replaced
-          // files without logical change, so streaming readers may cross it
-          // contributing nothing (background OPTIMIZE must not break tailing
-          // consumers). Commit-local by construction: `# op:` is never
-          // carried into the next commit.
+      headers: Seq[String] => Seq[Manifest.Entry]): Long =
+    writeLoop(table, Main, txnId, what, Race.Restart, lockCommit = true) {
+      (snap, dir) =>
+        // a plain rewrite would drop the row-id assignments AND the
+        // never-reuse high-water mark — silent id recycling downstream
+        require(!snap.hasLineage,
+          s"$what on row-lineage table $table — use optimizeLineage " +
+            "(it materializes ids through the rewrite)")
+        // ONE pass: the txn=<txnId>/ write IS the materialization (r21,
+        // opt guide §1.2). Outside the lock, so concurrent appends keep
+        // landing during a long rewrite: the snapshot's files are only
+        // UNREFERENCED by a commit, never deleted (vacuum removes them
+        // later), and a restart overwrites its own txn dir.
+        val newFiles = writeTxnData(table,
+          layout(readRewriteSnapshot(spark, table, snap)), dir("txn"))
+        // `# op:rewrite` = Delta's dataChange=false: the commit replaced
+        // files without logical change, so streaming readers may cross it
+        // contributing nothing. CHECK constraints and column mapping
+        // outlive a rewrite (the rewrite reads the RAW physical frame, so
+        // the new files keep the old physical names); pvals and delete
+        // vectors do NOT — they describe the replaced files.
+        Attempt(snap.files, prev =>
           Manifest.head(prev, Seq(txnId), Some(s"rewrite:$what")) ++
-            // CHECK constraints are table invariants — they outlive a
-            // rewrite (pvals/delete vectors do NOT: they describe the
-            // replaced files). Column mapping survives too: the rewrite
-            // reads the RAW physical frame, so the new files keep the old
-            // physical names and the mapping must keep resolving them.
             Manifest.carried(prev, Manifest.rewriteRetires) ++
-            headers(newFiles) ++ newFiles.map(Manifest.DataFile)
-        }
-      }
-    }
-    out
-  }
+            headers(newFiles) ++ newFiles.map(Manifest.DataFile))
+    }._1
 
   // ---- RESTORE (version rollback) ----
 
@@ -2801,9 +2610,7 @@ object Acid {
       s"restore: version $toV vacuumed (retention horizon is ${horizon(table)})")
     val target = manifestAt(table, toV)
     require(target.rootRelative, s"restore on snapshot-mode table $table")
-    commitNextVersion(table) { (c, prev) =>
-      if (prev.hasTxn(txnId)) Some(c.get) else None // replay
-    } { (_, prev) =>
+    commitNextVersion(table, Some(txnId))((_, _) => None) { (_, prev) =>
       // the op:restore stamp lets change-feed readers tell a rollback from
       // a DML/fold commit — a restore that drops delete-vector lines
       // resurrects keys in SURVIVING files, which no file diff can see
@@ -2905,7 +2712,7 @@ object Acid {
         .agg(aggs.head, aggs.tail: _*)
         .collect() // O(files) rows — manifest-construction control plane
         .flatMap { r =>
-          val f = root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString
+          val f = relFile(root, r.getString(0))
           zCols.zipWithIndex.map { case ((n, _), i) =>
             Manifest.MinMax(f, n, r.getLong(2 * i + 1), r.getLong(2 * i + 2))
           }
@@ -3059,6 +2866,11 @@ object Acid {
   def skipFilesBloom(table: String, v: Long, statsName: String,
       key: Long): (Seq[String], Seq[String]) = {
     val m = manifestAt(table, v)
+    (bloomKept(m, statsName, key), m.files)
+  }
+
+  /** The files of `m` whose `statsName` bloom does not rule `key` out. */
+  private def bloomKept(m: Manifest, statsName: String, key: Long): Seq[String] = {
     // (words, versioned): the `h2` token marks blooms written with the
     // widened 2^31-1 pre-mod (ADVICE r19 — versioning the hash in the
     // stat line lets new blooms probe ONLY the new position pair; the
@@ -3067,8 +2879,7 @@ object Acid {
     val blooms = m.blooms.filter(_.name == statsName)
       .map(b => b.file -> (b.words, b.versioned)).toMap
     def hasBit(w: Array[Long], p: Int): Boolean = (w(p / 64) >>> (p % 64) & 1L) == 1L
-    val all = m.files
-    val kept = all.filter(f =>
+    m.files.filter(f =>
       blooms.get(f).forall { case (w, versioned) =>
         // width is per-line (adaptive blooms; mixed generations coexist)
         val bits = w.length * 64
@@ -3090,7 +2901,6 @@ object Acid {
           newHit || (hasBit(w, q1) && hasBit(w, q2))
         }
       })
-    (kept, all)
   }
 
   /** Point-lookup data-skipping read: drop every file whose bloom proves
@@ -3524,30 +3334,9 @@ object Acid {
     * against the branch's own ledger; main never sees the commit. */
   def appendTxnBranch(spark: SparkSession, table: String, name: String,
       df: DataFrame, txnId: Long): Long = withWriterLock(table) {
-    val (base, head) = branches(table).getOrElse(name,
-      sys.error(s"Acid.appendTxnBranch: no branch '$name' at $table"))
-    val prev = branchLines(table, name)
-    if (prev.hasTxn(txnId)) return head // replay → no-op
-    // Global-ledger guard (ADVICE r16, Delta's txnAppId contract): a txn id
-    // already committed to MAIN but absent from this branch's own ledger is
-    // a cross-incarnation replay — after a merge/cherry-pick publish, main
-    // permanently references files under branch=<name>/txn=<id>/, and a
-    // re-created branch replaying that id would overwrite (mode=overwrite)
-    // published data files, silently corrupting main's committed snapshot.
-    // The branch-local ledger (fork base ∪ branch commits) already no-ops
-    // legitimate same-incarnation replays above; anything else refuses.
-    require(!committedTxns(table).contains(txnId),
-      s"Acid.appendTxnBranch: txn $txnId is already committed on main at " +
-        s"$table but not on branch '$name' — a published txn's data files " +
-        s"must never be overwritten by a branch replay; use a fresh txn id")
-    val root = Paths.get(table)
-    val dataDir = root.resolve(s"branch=$name").resolve(s"txn=$txnId")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    val files = listParquet(table, dataDir)
-    val k = head + 1
-    commitBranch(table, name, base, k, appendManifest(prev, Seq(txnId), files) :+
-      Manifest.Dml(k, "append", txnId, "-", None, files))
-    k
+    writeLoop(table, Branch(name), txnId, "appendTxnBranch") {
+      (snap, dir) => appendAttempt(spark, table, df, txnId, snap, dir, "appendTxnBranch")
+    }._1
   }
 
   /** Read the branch head (fork base ∪ branch commits, standing delete
@@ -3573,33 +3362,21 @@ object Acid {
   def mergeCowBranch(spark: SparkSession, table: String, name: String,
       changes: DataFrame, keyCol: String, txnId: Long,
       opCol: Option[String] = None): (Long, Int, Int) = withWriterLock(table) {
-    val (base, head) = branches(table).getOrElse(name,
-      sys.error(s"Acid.mergeCowBranch: no branch '$name' at $table"))
-    val prev = branchLines(table, name)
-    if (prev.hasTxn(txnId))
-      return (head, 0, prev.files.size) // replay → no-op
-    require(!committedTxns(table).contains(txnId),
-      s"Acid.mergeCowBranch: txn $txnId is already committed on main at " +
-        s"$table but not on branch '$name' — use a fresh txn id")
-    require(prev.rootRelative,
-      s"mergeCowBranch on snapshot-mode table $table")
-    // Persist the LOGICAL change frame under the branch namespace before
-    // touching anything — the op log's merge entry points at this copy, so
-    // [[rebaseBranchDml]] can re-run the exact same MERGE against a future
-    // base (and the merge itself consumes the frozen copy, making the
-    // rewrite deterministic even for a nondeterministic `changes` plan).
-    val chgDir = Paths.get(table).resolve(s"branch=$name").resolve(s"chg=$txnId")
-    changes.write.mode("overwrite").parquet(chgDir.toString)
-    val chgFiles = listParquet(table, chgDir)
-    val changesSaved = readParquetCached(spark, chgFiles.map(f => s"$table/$f"))
-    val m = cowMergeAttempt(spark, table, prev, changesSaved, keyCol, opCol,
-      Paths.get(table).resolve(s"branch=$name").resolve(s"txn=$txnId"),
-      Paths.get(table).resolve(s"branch=$name").resolve(s"del=$txnId"),
-      "mergeCowBranch")
-    val k1 = head + 1
-    commitBranch(table, name, base, k1, m.manifest(prev, txnId) :+
-      Manifest.Dml(k1, "merge", txnId, keyCol, opCol, chgFiles))
-    (k1, m.touched.size, m.total)
+    writeLoop(table, Branch(name), txnId, "mergeCowBranch") { (snap, dir) =>
+      // Persist the LOGICAL change frame under the branch namespace before
+      // touching anything — the op log's merge entry points at this copy,
+      // so [[rebaseBranchDml]] can re-run the exact same MERGE against a
+      // future base (and the merge itself consumes the frozen copy, making
+      // the rewrite deterministic even for a nondeterministic `changes`
+      // plan).
+      val chgDir = dir("chg")
+      changes.write.mode("overwrite").parquet(chgDir.toString)
+      val chgFiles = listParquet(table, chgDir)
+      cowMergeAttempt(spark, table, snap,
+        readParquetCached(spark, chgFiles.map(f => s"$table/$f")), keyCol, opCol,
+        txnId, dir, "mergeCowBranch")
+        .copy(log = Some(Manifest.Dml(0L, "merge", txnId, keyCol, opCol, chgFiles)))
+    }
   }
 
   /** Merge-on-read DELETE on a BRANCH: the branch's standing vector grows
@@ -3608,85 +3385,26 @@ object Acid {
     * vector. Branch-ledger idempotent; same replay guard as appends. */
   def deleteTxnBranch(spark: SparkSession, table: String, name: String,
       keys: DataFrame, keyCol: String, txnId: Long): Long = withWriterLock(table) {
-    val (base, head) = branches(table).getOrElse(name,
-      sys.error(s"Acid.deleteTxnBranch: no branch '$name' at $table"))
-    val prev = branchLines(table, name)
-    if (prev.hasTxn(txnId)) return head // replay → no-op
-    require(!committedTxns(table).contains(txnId),
-      s"Acid.deleteTxnBranch: txn $txnId is already committed on main at " +
-        s"$table but not on branch '$name' — use a fresh txn id")
-    require(prev.delKey.forall(_ == keyCol),
-      s"deleteTxnBranch: branch uses delete key ${prev.delKey.getOrElse("")}, got $keyCol")
-    val delDir = Paths.get(table).resolve(s"branch=$name").resolve(s"del=$txnId")
-    keys.select(col(keyCol)).distinct()
-      .coalesce(1).write.mode("overwrite").parquet(delDir.toString)
-    val delFiles = listParquet(table, delDir)
-    val k1 = head + 1
-    commitBranch(table, name, base, k1, deleteManifest(prev, txnId, keyCol, delFiles) :+
-      Manifest.Dml(k1, "delete", txnId, keyCol, None, delFiles))
-    k1
+    writeLoop(table, Branch(name), txnId, "deleteTxnBranch") {
+      (snap, dir) => deleteAttempt(table, keys, keyCol, txnId, snap, dir, "deleteTxnBranch")
+    }._1
   }
 
   // ---- predicate COW UPDATE / DELETE on a BRANCH (r20 — lifts sql_txn's
   // INSERT/MERGE-only restriction: native UPDATE/DELETE statements inside
   // BEGIN/COMMIT compile to these) ----
 
-  private final case class CowWhere(touched: Seq[String],
-      newFiles: Seq[String], total: Int) {
-    def manifest(prev: Manifest, txnId: Long): Seq[Manifest.Entry] =
-      rewriteManifest(prev, txnId, touched, newFiles)
-  }
-
-  /** One predicate-COW attempt over explicit manifest lines —
-    * [[cowWhere]]'s per-attempt body lifted to the branch/rebase seam:
-    * probe the files containing a predicate-matching row over the LOGICAL
-    * frame, rewrite only those through the update/delete transform
-    * (standing vectors subtracted first, so a hidden row can neither
-    * update nor resurrect), write under `dataDir`, constraint-check the
-    * WRITTEN bytes (write-then-verify, the one-action contract). The
-    * standing vector lines carry forward unchanged — the rewritten files
-    * already have hidden rows removed; the lines keep hiding them in
-    * survivors, exactly [[cowWhere]]'s contract. */
-  private def cowWhereAttempt(spark: SparkSession, table: String,
-      snap: Manifest, kind: String, setCols: Seq[String],
-      setExprs: Seq[String], predSql: String, dataDir: Path,
-      what: String): CowWhere = {
-    val pred = expr(predSql)
-    val all = snap.files
-    val root = Paths.get(table).toAbsolutePath
-    val touched = if (all.isEmpty) Seq.empty[String]
-    else readLogical(spark, table, snap, all)
-      .filter(pred)
-      .select(input_file_name().as("f")).distinct()
-      .collect() // O(files) rows — manifest-construction control plane
-      .map(r => root.relativize(Paths.get(java.net.URI.create(r.getString(0)))).toString)
-      .sorted.toSeq
-    val newFiles =
-      if (touched.isEmpty) Seq.empty[String]
-      else {
-        val base = subtractDeletes(spark, table, snap,
-          readLogical(spark, table, snap, touched))
-        val out = kind match {
-          case "updwhere" =>
-            setCols.foreach(c => require(base.columns.contains(c),
-              s"$what: no column $c"))
-            val bySet = setCols.zip(setExprs).toMap
-            base.select(base.columns.toSeq.map { c =>
-              bySet.get(c) match {
-                case Some(e) => when(pred, expr(e)).otherwise(col(c)).as(c)
-                case None    => col(c)
-              }
-            }: _*)
-          case "delwhere" => base.filter(!coalesce(pred, lit(false)))
-          case other => sys.error(s"$what: unknown predicate-COW kind '$other'")
-        }
-        out.write.mode("overwrite").parquet(dataDir.toString)
-        val nf = listParquet(table, dataDir)
-        checkWrittenConstraints(spark, table, snap, nf, what)
-        nf
-      }
-    CowWhere(touched, newFiles, all.size)
-  }
+  /** [[cowWhereAttempt]] for a statement held as SQL text — the form the
+    * branch op log freezes (`kind` is `updwhere` or `delwhere`). */
+  private def sqlWhereAttempt(spark: SparkSession, table: String,
+      snap: Manifest, txnId: Long, kind: String, setCols: Seq[String],
+      setExprs: Seq[String], predSql: String, dir: String => Path,
+      what: String): Attempt =
+    cowWhereAttempt(spark, table, snap, txnId, expr(predSql), kind match {
+      case "updwhere" => Some(setCols.zip(setExprs.map(expr)))
+      case "delwhere" => None
+      case other => sys.error(s"$what: unknown predicate-COW kind '$other'")
+    }, lineage = false, dir, what)
 
   /** Predicate COW UPDATE on a BRANCH — [[updateWhere]]'s semantics
     * against the branch head, main never sees a byte (touched fork-base
@@ -3719,35 +3437,23 @@ object Acid {
       name: String, kind: String, sets: Seq[(String, String)],
       predSql: String, txnId: Long,
       what: String): (Long, Int, Int) = withWriterLock(table) {
-    val (base, head) = branches(table).getOrElse(name,
-      sys.error(s"Acid.$what: no branch '$name' at $table"))
-    val prev = branchLines(table, name)
-    if (prev.hasTxn(txnId))
-      return (head, 0, prev.files.size) // replay → no-op
-    require(!committedTxns(table).contains(txnId),
-      s"Acid.$what: txn $txnId is already committed on main at $table " +
-        s"but not on branch '$name' — use a fresh txn id")
-    require(prev.rootRelative,
-      s"$what on snapshot-mode table $table")
-    require(!prev.hasLineage,
-      s"$what on row-lineage table $table — lineage DML goes through the " +
-        "lineage writers (they materialize ids through the rewrite)")
-    // freeze the LOGICAL statement for rebase replay (the mergeCowBranch
-    // chg= pattern, but the statement instead of a change frame — a
-    // predicate re-evaluates against the future base by design)
-    import spark.implicits._
-    val specDir = Paths.get(table).resolve(s"branch=$name").resolve(s"spec=$txnId")
-    Seq((kind, predSql, sets.map(_._1), sets.map(_._2)))
-      .toDF("kind", "pred", "set_cols", "set_exprs")
-      .coalesce(1).write.mode("overwrite").parquet(specDir.toString)
-    val specFiles = listParquet(table, specDir)
-    val w = cowWhereAttempt(spark, table, prev, kind, sets.map(_._1),
-      sets.map(_._2), predSql,
-      Paths.get(table).resolve(s"branch=$name").resolve(s"txn=$txnId"), what)
-    val k1 = head + 1
-    commitBranch(table, name, base, k1, w.manifest(prev, txnId) :+
-      Manifest.Dml(k1, kind, txnId, "-", None, specFiles))
-    (k1, w.touched.size, w.total)
+    writeLoop(table, Branch(name), txnId, what) { (snap, dir) =>
+      require(!snap.hasLineage,
+        s"$what on row-lineage table $table — lineage DML goes through the " +
+          "lineage writers (they materialize ids through the rewrite)")
+      // freeze the LOGICAL statement for rebase replay (the mergeCowBranch
+      // chg= pattern, but the statement instead of a change frame — a
+      // predicate re-evaluates against the future base by design)
+      import spark.implicits._
+      val specDir = dir("spec")
+      Seq((kind, predSql, sets.map(_._1), sets.map(_._2)))
+        .toDF("kind", "pred", "set_cols", "set_exprs")
+        .coalesce(1).write.mode("overwrite").parquet(specDir.toString)
+      val specFiles = listParquet(table, specDir)
+      sqlWhereAttempt(spark, table, snap, txnId, kind, sets.map(_._1),
+        sets.map(_._2), predSql, dir, what)
+        .copy(log = Some(Manifest.Dml(0L, kind, txnId, "-", None, specFiles)))
+    }
   }
 
   /** Publish a branch whose fork base is STILL main's head: main adopts
@@ -3763,31 +3469,20 @@ object Acid {
       // appendTxnCAS writers — a direct commitManifest would throw an
       // unhandled FileAlreadyExistsException on a lost race instead of
       // re-evaluating against the advanced head.
-      val v = commitNextVersion(table) { (cur, prev) =>
-        if (prev.hasTxn(txnId)) {
-          // txnId already on main: either OUR publish crashed between the
-          // commit and the ref retire, or an unrelated main commit happens
-          // to carry the same id. Retire the ref only on the completed-
-          // publish signature — every branch txn visible on main (ADVICE
-          // r16: an accidental collision must not destroy a live branch).
-          branches(table).get(name).foreach { _ =>
-            require(branchLines(table, name).txns.forall(prev.hasTxn),
-              s"fastForwardBranch: txn $txnId is already committed on main " +
-                s"at $table but branch '$name' holds unpublished commits — " +
-                s"txn-id collision, refusing to retire the branch ref")
-            dropBranchRefOnly(table, name)
-          }
-          Some(cur.get)
-        } else {
-          val (base, head) = branches(table).getOrElse(name,
-            sys.error(s"Acid.fastForwardBranch: no branch '$name' at $table"))
-          val c = cur.get
-          require(c == base,
-            s"fastForwardBranch: main advanced ($base -> $c) since the fork — " +
-              s"use mergeBranch")
-          if (head < 0) { dropBranchRefOnly(table, name); Some(c) } // empty
-          else None
-        }
+      // txnId already on main: either OUR publish crashed between the
+      // commit and the ref retire, or an unrelated main commit happens to
+      // carry the same id — retire the ref only on the completed-publish
+      // signature ([[retireIfPublished]])
+      val v = commitNextVersion(table, Some(txnId),
+          retireIfPublished(table, name, txnId, "fastForwardBranch")) { (cur, _) =>
+        val (base, head) = branches(table).getOrElse(name,
+          sys.error(s"Acid.fastForwardBranch: no branch '$name' at $table"))
+        val c = cur.get
+        require(c == base,
+          s"fastForwardBranch: main advanced ($base -> $c) since the fork — " +
+            s"use mergeBranch")
+        if (head < 0) { dropBranchRefOnly(table, name); Some(c) } // empty
+        else None
       } { (_, _) =>
         val br = branchLines(table, name)
         // the # dml: op log is branch-scope replay metadata — main never
@@ -3812,21 +3507,11 @@ object Acid {
       // Same claim-protocol routing as [[fastForwardBranch]] (ADVICE r16):
       // the build re-derives against whatever head the claim serialized on,
       // so a racing appendTxnCAS makes the merge rebase, not throw.
-      val v = commitNextVersion(table) { (cur, prev) =>
-        if (prev.hasTxn(txnId)) {
-          branches(table).get(name).foreach { _ =>
-            require(branchLines(table, name).txns.forall(prev.hasTxn),
-              s"mergeBranch: txn $txnId is already committed on main at " +
-                s"$table but branch '$name' holds unpublished commits — " +
-                s"txn-id collision, refusing to retire the branch ref")
-            dropBranchRefOnly(table, name)
-          }
-          Some(cur.get)
-        } else {
-          branches(table).getOrElse(name,
-            sys.error(s"Acid.mergeBranch: no branch '$name' at $table"))
-          None
-        }
+      val v = commitNextVersion(table, Some(txnId),
+          retireIfPublished(table, name, txnId, "mergeBranch")) { (_, _) =>
+        branches(table).getOrElse(name,
+          sys.error(s"Acid.mergeBranch: no branch '$name' at $table"))
+        None
       } { (_, curLines) =>
         val (base, _) = branches(table)(name)
         val (newTxns, newFiles) =
@@ -3977,6 +3662,16 @@ object Acid {
     require(collided.isEmpty,
       s"rebaseBranchDml: txn ids committed on both main and branch " +
         s"'$name' since the fork: ${collided.mkString(", ")}")
+    // fresh dirs per (op, base, THIS rebase's txn): a later rebase onto
+    // another base must not overwrite files an earlier rebase published —
+    // and (ADVICE r18) a SECOND rebase at the SAME main head with a fresh
+    // txnId must not overwrite dirs the branch's current head manifest
+    // still references (part-file names are not stable; an overwrite
+    // deletes the old files mid-read and leaves the superseded head
+    // dangling). Keying by the rebase's own txnId makes every rebase write
+    // fresh dirs.
+    def replayDir(opTxn: Long)(d: String): Path =
+      Paths.get(table).resolve(s"branch=$name").resolve(s"$d=$opTxn-r$cur-t$txnId")
     // replay the logical history, oldest first, against main's head
     var state: Manifest = curLines
     ops.foreach { op =>
@@ -3992,22 +3687,8 @@ object Acid {
           deleteManifest(state, op.txn, op.keyCol, op.files)
         case "merge" =>
           val changes = readParquetCached(spark, op.files.map(f => s"$table/$f"))
-          // fresh dirs per (op, base, THIS rebase's txn): a later rebase
-          // onto another base must not overwrite files an earlier rebase
-          // published — and (ADVICE r18) a SECOND rebase at the SAME main
-          // head with a fresh txnId must not overwrite dirs the branch's
-          // current head manifest still references (part-file names are
-          // not stable; an overwrite deletes the old files mid-read and
-          // leaves the superseded head dangling). Keying by the rebase's
-          // own txnId makes every rebase write fresh dirs.
-          val m = cowMergeAttempt(spark, table, state, changes, op.keyCol,
-            op.opCol,
-            Paths.get(table).resolve(s"branch=$name")
-              .resolve(s"txn=${op.txn}-r$cur-t$txnId"),
-            Paths.get(table).resolve(s"branch=$name")
-              .resolve(s"del=${op.txn}-r$cur-t$txnId"),
-            "rebaseBranchDml")
-          m.manifest(state, op.txn)
+          cowMergeAttempt(spark, table, state, changes, op.keyCol, op.opCol,
+            op.txn, replayDir(op.txn), "rebaseBranchDml").manifest(state)
         case "updwhere" | "delwhere" =>
           // replay the frozen LOGICAL statement against the current state
           // — the predicate re-probes the future base from scratch, so
@@ -4015,14 +3696,11 @@ object Acid {
           // delete intent exactly as if the operator had forked today
           val spec = spark.read
             .parquet(op.files.map(f => s"$table/$f"): _*).head()
-          val w = cowWhereAttempt(spark, table, state, op.kind,
+          sqlWhereAttempt(spark, table, state, op.txn, op.kind,
             spec.getAs[scala.collection.Seq[String]]("set_cols").toSeq,
             spec.getAs[scala.collection.Seq[String]]("set_exprs").toSeq,
-            spec.getAs[String]("pred"),
-            Paths.get(table).resolve(s"branch=$name")
-              .resolve(s"txn=${op.txn}-r$cur-t$txnId"),
-            "rebaseBranchDml")
-          w.manifest(state, op.txn)
+            spec.getAs[String]("pred"), replayDir(op.txn),
+            "rebaseBranchDml").manifest(state)
         case other => sys.error(s"rebaseBranchDml: unknown op kind '$other'")
       })
     }
@@ -4068,18 +3746,14 @@ object Acid {
     // Claim-protocol commit like every other publish path (ADVICE r16): a
     // racing appendTxnCAS rebases this pick instead of surfacing as an
     // unhandled FileAlreadyExistsException.
-    commitNextVersion(table) { (cur, prev) =>
-      if (prev.hasTxn(txnId)) {
-        // completed-pick signature: the picked branch commit itself is on
-        // main. An unrelated commit merely sharing our publish id must not
-        // silently skip the pick (ADVICE r16).
-        require(prev.hasTxn(branchTxn),
-          s"cherryPick: txn $txnId is already committed on main at $table " +
-            s"but picked commit $branchTxn is not — txn-id collision, " +
-            s"refusing to skip the pick")
-        Some(cur.get)
-      } else None
-    } { (_, curLines) =>
+    // a replay must show the completed-pick signature: the picked branch
+    // commit itself is on main. An unrelated commit merely sharing our
+    // publish id must not silently skip the pick (ADVICE r16).
+    commitNextVersion(table, Some(txnId), prev =>
+      require(prev.hasTxn(branchTxn),
+        s"cherryPick: txn $txnId is already committed on main at $table " +
+          s"but picked commit $branchTxn is not — txn-id collision, " +
+          s"refusing to skip the pick"))((_, _) => None) { (_, curLines) =>
       require(curLines.rootRelative,
         s"cherryPick on snapshot-mode table $table")
       require(!curLines.hasTxn(branchTxn),
@@ -4087,6 +3761,20 @@ object Acid {
       appendManifest(curLines, Seq(branchTxn, txnId), picked)
     }
   }
+
+  /** A publish replay (its txn already on main): retire the branch ref,
+    * but only on the completed-publish signature — every branch txn
+    * visible on main (ADVICE r16: an accidental txn-id collision must not
+    * destroy a live branch). */
+  private def retireIfPublished(table: String, name: String, txnId: Long,
+      what: String)(main: Manifest): Unit =
+    branches(table).get(name).foreach { _ =>
+      require(branchLines(table, name).txns.forall(main.hasTxn),
+        s"$what: txn $txnId is already committed on main at $table but " +
+          s"branch '$name' holds unpublished commits — txn-id collision, " +
+          s"refusing to retire the branch ref")
+      dropBranchRefOnly(table, name)
+    }
 
   private def dropBranchRefOnly(table: String, name: String): Unit = {
     Files.deleteIfExists(branchRef(table, name))
@@ -4318,14 +4006,14 @@ object Acid {
       .head.getLong(0)
     if (bad > 0) throw new ConstraintViolationException(
       s"$name ($predicate): $bad existing rows violate it")
-    commitNextVersion(table) { (cur, prev) =>
+    commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined, s"Acid.addConstraint: no committed version at $table")
       require(prev.rootRelative,
         s"addConstraint on snapshot-mode table $table")
       val dup = prev.constraints.find(_.name == name)
       require(dup.forall(_.pred == predicate),
         s"addConstraint: constraint $name already exists with a different predicate")
-      if (prev.hasTxn(txnId)) Some(cur.get) else None
+      None
     } { (_, prev) =>
       metadataCommit(prev, txnId, Seq(Manifest.Constraint(name, predicate)))
     }

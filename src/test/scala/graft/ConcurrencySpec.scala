@@ -421,7 +421,7 @@ class ConcurrencySpec extends SparkFixture {
     // (CAS takes no writer lock, so this interleave is real under
     // concurrency — the hook just makes it deterministic)
     @volatile var fired = false
-    Acid.eraseKeysRaceHook = () => if (!fired) {
+    Acid.raceHook = () => if (!fired) {
       fired = true
       Acid.appendTxnCAS(spark, table, rows(500, 7), txnId = 20L)
     }
@@ -429,7 +429,7 @@ class ConcurrencySpec extends SparkFixture {
       val (_, rewritten, _) =
         Acid.eraseKeys(spark, table, Seq(5L, 105L), "k", "k", txnId = 21L)
       assert(rewritten > 0, "bloom-pruned erase found no candidate files")
-    } finally Acid.eraseKeysRaceHook = () => ()
+    } finally Acid.raceHook = () => ()
     assert(fired, "race hook never fired — the test exercised nothing")
     val state = Acid.read(spark, table)
     assert(state.filter(col("k") >= 500).count() == 7L,
@@ -608,44 +608,79 @@ class ConcurrencySpec extends SparkFixture {
     assert(Acid.branches(table).isEmpty, "merge must retire the branch ref")
   }
 
-  test("predicate-COW DML rebases onto a racing append: the racer's matching rows are deleted too") {
+  /** A lock-free appender in flight against `table`, made deterministic:
+    * its rows land under `txn=99/` (the CAS protocol's data-first phase)
+    * and it holds the claim on the next version. `op` runs in a future;
+    * once `op` has started a Spark job (so it has read its snapshot), the
+    * racer commits that version — the head's ledger plus txn 99, every
+    * carried header, the head's files plus its own — and flips the
+    * pointer. Returns the racer's version and `op`'s outcome. */
+  private def raceOneAppend[T](table: String,
+      racer: org.apache.spark.sql.DataFrame, what: String)(
+      op: => T): (Long, scala.util.Try[T]) = {
     import graft.ops.Acid
-    import org.apache.spark.sql.functions.col
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val table = java.nio.file.Files.createTempDirectory("graft_cow_race").toString + "/t"
-    Acid.appendTxn(spark, table,
-      spark.range(0, 50).select(col("id").as("k")), txnId = 0L) // v0
-    // a racer "in flight": it holds the claim on v1 with data already
-    // landed (the CAS protocol's data-first phase) — rows 5..8 MATCH the
-    // delete predicate below, so a stale-snapshot commit that skipped the
-    // rebase would silently leave them alive
-    Files.createFile(Paths.get(table, "claim-1"))
-    spark.range(100, 110).select(col("id").as("k"))
-      .unionAll(spark.range(5, 9).select(col("id").as("k")))
-      .coalesce(1).write.mode("overwrite").parquet(s"$table/txn=99")
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val v0 = Acid.currentVersion(table).get
+    val v1 = v0 + 1
+    racer.coalesce(1).write.mode("overwrite").parquet(s"$table/txn=99")
     val racerFiles = {
       val walk = Files.walk(Paths.get(table, "txn=99"))
       try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
         .map(p => Paths.get(table).relativize(p).toString).toSeq.sorted
       finally walk.close()
     }
-    val fut = Future { Acid.deleteWhere(spark, table, col("k") < 10, txnId = 5L) }
-    Thread.sleep(400) // the DML is spinning on the racer's claim
-    assert(!fut.isCompleted, "deleteWhere bypassed the claim protocol")
-    // the racer commits v1 and flips the pointer
-    val prev = Files.readAllLines(Paths.get(table, "manifest-0.txt")).asScala
-      .map(_.trim).filter(_.nonEmpty).toSeq
-    Files.write(Paths.get(table, "manifest-1.txt"),
-      (("# base:." +: (prev.filter(_.startsWith("# txn:")) :+ "# txn:99")) ++
-        prev.filterNot(_.startsWith("#")) ++ racerFiles)
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    val tmp = Paths.get(table, "_current.tmp.race")
-    Files.write(tmp, "1".getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(table, "_current"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val (v, touched, _) = Await.result(fut, 120.seconds)
+    Files.createFile(Paths.get(table, s"claim-$v1"))
+    val group = s"race-$what-${System.nanoTime()}"
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          started.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val fut = Future {
+        spark.sparkContext.setJobGroup(group, what)
+        try op finally spark.sparkContext.clearJobGroup()
+      }
+      assert(started.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        s"$what never started a Spark job")
+      Thread.sleep(300) // let it finish its attempt and spin on the claim
+      assert(!fut.isCompleted, s"$what bypassed the claim protocol")
+      val prev = Files.readAllLines(Paths.get(table, s"manifest-$v0.txt")).asScala
+        .map(_.trim).filter(_.nonEmpty)
+        .filterNot(l => l.startsWith("# op:") || l.startsWith("# cdc:")).toSeq
+      val lastTxn = prev.lastIndexWhere(_.startsWith("# txn:"))
+      val lines = (prev.take(lastTxn + 1) :+ "# txn:99") ++
+        prev.drop(lastTxn + 1) ++ racerFiles
+      Files.write(Paths.get(table, s"manifest-$v1.txt"),
+        lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+      val tmp = Paths.get(table, "_current.tmp.race")
+      Files.write(tmp, v1.toString.getBytes("UTF-8"))
+      Files.move(tmp, Paths.get(table, "_current"),
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      (v1, Await.ready(fut, 120.seconds).value.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("predicate-COW DML rebases onto a racing append: the racer's matching rows are deleted too") {
+    import graft.ops.Acid
+    import org.apache.spark.sql.functions.col
+    val table = java.nio.file.Files.createTempDirectory("graft_cow_race").toString + "/t"
+    Acid.appendTxn(spark, table,
+      spark.range(0, 50).select(col("id").as("k")), txnId = 0L) // v0
+    // rows 5..8 of the racer MATCH the delete predicate below, so a
+    // stale-snapshot commit that skipped the rebase would silently leave
+    // them alive
+    val (_, out) = raceOneAppend(table,
+      spark.range(100, 110).select(col("id").as("k"))
+        .unionAll(spark.range(5, 9).select(col("id").as("k"))), "deleteWhere") {
+      Acid.deleteWhere(spark, table, col("k") < 10, txnId = 5L)
+    }
+    val (v, touched, _) = out.get
     assert(v == 2L, s"deleteWhere did not rebase onto the racer's commit: v$v")
     assert(touched >= 2, s"the rebased probe must re-find the racer's file: $touched")
     val got = Acid.read(spark, table).select(col("k")).collect()
@@ -653,6 +688,149 @@ class ConcurrencySpec extends SparkFixture {
     assert(got == ((10L until 50L) ++ (100L until 110L)),
       s"stale-snapshot DML leaked the racer's matching rows: $got")
   }
+
+  test("stale-snapshot retry table: every row-level DML and rewrite either rebases onto a racing append or fails loudly, never drops the racer's rows") {
+    import graft.ops.Acid
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    def base(lo: Long, hi: Long): DataFrame =
+      spark.range(lo, hi).select(col("id").as("k"), (col("id") * 10).as("x"))
+    // the racer's rows: ten fresh keys plus keys 5..8, which every
+    // predicate and change set below touches
+    val racer = base(100, 110).unionAll(base(5, 9).withColumn("x", lit(-1L)))
+    def keys(t: String): Seq[Long] =
+      Acid.read(spark, t).select(col("k")).as[Long].collect().sorted.toSeq
+    def xOf(t: String, k: Long): Seq[Long] = Acid.read(spark, t)
+      .filter(col("k") === k).select(col("x")).as[Long].collect().sorted.toSeq
+    val allKeys = ((0L until 50L) ++ (5L until 9L) ++ (100L until 110L)).sorted
+    // applied: the op commits on top of the racer and `check` holds;
+    // loud: the op throws naming `loud`, and the table stays at the racer's
+    // version
+    final case class Row(what: String, setup: String => Unit,
+        op: String => Any, check: String => Unit = _ => (),
+        loud: Option[String] = None)
+    def plain(t: String): Unit = Acid.appendTxn(spark, t, base(0, 50), 0L)
+    def lineage(t: String): Unit = { plain(t); Acid.assignRowIds(spark, t, 1L); () }
+    val rows = Seq(
+      Row("updateWhere", plain,
+        t => Acid.updateWhere(spark, t, Seq("x" -> lit(1000L)), col("k") < 10, 50L),
+        t => {
+          assert(keys(t) == allKeys)
+          assert((0L until 10L).forall(k => xOf(t, k).forall(_ == 1000L)),
+            "the racer's matching rows were not updated")
+        }),
+      Row("mergeCow", plain,
+        t => Acid.mergeCow(spark, t, Seq((5L, 777L), (105L, 777L)).toDF("k", "x"), "k", 50L),
+        t => {
+          assert(keys(t) == (allKeys.filterNot(_ == 5L) :+ 5L).sorted)
+          assert(xOf(t, 5L) == Seq(777L) && xOf(t, 105L) == Seq(777L),
+            s"merge missed the racer's copy of a key: ${xOf(t, 5L)} ${xOf(t, 105L)}")
+        }),
+      Row("optimize", plain,
+        t => Acid.optimize(spark, t, 50L, targetFiles = 1),
+        t => assert(keys(t) == allKeys)),
+      Row("compactDeletes",
+        t => { plain(t); Acid.deleteTxn(spark, t, Seq(0L, 1L).toDF("k"), "k", 1L); () },
+        t => Acid.compactDeletes(spark, t, 50L),
+        t => {
+          assert(keys(t) == allKeys.filterNot(Set(0L, 1L)))
+          assert(Acid.headManifest(t).deletes.isEmpty, "vector not folded")
+        }),
+      Row("optimizeWhere",
+        t => { Acid.appendTxnEvolved(spark, t, base(0, 50).withColumn("p", col("k") % 2),
+          0L, Seq("p")); () },
+        t => Acid.optimizeWhere(spark, t, 50L, targetFiles = 1, part = ("p", 0L)),
+        t => assert(keys(t) == allKeys)),
+      Row("updateWhereLineage", lineage,
+        t => Acid.updateWhereLineage(spark, t, Seq("x" -> lit(1000L)), col("k") < 10, 50L),
+        loud = Some("assignRowIds")),
+      Row("mergeCowLineage", lineage,
+        t => Acid.mergeCowLineage(spark, t, Seq((5L, 777L)).toDF("k", "x"), "k", 50L),
+        loud = Some("assignRowIds")),
+      Row("optimizeLineage", lineage,
+        t => Acid.optimizeLineage(spark, t, 50L, targetFiles = 1),
+        loud = Some("assignRowIds")))
+    rows.foreach { r =>
+      val t = java.nio.file.Files.createTempDirectory(s"graft_retry_${r.what}").toString + "/t"
+      r.setup(t)
+      val racerRows = if (r.what == "optimizeWhere") racer.withColumn("p", col("k") % 2) else racer
+      val (racerV, out) = raceOneAppend(t, racerRows, r.what)(r.op(t))
+      val ledger = Acid.committedTxns(t)
+      assert(ledger.contains(99L), s"${r.what}: the racer's txn left the ledger")
+      r.loud match {
+        case Some(msg) =>
+          val e = out.failed.getOrElse(fail(s"${r.what}: expected a loud failure, got $out"))
+          assert(e.getMessage.contains(msg), s"${r.what}: ${e.getMessage}")
+          assert(Acid.currentVersion(t).contains(racerV),
+            s"${r.what}: the table moved past the racer's version")
+          assert(!ledger.contains(50L), s"${r.what}: the failed op committed")
+          assert(keys(t) == allKeys, s"${r.what}: the racer's rows were lost")
+        case None =>
+          assert(out.isSuccess, s"${r.what}: $out")
+          assert(Acid.currentVersion(t).contains(racerV + 1),
+            s"${r.what}: did not commit on top of the racer")
+          assert(ledger.contains(50L), s"${r.what}: op txn missing")
+          r.check(t)
+      }
+    }
+  }
+
+  test("Spark job count per Acid call on a tiny table: appendTxnCAS, mergeCow, deleteTxn, optimize, updateWhere, eraseKeys") {
+    import graft.ops.Acid
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("jobpin-"))
+          .foreach(g => started.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    // jobs one call starts, counted by job group; a marker job in a second
+    // group follows, and the listener bus delivers start events in order,
+    // so once the marker is seen every job of the call has been counted
+    def jobs(name: String)(call: => Any): Int = {
+      sc.setJobGroup(s"jobpin-$name", name)
+      try call finally sc.clearJobGroup()
+      sc.setJobGroup(s"jobpin-$name-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!started.containsKey(s"jobpin-$name-marker")) {
+        assert(System.currentTimeMillis() < deadline, s"marker job of $name never seen")
+        Thread.sleep(10)
+      }
+      Option(started.get(s"jobpin-$name")).fold(0)(_.intValue)
+    }
+    val t = java.nio.file.Files.createTempDirectory("graft_jobpin").toString + "/t"
+    def rows(ks: Seq[Long]) = ks.map(k => (k, k * 10)).toDF("k", "x")
+    sc.addSparkListener(listener)
+    val got = try {
+      Acid.appendTxn(spark, t, rows(0L until 8L), 0L)
+      Seq(
+        "appendTxnCAS" -> jobs("appendTxnCAS") {
+          Acid.appendTxnCAS(spark, t, rows(8L until 12L), 1L) },
+        "mergeCow" -> jobs("mergeCow") {
+          Acid.mergeCow(spark, t, rows(Seq(3L, 20L)), "k", 2L) },
+        "deleteTxn" -> jobs("deleteTxn") {
+          Acid.deleteTxn(spark, t, Seq(4L).toDF("k"), "k", 3L) },
+        "optimize" -> jobs("optimize") {
+          Acid.optimize(spark, t, 4L, targetFiles = 2) },
+        "updateWhere" -> jobs("updateWhere") {
+          Acid.updateWhere(spark, t, Seq("x" -> lit(-1L)), col("k") < 2, 5L) },
+        "eraseKeys" -> jobs("eraseKeys") {
+          Acid.eraseKeys(spark, t, Seq(6L), "k", "k", 6L) })
+    } finally sc.removeSparkListener(listener)
+    // a structural budget, free of timing noise: a change to the commit
+    // path that adds or drops a Spark action moves one of these counts
+    assert(got == Seq("appendTxnCAS" -> 1, "mergeCow" -> 8, "deleteTxn" -> 1,
+      "optimize" -> 4, "updateWhere" -> 3, "eraseKeys" -> 1), s"$got")
+    assert(Acid.read(spark, t).select(col("k")).as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 2L, 3L, 5L, 7L, 8L, 9L, 10L, 11L, 20L))
+  }
+
   test("updateWhereCAS conflict matrix: disjoint rebases, read-set rewrite / vector / matching append abort, overlap serializes or aborts") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -978,14 +1156,14 @@ class ConcurrencySpec extends SparkFixture {
     // list that drops the racer's file — and the retry must fail LOUDLY
     // (the racer's file has no id assignment; silently erasing around it
     // would be a lie), never silently lose the racer's rows
-    Acid.eraseKeysLineageRaceHook = () => {
-      Acid.eraseKeysLineageRaceHook = () => () // fire once
+    Acid.raceHook = () => {
+      Acid.raceHook = () => () // fire once
       Acid.appendTxnCAS(spark, t, Seq((500L, 1L)).toDF("k", "x"), 10L)
       ()
     }
     val e = intercept[RuntimeException] {
       try Acid.eraseKeysLineage(spark, t, Seq(3L, 7L), "k", "k", 11L)
-      finally Acid.eraseKeysLineageRaceHook = () => ()
+      finally Acid.raceHook = () => ()
     }
     assert(e.getMessage.contains("assignRowIds"), e.getMessage)
     // nothing committed by the aborted erase; the racer's row is intact

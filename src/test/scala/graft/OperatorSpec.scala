@@ -3359,6 +3359,17 @@ class OperatorSpec extends SparkFixture {
       s"pure-insert merge ids wrong: ${after2(300L)}, ${after2(301L)}")
     assert(after2.removedAll(Seq(300L, 301L)) == full,
       "pure-insert merge disturbed existing rows")
+    // a CHECK constraint binds lineage MERGE too: a violating insert is
+    // refused from the written rows and the table does not advance
+    Acid.addConstraint(spark, t, "k_small", "k < 1000", 8L)
+    val vBefore = Acid.currentVersion(t)
+    intercept[graft.ops.ConstraintViolationException] {
+      Acid.mergeCowLineage(spark, t,
+        Seq((1L, "v"), (1000L, "bad")).toDF("k", "s"), "k", 9L)
+    }
+    assert(Acid.currentVersion(t) == vBefore, "a refused lineage MERGE advanced the table")
+    assert(!Acid.committedTxns(t).contains(9L))
+    assert(ids() == after2, "a refused lineage MERGE changed the rows")
   }
 
   test("change feeds refuse RESTORE across a vector commit even when files were also removed; vector adds still flow") {
