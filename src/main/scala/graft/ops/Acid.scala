@@ -85,17 +85,19 @@ object Acid {
       sys.error(s"Acid.headManifest: no committed version at $table")))
 
   /** Read the committed snapshot: pointer → manifest → exactly those
-    * files. `basePath` keeps hive-style partition columns (`d=...`)
-    * derivable from the explicit file list. */
+    * files, through [[scan]]. */
   def read(spark: SparkSession, table: String): DataFrame =
     readVersion(spark, table, currentVersion(table).getOrElse(
       sys.error(s"Acid.read: no committed version at $table")))
 
-  /** Schema-evolution read: like [[read]] but unions the per-file schemas
-    * (`mergeSchema`) so files written before a column existed surface it
-    * as NULL — additive evolution without rewriting a byte of old data
-    * (the Delta `mergeSchema` / Iceberg add-column contract; renames/type
-    * changes need column-id mapping, out of scope). At 100 TB the merged
+  /** Schema-evolution read: like [[read]] but ALWAYS unions the per-file
+    * schemas (`mergeSchema`) so files written before a column existed
+    * surface it as NULL — additive evolution without rewriting a byte of
+    * old data (the Delta `mergeSchema` / Iceberg add-column contract) —
+    * even on a table whose manifest records no evolution entry. Renames,
+    * drops and defaults ([[renameColumn]], [[dropColumn]],
+    * [[addColumnDefault]]) resolve over the union through the manifest's
+    * column mapping; type changes are out of scope. At 100 TB the merged
     * schema comes from the table's metadata, not a footer sweep — the
     * manifest seam is where that metadata would live; mergeSchema over
     * the manifest's explicit file list models the same read semantics. */
@@ -106,8 +108,7 @@ object Acid {
     require(m.rootRelative, s"readEvolved on snapshot-mode table $table")
     // merge-on-read applies to evolved reads too (ADVICE r11: skipping the
     // subtraction here silently resurrected deleted rows)
-    subtractDeletes(spark, table, m, resolveEvolution(m.evolution,
-      readMergedSchema(spark, m.files.map(f => s"$table/$f"))))
+    subtractDeletes(spark, table, m, readLogical(spark, table, m, m.files, merged = true))
   }
 
   /** Per-file parquet footer schemas, cached per (absolute path, size,
@@ -171,16 +172,8 @@ object Acid {
     })
   }
 
-  /** Plain parquet read of committed (immutable) files with the schema
-    * supplied from the cached footers instead of Spark's inference JOB
-    * (r21, opt guide §1.2: every schema-less `spark.read.parquet` launches
-    * a one-footer "parquet at ..." job — pure per-job floor, 6–11 of them
-    * per lakehouse DML key). Byte-equal to the plain read: same footer,
-    * same converter, `asNullable` because file-source inference forces
-    * nullability; any footer disagreement or unreadable footer falls back
-    * to the genuine inferring read. Explicit FILE paths only (no
-    * directory/partition discovery semantics — callers needing `basePath`
-    * partition derivation keep the plain reader). */
+  /** `dt` with every nested field, element and value nullable — what
+    * file-source inference reports for a parquet schema. */
   private def toNullable(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
     dt match {
@@ -194,6 +187,16 @@ object Acid {
     }
   }
 
+  /** Plain parquet read of committed (immutable) files with the schema
+    * supplied from the cached footers instead of Spark's inference JOB
+    * (r21, opt guide §1.2: every schema-less `spark.read.parquet` launches
+    * a one-footer "parquet at ..." job — pure per-job floor, 6–11 of them
+    * per lakehouse DML key). Byte-equal to the plain read: same footer,
+    * same converter, `asNullable` because file-source inference forces
+    * nullability; any footer disagreement or unreadable footer falls back
+    * to the genuine inferring read. Explicit FILE paths only (no
+    * directory/partition discovery semantics — snapshot-mode tables, whose
+    * partition columns come from `basePath`, read through [[scan]]). */
   private[graft] def readParquetCached(spark: SparkSession,
       paths: Seq[String]): DataFrame = {
     val fast: Option[org.apache.spark.sql.types.StructType] =
@@ -440,11 +443,6 @@ object Acid {
       }
     }
 
-  /** Merge-on-read: subtract the manifest's standing equality-delete
-    * vectors from `base`. The delete set is tiny relative to the data, so
-    * AQE broadcasts it and the data side never shuffles — the read-path
-    * cost deleteTxn's O(keys) commit defers to here. Shared by every read
-    * path that resolves a manifest ([[readVersion]], [[readEvolved]]). */
   /** SQL-side path normalization (fold `..`/`.`/empty segments) so a
     * vector row's `<root>/<f>` concat compares equal to the driver-side
     * `Paths.normalize` string even across shallow-clone generations
@@ -456,43 +454,52 @@ object Acid {
       "when x = '.' or x = '' then acc " +
       "else concat(acc, array(x)) end), '/'))"
 
+  /** Merge-on-read: subtract the manifest's standing delete vectors from
+    * `base0`. The delete set is tiny relative to the data, so AQE
+    * broadcasts it and the data side never shuffles — the read-path cost
+    * deleteTxn's O(keys) commit defers to here. Every read of a manifest
+    * goes through here ([[scan]], [[readEvolved]], the lineage and
+    * rewrite frames). With `provenance` each surviving row also carries
+    * its data file (`_file`, table-relative) and row position (`_pos`) —
+    * the [[readPositions]] view. */
   private def subtractDeletes(spark: SparkSession, table: String,
-      m: Manifest, base0: DataFrame): DataFrame = {
+      m: Manifest, base0: DataFrame, provenance: Boolean = false): DataFrame = {
     // POSITIONAL vectors first (Iceberg v2 positional deletes / Delta
     // deletion vectors): (file, row-position) pairs anti-join against the
     // scan's own provenance (`_metadata.row_index` + a broadcast O(files)
     // uri→relpath map). Must run BEFORE the equality anti-join — provenance
     // columns only resolve on the raw file scan.
     val pdelFiles = m.pdels
-    val base = if (pdelFiles.isEmpty) base0 else {
-      val cols = base0.columns.toSeq
-      val files = m.files
+    val base = if (pdelFiles.isEmpty && !provenance) base0 else {
+      val cols = base0.columns.toSeq.map(col)
       // join on NORMALIZED ABSOLUTE paths: vector rows store paths relative
       // to the root of the table that WROTE the vector, which after a
       // shallow clone is not this table's root — each vector file's own
       // location (…/<root>/pdel=<txn>/…) names that root, so resolving
-      // against it keeps zero-copy clones honoring inherited vectors
-      val uriMap = spark.createDataFrame(files.map { f =>
+      // against it keeps zero-copy clones honoring inherited vectors.
+      // A plain read joins left: a file outside the manifest (a staged wap
+      // file) has no vector row to match.
+      val uriMap = spark.createDataFrame(m.files.map { f =>
         val p = Paths.get(table, f).toAbsolutePath.normalize
-        (p.toUri.toString, p.toString)
-      }).toDF("__uri", "__abs")
-      val pd = pdelFiles.map { pf =>
+        (p.toUri.toString, f, p.toString)
+      }).toDF("__uri", "__file", "__abs")
+      val tagged = try base0
+        .withColumn("__uri", input_file_name())
+        .withColumn("__pp", col("_metadata.row_index"))
+        .join(org.apache.spark.sql.functions.broadcast(uriMap), Seq("__uri"),
+          if (provenance) "inner" else "left")
+      catch { case e: org.apache.spark.sql.AnalysisException => sys.error(
+        s"positional delete vectors on $table need file provenance this " +
+          s"read path cannot carry — compactDeletes first (${e.getMessage})") }
+      val kept = if (pdelFiles.isEmpty) tagged else tagged.join(pdelFiles.map { pf =>
         val root = Paths.get(table, pf).toAbsolutePath.normalize
           .getParent.getParent
         readParquetCached(spark, Seq(s"$table/$pf"))
           .select(expr(normPathExpr(s"concat('$root/', f)")).as("__abs"),
             col("pos").as("__pp"))
-      }.reduce(_ unionByName _).distinct()
-      val tagged = try base0
-        .withColumn("__uri", input_file_name())
-        .withColumn("__pp", col("_metadata.row_index"))
-      catch { case e: org.apache.spark.sql.AnalysisException => sys.error(
-        s"positional delete vectors on $table need file provenance this " +
-          s"read path cannot carry — compactDeletes first (${e.getMessage})") }
-      tagged
-        .join(org.apache.spark.sql.functions.broadcast(uriMap), Seq("__uri"), "left")
-        .join(pd, Seq("__abs", "__pp"), "left_anti")
-        .select(cols.map(col): _*)
+      }.reduce(_ unionByName _).distinct(), Seq("__abs", "__pp"), "left_anti")
+      kept.select((if (!provenance) cols
+        else cols :+ col("__file").as("_file") :+ col("__pp").as("_pos")): _*)
     }
     m.standingDeletes match {
       case Some((k, delFiles)) =>
@@ -512,40 +519,8 @@ object Acid {
     * kinds) already subtracted, so survivors-of-record are what you see. */
   def readPositions(spark: SparkSession, table: String): DataFrame = {
     val m = headManifest(table)
-    val files = m.files
-    val base = readParquetCached(spark, files.map(f => s"$table/$f"))
-    val cols = base.columns.toSeq
-    val uriMap = spark.createDataFrame(files.map { f =>
-      val p = Paths.get(table, f).toAbsolutePath.normalize
-      (p.toUri.toString, f, p.toString)
-    }).toDF("__uri", "_file", "__abs")
-    val tagged = base
-      .withColumn("__uri", input_file_name())
-      .withColumn("_pos", col("_metadata.row_index"))
-      .join(org.apache.spark.sql.functions.broadcast(uriMap), Seq("__uri"))
-      .select((cols.map(col) :+ col("_file") :+ col("_pos") :+ col("__abs")): _*)
-    // subtract standing vectors by hand (the helper would re-tag); vector
-    // rows resolve against the root that WROTE them (clone-safe, same
-    // rule as subtractDeletes)
-    val pdelFiles = m.pdels
-    val p1 = if (pdelFiles.isEmpty) tagged else {
-      val pd = pdelFiles.map { pf =>
-        val root = Paths.get(table, pf).toAbsolutePath.normalize
-          .getParent.getParent
-        readParquetCached(spark, Seq(s"$table/$pf"))
-          .select(expr(normPathExpr(s"concat('$root/', f)")).as("__abs"),
-            col("pos").as("_pos"))
-      }.reduce(_ unionByName _).distinct()
-      tagged.join(pd, Seq("__abs", "_pos"), "left_anti")
-    }
-    val p2 = m.standingDeletes match {
-      case Some((k, delFiles)) =>
-        val dels = readParquetCached(spark, delFiles.map(f => s"$table/$f"))
-          .select(col(k)).distinct()
-        p1.join(dels, Seq(k), "left_anti")
-      case None => p1
-    }
-    p2.drop("__abs")
+    subtractDeletes(spark, table, m,
+      readParquetCached(spark, m.files.map(f => s"$table/$f")), provenance = true)
   }
 
   /** List a just-written directory's parquet files, table-relative,
@@ -652,7 +627,6 @@ object Acid {
     require(v >= 0 && v <= cur, s"version $v not committed (current is $cur)")
     require(v >= horizon(table),
       s"version $v vacuumed (retention horizon is ${horizon(table)})")
-    val m = manifestAt(table, v)
     // Time travel is LOGICAL-frame (r19, lifting the documented-raw
     // caveat): version v resolves through v's OWN colmap/coldefault lines
     // — an evolved snapshot surfaces post-rename names and default-filled
@@ -661,32 +635,45 @@ object Acid {
     // raw schema (the table as it then was — Delta's rule). The pre-r19
     // plain scan let an arbitrary footer win inference on
     // mixed-generation versions.
-    readSnapshot(spark, table, v, m)
+    val m = manifestAt(table, v)
+    scan(spark, table, m, m.files, v)
   }
 
-  /** Version `v`'s logical snapshot from its manifest `m` — shared by
-    * version and tag reads. */
-  private def readSnapshot(spark: SparkSession, table: String, v: Long,
-      m: Manifest): DataFrame = {
-    val base =
-      if (m.rootRelative) readLogical(spark, table, m, m.files)
-      else spark.read
-        .option("basePath", s"$table/v=$v")
-        .parquet(m.files.map(f => s"$table/v=$v/$f"): _*)
-    subtractDeletes(spark, table, m, base)
-  }
-
-  /** Commit `df` as the next version of `table`: write data, write the
-    * manifest, then atomically flip the pointer. Returns the committed
-    * version. `partitionCols` hive-partitions the data dir.
+  /** The one read primitive: `files` of manifest `m` (version `v`) as the
+    * table's LOGICAL frame with the standing delete vectors subtracted.
+    * Every public reader resolves a manifest, chooses its files, and calls
+    * this; it owns the four decisions they must agree on:
     *
-    * `stats` optionally records a per-file zone map in the manifest:
-    * `(name, expr)` computes min/max of the long-valued `expr` for each
-    * written file (`# minmax:<file>|<name>|<min>|<max>` header lines), the
-    * same footer statistics Delta/Iceberg carry per data file. Here they
-    * cost one narrow re-read of the just-written version (fixture scale);
-    * at 100 TB writers harvest them from the parquet footers they just
-    * produced — zero extra reads. [[readSkipping]] is the consumer. */
+    *  1. addressing — a root-relative (`# base:.`) manifest names files
+    *     from the table root ([[readLogical]]); a snapshot-mode manifest
+    *     names them under `v=<n>/`, read with `basePath` so hive-style
+    *     partition columns (`d=...`) derive from the paths;
+    *  2. the schema-stable empty frame — no file chosen (a prune that
+    *     kept nothing) is a legitimate empty RESULT, not an error (ADVICE
+    *     r14): zero rows over the schema of ALL of `m`'s files,
+    *     footer-unioned so no generation's column drops (ADVICE r15);
+    *  3. the logical frame — colmap/coldrop/coldefault entries resolve
+    *     post-rename names and default-filled values over a footer union;
+    *  4. merge-on-read — [[subtractDeletes]].
+    *
+    * Files outside `m` (a staged wap batch) read under `m`'s rules: its
+    * column mapping resolves them and its equality vector hides their
+    * keys. */
+  private def scan(spark: SparkSession, table: String, m: Manifest,
+      files: Seq[String], v: Long = -1L): DataFrame = {
+    val empty = files.isEmpty
+    val fs = if (empty) m.files else files
+    require(fs.nonEmpty, s"Acid: empty manifest at $table")
+    val frame =
+      if (m.rootRelative) readLogical(spark, table, m, fs, merged = empty)
+      else {
+        require(v >= 0, s"Acid: snapshot-mode read of $table needs its version")
+        spark.read.option("basePath", s"$table/v=$v")
+          .parquet(fs.map(f => s"$table/v=$v/$f"): _*)
+      }
+    if (empty) frame.limit(0) else subtractDeletes(spark, table, m, frame)
+  }
+
   // ---- file-level bloom filters (point-lookup skipping) ----
   // m = 4096 bits (64 int64 words), k = 2 positions per key. The position
   // arithmetic pre-mods the key to ≤ 10^6 so every product stays far below
@@ -781,10 +768,29 @@ object Acid {
     * claimant ever builds `manifest-<v>` (ADVICE r11: with claims only on
     * the CAS path, a lock-path writer racing a CAS writer could both build
     * the same version and the later pointer flip silently discarded the
-    * other's committed transaction). Returns true iff this caller owns v. */
-  private def claimVersion(table: String, v: Long): Boolean =
-    try { Files.createFile(Paths.get(table, s"claim-$v")); true }
-    catch { case _: FileAlreadyExistsException => false }
+    * other's committed transaction). Returns the claim's identity
+    * ([[claimId]]) iff this caller owns v. */
+  private def claimVersion(table: String, v: Long): Option[AnyRef] =
+    try Some(claimId(Files.createFile(Paths.get(table, s"claim-$v"))))
+    catch { case _: FileAlreadyExistsException => None }
+
+  /** Which claim file `p` is — its file key (the inode), or its creation
+    * time where the file system has none. A reclaimed claim moved aside
+    * and re-created by another writer is a different file. */
+  private def claimId(p: Path): AnyRef = {
+    val a = Files.readAttributes(p, classOf[java.nio.file.attribute.BasicFileAttributes])
+    Option(a.fileKey).getOrElse(a.creationTime)
+  }
+
+  /** Give back claim `id` on `v` after its build failed before writing
+    * `manifest-<v>` — without this the next writer waits out
+    * [[ClaimStaleMs]]. A claim a stale-claim reclaimer has since handed to
+    * another writer is a different file and stays. */
+  private def releaseClaim(table: String, v: Long, id: AnyRef): Unit = {
+    val claim = Paths.get(table, s"claim-$v")
+    try { if (claimId(claim) == id) Files.deleteIfExists(claim); () }
+    catch { case _: java.io.IOException => () } // reclaimed and gone already
+  }
 
   /** Staleness horizon for claim expiry (ms). Generous on purpose: a live
     * claimant slower than this that later commits would race its
@@ -841,7 +847,12 @@ object Acid {
         case Some(short) => out = short; done = true
         case None =>
           val v = cur.map(_ + 1).getOrElse(0L)
-          if (claimVersion(table, v)) {
+          val claim = claimVersion(table, v)
+          if (claim.isDefined) {
+            // a build that throws leaves no manifest-<v>: give the claim back
+            val entries =
+              try build(v, prev)
+              catch { case e: Throwable => releaseClaim(table, v, claim.get); throw e }
             // manifest-<v> is opened CREATE_NEW: if our claim was expired as
             // stale by a reclaimer whose winner already committed v, the
             // write fails here (never silently overwriting the other
@@ -849,7 +860,7 @@ object Acid {
             // advanced state like any other lost race. A manifest present
             // with the pointer still BELOW v is an orphan from a crashed
             // run — unrecoverable without operator action, so fail loudly.
-            try { out = commitManifest(table, v, build(v, prev)); done = true }
+            try { out = commitManifest(table, v, entries); done = true }
             catch { case e: FileAlreadyExistsException =>
               // brief wait for a racing winner's pointer flip before calling
               // the manifest an orphan
@@ -880,12 +891,24 @@ object Acid {
     out
   }
 
-  /** Snapshot commit. `txnId` makes it IDEMPOTENT (the foreachBatch
-    * exactly-once contract for non-append sinks, Delta's `txnAppId`/
-    * `txnVersion` shape): the id rides the manifest's `# txn:` ledger, a
-    * replayed commit whose id is already in the ledger no-ops — so a
-    * restarted micro-batch that re-commits derived state (e.g. an
-    * incrementally-maintained MV) can never double-apply its delta. */
+  /** Snapshot commit: commit `df` as the next version of `table` — write
+    * data, write the manifest, then atomically flip the pointer. Returns
+    * the committed version. `partitionCols` hive-partitions the data dir.
+    *
+    * `stats` optionally records a per-file zone map in the manifest:
+    * `(name, expr)` computes min/max of the long-valued `expr` for each
+    * written file (`# minmax:<file>|<name>|<min>|<max>` header lines), the
+    * same footer statistics Delta/Iceberg carry per data file. Here they
+    * cost one narrow re-read of the just-written version (fixture scale);
+    * at 100 TB writers harvest them from the parquet footers they just
+    * produced — zero extra reads. [[readSkipping]] is the consumer.
+    *
+    * `txnId` makes it IDEMPOTENT (the foreachBatch exactly-once contract
+    * for non-append sinks, Delta's `txnAppId`/`txnVersion` shape): the id
+    * rides the manifest's `# txn:` ledger, a replayed commit whose id is
+    * already in the ledger no-ops — so a restarted micro-batch that
+    * re-commits derived state (e.g. an incrementally-maintained MV) can
+    * never double-apply its delta. */
   def commit(spark: SparkSession, table: String, df: DataFrame,
       partitionCols: Seq[String] = Nil,
       stats: Option[(String, Column)] = None,
@@ -1311,10 +1334,10 @@ object Acid {
       // evaluates NULL for them and a bare filter would DROP them from
       // rewritten files while identical rows in pruned files survive
       // (r19 review); coalesce keeps them, deleteWhere's three-valued rule.
-      val frame =
-        if (lineage) lineageFrameFor(spark, table, snap, candidates, what)
-        else readLogical(spark, table, snap, candidates)
-      val scrubbed = subtractDeletes(spark, table, snap, frame)
+      val scrubbed = (
+        if (lineage) subtractDeletes(spark, table, snap,
+          lineageFrameFor(spark, table, snap, candidates, what))
+        else scan(spark, table, snap, candidates))
         .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
       writeTxnDataChecked(spark, table,
         if (lineage) scrubbed.withColumnRenamed("row_id", "__row_id") else scrubbed,
@@ -1346,8 +1369,7 @@ object Acid {
     val rewritten = {
       val basePart =
         if (touched.isEmpty) upserts.limit(0)
-        else subtractDeletes(spark, table, snap,
-          readLogical(spark, table, snap, touched))
+        else scan(spark, table, snap, touched)
           .join(allKeys, Seq(keyCol), "left_anti")
       basePart.unionByName(upserts)
     }
@@ -1491,21 +1513,29 @@ object Acid {
       .join(keys, Seq(keyCol), "left_semi")
       .select(col("f")).distinct()
 
-  /** The LOGICAL frame of a file subset: a plain scan normally;
-    * footer-union + column mapping + defaults when the manifest mixes
-    * schema generations. This is what row-level DML probes and rewrites
-    * evaluate against (r18 — lifting the blanket refusal): predicates and
-    * key joins see post-evolution names and default-filled values, and
-    * the rewrite lands the logical schema — the carried colmap/coldefault
-    * lines keep resolving the UNTOUCHED files while rewritten files are
-    * simply current-generation (Delta's DML-on-column-mapped-tables
-    * behavior). */
-  private def readLogical(spark: SparkSession, table: String,
-      m: Manifest, files: Seq[String]): DataFrame =
-    if (m.evolution.isEmpty)
+  /** The PHYSICAL frame of a root-relative file subset: a plain scan
+    * normally; the footer union when the manifest mixes schema
+    * generations (carries evolution entries — a plain scan would let an
+    * ARBITRARY footer win schema inference, ADVICE r17) or when `merged`
+    * asks for it. Every generation's stored columns survive. */
+  private def readPhysical(spark: SparkSession, table: String, m: Manifest,
+      files: Seq[String], merged: Boolean = false): DataFrame =
+    if (m.evolution.isEmpty && !merged)
       readParquetCached(spark, files.map(f => s"$table/$f"))
-    else resolveEvolution(m.evolution,
-      readMergedSchema(spark, files.map(f => s"$table/$f")))
+    else readMergedSchema(spark, files.map(f => s"$table/$f"))
+
+  /** The LOGICAL frame of a root-relative file subset: [[readPhysical]]
+    * with the manifest's column mapping and defaults resolved (a no-op on
+    * a table without evolution entries). This is what reads see, and what
+    * row-level DML probes and rewrites evaluate against (r18 — lifting the
+    * blanket refusal): predicates and key joins see post-evolution names
+    * and default-filled values, and the rewrite lands the logical schema —
+    * the carried colmap/coldefault lines keep resolving the UNTOUCHED
+    * files while rewritten files are simply current-generation (Delta's
+    * DML-on-column-mapped-tables behavior). */
+  private def readLogical(spark: SparkSession, table: String, m: Manifest,
+      files: Seq[String], merged: Boolean = false): DataFrame =
+    resolveEvolution(m.evolution, readPhysical(spark, table, m, files, merged))
 
   // ---- predicate-based row-level UPDATE / DELETE (copy-on-write) ----
 
@@ -1531,9 +1561,10 @@ object Acid {
     val touched = touchedFiles(spark, table, snap)(
       _.filter(pred).select(input_file_name().as("f")).distinct())
     val newFiles = if (touched.isEmpty) Seq.empty[String] else {
-      val base = subtractDeletes(spark, table, snap,
-        if (lineage) lineageFrameFor(spark, table, snap, touched, what)
-        else readLogical(spark, table, snap, touched))
+      val base =
+        if (lineage) subtractDeletes(spark, table, snap,
+          lineageFrameFor(spark, table, snap, touched, what))
+        else scan(spark, table, snap, touched)
       val out = sets match {
         case Some(ss) =>
           // one simultaneous projection: every SET expression sees the
@@ -1860,26 +1891,17 @@ object Acid {
     }
   }
 
-  /** Partition-tuple pruning over version `v`: keep each file whose
-    * recorded tuple (empty when none) passes `keep`. An all-pruned
-    * predicate is a legitimate empty RESULT, not an error (ADVICE r14:
-    * pruning is an optimization, never a semantics change) — it reads as a
-    * schema-stable empty frame over the table's merged schema. Returns
-    * (frame, kept, total). */
+  /** Partition-tuple pruning over version `v`: [[scan]] each file whose
+    * recorded tuple (empty when none) passes `keep` (an all-pruned
+    * predicate reads as [[scan]]'s empty frame). Returns (frame, kept,
+    * total). */
   private def readPruned(spark: SparkSession, table: String, v: Long,
       what: String)(keep: Map[String, String] => Boolean): (DataFrame, Int, Int) = {
     val m = manifestAt(table, v)
     require(m.rootRelative, s"$what on snapshot-mode table $table")
-    val files = m.files
-    val kept = files.filter(f => keep(m.pvals.get(f).fold(Map.empty[String, String])(_.values)))
-    if (kept.isEmpty) {
-      require(files.nonEmpty, s"$what: empty manifest at $table v$v")
-      val empty = readMergedSchema(spark, files.map(f => s"$table/$f")).limit(0)
-      (subtractDeletes(spark, table, m, empty), 0, files.size)
-    } else {
-      val base = readParquetCached(spark, kept.map(f => s"$table/$f"))
-      (subtractDeletes(spark, table, m, base), kept.size, files.size)
-    }
+    val kept = m.files.filter(f =>
+      keep(m.pvals.get(f).fold(Map.empty[String, String])(_.values)))
+    (scan(spark, table, m, kept), kept.size, m.files.size)
   }
 
   /** Metadata partition pruning across EVOLVED specs: keep a file unless
@@ -1953,9 +1975,7 @@ object Acid {
       sys.error(s"Acid.readWap: no committed version at $table"))
     val m = manifestAt(table, cur)
     require(m.rootRelative, s"readWap on snapshot-mode table $table")
-    val all = m.files ++ wapFiles(table, wapId)
-    subtractDeletes(spark, table, m,
-      readParquetCached(spark, all.map(f => s"$table/$f")))
+    scan(spark, table, m, m.files ++ wapFiles(table, wapId))
   }
 
   /** Publish a staged batch: a METADATA-ONLY commit through the same
@@ -2145,13 +2165,7 @@ object Acid {
       }
       require(sel.nonEmpty,
         s"optimizeWhere: no file's partition tuple names $name=$value")
-      // footer-union read under schema evolution, like [[readRewriteSnapshot]]
-      // — a plain scan would let an arbitrary footer drop a generation's
-      // stored column from the rewrite (ADVICE r17)
-      val selScan = if (snap.evolution.nonEmpty)
-        readMergedSchema(spark, sel.map(f => s"$table/$f"))
-      else readParquetCached(spark, sel.map(f => s"$table/$f"))
-      val merged = subtractDeletes(spark, table, snap, selScan)
+      val merged = readRewriteSnapshot(spark, table, snap, sel)
         .coalesce(targetFiles).cache()
       merged.count() // materialize BEFORE the lock
       Attempt(sel, { prev =>
@@ -2323,10 +2337,7 @@ object Acid {
     // projection), then applies colmap + defaults so both parts land the
     // post-evolution schema and union cleanly. Single-generation tables
     // take the exact pre-r19 path (plain scans, no-op mapping).
-    val mixed = m.evolution.nonEmpty
-    def rd(fs: Seq[String]) =
-      if (mixed) readMergedSchema(spark, fs.map(f => s"$table/$f"))
-      else readParquetCached(spark, fs.map(f => s"$table/$f"))
+    def rd(fs: Seq[String]) = readPhysical(spark, table, m, fs)
     def logical(df: DataFrame): DataFrame = resolveEvolution(m.evolution, df)
     val parts = Seq(
       if (lazyFiles.isEmpty) None else Some {
@@ -2534,22 +2545,17 @@ object Acid {
     }._1
   }
 
-  /** Rewrite-path snapshot read of a root-relative manifest: plain parquet
-    * normally; footer-UNION (`mergeSchema`) when the manifest mixes file
-    * GENERATIONS (carries evolution entries — a plain scan would let an
-    * ARBITRARY footer win schema inference and a carried default then
-    * masquerade the lost values, ADVICE r17) — the union frame keeps
-    * every generation's physical columns (pre-evolution rows surface NULL
-    * in later columns, exactly as they do on disk), so the carried
+  /** Rewrite-path read of `files` of a root-relative manifest — the
+    * PHYSICAL frame ([[readPhysical]]) with the standing vectors
+    * subtracted, deliberately not [[scan]]'s logical one: the union frame
+    * keeps every generation's physical columns (pre-evolution rows surface
+    * NULL in later columns, exactly as they do on disk), so the carried
     * colmap/coldefault lines keep resolving over the rewritten files and
-    * no stored value is lost. */
+    * no stored value is lost (a carried default would otherwise
+    * masquerade lost values, ADVICE r17). */
   private def readRewriteSnapshot(spark: SparkSession, table: String,
-      m: Manifest): DataFrame = {
-    val paths = m.files.map(f => s"$table/$f")
-    subtractDeletes(spark, table, m,
-      if (m.evolution.isEmpty) readParquetCached(spark, paths)
-      else readMergedSchema(spark, paths))
-  }
+      m: Manifest, files: Seq[String]): DataFrame =
+    subtractDeletes(spark, table, m, readPhysical(spark, table, m, files))
 
   /** Shared snapshot-rewrite of [[compactDeletes]] / [[optimize]] /
     * [[optimizeZorder]]: rewrite the merged current state through
@@ -2575,7 +2581,7 @@ object Acid {
         // UNREFERENCED by a commit, never deleted (vacuum removes them
         // later), and a restart overwrites its own txn dir.
         val newFiles = writeTxnData(table,
-          layout(readRewriteSnapshot(spark, table, snap)), dir("txn"))
+          layout(readRewriteSnapshot(spark, table, snap, snap.files)), dir("txn"))
         // `# op:rewrite` = Delta's dataChange=false: the commit replaced
         // files without logical change, so streaming readers may cross it
         // contributing nothing. CHECK constraints and column mapping
@@ -2783,19 +2789,11 @@ object Acid {
     val m = manifestAt(table, v)
     require(m.rootRelative,
       s"readSkippingAll on snapshot-mode table $table")
-    val all = m.files
-    require(all.nonEmpty, s"Acid.readSkippingAll: empty manifest at $table v$v")
-    val kept = preds.foldLeft(all) { case (fs, (name, lo, hi)) =>
+    val kept = preds.foldLeft(m.files) { case (fs, (name, lo, hi)) =>
       val (k, _) = skipFiles(table, v, name, lo, hi)
       fs.filter(k.contains)
     }
-    val base =
-      // schema-stable empty frame (ADVICE r15): build from ALL files with
-      // mergeSchema, like readPrunedEvolved — a single file's schema would
-      // silently drop evolved columns from the empty result
-      if (kept.isEmpty) readMergedSchema(spark, all.map(f => s"$table/$f")).limit(0)
-      else readParquetCached(spark, kept.map(f => s"$table/$f"))
-    (subtractDeletes(spark, table, m, base), kept.size, all.size)
+    (scan(spark, table, m, kept), kept.size, m.files.size)
   }
 
   /** Zone-map file lists for [[readSkipping]]: (kept, all) data files of
@@ -2822,27 +2820,14 @@ object Acid {
     * provably-dead files, it never substitutes for the filter. Works on
     * both snapshot-mode (`v=<n>/`-relative) and append-mode
     * (root-relative) manifests — the latter get their zone maps from
-    * [[optimize]]; standing delete vectors are subtracted so a skipping
-    * read never resurrects a deleted row. */
+    * [[optimize]]; the survivors read through [[scan]], so a skipping read
+    * sees [[read]]'s columns and never resurrects a deleted row. */
   def readSkipping(spark: SparkSession, table: String, statsName: String,
       lo: Long, hi: Long): DataFrame = {
     val v = currentVersion(table).getOrElse(
       sys.error(s"Acid.readSkipping: no committed version at $table"))
-    val (kept, all) = skipFiles(table, v, statsName, lo, hi)
-    require(all.nonEmpty, s"Acid.readSkipping: empty manifest at $table v$v")
-    val m = manifestAt(table, v)
-    val rootRel = m.rootRelative
-    val base = if (rootRel) table else s"$table/v=$v"
-    // append-mode files live under txn=<id>/ dirs: a basePath at the table
-    // root would hive-parse `txn` into a phantom partition column, so the
-    // root-relative branch reads explicit files bare (same as readVersion)
-    def rd(paths: Seq[String]) =
-      if (rootRel) readParquetCached(spark, paths)
-      else spark.read.option("basePath", base).parquet(paths: _*)
-    val df =
-      if (kept.isEmpty) rd(Seq(s"$base/${all.head}")).limit(0) // schema-stable empty
-      else rd(kept.map(f => s"$base/$f"))
-    subtractDeletes(spark, table, m, df)
+    scan(spark, table, manifestAt(table, v),
+      skipFiles(table, v, statsName, lo, hi)._1, v)
   }
 
   /** Per-file row counts of version `v`, from the manifest's `# rows:`
@@ -2908,19 +2893,15 @@ object Acid {
     * [[readSkipping]]; blooms cover the case zone maps cannot — a
     * high-cardinality key scattered across a table clustered on something
     * else entirely (here: who-did-what lookups on an event log
-    * hash-clustered by user bucket). Caller keeps the residual predicate. */
+    * hash-clustered by user bucket). Snapshot-mode blooms come from
+    * [[commit]], append-mode ones from [[optimize]]/[[analyzeTable]]; the
+    * survivors read through [[scan]]. Caller keeps the residual predicate. */
   def readBloomSkipping(spark: SparkSession, table: String, statsName: String,
       key: Long): DataFrame = {
     val v = currentVersion(table).getOrElse(
       sys.error(s"Acid.readBloomSkipping: no committed version at $table"))
-    val (kept, all) = skipFilesBloom(table, v, statsName, key)
-    require(all.nonEmpty, s"Acid.readBloomSkipping: empty manifest at $table v$v")
-    if (kept.isEmpty) spark.read
-      .option("basePath", s"$table/v=$v")
-      .parquet(s"$table/v=$v/${all.head}").limit(0) // schema-stable empty
-    else spark.read
-      .option("basePath", s"$table/v=$v")
-      .parquet(kept.map(f => s"$table/v=$v/$f"): _*)
+    val m = manifestAt(table, v)
+    scan(spark, table, m, bloomKept(m, statsName, key), v)
   }
 
   /** Change data feed — row-level changes committed in versions
@@ -3020,33 +3001,25 @@ object Acid {
           "commit?) — the resurrection is invisible to a file diff; " +
           "re-seed the consumer")
     }
-    val delsToFiles = delFiles(linesTo)
-    val newDelFiles = delsToFiles.filterNot(delFiles(linesFrom).toSet)
+    val newDelFiles = delFiles(linesTo).filterNot(delFiles(linesFrom).toSet)
     // added files read through toV's LOGICAL frame (r19 review: with
     // readVersion now logical, a raw read here would mix physical-named
     // inserts with logical-named deletes on an evolved table — a feed
     // window spanning a rename either threw on unionByName or emitted
-    // old-name rows a consumer cannot apply)
-    val insertsRaw =
-      if (added.isEmpty) readVersion(spark, table, toV).limit(0) // schema-stable
-      else readLogical(spark, table, linesTo, added.toSeq)
-    val insertTag = org.apache.spark.sql.functions.lit("insert")
-    keyOf(linesTo).filter(_ => delsToFiles.nonEmpty) match {
+    // old-name rows a consumer cannot apply), toV's standing vector
+    // subtracted
+    def inserts = scan(spark, table, linesTo, added)
+      .withColumn("change_type", lit("insert"))
+    keyOf(linesTo).filter(_ => newDelFiles.nonEmpty) match {
       case Some(k) =>
-        val standing = readParquetCached(spark, delsToFiles.map(f => s"$table/$f"))
+        val fresh = readParquetCached(spark, newDelFiles.map(f => s"$table/$f"))
           .select(col(k)).distinct()
-        val inserts = insertsRaw.join(standing, Seq(k), "left_anti")
-          .withColumn("change_type", insertTag)
-        if (newDelFiles.isEmpty) inserts
-        else {
-          val fresh = readParquetCached(spark, newDelFiles.map(f => s"$table/$f"))
-            .select(col(k)).distinct()
-          val deletes = readVersion(spark, table, fromV)
-            .join(fresh, Seq(k), "left_semi")
-            .withColumn("change_type", org.apache.spark.sql.functions.lit("delete"))
-          inserts.unionByName(deletes)
-        }
-      case None => insertsRaw.withColumn("change_type", insertTag)
+        val deletes = readVersion(spark, table, fromV)
+          .join(fresh, Seq(k), "left_semi")
+          .withColumn("change_type", lit("delete"))
+        // a delete-only window is its preimages alone, in fromV's schema
+        if (added.isEmpty) deletes else inserts.unionByName(deletes)
+      case None => inserts
     }
   }
 
@@ -3158,12 +3131,10 @@ object Acid {
         // added files. Equal (key, row) pairs cancel — that is what makes
         // a maintenance rewrite silent here.
         val oldRows = if (removed.isEmpty) snapshot
-          else nhKeys.foldLeft(subtractDeletes(spark, table, prev,
-            readParquetCached(spark, removed.map(f => s"$table/$f"))))(
+          else nhKeys.foldLeft(scan(spark, table, prev, removed))(
             (d, k) => d.join(k, Seq(keyCol), "left_anti"))
         val newRows = if (added.isEmpty) snapshot
-          else subtractDeletes(spark, table, cur,
-            readParquetCached(spark, added.map(f => s"$table/$f")))
+          else scan(spark, table, cur, added)
         val j = keyed(oldRows).as("o")
           .join(keyed(newRows).as("n"), col("o.__k") === col("n.__k"),
             "full_outer")
@@ -3245,7 +3216,8 @@ object Acid {
   def readTag(spark: SparkSession, table: String, name: String): DataFrame = {
     val v = tags(table).getOrElse(name,
       sys.error(s"Acid.readTag: no tag '$name' at $table"))
-    readSnapshot(spark, table, v, manifestAt(table, v)) // logical-frame (r19)
+    val m = manifestAt(table, v)
+    scan(spark, table, m, m.files, v) // logical-frame (r19)
   }
 
   // ---- branch refs (Iceberg branches / Nessie-style write-isolate-publish) ----
@@ -3347,7 +3319,7 @@ object Acid {
     * arbitrary footer drop a generation's columns (ADVICE r18 sweep). */
   def readBranch(spark: SparkSession, table: String, name: String): DataFrame = {
     val m = branchLines(table, name)
-    subtractDeletes(spark, table, m, readLogical(spark, table, m, m.files))
+    scan(spark, table, m, m.files)
   }
 
   /** Row-level MERGE INTO a BRANCH, copy-on-write — the dev-pipeline story

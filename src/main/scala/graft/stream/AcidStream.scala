@@ -301,42 +301,8 @@ object AcidStream {
           if (v == ev) math.min(ef, fs.size.toLong).toInt else fs.size
         if (from >= until) Seq.empty else fs.slice(from, until)
       }
-      val e = ev
-      if (files.isEmpty)
-        return asStreaming(
-          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema0))
-      // the engine's own parquet scan over exactly the committed files —
-      // pushdown, pruning, and codegen all intact; the schema is pinned
-      // at source creation so later table evolution cannot flip a
-      // running query's shape mid-stream (the fence above makes that
-      // loud). On an EVOLVED table the pinned shape is the logical frame:
-      // footer-union the generations, then resolve the pinned
-      // colmap/defaults — an old-generation file delivered after restart
-      // surfaces its renamed/defaulted columns exactly as batch reads do.
-      val batch =
-        if (evo0.isEmpty)
-          spark.read.schema(schema0).parquet(files.map(f => s"$table/$f"): _*)
-        else Acid.resolveEvolution(evo0,
-            Acid.readMergedSchema(spark, files.map(f => s"$table/$f")))
-          .select(schema0.fieldNames.map(col).toSeq: _*)
-      Acid.manifestAt(table, e).standingDeletes match {
-        case Some((k, delFiles)) =>
-          // merge-on-read applies to the feed too (ADVICE r13): a row
-          // appended under an already-standing delete vector is invisible
-          // in EVERY table read (appendManifest carries vectors forward),
-          // so the feed must not deliver it either. The anti-join plan
-          // cannot ride the leaf re-flag (it would become a stream-stream
-          // join), so wrap the planned RDD under one streaming leaf — the
-          // same bridge the CDF path uses.
-          val dels = Acid.readParquetCached(spark, delFiles.map(f => s"$table/$f"))
-            .select(col(k)).distinct()
-          val visible = batch.join(dels, Seq(k), "left_anti").select(
-            schema0.fieldNames.map(col).toSeq: _*)
-          org.apache.spark.sql.classic.GraftDatasetBridge.ofInternalRows(
-            spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-            visible.queryExecution.toRdd, visible.schema)
-        case None => asStreaming(batch)
-      }
+      batchOf(spark, table, files, schema0, evo0,
+        Acid.manifestAt(table, ev).standingDeletes)
     }
 
     /** CDF mode: emit ROW-LEVEL CHANGES per version — Delta CDF's
@@ -393,35 +359,72 @@ object AcidStream {
         if (evo0.isEmpty) parts
         else parts.map(p => Acid.resolveEvolution(evo0, p)
           .select(schema0.fieldNames.map(col).toSeq: _*))
-      val batch =
+      // the CDF plan contains semi/anti JOINS (delete preimages), so it
+      // rides the bridge
+      bridge(spark,
         if (resolved.isEmpty)
           spark.createDataFrame(java.util.Collections.emptyList[Row](), schema0)
-        else resolved.reduce(_.unionByName(_))
-      // the CDF plan contains semi/anti JOINS (delete preimages): leaf
-      // re-flagging would make them stream-stream joins, so wrap the
-      // planned RDD under ONE streaming leaf instead (the V1 Kafka-source
-      // getBatch pattern) — underneath it stays a plain batch plan
-      org.apache.spark.sql.classic.GraftDatasetBridge.ofInternalRows(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        batch.queryExecution.toRdd, batch.schema)
-    }
-
-    /** Re-flag the batch scan's leaf as streaming — what FileStreamSource
-      * itself does (a V1 getBatch result must report isStreaming=true;
-      * the plan is otherwise the ordinary parquet relation). */
-    private def asStreaming(df: DataFrame): DataFrame = {
-      val plan = df.queryExecution.analyzed.transform {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.copy(isStreaming = true)
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          l.copy(isStreaming = true)
-      }
-      org.apache.spark.sql.classic.GraftDatasetBridge.ofRows(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+        else resolved.reduce(_.unionByName(_)))
     }
 
     override def stop(): Unit = ()
   }
+
+  /** One micro-batch of committed `files` — the batch read of both
+    * sources. The engine's own parquet scan over exactly those files,
+    * pushdown, pruning and codegen intact, in the schema pinned at source
+    * creation so later table evolution cannot flip a running query's
+    * shape mid-stream (each source's fence makes that loud). On an
+    * EVOLVED table the pinned shape is the logical frame: footer-union the
+    * generations, then resolve the pinned colmap/defaults (`evo0`) — an
+    * old-generation file delivered after restart surfaces its
+    * renamed/defaulted columns exactly as batch reads do. Merge-on-read
+    * applies to the feed too (ADVICE r13): a row appended under an
+    * already-standing equality vector (`deletes`) is invisible in EVERY
+    * table read, so the feed must not deliver it either. */
+  private def batchOf(spark: SparkSession, table: String, files: Seq[String],
+      schema0: StructType, evo0: Seq[Manifest.Entry],
+      deletes: Option[(String, Seq[String])]): DataFrame = {
+    val cols = schema0.fieldNames.map(col).toSeq
+    if (files.isEmpty) return asStreaming(spark,
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema0))
+    val paths = files.map(f => s"$table/$f")
+    val batch =
+      if (evo0.isEmpty) spark.read.schema(schema0).parquet(paths: _*)
+      else Acid.resolveEvolution(evo0, Acid.readMergedSchema(spark, paths))
+        .select(cols: _*)
+    deletes match {
+      case Some((k, delFiles)) =>
+        // the anti-join plan cannot ride the leaf re-flag (it would become
+        // a stream-stream join), so it rides the bridge
+        val dels = Acid.readParquetCached(spark, delFiles.map(f => s"$table/$f"))
+          .select(col(k)).distinct()
+        bridge(spark, batch.join(dels, Seq(k), "left_anti").select(cols: _*))
+      case None => asStreaming(spark, batch)
+    }
+  }
+
+  /** Re-flag the batch scan's leaf as streaming — what FileStreamSource
+    * itself does (a V1 getBatch result must report isStreaming=true;
+    * the plan is otherwise the ordinary parquet relation). */
+  private def asStreaming(spark: SparkSession, df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed.transform {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        lr.copy(isStreaming = true)
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.copy(isStreaming = true)
+    }
+    org.apache.spark.sql.classic.GraftDatasetBridge.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+  }
+
+  /** Wrap a batch plan with joins under ONE streaming leaf (the V1
+    * Kafka-source getBatch pattern): leaf re-flagging would turn its joins
+    * into stream-stream joins; underneath it stays a plain batch plan. */
+  private def bridge(spark: SparkSession, df: DataFrame): DataFrame =
+    org.apache.spark.sql.classic.GraftDatasetBridge.ofInternalRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.queryExecution.toRdd, df.schema)
 
   /** Branch manifest at ordinal `k` of branch `name` (k == -1 → empty). */
   private def brLinesAt(table: String, name: String, k: Long): Manifest =
@@ -503,33 +506,11 @@ object AcidStream {
         val prev = brLinesAt(table, name, k - 1).files.toSet
         brLinesAt(table, name, k).files.filterNot(prev)
       }
-      if (files.isEmpty)
-        return org.apache.spark.sql.classic.GraftDatasetBridge.ofInternalRows(
-          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-          spark.createDataFrame(java.util.Collections.emptyList[Row](), schema0)
-            .queryExecution.toRdd, schema0)
-      // a branch forked from an evolved main reads the LOGICAL frame —
-      // the raw pinned-schema read would NULL every renamed column in
-      // old-generation files (the AcidSource r20 treatment)
-      val batch =
-        if (evo0.isEmpty)
-          spark.read.schema(schema0).parquet(files.map(f => s"$table/$f"): _*)
-        else Acid.resolveEvolution(evo0,
-            Acid.readMergedSchema(spark, files.map(f => s"$table/$f")))
-          .select(schema0.fieldNames.map(col).toSeq: _*)
+      // a branch forked from an evolved main reads the LOGICAL frame, and
       // the branch head's standing vectors (fork-base inheritance) apply
       // to the feed exactly as readBranch applies them to batch reads
-      val visible = brLinesAt(table, name, headOrdinals - 1).standingDeletes match {
-        case Some((k, delFiles)) =>
-          val dels = Acid.readParquetCached(spark, delFiles.map(f => s"$table/$f"))
-            .select(col(k)).distinct()
-          batch.join(dels, Seq(k), "left_anti")
-            .select(schema0.fieldNames.map(col).toSeq: _*)
-        case None => batch
-      }
-      org.apache.spark.sql.classic.GraftDatasetBridge.ofInternalRows(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        visible.queryExecution.toRdd, visible.schema)
+      batchOf(spark, table, files, schema0, evo0,
+        brLinesAt(table, name, headOrdinals - 1).standingDeletes)
     }
 
     override def stop(): Unit = ()

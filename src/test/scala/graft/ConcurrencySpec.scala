@@ -821,14 +821,82 @@ class ConcurrencySpec extends SparkFixture {
         "updateWhere" -> jobs("updateWhere") {
           Acid.updateWhere(spark, t, Seq("x" -> lit(-1L)), col("k") < 2, 5L) },
         "eraseKeys" -> jobs("eraseKeys") {
-          Acid.eraseKeys(spark, t, Seq(6L), "k", "k", 6L) })
+          Acid.eraseKeys(spark, t, Seq(6L), "k", "k", 6L) },
+        // the reads the benchmark's lakehouse round runs: the head, time
+        // travel to the append, the feed of the delete step
+        "read" -> jobs("read") { Acid.read(spark, t).collect() },
+        "readVersion" -> jobs("readVersion") {
+          Acid.readVersion(spark, t, 1L).collect() },
+        "changeFeedRow" -> jobs("changeFeedRow") {
+          Acid.changeFeedRow(spark, t, 2L, 3L, "k").collect() })
     } finally sc.removeSparkListener(listener)
     // a structural budget, free of timing noise: a change to the commit
-    // path that adds or drops a Spark action moves one of these counts
+    // or read path that adds or drops a Spark action moves one of these
+    // counts
     assert(got == Seq("appendTxnCAS" -> 1, "mergeCow" -> 8, "deleteTxn" -> 1,
-      "optimize" -> 4, "updateWhere" -> 3, "eraseKeys" -> 1), s"$got")
+      "optimize" -> 4, "updateWhere" -> 3, "eraseKeys" -> 1,
+      "read" -> 1, "readVersion" -> 1, "changeFeedRow" -> 5), s"$got")
     assert(Acid.read(spark, t).select(col("k")).as[Long].collect().sorted.toSeq ==
       Seq(0L, 1L, 2L, 3L, 5L, 7L, 8L, 9L, 10L, 11L, 20L))
+  }
+
+  test("a commit whose build throws gives its version claim back; a claim reclaimed since by another writer stays") {
+    import graft.ops.Acid
+    import org.apache.spark.sql.functions.{col, udf}
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val table = Files.createTempDirectory("acid_claim_release").toString + "/t"
+    def rows(lo: Long, n: Long) = spark.range(lo, lo + n).select(col("id").as("k"))
+    def fileKey(p: java.nio.file.Path) = Files.readAttributes(p,
+      classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey
+    Acid.appendTxn(spark, table, rows(0, 10), txnId = 0L) // v0
+    // deletePositionsTxn validates its vector inside the commit's build,
+    // after claiming the version: a position naming a file outside the
+    // manifest throws there
+    val bad = Seq(("txn=99/part-0.parquet", 0L)).toDF("f", "pos")
+    intercept[IllegalArgumentException] {
+      Acid.deletePositionsTxn(spark, table, bad, txnId = 1L)
+    }
+    assert(!Files.exists(Paths.get(table, "claim-1")),
+      "the refused commit left claim-1 behind")
+    // so the next writer commits at once instead of waiting out the
+    // stale-claim horizon (120 s)
+    val t0 = System.nanoTime()
+    assert(Acid.appendTxn(spark, table, rows(10, 5), txnId = 2L) == 1L)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 20.0, s"the append after the refused commit took $secs s")
+    // the refused build holds claim-2 until a lock-free writer has
+    // reclaimed it as stale and committed v2 under its own claim-2; the
+    // release must leave that claim alone
+    BuildGate.reset()
+    val prevStale = Acid.ClaimStaleMs
+    Acid.ClaimStaleMs = 200L
+    try {
+      val gated = udf { (p: Long) => BuildGate.await(); p }
+      val refused = Future {
+        intercept[IllegalArgumentException] {
+          Acid.deletePositionsTxn(spark, table,
+            bad.withColumn("pos", gated(col("pos"))), txnId = 3L)
+        }
+      }
+      val claim2 = Paths.get(table, "claim-2")
+      val deadline = System.currentTimeMillis() + 60000
+      while (!Files.exists(claim2)) {
+        assert(System.currentTimeMillis() < deadline, "the refused commit never claimed v2")
+        Thread.sleep(10)
+      }
+      assert(Acid.appendTxnCAS(spark, table, rows(20, 5), txnId = 4L) == 2L)
+      val casClaim = fileKey(claim2)
+      BuildGate.open()
+      Await.result(refused, 2.minutes)
+      assert(Files.exists(claim2) && fileKey(claim2) == casClaim,
+        "the refused commit released a claim another writer owns")
+    } finally {
+      BuildGate.open()
+      Acid.ClaimStaleMs = prevStale
+    }
+    assert(Acid.read(spark, table).count() == 20L)
+    assert(Acid.committedTxns(table) == Set(0L, 2L, 4L))
   }
 
   test("updateWhereCAS conflict matrix: disjoint rebases, read-set rewrite / vector / matching append abort, overlap serializes or aborts") {
@@ -1192,4 +1260,13 @@ object DataPhaseBarrier {
     barrier = new java.util.concurrent.CyclicBarrier(parties)
   def await(): Unit =
     barrier.await(120, java.util.concurrent.TimeUnit.SECONDS)
+}
+
+/** Holds a task until the test opens it — lets a spec stop a commit
+  * inside its build, after it has claimed its version. */
+object BuildGate {
+  @volatile private var latch = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = latch = new java.util.concurrent.CountDownLatch(1)
+  def open(): Unit = latch.countDown()
+  def await(): Unit = latch.await(120, java.util.concurrent.TimeUnit.SECONDS)
 }

@@ -2658,6 +2658,74 @@ class OperatorSpec extends SparkFixture {
     assert(t2got.count() == 15L, "rename broke the standing delete vector")
   }
 
+  test("Acid reader table: on a renamed, optimized, vector-deleted table with a staged wap batch every public reader returns read's columns, and read's rows under a residual predicate") {
+    import graft.ops.Acid
+    import spark.implicits._
+    val table = java.nio.file.Files.createTempDirectory("graft_acid_readers").toString + "/t"
+    // two generations across a rename a -> b: b = 2k before, 3k after
+    Acid.appendTxn(spark, table,
+      spark.range(0, 60).select(col("id").as("k"), (col("id") * 2).as("a")), txnId = 0L)
+    Acid.renameColumn(table, "a", "b", txnId = 1L)
+    Acid.appendTxn(spark, table,
+      spark.range(60, 120).select(col("id").as("k"), (col("id") * 3).as("b")), txnId = 2L)
+    // root-relative zone maps and blooms on k; the rewrite keeps both
+    // physical names and the colmap line
+    Acid.optimize(spark, table, txnId = 3L, targetFiles = 4, clusterCol = Some("k"),
+      stats = Some("k" -> col("k")), bloom = Some("kb" -> col("k")))
+    Acid.deleteTxn(spark, table, Seq(7L, 45L, 90L).toDF("k"), "k", txnId = 4L)
+    // staged under the new name; the deleted key 45 stays hidden
+    Acid.stageWap(spark, table,
+      Seq((33L, 3300L), (45L, 4500L), (58L, 5800L)).toDF("k", "b"), "audit")
+    val v = Acid.currentVersion(table).get
+    Acid.tagVersion(table, "pin", v)
+    Acid.createBranch(table, "exp", v)
+    val pred = col("k").between(30L, 60L)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      df.filter(pred).select(col("k"), col("b")).as[(Long, Long)].collect().sorted.toSeq
+    val head = Acid.read(spark, table)
+    val cols = head.columns.toSeq
+    assert(cols == Seq("k", "b"), s"read is not the logical frame: $cols")
+    val expect = rows(head)
+    assert(expect == (30L to 60L).filterNot(_ == 45L)
+      .map(k => (k, if (k < 60L) 2 * k else 3 * k)), s"read's rows wrong: $expect")
+    val absent = (5000L to 5100L).find(k => Acid.skipFilesBloom(table, v, "kb", k)._1.isEmpty)
+      .getOrElse(fail("no absent key pruned every file"))
+    def key(k: Long) = expect.filter(_._1 == k)
+    // (reader, its frame, the rows it must return under `pred`); a prune
+    // that keeps no file returns no row
+    val readers: Seq[(String, () => org.apache.spark.sql.DataFrame, Seq[(Long, Long)])] = Seq(
+      ("readVersion", () => Acid.readVersion(spark, table, v), expect),
+      ("readTag", () => Acid.readTag(spark, table, "pin"), expect),
+      ("readBranch", () => Acid.readBranch(spark, table, "exp"), expect),
+      ("readEvolved", () => Acid.readEvolved(spark, table), expect),
+      ("readWap", () => Acid.readWap(spark, table, "audit"),
+        (expect ++ Seq((33L, 3300L), (58L, 5800L))).sorted),
+      ("readSkipping", () => Acid.readSkipping(spark, table, "k", 30L, 60L), expect),
+      ("readSkippingAll", () => Acid.readSkippingAll(spark, table,
+        Seq(("k", 30L, 60L)))._1, expect),
+      ("readBloomSkipping", () => Acid.readBloomSkipping(spark, table, "kb", 50L)
+        .filter(col("k") === 50L), key(50L)),
+      ("readBloomSkipping, deleted key", () => Acid.readBloomSkipping(spark, table, "kb", 45L)
+        .filter(col("k") === 45L), Nil),
+      ("readPrunedHidden", () => Acid.readPrunedHidden(spark, table,
+        Seq(("day_ts", 0L, 10L)))._1, expect),
+      ("readPrunedEvolved", () => Acid.readPrunedEvolved(spark, table,
+        Map("k" -> "30"))._1, expect),
+      ("readSkipping, all pruned", () => Acid.readSkipping(spark, table, "k", 1000L, 2000L), Nil),
+      ("readSkippingAll, all pruned", () => Acid.readSkippingAll(spark, table,
+        Seq(("k", 1000L, 2000L)))._1, Nil),
+      ("readBloomSkipping, all pruned", () =>
+        Acid.readBloomSkipping(spark, table, "kb", absent), Nil))
+    val wrong = readers.flatMap { case (name, frame, want) =>
+      scala.util.Try {
+        val df = frame()
+        if (df.columns.toSeq != cols) Some(s"$name columns ${df.columns.toSeq}")
+        else Some(rows(df)).filter(_ != want).map(got => s"$name rows $got")
+      }.fold(e => Some(s"$name threw ${e.getMessage.take(160)}"), identity)
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
   test("Acid expireRefs: aged branch releases its vacuum pin; published files survive; refs table tracks the lifecycle") {
     import graft.ops.Acid
     import java.nio.file.{Files, Paths}
@@ -2915,6 +2983,18 @@ class OperatorSpec extends SparkFixture {
     intercept[IllegalArgumentException] {
       Acid.changeFeed(spark, t, 0L, 4L).collect()
     }
+    // after a rename, a MERGE's update images pair under the NEW name: each
+    // step reads its removed and added files as the logical frame
+    Acid.renameColumn(t, "x", "amount", txnId = 5L)                  // v5
+    Acid.mergeCow(spark, t, Seq((2L, "b", 26L)).toDF("k", "s", "amount"),
+      "k", txnId = 6L)                                               // v6
+    val renamed = Acid.changeFeedRow(spark, t, 4L, 6L, "k")
+    assert(renamed.columns.toSeq ==
+      Seq("k", "s", "amount", "change_type", "commit_version"), renamed.columns.toSeq)
+    val renamedFeed = renamed.as[(Long, String, Long, String, Long)].collect().toSet
+    assert(renamedFeed == Set(
+      (2L, "b", 25L, "update_preimage", 6L),
+      (2L, "b", 26L, "update_postimage", 6L)), s"renamed feed wrong: $renamedFeed")
   }
 
   test("row lineage: ids dense per generation, stable across MoR delete + compaction, high-water mark never reused") {
