@@ -31,7 +31,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * batch N precedes (by event_id) every record in batch N+1; within a batch
   * the group's rows are sorted by event_id before numbering. Hence seq ==
   * ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY event_id) regardless of
-  * batch boundaries, restarts, or partition scheduling. At 100 TB this is
+  * batch boundaries, restarts, or partition scheduling — and regardless of
+  * how the log source splits a batch's ordinals into input partitions
+  * (GraftLog packs them into task-slot runs): the shuffle gathers all of a
+  * user's rows in the batch into one group, whichever partition read them,
+  * and the sort fixes their order. At 100 TB this is
   * the same argument per broker partition (Kafka guarantees per-partition
   * order; cross-partition per-user order needs the producer to key by user,
   * exactly how the partitioned staging keys by user_id).

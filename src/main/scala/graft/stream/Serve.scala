@@ -1,10 +1,14 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, ForeachWriter, SparkSession}
+import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.sources.StreamSinkProvider
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
-import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
-import java.net.{InetAddress, ServerSocket, Socket}
+import java.io.{BufferedOutputStream, BufferedReader, InputStreamReader, OutputStream}
+import java.net.{InetAddress, InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ArrayBlockingQueue, TimeUnit}
 
 /** Serving egress — the reference's serve side (long-lived clients receiving
   * a pushed, per-subscriber-filtered JSON event feed), inverse of
@@ -12,22 +16,25 @@ import java.nio.charset.StandardCharsets
   *
   * Shape: one StreamingQuery per subscriber (the `stream_fanout` pattern —
   * N concurrent queries over one source, each with its own filter), each
-  * pushing line-JSON over TCP via a [[ForeachWriter]]. The writer runs ON
-  * EXECUTORS, one connection per (partition, epoch) — egress scales with
-  * the cluster and NEVER funnels data through the driver (the 100 TB
-  * disqualifier for a driver-side collect-and-push loop). Connection
-  * direction (engine dials the subscriber's endpoint) is a transport
-  * detail — a push gateway / webhook consumer has exactly this shape; the
-  * reference's accept-then-push is the same dataflow with the dial
-  * reversed.
+  * pushing line-JSON over TCP through one streaming [[Sink]]
+  * ([[ServeSinkProvider]], the shape of Spark's own V1 Kafka sink). Its
+  * `addBatch` runs the batch's planned RDD with `foreachPartition`, so the
+  * lines are written ON EXECUTORS, one connection per non-empty partition
+  * per batch — egress scales with the cluster and NEVER funnels data
+  * through the driver (the 100 TB disqualifier for a driver-side
+  * collect-and-push loop) — and a batch costs one SQL execution, the
+  * engine's own. Connection direction (engine dials the subscriber's
+  * endpoint) is a transport detail — a push gateway / webhook consumer has
+  * exactly this shape; the reference's accept-then-push is the same
+  * dataflow with the dial reversed.
   *
-  * Delivery is at-least-once (a task retry re-pushes its partition);
-  * subscribers dedup on `event_id` — the same consumer-side contract the
-  * backfill seam documents. Per-subscriber isolation: a slow subscriber
-  * back-pressures ITS OWN query's tasks (TCP window fills → its writer
-  * blocks); other subscribers' queries run on independent state and
-  * scheduler pools (ConcurrencySpec pins a stalled client not blocking the
-  * rest).
+  * Delivery is at-least-once (a task retry or a replayed uncommitted batch
+  * re-pushes its partition); subscribers dedup on `event_id` — the same
+  * consumer-side contract the backfill seam documents. Per-subscriber
+  * isolation: a slow subscriber back-pressures ITS OWN query's tasks (TCP
+  * window fills → its writer blocks); other subscribers' queries run on
+  * independent state and scheduler pools (ConcurrencySpec pins a stalled
+  * client not blocking the rest).
   *
   * Wire format: the `source_socket` line-JSON schema (`event_id, ts_us,
   * user_id, event_type, value, props`) — what the engine serves is what
@@ -46,10 +53,10 @@ object Serve {
   }
 
   /** Push a single-string-column ("line") streaming DF to `host:port`, one
-    * line per row, from executor-side ForeachWriter connections. An
-    * explicit `checkpointDir` makes the push RESTARTABLE — a later query
-    * on the same checkpoint resumes from the committed source offsets (the
-    * egress half of the end-to-end service chain).
+    * line per row, from executor-side connections. An explicit
+    * `checkpointDir` makes the push RESTARTABLE — a later query on the
+    * same checkpoint resumes from the committed source offsets (the egress
+    * half of the end-to-end service chain).
     *
     * `bound` selects the backpressure policy. None (default): the TCP
     * window is the buffer — a slow subscriber back-pressures its own
@@ -67,23 +74,112 @@ object Serve {
       checkpointDir: Option[String],
       trigger: Trigger = Trigger.AvailableNow(),
       bound: Option[SendBound] = None): StreamingQuery = {
-    val writer = bound match {
-      case Some(p) => new BoundedLineSocketWriter(host, port, p)
-      case None => new LineSocketWriter(host, port)
-    }
+    val id = java.util.UUID.randomUUID().toString
+    starting.put(id, Target(host, port, bound))
     val w = lines.writeStream
-      .foreach(writer)
+      .format(classOf[ServeSinkProvider].getName)
+      .option(TargetKey, id)
       .outputMode(OutputMode.Append())
       .trigger(trigger)
     // no explicit checkpoint → fresh ephemeral scratch (RAM-backed; see
     // Tmp.ckpt) instead of Spark's java.io.tmpdir temporary checkpoint
     w.option("checkpointLocation",
       checkpointDir.getOrElse(graft.Tmp.ckpt("serve")))
-    StreamOps.start(lines.sparkSession, w, stateParallelism = true)
+    try StreamOps.start(lines.sparkSession, w, stateParallelism = true)
+    finally starting.remove(id)
+  }
+
+  /** A push query's subscriber endpoint and slow-consumer policy. */
+  private[stream] final case class Target(host: String, port: Int,
+      bound: Option[SendBound])
+
+  // Spark instantiates [[ServeSinkProvider]] by class name with string
+  // options only, so [[pushLines]] parks the target here for the length of
+  // the query's start and passes its key as the one sink option.
+  private val starting = new java.util.concurrent.ConcurrentHashMap[String, Target]()
+  private[stream] val TargetKey = "target"
+
+  private[stream] def startingTarget(key: String): Target =
+    Option(starting.get(key)).getOrElse(
+      sys.error(s"Serve: no push target '$key' — start the query through Serve.pushLines"))
+
+  /** One micro-batch: run the batch's planned RDD (never a Dataset action,
+    * which would open a second SQL execution and re-plan the batch) and
+    * write each partition to its own connection. `runJob` with the task
+    * function itself, not `foreachPartition`: that wraps the function
+    * twice more, and the closure cleaner reads the class file of each
+    * wrapper's declaring class (`RDD`, `SparkContext`) on every batch. */
+  private[stream] def pushBatch(target: Target, data: DataFrame): Unit = {
+    val rdd = data.queryExecution.toRdd
+    rdd.sparkContext.runJob(rdd,
+      (_: org.apache.spark.TaskContext, rows: Iterator[InternalRow]) =>
+        pushPartition(target, rows),
+      rdd.partitions.indices, (_: Int, _: Unit) => ())
+  }
+
+  /** Executor side: write one partition's lines (column 0) to one
+    * connection, opened at the first line — an empty partition opens none.
+    * The iterator is always drained to its end, disconnected or not: the
+    * state operators upstream commit their stores when it is exhausted. */
+  private def pushPartition(t: Target, rows: Iterator[InternalRow]): Unit = {
+    if (!rows.hasNext) return
+    val sock = new Socket()
+    // bounded policy: a small send buffer, so the bound is the QUEUE, not
+    // an opaque kernel buffer
+    if (t.bound.isDefined) sock.setSendBufferSize(16 * 1024)
+    try {
+      sock.connect(new InetSocketAddress(t.host, t.port))
+      val out = new BufferedOutputStream(sock.getOutputStream)
+      t.bound match {
+        case None =>
+          rows.foreach { r => r.getUTF8String(0).writeTo(out); out.write('\n') }
+          out.flush()
+        case Some(b) => pushBounded(b, sock, out, rows)
+      }
+    } finally try sock.close() catch { case _: Exception => () }
+  }
+
+  /** The bounded policy: a sender thread drains a `maxPending`-capacity
+    * queue to the socket (per-line flush — the TCP pipe, not this JVM, is
+    * the only other buffer), so the pushing task never blocks on a slow
+    * consumer's window. When the queue stays full past `graceMs`, the
+    * subscriber is disconnected: the rest of this partition's lines are
+    * dropped, the drop is counted, and the task completes normally — a
+    * stuck client costs one metric increment, not a pinned task slot. */
+  private def pushBounded(b: SendBound, sock: Socket, out: OutputStream,
+      rows: Iterator[InternalRow]): Unit = {
+    val queue = new ArrayBlockingQueue[Array[Byte]](b.maxPending)
+    val eof = new Array[Byte](0)
+    val sender = new Thread(() => {
+      try {
+        var line = queue.take()
+        while (line ne eof) {
+          out.write(line); out.write('\n'); out.flush()
+          line = queue.take()
+        }
+      } catch { case _: Exception => () } // disconnect/interrupt: drain ends
+    })
+    sender.setDaemon(true)
+    sender.start()
+    var connected = true
+    rows.foreach { r =>
+      // getBytes copies: the row's buffer is reused for the next row
+      if (connected && !queue.offer(r.getUTF8String(0).getBytes, b.graceMs,
+          TimeUnit.MILLISECONDS)) {
+        connected = false
+        b.drops.add(1L)
+        sender.interrupt()
+        try sock.close() catch { case _: Exception => () }
+      }
+    }
+    // bounded wait for the tail to drain, then EOF the sender
+    if (connected && !queue.offer(eof, b.graceMs * 4, TimeUnit.MILLISECONDS))
+      sender.interrupt()
+    sender.join(10000)
   }
 
   /** Slow-consumer policy for [[pushLines]]: disconnect a subscriber whose
-    * send buffer stays `maxPending` lines deep for `graceMs`; each
+    * send queue stays `maxPending` lines deep for `graceMs`; each
     * disconnect increments `drops` (create via
     * `spark.sparkContext.longAccumulator("serve.slowDisconnects")`). */
   final case class SendBound(maxPending: Int, graceMs: Long,
@@ -158,91 +254,9 @@ object Serve {
     }
   }
 
-  /** Executor-side per-partition TCP push of a single string column. */
-  private final class LineSocketWriter(host: String, port: Int)
-    extends ForeachWriter[org.apache.spark.sql.Row] {
-    @transient private var sock: Socket = _
-    @transient private var out: BufferedWriter = _
-    override def open(partitionId: Long, epochId: Long): Boolean = {
-      sock = new Socket(host, port)
-      out = new BufferedWriter(new OutputStreamWriter(
-        sock.getOutputStream, StandardCharsets.UTF_8))
-      true
-    }
-    override def process(row: org.apache.spark.sql.Row): Unit = {
-      out.write(row.getString(0)); out.write('\n')
-    }
-    override def close(errorOrNull: Throwable): Unit = {
-      if (out != null) try { out.flush() } catch { case _: Exception => () }
-      if (sock != null) try { sock.close() } catch { case _: Exception => () }
-    }
-  }
-
-  /** Bounded-buffer twin of [[LineSocketWriter]]: a sender thread drains a
-    * `maxPending`-capacity queue to the socket (per-line flush — the TCP
-    * pipe, not this JVM, is the only other buffer), so the pushing task
-    * never blocks on a slow consumer's window. When the queue stays full
-    * past `graceMs`, the subscriber is disconnected: remaining lines for
-    * THIS connection are dropped, the drop is counted, and the task
-    * completes normally — a stuck client costs one metric increment, not
-    * a pinned task slot. Small send buffer so the bound is the QUEUE, not
-    * an opaque kernel buffer. */
-  private final class BoundedLineSocketWriter(host: String, port: Int,
-      bound: SendBound) extends ForeachWriter[org.apache.spark.sql.Row] {
-    @transient private var sock: Socket = _
-    @transient private var out: BufferedWriter = _
-    @transient private var queue: java.util.concurrent.ArrayBlockingQueue[String] = _
-    @transient private var sender: Thread = _
-    @transient @volatile private var disconnected = false
-    private val Poison = "\u0000__serve_eof__"
-
-    override def open(partitionId: Long, epochId: Long): Boolean = {
-      sock = new Socket()
-      sock.setSendBufferSize(16 * 1024)
-      sock.connect(new java.net.InetSocketAddress(host, port))
-      out = new BufferedWriter(new OutputStreamWriter(
-        sock.getOutputStream, StandardCharsets.UTF_8))
-      queue = new java.util.concurrent.ArrayBlockingQueue[String](bound.maxPending)
-      sender = new Thread(() => {
-        try {
-          var line = queue.take()
-          while (line ne Poison) {
-            out.write(line); out.write('\n'); out.flush()
-            line = queue.take()
-          }
-        } catch { case _: Exception => () } // disconnect/interrupt: drain ends
-      })
-      sender.setDaemon(true)
-      sender.start()
-      true
-    }
-
-    override def process(row: org.apache.spark.sql.Row): Unit = {
-      if (disconnected) return // policy: drop the rest of this connection
-      if (!queue.offer(row.getString(0), bound.graceMs,
-          java.util.concurrent.TimeUnit.MILLISECONDS)) {
-        disconnected = true
-        bound.drops.add(1L)
-        sender.interrupt()
-        try sock.close() catch { case _: Exception => () }
-      }
-    }
-
-    override def close(errorOrNull: Throwable): Unit = {
-      if (!disconnected && queue != null) {
-        // bounded wait for the tail to drain, then EOF the sender
-        if (!queue.offer(Poison, bound.graceMs * 4,
-            java.util.concurrent.TimeUnit.MILLISECONDS)) sender.interrupt()
-      }
-      if (sender != null) sender.join(10000)
-      if (out != null) try { out.flush() } catch { case _: Exception => () }
-      if (sock != null) try { sock.close() } catch { case _: Exception => () }
-    }
-  }
-
   /** In-process subscriber endpoint (test double for the long-lived serve
-    * client): accepts any number of connections (one per pushing task ×
-    * epoch), drains each into a shared received-lines set. `perLineDelayMs`
+    * client): accepts any number of connections (one per non-empty pushing
+    * partition per batch), drains each into a shared received-lines set. `perLineDelayMs`
     * simulates a slow consumer (the back-pressure isolation test). */
   final class SubscriberClient(perLineDelayMs: Long = 0L,
       recvBufferBytes: Int = 0) {
@@ -315,5 +329,19 @@ object Serve {
     }
     def count: Int = received.size
     def close(): Unit = { closed = true; try server.close() catch { case _: Exception => () } }
+  }
+}
+
+/** The [[Serve]] egress as a streaming sink: `format(<this class>)` with
+  * the one option [[Serve.pushLines]] sets. */
+final class ServeSinkProvider extends StreamSinkProvider {
+  override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
+      partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
+    val target = Serve.startingTarget(parameters(Serve.TargetKey))
+    new Sink {
+      override def addBatch(batchId: Long, data: DataFrame): Unit =
+        Serve.pushBatch(target, data)
+      override def toString: String = s"Serve(${target.host}:${target.port})"
+    }
   }
 }

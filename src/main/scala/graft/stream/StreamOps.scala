@@ -665,7 +665,7 @@ object StreamOps {
     // Serving egress (r12 — see [[Serve]]): the reference's serve side.
     // Three subscribers, each with its own filter, each fed by its own
     // StreamingQuery pushing line-JSON over TCP from EXECUTOR-side
-    // ForeachWriter connections. The key's output is aggregated from what
+    // connections (Serve's streaming sink). The key's output is aggregated from what
     // the subscribers RECEIVED (deduped on event_id — at-least-once push,
     // exactly-once consumption), hash-matched against the batch oracle —
     // one dropped, duplicated, or corrupted pushed line shifts a count or

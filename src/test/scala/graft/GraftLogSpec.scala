@@ -1,7 +1,8 @@
 package graft
 
-import graft.stream.{GraftLog, GraftLogInputPartition, GraftLogReaderFactory}
+import graft.stream.{GraftLog, GraftLogInputPartition, GraftLogReaderFactory, GraftLogRunPartition}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
@@ -99,6 +100,63 @@ class GraftLogSpec extends SparkFixture {
     assert(GraftLog.plan(dir, 4, 4).isEmpty)
     assert(GraftLog.plan(dir, 0, 11).map(_.asInstanceOf[GraftLogInputPartition])
       .map(_.take).sum == 11)
+  }
+
+  private def readIds(p: InputPartition): Seq[Long] = {
+    val r = GraftLogReaderFactory.createReader(p)
+    val b = Seq.newBuilder[Long]
+    try while (r.next()) b += r.get().getLong(0) finally r.close()
+    b.result()
+  }
+
+  test("planVector packs a range over many segments into at most defaultParallelism in-order runs per log partition") {
+    val slots = spark.sparkContext.defaultParallelism
+    val segs = 3 * slots + 2
+    // two broker partitions of `segs` 3-record segments; partition p's
+    // ordinal k holds event id 1000 * p + k
+    val dir = Files.createTempDirectory("graftlog_pack").toString
+    for (p <- 0 to 1; i <- 0 until segs)
+      GraftLog.appendSegment(s"$dir/p=$p", i,
+        (3L * i until 3L * i + 3).map(k => line(1000L * p + k)))
+    val start = Map("p=0" -> 2L, "p=1" -> 7L)
+    val end = Map("p=0" -> (3L * segs - 1), "p=1" -> (3L * segs - 4))
+    val runs = GraftLog.planVector(dir, start, end, slots, wireV2 = false)
+      .map(_.asInstanceOf[GraftLogRunPartition])
+    Seq("p=0", "p=1").zipWithIndex.foreach { case (p, k) =>
+      val mine = runs.filter(_.slices.head.path.startsWith(s"$dir/$p/"))
+      assert(mine.length == slots, s"$p planned ${mine.length} runs on $slots slots")
+      // no run mixes two log partitions
+      mine.foreach(r => assert(r.slices.forall(_.path.startsWith(s"$dir/$p/"))))
+      // in-order reads yield exactly [start, end), once each
+      assert(mine.toSeq.flatMap(readIds) == (start(p) until end(p)).map(_ + 1000L * k))
+      // row-balanced: run sizes differ by at most one record
+      val sizes = mine.map(_.slices.map(_.take).sum)
+      assert(sizes.max - sizes.min <= 1, s"$p run sizes ${sizes.toSeq}")
+    }
+    // a range over fewer segments than slots plans one run per segment
+    val two = GraftLog.planVector(dir, Map("p=0" -> 1L), Map("p=0" -> 5L), slots,
+      wireV2 = false)
+    assert(two.length == 2 && two.toSeq.flatMap(readIds) == (1L until 5L))
+  }
+
+  test("a plan served from the trigger's listing after a newer segment lands equals a fresh listing's plan") {
+    import graft.stream.{GraftLogMicroBatchStream, GraftLogOffset}
+    val dir = freshLog((0 until 12).map(i => 3L * i until 3L * i + 3))
+    val stream = new GraftLogMicroBatchStream(dir, 0L, maxRecordsPerTrigger = Some(20L))
+    val start = stream.initialOffset()
+    // the trigger lists the log here ...
+    val end = stream.latestOffset(start, stream.getDefaultReadLimit)
+    assert(end == GraftLogOffset(Map("" -> 20L)))
+    // ... a producer lands a segment before the batch is planned
+    GraftLog.appendSegment(dir, 12, Seq(36L, 37, 38).map(line))
+    val served = stream.planInputPartitions(start, end)
+    val fresh = new GraftLogMicroBatchStream(dir, 0L, Some(20L))
+      .planInputPartitions(start, end)
+    assert(served.toSeq == fresh.toSeq)
+    assert(served.toSeq.flatMap(readIds) == (0L until 20L))
+    // an end past the listing (a replayed batch) plans from a fresh one
+    val past = GraftLogOffset(Map("" -> 39L))
+    assert(stream.planInputPartitions(end, past).toSeq.flatMap(readIds) == (20L until 39L))
   }
 
   test("batch read and streamed read both recover the staged events exactly") {

@@ -1347,18 +1347,21 @@ class StreamingSpec extends SparkFixture {
       finally l.close()
     }
     val queryId = "\"id\"\\s*:\\s*\"([^\"]+)\"".r
-    /** query id -> `<v>.changelog` files under its checkpoint's state dir */
-    def changelogs(dirs: Set[java.nio.file.Path]): Map[String, Long] =
+    /** query id -> (`<v>.changelog` deltas, `<v>.zip` full snapshots) under
+      * its checkpoint's state dir */
+    def uploads(dirs: Set[java.nio.file.Path]): Map[String, (Long, Long)] =
       dirs.toSeq.flatMap { d =>
         val meta = d.resolve("metadata")
         val state = d.resolve("state")
+        def count(re: String): Long =
+          if (!java.nio.file.Files.isDirectory(state)) 0L else {
+            val w = java.nio.file.Files.walk(state)
+            try w.filter(_.getFileName.toString.matches(re)).count()
+            finally w.close()
+          }
         if (!java.nio.file.Files.isRegularFile(meta)) None
         else queryId.findFirstMatchIn(java.nio.file.Files.readString(meta)).map { m =>
-          m.group(1) -> (if (!java.nio.file.Files.isDirectory(state)) 0L else {
-            val w = java.nio.file.Files.walk(state)
-            try w.filter(_.getFileName.toString.matches("\\d+\\.changelog")).count()
-            finally w.close()
-          })
+          m.group(1) -> (count("\\d+(_[^.]+)?\\.changelog"), count("\\d+(_[^.]+)?\\.zip"))
         }
       }.toMap
     spark.streams.addListener(listener)
@@ -1383,44 +1386,25 @@ class StreamingSpec extends SparkFixture {
         val total = ops.map(_.numRowsTotal).sum
         assert(total <= rowBound, s"$key: state rows $total exceed bound $rowBound")
       }
-      // changelog, not snapshot, structurally: every stateful query's
-      // checkpoint holds `<v>.changelog` files. The commit-latency prong
-      // below reads 0 ms once a changelog commit takes under 1 ms, so on
-      // its own it no longer shows the writer ran.
-      val logs = changelogs(ckptDirs() -- dirsBefore)
-      stateful.map(_.id.toString).distinct.foreach { id =>
-        assert(logs.getOrElse(id, 0L) > 0L,
+      // changelog, not snapshot, structurally, from the files each commit
+      // leaves in the query's state checkpoint: every stateful query writes
+      // `<v>.changelog` deltas, and a query with >= 2 stateful batches
+      // writes more deltas than `<v>.zip` full snapshots (those come from
+      // maintenance, plus transformWithState's one initial snapshot per
+      // store) — the r12 full-snapshot-per-batch regression uploads a
+      // snapshot for every commit and fails here. Files, not the
+      // changelog writer's commit latency: that metric reads 0 ms for any
+      // commit under 1 ms.
+      val files = uploads(ckptDirs() -- dirsBefore)
+      stateful.groupBy(_.id.toString).foreach { case (id, ps) =>
+        val (deltas, snapshots) = files.getOrElse(id, (0L, 0L))
+        assert(deltas > 0L,
           s"$key: query $id left no <v>.changelog file in its state checkpoint " +
-            s"(checkpoints found for ${logs.keySet.mkString(", ")})")
-      }
-      // changelog, not snapshot: with changelog checkpointing a commit
-      // uploads a delta; full-snapshot zip/sst copies (rocksdbFilesCopied)
-      // happen only on maintenance, never on every batch. Per query run
-      // with >= 2 stateful batches, snapshotting batches must be a strict
-      // minority — the r12 full-snapshot-per-batch regression tripped this.
-      // changelog, not snapshot: a changelog-engaged run commits deltas
-      // through the changelog writer (its commit latency registers in some
-      // batch — transformWithState also uploads ONE initial snapshot, whose
-      // filesCopied value then sticks as a gauge, so filesCopied alone
-      // can't be the signal there). A run with the writer silent in EVERY
-      // batch must at least not be snapshotting per batch — the r12
-      // full-snapshot-per-batch regression fails both prongs.
-      stateful.groupBy(p => (p.id, p.runId)).foreach { case (_, ps) =>
-        if (ps.size >= 2) {
-          val changelogActive = ps.exists(_.stateOperators.toSeq.exists { so =>
-            Option(so.customMetrics.get("rocksdbChangeLogWriterCommitLatencyMs"))
-              .exists(_ > 0L)
-          })
-          if (!changelogActive) {
-            val snapshotBatches = ps.count(_.stateOperators.toSeq.exists { so =>
-              Option(so.customMetrics.get("rocksdbFilesCopied")).exists(_ > 0L)
-            })
-            assert(snapshotBatches * 2 <= ps.size,
-              s"$key: changelog writer silent and $snapshotBatches of " +
-                s"${ps.size} batches uploaded full snapshots — changelog " +
-                "checkpointing not engaged")
-          }
-        }
+            s"(checkpoints found for ${files.keySet.mkString(", ")})")
+        if (ps.size >= 2) assert(snapshots < deltas,
+          s"$key: query $id uploaded $snapshots full snapshots against " +
+            s"$deltas changelog deltas over ${ps.size} stateful batches — " +
+            "changelog checkpointing not engaged")
       }
     } finally spark.streams.removeListener(listener)
   }
@@ -1520,6 +1504,69 @@ class StreamingSpec extends SparkFixture {
     val (crcFirst, crcSecond) = killAndResume(None, Some(sparkDefaultManager))
     assert(crcFirst == 0 && crcSecond > 0,
       s"legs did not run on the intended managers: $crcFirst / $crcSecond .crc files")
+  }
+
+  test("e2e service chain: each data micro-batch runs one SQL execution, one job and at most defaultParallelism scan tasks") {
+    import graft.stream.{E2e, GraftLog, Serve}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent
+    val log = java.nio.file.Files.createTempDirectory("e2e_pin_log").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("e2e_pin_ckpt").toString
+    val ev = Tables.events(spark, sf001)
+    // many small segments: every admitted batch spans far more segments
+    // than there are task slots
+    GraftLog.stage(spark, ev, log, segmentRows = 32)
+    val perTrigger = math.max(256L, ev.count() / 4)
+    val slots = spark.sparkContext.defaultParallelism
+    // (query id, batch id) of each SQL execution and of each job, with the
+    // job's first-stage task count; the description of a streaming batch's
+    // execution names the query (`id = …`) and the batch (`batch = …`)
+    val described = "(?s).*\\bid = ([0-9a-f-]+)\\b.*\\bbatch = (\\d+).*".r
+    val executions = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Int)]()
+    val terminated = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          for (q <- Option(p.getProperty("sql.streaming.queryId"));
+               b <- Option(p.getProperty("streaming.sql.batchId")))
+            jobs.add((q, b.toLong, e.stageInfos.minBy(_.stageId).numTasks))
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => s.description match {
+          case described(q, b) => executions.add((q, b.toLong))
+          case _ => ()
+        }
+        case t: QueryTerminatedEvent => terminated.add(t.id.toString)
+        case _ => ()
+      }
+    }
+    val client = new Serve.SubscriberClient()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = E2e.startChain(spark, log, ckpt, perTrigger, "127.0.0.1", client.port)
+      q.awaitTermination()
+      val id = q.id.toString
+      // the listener bus delivers in order: once the termination event is
+      // in, every batch's executions and jobs are too
+      Serve.waitUntil("query termination event")(terminated.contains(id))
+      val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId)
+      assert(dataBatches.length >= 2, s"only ${dataBatches.length} data batches")
+      val execs = executions.asScala.toSeq.filter(_._1 == id).groupBy(_._2)
+      val byBatch = jobs.asScala.toSeq.filter(_._1 == id).groupBy(_._2)
+      dataBatches.foreach { b =>
+        val n = execs.get(b).fold(0)(_.size)
+        assert(n == 1, s"batch $b ran $n SQL executions")
+        val js = byBatch.getOrElse(b, Seq.empty)
+        assert(js.size == 1, s"batch $b ran ${js.size} jobs")
+        assert(js.head._3 <= slots,
+          s"batch $b scanned with ${js.head._3} tasks on $slots task slots")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      client.close()
+    }
   }
 
   test("acid-stream source: version offsets resume exactly-once; change commits fail loudly or skip; vacuumed resume fails") {
