@@ -9,7 +9,9 @@ package graft
   * is the JVM's pid@host: stable within a JVM (re-running a key in-session
   * reuses its dir — overwrite semantics unchanged), unique across
   * concurrent JVMs on one box. Staging is small (fixture-scale) and /tmp
-  * is session-lifetime scratch, so no reaper is needed.
+  * is session-lifetime scratch, so no reaper is needed. The two staging
+  * primitives every writer shares live here too: [[deleteTree]] and
+  * [[writeSingleFile]].
   */
 object Tmp {
   private val token: String =
@@ -53,14 +55,7 @@ object Tmp {
   private lazy val ckptDirs: java.util.Queue[java.nio.file.Path] = {
     val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
     sys.addShutdownHook {
-      dirs.forEach { dir =>
-        try {
-          val walk = java.nio.file.Files.walk(dir)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-          finally walk.close()
-        } catch { case _: Exception => () }
-      }
+      dirs.forEach(dir => try deleteTree(dir) catch { case _: Exception => () })
     }
     dirs
   }
@@ -72,5 +67,35 @@ object Tmp {
     val dir = java.nio.file.Files.createTempDirectory(ckptRoot, s"graft_${prefix}_ckpt")
     ckptDirs.add(dir)
     dir.toString
+  }
+
+  /** Delete `dir` and everything under it, deepest first; a missing `dir`
+    * is a no-op. */
+  def deleteTree(dir: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(dir)) {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+      finally walk.close()
+    }
+
+  /** Write `df` as the ONE `format` file `target` (a fixture table, a
+    * Delta checkpoint, an Iceberg manifest): Spark writes a directory, so
+    * the frame lands in a `_stage_<name>` sibling as one part file, which
+    * moves into place (keeping its write-time mtime) before the stage is
+    * dropped. Returns `target`. */
+  def writeSingleFile(df: org.apache.spark.sql.DataFrame, format: String,
+      target: java.nio.file.Path): java.nio.file.Path = {
+    val stage = target.resolveSibling(s"_stage_${target.getFileName}")
+    df.coalesce(1).write.mode("overwrite").format(format).save(stage.toString)
+    val listing = java.nio.file.Files.list(stage)
+    val part =
+      try listing.filter(_.getFileName.toString.startsWith("part-")).findFirst()
+        .orElseThrow(() => new IllegalStateException(s"no part file under $stage"))
+      finally listing.close()
+    java.nio.file.Files.move(part, target,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    deleteTree(stage)
+    target
   }
 }

@@ -123,20 +123,12 @@ object Acid {
 
   /** Exact row count of an immutable parquet file, from its footer's
     * block metadata — the per-file `count(1)` every manifest writer needs,
-    * without a Spark job (r20; the same immutable-file-metadata argument
-    * as [[fileSchemaCache]]: at 100 TB writers harvest counts from the
-    * footers they just produced). Cached per (path, size, mtime). */
-  private val fileRowCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def footerRowCount(spark: SparkSession, path: String): Long = {
-    val abs = Paths.get(path).toAbsolutePath.normalize
-    val key = s"$abs|${Files.size(abs)}|${Files.getLastModifiedTime(abs).toMillis}"
-    fileRowCountCache.computeIfAbsent(key, _ => {
-      val footer = readFooter(spark, abs)
-      java.lang.Long.valueOf(
-        footer.getBlocks.stream.mapToLong(_.getRowCount).sum)
-    }).longValue
-  }
+    * without a Spark job (r20: at 100 TB writers harvest counts from the
+    * footers they just produced). One footer read per call, uncached: the
+    * writers count files they have just landed, which no cache has seen. */
+  private[graft] def footerRowCount(spark: SparkSession, path: String): Long =
+    readFooter(spark, Paths.get(path).toAbsolutePath.normalize)
+      .getBlocks.stream.mapToLong(_.getRowCount).sum
 
   /** One parquet footer, via the non-deprecated HadoopInputFile entry
     * point (ADVICE r20 — `readFooter` is deprecated and local-path-bound;
@@ -194,11 +186,12 @@ object Acid {
     * per lakehouse DML key). Byte-equal to the plain read: same footer,
     * same converter, `asNullable` because file-source inference forces
     * nullability; any footer disagreement or unreadable footer falls back
-    * to the genuine inferring read. Explicit FILE paths only (no
-    * directory/partition discovery semantics — snapshot-mode tables, whose
-    * partition columns come from `basePath`, read through [[scan]]). */
+    * to the genuine inferring read. Explicit FILE paths only; with
+    * `basePath` the hive-style partition columns of the paths under it are
+    * appended, as a directory read would ([[commit]]'s zone-map harvest). */
   private[graft] def readParquetCached(spark: SparkSession,
-      paths: Seq[String]): DataFrame = {
+      paths: Seq[String], basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
     val fast: Option[org.apache.spark.sql.types.StructType] =
       if (paths.isEmpty) None
       else scala.util.Try {
@@ -208,8 +201,8 @@ object Acid {
         else None
       }.getOrElse(None)
     fast match {
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None    => spark.read.parquet(paths: _*)
+      case Some(s) => reader.schema(s).parquet(paths: _*)
+      case None    => reader.parquet(paths: _*)
     }
   }
 
@@ -523,12 +516,21 @@ object Acid {
       readParquetCached(spark, m.files.map(f => s"$table/$f")), provenance = true)
   }
 
-  /** List a just-written directory's parquet files, table-relative,
-    * sorted — the shape every vector/branch/cdc writer needs. */
-  private def listParquet(table: String, dir: Path): Seq[String] = {
+  /** The one write of every Acid file — data, delete vector, change feed,
+    * frozen change frame, branch statement spec: land `df` under `dir` in
+    * overwrite mode (a replayed attempt overwrites its own output),
+    * hive-partitioned by `partitionBy` when given, and return the written
+    * `.parquet` files, sorted and relative to `relTo` (the table root, or
+    * `v=<n>/` for a snapshot [[commit]]). A writer that takes its stats
+    * during the write changes this function alone. */
+  private def land(df: DataFrame, dir: Path, relTo: Path,
+      partitionBy: Seq[String] = Nil): Seq[String] = {
+    val writer = df.write.mode("overwrite")
+    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*))
+      .parquet(dir.toString)
     val walk = Files.walk(dir)
     try walk.filter(p => p.toString.endsWith(".parquet"))
-      .map[String](p => Paths.get(table).relativize(p).toString)
+      .map[String](p => relTo.relativize(p).toString)
       .sorted().toArray.map(_.toString).toSeq
     finally walk.close()
   }
@@ -553,13 +555,12 @@ object Acid {
       // collect probe, then the write) — and `positions` is typically a
       // full window/anti-join chain over the table (r20, opt guide §1.2).
       // A failed validation leaves only an uncommitted pdel= dir that
-      // vacuum GCs — the same contract as writeTxnDataChecked's
+      // vacuum GCs — the same contract as landChecked's
       // constraint-violation path.
       val delDir = Paths.get(table).resolve(s"pdel=$txnId")
-      positions.select(col("f").cast("string").as("f"),
-          col("pos").cast("long").as("pos")).distinct()
-        .coalesce(1).write.mode("overwrite").parquet(delDir.toString)
-      val written = listParquet(table, delDir)
+      val written = land(positions.select(col("f").cast("string").as("f"),
+          col("pos").cast("long").as("pos")).distinct().coalesce(1),
+        delDir, Paths.get(table))
       // a position naming a file outside the manifest would silently hide
       // NOTHING — for a delete primitive that is the dangerous failure
       // mode (the caller believes rows are gone), so refuse loudly
@@ -571,10 +572,7 @@ object Acid {
         // reclaim the just-written vector before failing (ADVICE r20):
         // tables that never run vacuum should not accumulate orphan
         // pdel= dirs from rejected validations
-        val walk = Files.walk(delDir)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-        finally walk.close()
+        graft.Tmp.deleteTree(delDir)
         throw new IllegalArgumentException(
           s"requirement failed: deletePositionsTxn: position(s) name files " +
             s"not in $table's manifest: ${badRows.take(3).mkString(", ")}")
@@ -588,14 +586,12 @@ object Acid {
     // The semi-join probe side reads the WRITTEN vector (forcing delFiles
     // first), never re-running the caller's positions plan (r20).
     lazy val cdcFiles: Seq[String] = { // at most once
-      val cdcDir = Paths.get(table).resolve(s"cdc=$txnId")
       val vec = readParquetCached(spark, delFiles.map(f => s"$table/$f"))
         .select(col("f").as("_file"), col("pos").as("_pos"))
-      readPositions(spark, table)
-        .join(vec, Seq("_file", "_pos"), "left_semi")
-        .drop("_file", "_pos")
-        .coalesce(1).write.mode("overwrite").parquet(cdcDir.toString)
-      listParquet(table, cdcDir)
+      land(readPositions(spark, table)
+          .join(vec, Seq("_file", "_pos"), "left_semi")
+          .drop("_file", "_pos").coalesce(1),
+        Paths.get(table).resolve(s"cdc=$txnId"), Paths.get(table))
     }
     commitNextVersion(table, Some(txnId)) { (cur, prev) =>
       require(cur.isDefined,
@@ -752,6 +748,34 @@ object Acid {
       Manifest.Bloom(relFile(relTo, file), name, versioned = true, arr)
     }.toSeq.sortBy(Manifest.render)
   }
+
+  /** The one zone-map harvest: per-file min/max of every long-valued
+    * `(name, expr)` over `paths`, in ONE `groupBy(input_file_name())` pass,
+    * as sorted `# minmax:` entries with files relative to `relTo`. A file
+    * whose expr is all NULL (or that is empty) has no extremum and carries
+    * no line for that name — [[skipFiles]] keeps line-less files. Shared by
+    * [[commit]] (`v=<n>`-relative, read with `basePath`), [[optimize]],
+    * [[analyzeTable]] and [[optimizeZorder]] (root-relative). At 100 TB
+    * writers take these from the footers they just produced; the narrow
+    * re-read is fixture-scale convenience. */
+  private def minmaxLines(spark: SparkSession, paths: Seq[String], relTo: Path,
+      exprs: Seq[(String, Column)],
+      basePath: Option[String] = None): Seq[Manifest.MinMax] =
+    if (exprs.isEmpty || paths.isEmpty) Seq.empty
+    else {
+      val aggs = exprs.zipWithIndex.flatMap { case ((_, e), i) =>
+        Seq(min(e).as(s"lo$i"), max(e).as(s"hi$i")) }
+      readParquetCached(spark, paths, basePath)
+        .groupBy(input_file_name().as("f"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect() // O(files) rows — manifest-construction control plane
+        .toSeq.flatMap { r =>
+          val f = relFile(relTo, r.getString(0))
+          exprs.zipWithIndex.collect { case ((n, _), i) if !r.isNullAt(1 + 2 * i) =>
+            Manifest.MinMax(f, n, r.getLong(1 + 2 * i), r.getLong(2 + 2 * i))
+          }
+        }.sortBy(Manifest.render)
+    }
 
   /** Probe positions for a `bits`-wide filter — duplicated EXACTLY from
     * the column expressions in [[bloomLines]]; `bits` comes from the
@@ -918,27 +942,13 @@ object Acid {
     commitNextVersion(table, txnId)((_, _) => None) { (v, prev) =>
     val ledger = txnId.toSeq.flatMap(t => (prev.txns :+ t).map(Manifest.Txn))
     val dataDir = Paths.get(table, s"v=$v")
-    val writer = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(dataDir.toString)
     // manifest: every parquet file of this version, relative to v=<n>/
-    val walk = Files.walk(dataDir)
-    val files =
-      try walk.filter(p => p.toString.endsWith(".parquet"))
-        .map[String](p => dataDir.relativize(p).toString)
-        .sorted().toArray.map(_.toString)
-      finally walk.close()
+    val files = land(df, dataDir, dataDir, partitionCols)
     require(files.nonEmpty, s"Acid.commit: empty version $v at $table")
     val abs = dataDir.toAbsolutePath
-    val statLines = stats.toSeq.flatMap { case (name, expr) =>
-      spark.read.parquet(dataDir.toString)
-        .groupBy(input_file_name().as("f"))
-        .agg(min(expr).as("lo"), max(expr).as("hi"))
-        .collect() // O(files) rows — manifest-construction control plane
-        .map(r => Manifest.MinMax(relFile(abs, r.getString(0)), name,
-          r.getLong(1), r.getLong(2)))
-        .sortBy(Manifest.render)
-    }
+    // read with `basePath`: the stats expression sees the partition columns
+    val statLines = minmaxLines(spark, files.map(f => s"$dataDir/$f"), abs,
+      stats.toSeq, basePath = Some(dataDir.toString))
     // per-file 4096-bit bloom over a long-valued expr: one pass computing
     // all 64 words as bit_or aggregates (fully distributed — no per-file
     // driver collect of keys). Parquet can carry column blooms in the
@@ -960,8 +970,8 @@ object Acid {
     // counts. Empty part files carry no line, matching the old
     // groupBy(file) behavior (an empty file groups to no row).
     val rowLines = if (!rowCounts) Seq.empty else rowEntries(spark,
-      files.toSeq, f => abs.resolve(f).toString)
-    ledger ++ statLines ++ bloomStatLines ++ rowLines ++ files.toSeq.map(Manifest.DataFile)
+      files, f => abs.resolve(f).toString)
+    ledger ++ statLines ++ bloomStatLines ++ rowLines ++ files.map(Manifest.DataFile)
     }
   }
 
@@ -1013,11 +1023,13 @@ object Acid {
       manifest: Manifest => Seq[Manifest.Entry],
       log: Option[Manifest.Dml] = None, release: () => Unit = () => ())
 
-  /** Test seam: fires after a main write has computed its attempt and
-    * before its commit claims a version — the window a lock-free
-    * appendTxnCAS can land in. No-op in production; ConcurrencySpec
-    * injects a concurrent append here to pin the race policies
-    * deterministically. */
+  /** Test seam: fires after a main write has computed its attempt (an
+    * append, merge or delete has landed its files by then) and before its
+    * commit claims a version — the window a lock-free appendTxnCAS can
+    * land in, and where a dying writer leaves its landed files
+    * unreferenced. No-op in production; ConcurrencySpec injects a
+    * concurrent append here to pin the race policies deterministically,
+    * and a throw to pin crash recovery. */
   @volatile private[graft] var raceHook: () => Unit = () => ()
 
   /** The one commit path of every row-level write: snapshot → replay
@@ -1081,7 +1093,6 @@ object Acid {
           else {
             require(snap.rootRelative, s"$what on snapshot-mode table $table")
             val a = attempt(snap, d => root.resolve(s"$d=$txnId"))
-            raceHook()
             def commitAttempt() = commitNextVersion(table, Some(txnId)) { (c, prev) =>
               race match {
                 case Race.Restart => if (c != cur) Some(StaleSnapshot) else None
@@ -1090,8 +1101,10 @@ object Acid {
               }
             } { (_, prev) => a.manifest(prev) }
             val v =
-              try { if (lockCommit) withWriterLock(table)(commitAttempt()) else commitAttempt() }
-              finally a.release()
+              try {
+                raceHook()
+                if (lockCommit) withWriterLock(table)(commitAttempt()) else commitAttempt()
+              } finally a.release()
             if (v != StaleSnapshot) out = (v, a.replaced.size, snap.files.size)
           }
         }
@@ -1148,29 +1161,22 @@ object Acid {
   private def appendAttempt(spark: SparkSession, table: String, df: DataFrame,
       txnId: Long, snap: Manifest, dir: String => Path, what: String,
       constraints: Seq[Manifest.Constraint] = Nil): Attempt = {
-    val files = writeTxnDataChecked(spark, table, df, dir("txn"), constraints, what)
+    val files = landChecked(spark, table, df, dir("txn"), constraints, what)
     Attempt(Nil, appendManifest(_, Seq(txnId), files),
       Some(Manifest.Dml(0L, "append", txnId, "-", None, files)))
   }
 
-  /** Land `df` under `dir` (overwrite — a replayed write overwrites its
-    * own output) and return the table-relative file list. */
-  private def writeTxnData(table: String, df: DataFrame, dir: Path): Seq[String] = {
-    df.write.mode("overwrite").parquet(dir.toString)
-    listParquet(table, dir)
-  }
-
-  /** Write a frame, then run the CHECK `constraints` over the files that
+  /** [[land]] a frame, then run the CHECK `constraints` over the files that
     * were ACTUALLY WRITTEN (ADVICE r18: a pre-write constraint aggregate is
     * a separate Spark action from the write — a nondeterministic plan or
     * SET expression could pass the check and then write different,
     * violating rows; validating the written bytes closes the two-action
     * gap). A violation throws BEFORE commit, leaving only an uncommitted
     * dir that vacuum GCs. */
-  private def writeTxnDataChecked(spark: SparkSession, table: String,
+  private def landChecked(spark: SparkSession, table: String,
       df: DataFrame, dir: Path, constraints: Seq[Manifest.Constraint],
       what: String): Seq[String] = {
-    val files = writeTxnData(table, df, dir)
+    val files = land(df, dir, Paths.get(table))
     if (files.nonEmpty && constraints.nonEmpty)
       checkConstraints(constraints,
         readParquetCached(spark, files.map(f => s"$table/$f")), what)
@@ -1339,7 +1345,7 @@ object Acid {
           lineageFrameFor(spark, table, snap, candidates, what))
         else scan(spark, table, snap, candidates))
         .filter(!coalesce(col(keyCol).isin(keys: _*), lit(false)))
-      writeTxnDataChecked(spark, table,
+      landChecked(spark, table,
         if (lineage) scrubbed.withColumnRenamed("row_id", "__row_id") else scrubbed,
         dir("txn"), snap.constraints, what)
     }
@@ -1373,7 +1379,7 @@ object Acid {
           .join(allKeys, Seq(keyCol), "left_anti")
       basePart.unionByName(upserts)
     }
-    val newFiles = writeTxnDataChecked(spark, table, rewritten, dir("txn"),
+    val newFiles = landChecked(spark, table, rewritten, dir("txn"),
       snap.constraints, what)
     // vector reconciliation: upserted keys leave the standing vector
     val vectors = reconcileVector(spark, table, snap,
@@ -1422,15 +1428,11 @@ object Acid {
       // write first, decide emptiness from the written footers (zero extra
       // jobs) — the old separate isEmpty probe was a full second action
       // over the same anti-join plan (r21, opt guide §1.2)
-      remaining.coalesce(1).write.mode("overwrite").parquet(delDir.toString)
-      val fs = listParquet(table, delDir)
+      val fs = land(remaining.coalesce(1), delDir, Paths.get(table))
       if (fs.map(f => footerRowCount(spark, s"$table/$f")).sum == 0L) {
         // reconciled to empty: remove the unreferenced dir (no orphan
         // for vacuum to chase)
-        val walk = Files.walk(delDir)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-        finally walk.close()
+        graft.Tmp.deleteTree(delDir)
         Seq.empty[String]
       } else fs
     } match {
@@ -1580,7 +1582,7 @@ object Acid {
           }: _*)
         case None => base.filter(!coalesce(pred, lit(false)))
       }
-      writeTxnDataChecked(spark, table,
+      landChecked(spark, table,
         if (!lineage) out
         else out.select(out.columns.toSeq.filterNot(_ == "row_id").map(col) :+
           col("row_id").as("__row_id"): _*),
@@ -1790,10 +1792,8 @@ object Acid {
       names: Seq[String], what: String, shadowed: DataFrame): Long =
     withWriterLock(table) {
       writeLoop(table, Main, txnId, what, fresh = true) { (snap, dir) =>
-        val dataDir = dir("txn")
-        shadowed.write.mode("overwrite")
-          .partitionBy(names.map(n => s"__part_$n"): _*).parquet(dataDir.toString)
-        val files = listParquet(table, dataDir)
+        val files = land(shadowed, dir("txn"), Paths.get(table),
+          names.map(n => s"__part_$n"))
         val pvals = files.map { f =>
           val vals = f.split('/').toSeq.collect {
             case seg if seg.startsWith("__part_") && seg.contains('=') =>
@@ -1937,9 +1937,7 @@ object Acid {
     require(wapId.matches("[A-Za-z0-9_-]+"), s"wap id must be path-safe: $wapId")
     val root = Paths.get(table)
     Files.createDirectories(root)
-    val dataDir = root.resolve(s"wap=$wapId")
-    df.write.mode("overwrite").parquet(dataDir.toString)
-    val files = listParquet(table, dataDir)
+    val files = land(df, root.resolve(s"wap=$wapId"), root)
     val tmp = root.resolve(s"manifest-wap-$wapId.txt.tmp")
     Files.write(tmp, Manifest.bytes(files.map(Manifest.DataFile)))
     Files.move(tmp, wapManifest(table, wapId),
@@ -2006,13 +2004,7 @@ object Acid {
     * table never saw it. */
   def abortWap(table: String, wapId: String): Unit = {
     Files.deleteIfExists(wapManifest(table, wapId))
-    val dataDir = Paths.get(table, s"wap=$wapId")
-    if (Files.exists(dataDir)) {
-      val walk = Files.walk(dataDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
+    graft.Tmp.deleteTree(Paths.get(table, s"wap=$wapId"))
   }
 
   private def commitManifest(table: String, v: Long,
@@ -2054,10 +2046,8 @@ object Acid {
       txnId: Long, snap: Manifest, dir: String => Path, what: String): Attempt = {
     require(snap.delKey.forall(_ == keyCol),
       s"$what: table uses delete key ${snap.delKey.getOrElse("")}, got $keyCol")
-    val delDir = dir("del")
-    keys.select(col(keyCol)).distinct().coalesce(1)
-      .write.mode("overwrite").parquet(delDir.toString)
-    val delFiles = listParquet(table, delDir)
+    val delFiles = land(keys.select(col(keyCol)).distinct().coalesce(1),
+      dir("del"), Paths.get(table))
     Attempt(Nil, deleteManifest(_, txnId, keyCol, delFiles),
       Some(Manifest.Dml(0L, "delete", txnId, keyCol, None, delFiles)))
   }
@@ -2107,20 +2097,9 @@ object Acid {
       }
     } { newFiles =>
       // zone maps for the freshly clustered files (root-relative paths, so
-      // [[skipFiles]] matches them against the manifest's data lines). At
-      // 100 TB these come free from the parquet footers the rewrite just
-      // wrote; the narrow re-read is fixture-scale convenience, same as
-      // [[commit]]'s stat harvest.
-      stats.toSeq.flatMap { case (name, expr) =>
-        val root = Paths.get(table).toAbsolutePath
-        readParquetCached(spark, newFiles.map(f => s"$table/$f"))
-          .groupBy(input_file_name().as("f"))
-          .agg(min(expr).as("lo"), max(expr).as("hi"))
-          .collect() // O(files) rows — manifest-construction control plane
-          .map(r => Manifest.MinMax(relFile(root, r.getString(0)), name,
-            r.getLong(1), r.getLong(2)))
-          .sortBy(Manifest.render)
-      } ++
+      // [[skipFiles]] matches them against the manifest's data lines)
+      minmaxLines(spark, newFiles.map(f => s"$table/$f"),
+        Paths.get(table).toAbsolutePath, stats.toSeq) ++
       // file-level blooms for append-mode tables (commit's bloom harvest,
       // root-relative) — the point-lookup index [[eraseKeys]] prunes by
       bloom.toSeq.flatMap { case (name, expr0) =>
@@ -2169,7 +2148,7 @@ object Acid {
         .coalesce(targetFiles).cache()
       merged.count() // materialize BEFORE the lock
       Attempt(sel, { prev =>
-        val newFiles = writeTxnData(table, merged, dir("txn"))
+        val newFiles = land(merged, dir("txn"), Paths.get(table))
         rewriteManifest(prev, txnId, sel, newFiles,
           added = newFiles.map(Manifest.PVal(_, s"$name=$value")),
           op = Some("rewrite:optimizeWhere"))
@@ -2202,16 +2181,8 @@ object Acid {
       val root = Paths.get(table).toAbsolutePath
       val statLines = stats.toSeq.flatMap { case (name, e) =>
         val have = prev.minmax.filter(_.name == name).map(_.file).toSet
-        val missing = files.filterNot(have)
-        if (missing.isEmpty) Seq.empty
-        else readParquetCached(spark, missing.map(f => s"$table/$f"))
-          .groupBy(input_file_name().as("f"))
-          .agg(min(e).as("lo"), max(e).as("hi"))
-          .filter(col("lo").isNotNull) // all-null/empty files carry no line
-          .collect() // O(files) rows — manifest control plane
-          .map(r => Manifest.MinMax(relFile(root, r.getString(0)), name,
-            r.getLong(1), r.getLong(2)))
-          .sortBy(Manifest.render).toSeq
+        minmaxLines(spark, files.filterNot(have).map(f => s"$table/$f"), root,
+          Seq(name -> e))
       }
       val bloomStatLines = bloom.toSeq.flatMap { case (name, e) =>
         val have = prev.blooms.filter(_.name == name).map(_.file).toSet
@@ -2436,10 +2407,8 @@ object Acid {
       // nondeterministic plan re-evaluating between inserts.count() and
       // the data write would make the committed `# rowid_next:` mark
       // disagree with the ids actually written → silent id reuse)
-      val chgDir = dir("chg")
-      changes.write.mode("overwrite").parquet(chgDir.toString)
-      val changesF = spark.read.parquet(
-        listParquet(table, chgDir).map(f => s"$table/$f"): _*)
+      val changesF = readParquetCached(spark,
+        land(changes, dir("chg"), Paths.get(table)).map(f => s"$table/$f"))
       val allKeys = changesF.select(col(keyCol)).distinct()
       val upserts = opCol match {
         case Some(o) => changesF.filter(col(o) =!= "delete").drop(o)
@@ -2487,7 +2456,7 @@ object Acid {
         .withColumnRenamed("row_id", "__row_id")
       val newFiles =
         if (target == null && nInserts == 0) Seq.empty[String]
-        else writeTxnDataChecked(spark, table, rewritten, dir("txn"),
+        else landChecked(spark, table, rewritten, dir("txn"),
           snap.constraints, "mergeCowLineage")
       // vector reconciliation, mergeCow's rule: upserted keys leave the
       // standing vector (the insert above is the resurrection)
@@ -2534,7 +2503,7 @@ object Acid {
       }).cache()
       merged.count() // materialize BEFORE the lock
       Attempt(snap.files, { prev =>
-        val newFiles = writeTxnData(table, merged, dir("txn"))
+        val newFiles = land(merged, dir("txn"), Paths.get(table))
         // coldefault carries too (r19): the rewrite STORES the fill, but
         // the default stays table metadata for future appends — a later
         // file missing the column must still read the default
@@ -2580,8 +2549,9 @@ object Acid {
         // landing during a long rewrite: the snapshot's files are only
         // UNREFERENCED by a commit, never deleted (vacuum removes them
         // later), and a restart overwrites its own txn dir.
-        val newFiles = writeTxnData(table,
-          layout(readRewriteSnapshot(spark, table, snap, snap.files)), dir("txn"))
+        val newFiles = land(
+          layout(readRewriteSnapshot(spark, table, snap, snap.files)), dir("txn"),
+          Paths.get(table))
         // `# op:rewrite` = Delta's dataChange=false: the commit replaced
         // files without logical change, so streaming readers may cross it
         // contributing nothing. CHECK constraints and column mapping
@@ -2710,19 +2680,8 @@ object Acid {
       }
     } { newFiles =>
       // one pass harvesting every dimension's per-file zone map
-      val root = Paths.get(table).toAbsolutePath
-      val aggs = zCols.flatMap { case (n, e) =>
-        Seq(min(e).as(s"lo_$n"), max(e).as(s"hi_$n")) }
-      readParquetCached(spark, newFiles.map(f => s"$table/$f"))
-        .groupBy(input_file_name().as("f"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect() // O(files) rows — manifest-construction control plane
-        .flatMap { r =>
-          val f = relFile(root, r.getString(0))
-          zCols.zipWithIndex.map { case ((n, _), i) =>
-            Manifest.MinMax(f, n, r.getLong(2 * i + 1), r.getLong(2 * i + 2))
-          }
-        }.sortBy(Manifest.render).toSeq
+      minmaxLines(spark, newFiles.map(f => s"$table/$f"),
+        Paths.get(table).toAbsolutePath, zCols)
     }
   }
 
@@ -3341,9 +3300,7 @@ object Acid {
       // future base (and the merge itself consumes the frozen copy, making
       // the rewrite deterministic even for a nondeterministic `changes`
       // plan).
-      val chgDir = dir("chg")
-      changes.write.mode("overwrite").parquet(chgDir.toString)
-      val chgFiles = listParquet(table, chgDir)
+      val chgFiles = land(changes, dir("chg"), Paths.get(table))
       cowMergeAttempt(spark, table, snap,
         readParquetCached(spark, chgFiles.map(f => s"$table/$f")), keyCol, opCol,
         txnId, dir, "mergeCowBranch")
@@ -3417,11 +3374,9 @@ object Acid {
       // chg= pattern, but the statement instead of a change frame — a
       // predicate re-evaluates against the future base by design)
       import spark.implicits._
-      val specDir = dir("spec")
-      Seq((kind, predSql, sets.map(_._1), sets.map(_._2)))
-        .toDF("kind", "pred", "set_cols", "set_exprs")
-        .coalesce(1).write.mode("overwrite").parquet(specDir.toString)
-      val specFiles = listParquet(table, specDir)
+      val specFiles = land(Seq((kind, predSql, sets.map(_._1), sets.map(_._2)))
+        .toDF("kind", "pred", "set_cols", "set_exprs").coalesce(1),
+        dir("spec"), Paths.get(table))
       sqlWhereAttempt(spark, table, snap, txnId, kind, sets.map(_._1),
         sets.map(_._2), predSql, dir, what)
         .copy(log = Some(Manifest.Dml(0L, kind, txnId, "-", None, specFiles)))
@@ -4118,15 +4073,7 @@ object Acid {
 
   /** Drop the table directory (staging determinism for re-runnable keys:
     * each invocation rebuilds v=0/v=1 from scratch). */
-  def reset(table: String): Unit = {
-    val root = Paths.get(table)
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    }
-  }
+  def reset(table: String): Unit = graft.Tmp.deleteTree(Paths.get(table))
 }
 
 /** A batch violated the table's CHECK constraints — the commit did not

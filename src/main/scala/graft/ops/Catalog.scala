@@ -192,13 +192,5 @@ object Catalog {
   }
 
   /** Wipe a catalog dir (test/demo plumbing, mirrors [[Acid.reset]]). */
-  def reset(dir: String): Unit = {
-    val root = Paths.get(dir)
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally walk.close()
-    }
-  }
+  def reset(dir: String): Unit = graft.Tmp.deleteTree(Paths.get(dir))
 }

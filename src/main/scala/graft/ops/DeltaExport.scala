@@ -158,22 +158,9 @@ object DeltaExport {
           Files.getLastModifiedTime(p).toMillis, dataChange = false)))
       }
     import spark.implicits._
-    // spark writes directories; the protocol wants the single FILE
-    // <v>.checkpoint.parquet — stage then promote the lone part file
-    val stage = Files.createTempDirectory("graft_delta_ckpt")
-    spark.createDataset(rows).coalesce(1).write.mode("overwrite")
-      .parquet(stage.toString)
-    val listing = Files.list(stage)
-    val part =
-      try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .filter(_.toString.endsWith(".parquet")).head
-      finally listing.close()
-    Files.move(part, logDir(dir).resolve(f"$v%020d.checkpoint.parquet"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val walk = Files.walk(stage)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
+    // the protocol wants the single FILE <v>.checkpoint.parquet
+    graft.Tmp.writeSingleFile(spark.createDataset(rows).toDF(), "parquet",
+      logDir(dir).resolve(f"$v%020d.checkpoint.parquet"))
     // _last_checkpoint is the pointer readers consult first — written LAST,
     // so a crash between checkpoint and pointer leaves the old (correct)
     // pointer in place

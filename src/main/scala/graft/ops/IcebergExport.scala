@@ -161,25 +161,6 @@ object IcebergExport {
     else Some(new String(Files.readAllBytes(hint), StandardCharsets.UTF_8).trim.toLong)
   }
 
-  private def writeSingleAvro(spark: SparkSession, df: DataFrame,
-      target: java.nio.file.Path): Long = {
-    val tmp = target.getParent.resolve(target.getFileName.toString + ".tmpdir")
-    df.coalesce(1).write.mode("overwrite").format(AvroFormat).save(tmp.toString)
-    val walk = Files.walk(tmp)
-    val part =
-      try walk.filter(_.toString.endsWith(".avro")).findFirst().orElseThrow(() =>
-        new IllegalStateException(s"IcebergExport: no avro part under $tmp"))
-      finally walk.close()
-    Files.move(part, target,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // drop the staging dir (part file moved out; remainder is _SUCCESS etc.)
-    val w2 = Files.walk(tmp)
-    try w2.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => { Files.deleteIfExists(p); () })
-    finally w2.close()
-    Files.size(target)
-  }
-
   /** Export the Acid table's CURRENT snapshot into `dir` as the next
     * Iceberg metadata version. Returns (metadata version, materialized
     * files, total files). Idempotence is the CALLER's snapshot cadence
@@ -257,8 +238,8 @@ object IcebergExport {
       .select(col("status"), col("snapshot_id"),
         struct(col("content"), col("file_path"), col("file_format"),
           col("record_count"), col("file_size_in_bytes")).as("data_file"))
-    val manifestLen = writeSingleAvro(spark, manifestRows,
-      metaDir(dir).resolve(manifestName))
+    val manifestLen = Files.size(graft.Tmp.writeSingleFile(manifestRows,
+      AvroFormat, metaDir(dir).resolve(manifestName)))
     // MANIFEST LIST (avro): one row per manifest, with the spec's
     // content/sequence-number/row-count columns
     val listName = f"snap-$snapshotId%d.avro"
@@ -273,7 +254,7 @@ object IcebergExport {
         "min_sequence_number", "added_files_count", "existing_files_count",
         "deleted_files_count", "added_rows_count", "existing_rows_count",
         "deleted_rows_count")
-    writeSingleAvro(spark, listRows, metaDir(dir).resolve(listName))
+    graft.Tmp.writeSingleFile(listRows, AvroFormat, metaDir(dir).resolve(listName))
     // METADATA JSON: schema with field-ids (nested types included — the
     // tree walk), snapshot log (history KEPT — prior snapshots stay
     // resolvable), current-snapshot-id flip

@@ -618,7 +618,7 @@ object SqlEntry {
       Acid.appendTxnBranch(spark, dir, br, df, m.group(3).toLong)
       // write-side CHECK gate, WRITE-THEN-VERIFY (r19 review: a pre-write
       // constraint aggregate is a separate Spark action — the exact
-      // two-action nondeterminism gap writeTxnDataChecked closes in Acid;
+      // two-action nondeterminism gap landChecked closes in Acid;
       // validate the bytes the branch append actually landed). A
       // violation aborts the WHOLE transaction (the caller drops the
       // branch), main unmoved — the branch commit that advanced is

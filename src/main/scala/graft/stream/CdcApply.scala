@@ -62,26 +62,17 @@ object CdcApply {
         val maxId = ev.agg(max(col("event_id"))).head.getLong(0)
         val width = math.max(1L, (maxId + files) / files)
         (0 until files).foreach { i =>
-          val tmp = dir.resolve(s"stage-$i")
-          ev.filter(col("event_id") >= i * width &&
-              col("event_id") < (i + 1) * width)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = {
-            val w = java.nio.file.Files.walk(tmp)
-            try w.filter(_.toString.endsWith(".parquet"))
-              .findFirst().orElseThrow()
-            finally w.close()
-          }
-          val out = dir.resolve(f"chg-$i%03d.parquet")
-          java.nio.file.Files.move(part, out)
+          val out = graft.Tmp.writeSingleFile(
+            ev.filter(col("event_id") >= i * width &&
+              col("event_id") < (i + 1) * width),
+            "parquet", dir.resolve(f"chg-$i%03d.parquet"))
           // strictly increasing mtimes = replay order (FileStreamSource
           // drains oldest-first under maxFilesPerTrigger=1)
           java.nio.file.Files.setLastModifiedTime(out,
             java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-          Sources.deleteRecursively(tmp)
         }
         sys.addShutdownHook {
-          try Sources.deleteRecursively(dir) catch { case _: Exception => () }
+          try graft.Tmp.deleteTree(dir) catch { case _: Exception => () }
         }
         dir.toString
       })

@@ -474,10 +474,7 @@ object GraftLog {
       Files.move(p, Paths.get(dir, f"$SegmentPrefix$batchId%05d_$i%04d.log"),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    val walk = Files.walk(stage)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
+    graft.Tmp.deleteTree(stage)
   }
 
   /** Stage a batch events DataFrame as a PARTITIONED log: rows routed to

@@ -118,28 +118,20 @@ object Sources {
     * reused by every subsequent run in the JVM (three keys replay through
     * this per verify/bench pass — re-copying the fixture each invocation
     * charged harness plumbing to every query's bench time, the r8 verdict's
-    * cosmetic flag). The single-row `flush_tmp` write is deleted after its
-    * part file is promoted to `b.parquet`; the staged dir itself is
-    * removed by a JVM shutdown hook. */
+    * cosmetic flag). The single-row sentinel lands as `b.parquet` through
+    * [[graft.Tmp.writeSingleFile]]; the staged dir itself is removed by a
+    * JVM shutdown hook. */
   private val stagedFlushDirs =
     scala.collection.mutable.Map.empty[String, java.nio.file.Path]
-
-  private[stream] def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    val walk = java.nio.file.Files.walk(dir)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
-    finally walk.close()
-  }
 
   private def stagedFlushDir(spark: SparkSession, sfDir: String): java.nio.file.Path =
     stagedFlushDirs.synchronized {
       stagedFlushDirs.getOrElseUpdate(sfDir, {
         val dir = java.nio.file.Files.createTempDirectory("graft_replay")
-        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-          dir.resolve("a.parquet"),
+        val a = java.nio.file.Files.copy(
+          java.nio.file.Paths.get(s"$sfDir/events.parquet"), dir.resolve("a.parquet"),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
         import spark.implicits._
-        val flushDir = dir.resolve("flush_tmp")
         // sentinel `ts` must match the FIXTURE's physical encoding — the
         // stream source reads the whole dir under one declared schema
         val sentinel = Seq((-1L, FlushTsNs, -1L, "view", 0.0, "{}"))
@@ -148,18 +140,14 @@ object Sources {
           if (graft.Tables.eventsTsIsNanos(spark, s"$sfDir/events.parquet")) sentinel
           else sentinel.withColumn("ts",
             timestamp_micros(expr("ts div 1000")))
-        typed.coalesce(1).write.mode("overwrite").parquet(flushDir.toString)
-        val listing = java.nio.file.Files.list(flushDir)
-        val part =
-          try listing.toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-          finally listing.close()
-        // copied AFTER a.parquet → later mtime → its own later micro-batch
-        java.nio.file.Files.copy(java.nio.file.Paths.get(part),
-          dir.resolve("b.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        deleteRecursively(flushDir)
+        val b = graft.Tmp.writeSingleFile(typed, "parquet", dir.resolve("b.parquet"))
+        // b.parquet strictly newer than a.parquet → its own later micro-batch
+        val aMs = java.nio.file.Files.getLastModifiedTime(a).toMillis
+        if (java.nio.file.Files.getLastModifiedTime(b).toMillis <= aMs)
+          java.nio.file.Files.setLastModifiedTime(b,
+            java.nio.file.attribute.FileTime.fromMillis(aMs + 1))
         sys.addShutdownHook {
-          try deleteRecursively(dir) catch { case _: Exception => () }
+          try graft.Tmp.deleteTree(dir) catch { case _: Exception => () }
         }
         dir
       })
@@ -181,7 +169,7 @@ object Sources {
         GraftLog.stage(spark, graft.Tables.events(spark, sfDir), dir.toString,
           segmentRows = math.max(1L, (n + 15) / 16).toInt)
         sys.addShutdownHook {
-          try deleteRecursively(dir) catch { case _: Exception => () }
+          try graft.Tmp.deleteTree(dir) catch { case _: Exception => () }
         }
         dir
       })
@@ -201,7 +189,7 @@ object Sources {
         GraftLog.stagePartitioned(spark, ev, dir.toString, numParts = 4,
           segmentRows = 4096)
         sys.addShutdownHook {
-          try deleteRecursively(dir) catch { case _: Exception => () }
+          try graft.Tmp.deleteTree(dir) catch { case _: Exception => () }
         }
         dir
       })

@@ -62,25 +62,11 @@ object SynthScale {
     val nDocs = 5000L * factor
     val nVecs = 2000L * factor
     val hotDocs = 2000L // the mega-cluster
-    // fixture layout contract: one BARE parquet file per table (what the
-    // DuckDB oracle's read_parquet and the driver's layout expect) — write
-    // the directory, then promote the single part file
-    def save(df: DataFrame, name: String): Unit = {
-      val stage = s"$out/_stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(stage)
-      val stageDir = java.nio.file.Paths.get(stage)
-      val listing = java.nio.file.Files.list(stageDir)
-      val part =
-        try listing.toArray.map(_.toString).filter(_.endsWith(".parquet")).head
-        finally listing.close()
-      java.nio.file.Files.move(java.nio.file.Paths.get(part),
-        java.nio.file.Paths.get(s"$out/$name.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val walk = java.nio.file.Files.walk(stageDir)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    // fixture layout contract: one BARE parquet file per table, as the
+    // DuckDB oracle's read_parquet and the fixture readers expect
+    def save(df: DataFrame, name: String): Unit =
+      graft.Tmp.writeSingleFile(df, "parquet",
+        java.nio.file.Paths.get(s"$out/$name.parquet"))
 
     // scale-invariant dims: copied from the real fixture
     save(spark.read.parquet("/root/testdata/sf0.1/region.parquet"), "region")

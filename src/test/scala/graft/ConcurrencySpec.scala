@@ -840,6 +840,66 @@ class ConcurrencySpec extends SparkFixture {
       Seq(0L, 1L, 2L, 3L, 5L, 7L, 8L, 9L, 10L, 11L, 20L))
   }
 
+  test("a writer dying between its data write and its version claim: old snapshot stays, no manifest names its files, replay commits once, vacuum reclaims exactly them") {
+    import graft.ops.Acid
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def rows(kx: (Long, Long)*) = kx.toDF("k", "x")
+    def state(t: String) = Acid.read(spark, t).as[(Long, Long)].collect().toSet
+    def parquetFiles(t: String): Set[String] = {
+      val walk = Files.walk(Paths.get(t))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(p => Paths.get(t).relativize(p).toString).toSet
+      finally walk.close()
+    }
+    def manifestText(t: String): String = {
+      val ls = Files.list(Paths.get(t))
+      try ls.iterator().asScala.filter(_.getFileName.toString.startsWith("manifest-"))
+        .map(p => new String(Files.readAllBytes(p), "UTF-8")).mkString("\n")
+      finally ls.close()
+    }
+    val seed = (0L until 12L).map(k => (k, k * 10))
+    // (writer, the table it leaves from the seed)
+    val writers: Seq[(String, String => Any, Set[(Long, Long)])] = Seq(
+      ("appendTxn", t => Acid.appendTxn(spark, t, rows((100L, 1L), (101L, 2L)), 2L),
+        seed.toSet ++ Set((100L, 1L), (101L, 2L))),
+      ("mergeCow", t => Acid.mergeCow(spark, t, rows((3L, -1L), (200L, 2L)), "k", 2L),
+        seed.toSet - ((3L, 30L)) ++ Set((3L, -1L), (200L, 2L))),
+      ("deleteTxn", t => Acid.deleteTxn(spark, t, Seq(4L).toDF("k"), "k", 2L),
+        seed.toSet - ((4L, 40L))))
+    writers.foreach { case (what, write, expected) =>
+      val t = Files.createTempDirectory(s"acid_crash_$what").toString + "/t"
+      // two appends: v0's files stay live at v1, so a keep = 1 vacuum has
+      // nothing to reclaim but what the dying writer landed
+      Acid.appendTxn(spark, t, rows(seed.take(8): _*), 0L)
+      Acid.appendTxn(spark, t, rows(seed.drop(8): _*), 1L)
+      val v = Acid.currentVersion(t).get
+      val filesBefore = parquetFiles(t)
+      Acid.raceHook = () => {
+        Acid.raceHook = () => () // fire once
+        throw new IllegalStateException(s"$what died")
+      }
+      val e = intercept[IllegalStateException] {
+        try write(t) finally Acid.raceHook = () => ()
+      }
+      assert(e.getMessage == s"$what died", e.getMessage)
+      val landed = parquetFiles(t) -- filesBefore
+      assert(landed.nonEmpty, s"$what landed nothing before dying")
+      assert(Acid.currentVersion(t).contains(v), s"$what moved the pointer")
+      assert(state(t) == seed.toSet, s"$what: read left the old snapshot")
+      val text = manifestText(t)
+      assert(landed.forall(f => !text.contains(f)), s"$what: a manifest names a landed file")
+      assert(Acid.vacuum(t, keep = 1).toSet == landed,
+        s"$what: vacuum must delete exactly the dying writer's files $landed")
+      write(t)
+      assert(Acid.currentVersion(t).contains(v + 1), s"$what replay did not commit once")
+      write(t)
+      assert(Acid.currentVersion(t).contains(v + 1), s"$what second replay committed again")
+      assert(state(t) == expected, s"$what replay left ${state(t)}")
+    }
+  }
+
   test("a commit whose build throws gives its version claim back; a claim reclaimed since by another writer stays") {
     import graft.ops.Acid
     import org.apache.spark.sql.functions.{col, udf}

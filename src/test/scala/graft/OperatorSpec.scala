@@ -1314,6 +1314,39 @@ class OperatorSpec extends SparkFixture {
     assert(Acid.readSkipping(spark, table, "id", 90000L, 99000L).count() == 0)
   }
 
+  test("Acid: a file whose stats column is all NULL carries no zone-map line, and skipping keeps the plain answer") {
+    import graft.ops.Acid
+    val table = java.nio.file.Files.createTempDirectory("graft_acid_zm_null").toString + "/t"
+    // two range partitions → two files: keys 0..9, then NULL keys only
+    Acid.commit(spark, table, spark.range(0, 20, 1, 2)
+      .select(when(col("id") < 10, col("id")).as("k"), col("id").as("x")),
+      stats = Some("k" -> col("k")))
+    val (_, all) = Acid.skipFiles(table, 0L, "k", 0L, 0L)
+    assert(all.size == 2, s"expected 2 data files, got $all")
+    val lines = Acid.minmaxStats(table, 0L, "k")
+    assert(lines.map { case (_, lo, hi) => (lo, hi) } == Seq((0L, 9L)), s"$lines")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.filter(col("k").between(3L, 5L))
+      .select("k", "x").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(rows(Acid.readSkipping(spark, table, "k", 3L, 5L)) == rows(Acid.read(spark, table)))
+    assert(rows(Acid.read(spark, table)) == Seq((3L, 3L), (4L, 4L), (5L, 5L)))
+  }
+
+  test("Acid: a partitioned commit's zone-map expression sees the partition column") {
+    import graft.ops.Acid
+    val table = java.nio.file.Files.createTempDirectory("graft_acid_zm_part").toString + "/t"
+    Acid.commit(spark, table,
+      spark.range(0, 12).select(col("id").as("k"), (col("id") % 3).as("p")),
+      partitionCols = Seq("p"), stats = Some("p" -> col("p").cast("long")))
+    val lines = Acid.minmaxStats(table, 0L, "p")
+    assert(lines.nonEmpty)
+    // each file's extremum is the value its hive directory names
+    lines.foreach { case (f, lo, hi) =>
+      val dirValue = f.takeWhile(_ != '/').stripPrefix("p=").toLong
+      assert(lo == dirValue && hi == dirValue, s"$f: [$lo, $hi]")
+    }
+    assert(lines.map(_._2).distinct.sorted == Seq(0L, 1L, 2L))
+  }
+
   test("Acid: equality-delete txns are O(keys) — no data file rewritten — and compaction folds them in") {
     import graft.ops.Acid
     val table = java.nio.file.Files.createTempDirectory("graft_acid_del").toString
