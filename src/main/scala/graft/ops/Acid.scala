@@ -185,24 +185,38 @@ object Acid {
     * a one-footer "parquet at ..." job — pure per-job floor, 6–11 of them
     * per lakehouse DML key). Byte-equal to the plain read: same footer,
     * same converter, `asNullable` because file-source inference forces
-    * nullability; any footer disagreement or unreadable footer falls back
-    * to the genuine inferring read. Explicit FILE paths only; with
-    * `basePath` the hive-style partition columns of the paths under it are
-    * appended, as a directory read would ([[commit]]'s zone-map harvest). */
+    * nullability. The footers are compared AFTER `toNullable`: files
+    * landed from a local frame carry non-nullable columns while rewrites
+    * carry nullable ones, and inference (one file's schema, made
+    * nullable) gives the same schema for either. Footers that differ in
+    * anything else, or an unreadable footer, fall back to the genuine
+    * inferring read with one `[graft] readParquetCached:` stderr line.
+    * Explicit FILE paths only; with `basePath` the hive-style partition
+    * columns of the paths under it are appended, as a directory read would
+    * ([[commit]]'s zone-map and bloom harvests). */
   private[graft] def readParquetCached(spark: SparkSession,
       paths: Seq[String], basePath: Option[String] = None): DataFrame = {
+    import org.apache.spark.sql.types.StructType
     val reader = basePath.fold(spark.read)(spark.read.option("basePath", _))
-    val fast: Option[org.apache.spark.sql.types.StructType] =
-      if (paths.isEmpty) None
-      else scala.util.Try {
-        val ss = paths.map(fileSchema(spark, _))
-        if (ss.forall(_ == ss.head))
-          Some(toNullable(ss.head).asInstanceOf[org.apache.spark.sql.types.StructType])
-        else None
-      }.getOrElse(None)
-    fast match {
-      case Some(s) => reader.schema(s).parquet(paths: _*)
-      case None    => reader.parquet(paths: _*)
+    val schemas = scala.util.Try(paths.map(p =>
+      toNullable(fileSchema(spark, p)).asInstanceOf[StructType]))
+    val mismatch: Option[String] = schemas match {
+      case scala.util.Failure(e) => Some(s"unreadable footer: ${e.getMessage}")
+      case scala.util.Success(ss) if ss.isEmpty => Some("no files")
+      case scala.util.Success(ss) => Some(ss.indexWhere(_ != ss.head)).filter(_ > 0).map { i =>
+        def show(f: org.apache.spark.sql.types.StructField) =
+          Option(f).fold("absent")(f => s"${f.name} ${f.dataType.simpleString}")
+        val diff = ss.head.fields.toSeq.zipAll(ss(i).fields.toSeq, null, null)
+          .collectFirst { case (a, b) if a != b => s"${show(a)} vs ${show(b)}" }
+        s"first differing field: ${diff.get} (${paths.head} vs ${paths(i)})"
+      }
+    }
+    mismatch match {
+      case None => reader.schema(schemas.get.head).parquet(paths: _*)
+      case Some(why) =>
+        System.err.println(s"[graft] readParquetCached: footer schemas of " +
+          s"${paths.size} files fell back to schema inference, $why")
+        reader.parquet(paths: _*)
     }
   }
 
@@ -490,14 +504,14 @@ object Acid {
         readParquetCached(spark, Seq(s"$table/$pf"))
           .select(expr(normPathExpr(s"concat('$root/', f)")).as("__abs"),
             col("pos").as("__pp"))
-      }.reduce(_ unionByName _).distinct(), Seq("__abs", "__pp"), "left_anti")
+      }.reduce(_ unionByName _), Seq("__abs", "__pp"), "left_anti")
       kept.select((if (!provenance) cols
         else cols :+ col("__file").as("_file") :+ col("__pp").as("_pos")): _*)
     }
     m.standingDeletes match {
       case Some((k, delFiles)) =>
         val dels = readParquetCached(spark, delFiles.map(f => s"$table/$f"))
-          .select(col(k)).distinct()
+          .select(col(k))
         base.join(dels, Seq(k), "left_anti")
       case None => base
     }
@@ -664,8 +678,8 @@ object Acid {
       if (m.rootRelative) readLogical(spark, table, m, fs, merged = empty)
       else {
         require(v >= 0, s"Acid: snapshot-mode read of $table needs its version")
-        spark.read.option("basePath", s"$table/v=$v")
-          .parquet(fs.map(f => s"$table/v=$v/$f"): _*)
+        readParquetCached(spark, fs.map(f => s"$table/v=$v/$f"),
+          Some(s"$table/v=$v"))
       }
     if (empty) frame.limit(0) else subtractDeletes(spark, table, m, frame)
   }
@@ -693,16 +707,18 @@ object Acid {
     * line — manifest text, not data). Readers derive the width from the
     * stored word count, so mixed-width generations coexist in one
     * manifest. Shared by [[commit]] (snapshot mode, `v=<n>`-relative
-    * paths) and [[optimize]] (append mode, root-relative): the `relTo`
+    * paths, read with `basePath`) and [[optimize]] (append mode,
+    * root-relative): the `relTo`
     * prefix is what keeps the stat key identical to the manifest's
     * data-file line. */
   private def bloomLines(spark: SparkSession, paths: Seq[String],
-      relTo: Path, name: String, expr0: Column): Seq[Manifest.Bloom] = {
+      relTo: Path, name: String, expr0: Column,
+      basePath: Option[String] = None): Seq[Manifest.Bloom] = {
     // O(files) control plane. Degenerate inputs must behave like the old
     // fixed-width path (ADVICE r16): an all-empty file set groups to zero
     // rows, so max(ndv) is NULL — fall back to 1 key (floor width) instead
     // of NPEing; optimize-after-delete-all is a legal maintenance call.
-    val maxNdv = Option(readParquetCached(spark, paths)
+    val maxNdv = Option(readParquetCached(spark, paths, basePath)
       .groupBy(input_file_name())
       .agg(org.apache.spark.sql.functions.approx_count_distinct(expr0).as("ndv"))
       .agg(max(col("ndv"))).head.get(0)).fold(1L)(_.asInstanceOf[Long])
@@ -725,7 +741,7 @@ object Acid {
     // pair only, and keep the dual-generation probe solely for
     // unversioned legacy lines — without the marker every bloom paid the
     // legacy pair's chance matches forever (~double the FPR).
-    val positions = readParquetCached(spark, paths)
+    val positions = readParquetCached(spark, paths, basePath)
       .withColumn("__y", org.apache.spark.sql.functions.pmod(expr0, org.apache.spark.sql.functions.lit(2147483647L)))
       .withColumn("__h1", org.apache.spark.sql.functions.expr("(__y * 48271) % 2147483647"))
       .withColumn("__p1", org.apache.spark.sql.functions.expr(s"__h1 % $bits"))
@@ -946,9 +962,11 @@ object Acid {
     val files = land(df, dataDir, dataDir, partitionCols)
     require(files.nonEmpty, s"Acid.commit: empty version $v at $table")
     val abs = dataDir.toAbsolutePath
-    // read with `basePath`: the stats expression sees the partition columns
-    val statLines = minmaxLines(spark, files.map(f => s"$dataDir/$f"), abs,
-      stats.toSeq, basePath = Some(dataDir.toString))
+    // read with `basePath`: the stats and bloom expressions see the
+    // partition columns
+    val paths = files.map(f => s"$dataDir/$f")
+    val statLines = minmaxLines(spark, paths, abs, stats.toSeq,
+      basePath = Some(dataDir.toString))
     // per-file 4096-bit bloom over a long-valued expr: one pass computing
     // all 64 words as bit_or aggregates (fully distributed — no per-file
     // driver collect of keys). Parquet can carry column blooms in the
@@ -957,7 +975,7 @@ object Acid {
     // before any footer I/O — Iceberg's puffin-file shape. At 100 TB
     // writers harvest these from the footers they just produced.
     val bloomStatLines = bloom.toSeq.flatMap { case (name, expr0) =>
-      bloomLines(spark, Seq(dataDir.toString), dataDir.toAbsolutePath, name, expr0)
+      bloomLines(spark, paths, abs, name, expr0, basePath = Some(dataDir.toString))
     }
     // per-file row counts (`# rows:<file>|<n>`): the statistic that lets
     // COUNT(*)-shaped queries be answered from the manifest alone —
@@ -1364,7 +1382,7 @@ object Acid {
       snap: Manifest, changes: DataFrame, keyCol: String,
       opCol: Option[String], txnId: Long, dir: String => Path,
       what: String): Attempt = {
-    val allKeys = changes.select(col(keyCol)).distinct()
+    val allKeys = changes.select(col(keyCol))
     val upserts = opCol match {
       case Some(o) => changes.filter(col(o) =!= "delete").drop(o)
       case None    => changes
@@ -1383,7 +1401,7 @@ object Acid {
       snap.constraints, what)
     // vector reconciliation: upserted keys leave the standing vector
     val vectors = reconcileVector(spark, table, snap,
-      upserts.select(col(keyCol)).distinct(), keyCol, dir("del"), what)
+      upserts.select(col(keyCol)), keyCol, dir("del"), what)
     Attempt(touched,
       rewriteManifest(_, txnId, touched, newFiles, vectors = Some(vectors)))
   }
@@ -2046,7 +2064,10 @@ object Acid {
       txnId: Long, snap: Manifest, dir: String => Path, what: String): Attempt = {
     require(snap.delKey.forall(_ == keyCol),
       s"$what: table uses delete key ${snap.delKey.getOrElse("")}, got $keyCol")
-    val delFiles = land(keys.select(col(keyCol)).distinct().coalesce(1),
+    // dedup AFTER the coalesce: over one partition the aggregate needs no
+    // exchange, so the vector lands in one job, not a shuffle job and a
+    // write job (the key plan runs in the one writing task)
+    val delFiles = land(keys.select(col(keyCol)).coalesce(1).distinct(),
       dir("del"), Paths.get(table))
     Attempt(Nil, deleteManifest(_, txnId, keyCol, delFiles),
       Some(Manifest.Dml(0L, "delete", txnId, keyCol, None, delFiles)))
@@ -2409,7 +2430,7 @@ object Acid {
       // disagree with the ids actually written → silent id reuse)
       val changesF = readParquetCached(spark,
         land(changes, dir("chg"), Paths.get(table)).map(f => s"$table/$f"))
-      val allKeys = changesF.select(col(keyCol)).distinct()
+      val allKeys = changesF.select(col(keyCol))
       val upserts = opCol match {
         case Some(o) => changesF.filter(col(o) =!= "delete").drop(o)
         case None    => changesF
@@ -2461,8 +2482,7 @@ object Acid {
       // vector reconciliation, mergeCow's rule: upserted keys leave the
       // standing vector (the insert above is the resurrection)
       val vectors = reconcileVector(spark, table, snap,
-        upserts.select(col(keyCol)).distinct(), keyCol, dir("del"),
-        "mergeCowLineage")
+        upserts.select(col(keyCol)), keyCol, dir("del"), "mergeCowLineage")
       Attempt(touched,
         rewriteManifest(_, txnId, touched, newFiles, lineage = true,
           vectors = Some(vectors), added = Seq(Manifest.RowIdNext(next + nInserts)),
@@ -2930,13 +2950,13 @@ object Acid {
     // pruning applies, same bill as the delete preimage below.
     if (!delFiles(linesFrom).toSet.subsetOf(delFiles(linesTo).toSet)) {
       val visible = keyOf(linesFrom).exists { k =>
-        val fromKeys = spark.read
-          .parquet(delFiles(linesFrom).map(f => s"$table/$f"): _*)
+        val fromKeys = readParquetCached(spark,
+            delFiles(linesFrom).map(f => s"$table/$f"))
           .select(col(k)).distinct()
         val toKeys =
           if (delFiles(linesTo).isEmpty) fromKeys.limit(0)
           else readParquetCached(spark, delFiles(linesTo).map(f => s"$table/$f"))
-            .select(col(k)).distinct()
+            .select(col(k))
         val removed = fromKeys.join(toKeys, Seq(k), "left_anti")
         // survivors = fromV's files STILL LIVE at toV (ADVICE r19): a
         // replaced file cannot resurrect rows at toV, so intersecting
@@ -2950,8 +2970,7 @@ object Acid {
           readLogical(spark, table, linesTo, surviving)
             .join(removed, Seq(k), "left_semi").limit(1).count() > 0
         added.nonEmpty && !inSurvivors && removed.join(
-          readLogical(spark, table, linesTo, added.toSeq)
-            .select(col(k)).distinct(),
+          readLogical(spark, table, linesTo, added.toSeq).select(col(k)),
           Seq(k), "left_anti").isEmpty
       }
       require(visible,
@@ -2972,7 +2991,7 @@ object Acid {
     keyOf(linesTo).filter(_ => newDelFiles.nonEmpty) match {
       case Some(k) =>
         val fresh = readParquetCached(spark, newDelFiles.map(f => s"$table/$f"))
-          .select(col(k)).distinct()
+          .select(col(k))
         val deletes = readVersion(spark, table, fromV)
           .join(fresh, Seq(k), "left_semi")
           .withColumn("change_type", lit("delete"))
@@ -3014,7 +3033,7 @@ object Acid {
       case (k, fs) =>
         require(k == keyCol,
           s"changeFeedRow: table uses delete key $k, got $keyCol")
-        readParquetCached(spark, fs.map(f => s"$table/$f")).select(col(k)).distinct()
+        readParquetCached(spark, fs.map(f => s"$table/$f")).select(col(k))
     }
     val snapshot = readVersion(spark, table, toV).limit(0)
     val dataCols = snapshot.columns.toSeq
@@ -3621,8 +3640,7 @@ object Acid {
           // — the predicate re-probes the future base from scratch, so
           // rows main changed since the fork get the branch's update/
           // delete intent exactly as if the operator had forked today
-          val spec = spark.read
-            .parquet(op.files.map(f => s"$table/$f"): _*).head()
+          val spec = readParquetCached(spark, op.files.map(f => s"$table/$f")).head()
           sqlWhereAttempt(spark, table, state, op.txn, op.kind,
             spec.getAs[scala.collection.Seq[String]]("set_cols").toSeq,
             spec.getAs[scala.collection.Seq[String]]("set_exprs").toSeq,
@@ -3998,7 +4016,10 @@ object Acid {
     * readers), then manifests, then data — a crash mid-vacuum leaves
     * unreferenced garbage, never a readable-but-missing-files version.
     * Live-reader grace periods (Delta's retention-duration check) are the
-    * production extra, out of scope. Returns the deleted file paths. */
+    * production extra, out of scope. Each deleted file's `.crc` sibling
+    * goes with it, and so does an attempt directory (`txn=`, `del=`,
+    * `pdel=`, `cdc=`) left with no live file. Returns the deleted
+    * `.parquet` paths. */
   def vacuum(table: String, keep: Int, graceMs: Long = 0L): Seq[String] = withWriterLock(table) {
     require(keep >= 1, "vacuum: keep must be >= 1")
     val cur = currentVersion(table).getOrElse(
@@ -4066,7 +4087,27 @@ object Acid {
         graceMs == 0L ||
           Files.getLastModifiedTime(root.resolve(f)).toMillis < cutoff
       }
-      deletable.foreach(f => Files.deleteIfExists(root.resolve(f)))
+      deletable.foreach { f =>
+        val p = root.resolve(f)
+        Files.deleteIfExists(p)
+        Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+      }
+      // the attempt directory (`txn=`, `del=`, `pdel=`, `cdc=`) of a
+      // deleted file goes too once it holds nothing but its land's
+      // `_SUCCESS`: no live file, no spared one, no unfinished write
+      val attemptDirs = deletable.flatMap { f =>
+        val rel = Paths.get(f)
+        (1 until rel.getNameCount).map(i => rel.subpath(0, i)).find(d =>
+          Seq("txn=", "del=", "pdel=", "cdc=").exists(d.getFileName.toString.startsWith))
+      }.distinct.map(root.resolve)
+      attemptDirs.filter { d =>
+        Files.exists(d.resolve("_SUCCESS")) && scala.util.Try {
+          val w = Files.walk(d)
+          try w.allMatch(p => Files.isDirectory(p) ||
+            Set("_SUCCESS", "._SUCCESS.crc")(p.getFileName.toString))
+          finally w.close()
+        }.getOrElse(false) // a concurrent writer replaced it: it stays
+      }.foreach(graft.Tmp.deleteTree)
       deletable.sorted
     }
   }

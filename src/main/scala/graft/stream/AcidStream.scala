@@ -398,7 +398,7 @@ object AcidStream {
         // the anti-join plan cannot ride the leaf re-flag (it would become
         // a stream-stream join), so it rides the bridge
         val dels = Acid.readParquetCached(spark, delFiles.map(f => s"$table/$f"))
-          .select(col(k)).distinct()
+          .select(col(k))
         bridge(spark, batch.join(dels, Seq(k), "left_anti").select(cols: _*))
       case None => asStreaming(spark, batch)
     }

@@ -776,22 +776,24 @@ class ConcurrencySpec extends SparkFixture {
     }
   }
 
-  test("Spark job count per Acid call on a tiny table: appendTxnCAS, mergeCow, deleteTxn, optimize, updateWhere, eraseKeys") {
-    import graft.ops.Acid
-    import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith("jobpin-"))
-          .foreach(g => started.merge(g, 1, (a: Integer, b: Integer) => a + b))
-    }
-    // jobs one call starts, counted by job group; a marker job in a second
-    // group follows, and the listener bus delivers start events in order,
-    // so once the marker is seen every job of the call has been counted
+  /** Runs `body` with a job counter: `jobs(name)(call)` is the number of
+    * Spark jobs `call` starts, counted by job group. A marker job in a
+    * second group follows each call, and the listener bus delivers start
+    * events in order, so once the marker is seen every job of the call
+    * has been counted. */
+  private def withJobCounter[T](body: JobCounter => T): T = {
+    val c = new JobCounter(spark.sparkContext)
+    spark.sparkContext.addSparkListener(c)
+    try body(c) finally spark.sparkContext.removeSparkListener(c)
+  }
+
+  private final class JobCounter(sc: org.apache.spark.SparkContext)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val started = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .filter(_.startsWith("jobpin-"))
+        .foreach(g => started.merge(g, 1, (a: Integer, b: Integer) => a + b))
     def jobs(name: String)(call: => Any): Int = {
       sc.setJobGroup(s"jobpin-$name", name)
       try call finally sc.clearJobGroup()
@@ -804,10 +806,17 @@ class ConcurrencySpec extends SparkFixture {
       }
       Option(started.get(s"jobpin-$name")).fold(0)(_.intValue)
     }
+  }
+
+  test("Spark job count per Acid call on a tiny table: appendTxnCAS, mergeCow, deleteTxn, optimize, updateWhere, eraseKeys") {
+    import graft.ops.Acid
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
     val t = java.nio.file.Files.createTempDirectory("graft_jobpin").toString + "/t"
+    val snap = java.nio.file.Files.createTempDirectory("graft_jobpin").toString + "/s"
     def rows(ks: Seq[Long]) = ks.map(k => (k, k * 10)).toDF("k", "x")
-    sc.addSparkListener(listener)
-    val got = try {
+    val got = withJobCounter { c =>
+      import c.jobs
       Acid.appendTxn(spark, t, rows(0L until 8L), 0L)
       Seq(
         "appendTxnCAS" -> jobs("appendTxnCAS") {
@@ -828,16 +837,78 @@ class ConcurrencySpec extends SparkFixture {
         "readVersion" -> jobs("readVersion") {
           Acid.readVersion(spark, t, 1L).collect() },
         "changeFeedRow" -> jobs("changeFeedRow") {
-          Acid.changeFeedRow(spark, t, 2L, 3L, "k").collect() })
-    } finally sc.removeSparkListener(listener)
+          Acid.changeFeedRow(spark, t, 2L, 3L, "k").collect() },
+        // a snapshot commit harvesting a bloom over its own files
+        "commitBloom" -> jobs("commitBloom") {
+          Acid.commit(spark, snap, rows(0L until 8L), bloom = Some("k" -> col("k"))) })
+    }
     // a structural budget, free of timing noise: a change to the commit
     // or read path that adds or drops a Spark action moves one of these
     // counts
-    assert(got == Seq("appendTxnCAS" -> 1, "mergeCow" -> 8, "deleteTxn" -> 1,
-      "optimize" -> 4, "updateWhere" -> 3, "eraseKeys" -> 1,
-      "read" -> 1, "readVersion" -> 1, "changeFeedRow" -> 5), s"$got")
+    assert(got == Seq("appendTxnCAS" -> 1, "mergeCow" -> 6, "deleteTxn" -> 1,
+      "optimize" -> 2, "updateWhere" -> 3, "eraseKeys" -> 1,
+      "read" -> 1, "readVersion" -> 1, "changeFeedRow" -> 2,
+      "commitBloom" -> 6), s"$got")
     assert(Acid.read(spark, t).select(col("k")).as[Long].collect().sorted.toSeq ==
       Seq(0L, 1L, 2L, 3L, 5L, 7L, 8L, 9L, 10L, 11L, 20L))
+  }
+
+  test("Spark job count on the benchmark round's table shape: footers that differ only in nullability read without schema inference") {
+    import graft.ops.Acid
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val t = java.nio.file.Files.createTempDirectory("graft_jobpin_mixed").toString + "/t"
+    // a local frame lands REQUIRED columns, a mergeCow rewrite OPTIONAL ones
+    def rows(ks: Seq[Long]) = ks.map(k => (k, k * 10)).toDF("k", "x")
+    Acid.appendTxnCAS(spark, t, rows(0L until 20L), 0L)
+    Acid.mergeCow(spark, t, rows(Seq(3L, 30L)), "k", 1L)
+    Acid.appendTxnCAS(spark, t, rows(40L until 44L), 2L)
+    Acid.deleteTxn(spark, t, Seq(5L, 6L, 7L).toDF("k"), "k", 3L)
+    val paths = Acid.headManifest(t).files.map(f => s"$t/$f")
+    val required = paths.map { p =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex("k"))
+          .isRepetition(org.apache.parquet.schema.Type.Repetition.REQUIRED)
+      } finally r.close()
+    }.toSet
+    assert(required == Set(true, false), s"the table must mix REQUIRED and OPTIONAL footers: $paths")
+    // footers that differ in more than nullability fall back, and say so
+    val wide = java.nio.file.Files.createTempDirectory("graft_jobpin_wide").toString + "/w"
+    Seq((1L, 10L, "east")).toDF("k", "x", "zone").write.parquet(wide)
+    val widePaths = new java.io.File(wide).listFiles().map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try Acid.readParquetCached(spark, paths.take(1) ++ widePaths) finally System.setErr(stderr)
+    assert(err.toString.contains("[graft] readParquetCached: footer schemas of 2 files " +
+      "fell back to schema inference, first differing field: absent vs zone string"), err.toString)
+    val got = withJobCounter { c =>
+      import c.jobs
+      val inferred = spark.read.parquet(paths: _*)
+      var cached: org.apache.spark.sql.DataFrame = null
+      assert(jobs("readParquetCached") { cached = Acid.readParquetCached(spark, paths) } == 0,
+        "readParquetCached started a job over footers that differ only in nullability")
+      assert(cached.schema == inferred.schema, s"${cached.schema} vs ${inferred.schema}")
+      assert(cached.collect().map(_.toString).sorted.toSeq ==
+        inferred.collect().map(_.toString).sorted.toSeq)
+      Seq(
+        "read" -> jobs("read") { Acid.read(spark, t).collect() },
+        "readVersion" -> jobs("readVersion") { Acid.readVersion(spark, t, 2L).collect() },
+        "changeFeedRow" -> jobs("changeFeedRow") {
+          Acid.changeFeedRow(spark, t, 1L, 3L, "k").collect() },
+        "optimize" -> jobs("optimize") { Acid.optimize(spark, t, 4L, targetFiles = 2) })
+    }
+    // the head read broadcasts its standing vector: one job for that, one
+    // for the scan
+    assert(got == Seq("read" -> 2, "readVersion" -> 1, "changeFeedRow" -> 2,
+      "optimize" -> 2), s"$got")
+    assert(Acid.read(spark, t).select(col("k")).as[Long].collect().sorted.toSeq ==
+      ((0L until 20L).filterNot(Set(5L, 6L, 7L)) ++ Seq(30L) ++ (40L until 44L)))
   }
 
   test("a writer dying between its data write and its version claim: old snapshot stays, no manifest names its files, replay commits once, vacuum reclaims exactly them") {
@@ -892,6 +963,10 @@ class ConcurrencySpec extends SparkFixture {
       assert(landed.forall(f => !text.contains(f)), s"$what: a manifest names a landed file")
       assert(Acid.vacuum(t, keep = 1).toSet == landed,
         s"$what: vacuum must delete exactly the dying writer's files $landed")
+      // the attempt's directories go with them: `_SUCCESS`, `.crc` files
+      val attemptDirs = landed.map(_.takeWhile(_ != '/'))
+      assert(attemptDirs.forall(d => !Files.exists(Paths.get(t, d))),
+        s"$what: vacuum left the attempt directories $attemptDirs")
       write(t)
       assert(Acid.currentVersion(t).contains(v + 1), s"$what replay did not commit once")
       write(t)
